@@ -56,7 +56,7 @@ def main(argv=None) -> None:
                     help="override master for local runs (spark-submit sets it otherwise)")
     args = ap.parse_args(argv)
 
-    from psyndex2linkeddata_spark import namespaces as NS
+    from psyndex2linkeddata_spark import namespaces as NS, schema
     from psyndex2linkeddata_spark.plans.pipeline import build_triples
     from psyndex2linkeddata_spark.session import get_spark
     from psyndex2linkeddata_spark.sources.checkpoint import (
@@ -83,7 +83,12 @@ def main(argv=None) -> None:
         buckets_per_commit=args.per_commit,
     )
     run_manifest(spark, args.ckpt, res["run_id"], pages=args.pages, out=args.out)
-    triples = spark.read.parquet(os.path.join(args.out, "triples")).drop("batch")
+    # the bucket= partition column is storage layout, not part of a triple;
+    # the persisted set is a multiset (see sources/checkpoint.py), so the
+    # exports and the count below deduplicate
+    triples = spark.read.parquet(os.path.join(args.out, "triples")).select(
+        *schema.TRIPLE_COLS
+    )
 
     if args.report:
         from psyndex2linkeddata_spark.plans.report import write_run_report

@@ -9,8 +9,10 @@ Scale notes:
 - extract+normalize+emit is ONE narrow projection — no shuffle until the
   final dropDuplicates. At 10^12 pages the only shuffle in the core path
   is the dedup exchange, partitioned by all triple columns; AQE coalesces.
-- every emitter is a pure column expression → whole-stage codegen end to
-  end; Python appears nowhere in the per-row path.
+- the default Arrow path (emit/arrow.py) runs parse+emit in Python, in
+  one Arrow-batched mapInPandas stage; the Column path
+  (emit_mode="columns") keeps every emitter a pure column expression, so
+  whole-stage codegen runs end to end with no Python in the per-row path.
 """
 
 from __future__ import annotations

@@ -68,19 +68,14 @@ def get_spark(
         # partition count.
         .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # a small parquet table reads as ONE split (maxPartitionBytes
-        # governs splits by bytes), so every per-row-heavy stage over it
+        # a small parquet table reads as ONE split under the default
+        # 128 MB maxPartitionBytes, so every per-row-heavy stage over it
         # runs single-task: minhash signatures over the 5k-doc sf0.1
         # table measured 16.3s on 1 split vs 2.0s repartitioned. Floor
-        # the split count at the core count instead — the same knob a
-        # 100 TB cluster job sets (there the files are big enough that
-        # maxPartitionBytes already yields ≫ cores splits; the floor is
-        # then a no-op). Scan-level, so no extra exchange anywhere.
-        # a small parquet table reads as ONE split under the default
-        # 128 MB maxPartitionBytes, serializing per-row-heavy stages.
-        # This floor asks for ≥cores splits; note it only subdivides
-        # down to openCostInBytes (4 MB), so sub-4 MB files still read
-        # as one split — bench.py's session additionally lowers
+        # the split count at the core count instead. Scan-level, so no
+        # extra exchange anywhere. It only subdivides down to
+        # openCostInBytes (4 MB), so sub-4 MB files still read as one
+        # split — bench.py's session additionally lowers
         # maxPartitionBytes/openCostInBytes for the KB-scale driver
         # tables. On a 100 TB cluster the files out-size the floor and
         # it is a no-op.

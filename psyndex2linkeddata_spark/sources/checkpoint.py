@@ -9,11 +9,21 @@ RECORDS_START/END slice windows (/root/reference/convert_starxml_to_bf.py
 - input is bucketed by a stable hash of `url` (crc32 % n_buckets) — the
   same bucketing a real deployment would get from Iceberg's bucket(url)
   partition transform;
-- work proceeds in bucket batches; each committed batch appends one
-  lineage row per bucket to the checkpoint table: (stage, run_id, bucket,
-  row_count, n_triples, wall_s, status, ts);
+- the unit of work is the COMMIT BATCH of `buckets_per_commit` buckets:
+  one `process` call and one Spark write per batch, landing under the
+  batch's first bucket (out_dir/bucket=<b0:05d>/);
+- each committed batch appends one lineage row per bucket to the
+  checkpoint table: (stage, run_id, bucket, row_count, n_triples,
+  wall_s, status, ts). `row_count` is the bucket's own page count; the
+  batch's `n_triples` (rows written) and `wall_s` sit on its first
+  bucket's row and are 0 on the others, so sums over lineage are exact;
 - resume = anti-join pending buckets against committed ones — a killed
   run redoes only its uncommitted batch.
+
+The persisted triples are a MULTISET: each batch's rows are distinct
+(`process` deduplicates), but a vocabulary node emitted by pages of two
+batches is stored once per batch. Readers deduplicate, as
+`jobs/convert.py` does; lineage `n_triples` counts persisted rows.
 
 S9/S10 (log sink, run manifest) map to the same table: `run_manifest`
 rows carry generationProcess/generationDate like the reference's
@@ -26,7 +36,7 @@ import os
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql import types as T
 
 CKPT_SCHEMA = T.StructType(
@@ -47,12 +57,20 @@ def bucket_col(n_buckets: int):
     return F.pmod(F.crc32(F.col("url")), F.lit(n_buckets)).cast("int")
 
 
+def _path_exists(spark: SparkSession, path: str) -> bool:
+    jvm = spark.sparkContext._jvm
+    p = jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()).exists(p)
+
+
 def completed_buckets(spark: SparkSession, ckpt_dir: str, stage: str) -> set[int]:
+    """Buckets whose lineage committed. A missing lineage table means a
+    fresh run; any other read error (a corrupt table) propagates rather
+    than silently re-running every bucket."""
     path = os.path.join(ckpt_dir, "lineage")
-    try:
-        df = spark.read.parquet(path)
-    except Exception:
+    if not _path_exists(spark, path):
         return set()
+    df = spark.read.parquet(path)
     return {
         r.bucket
         for r in df.where(
@@ -83,13 +101,23 @@ def run_checkpointed(
 ) -> dict:
     """Resumable pages→triples run. `process` is pages-DF → triples-DF.
 
-    Each bucket's output lands under out_dir/bucket=<b>/ — a
-    DETERMINISTIC location written with overwrite, so re-running a bucket
-    after a crash replaces its rows instead of duplicating them (and
-    re-reads prune on the bucket= partition). A batch's lineage rows
-    commit only after every bucket of the batch is written, as one atomic
-    single-file append — kill the process anywhere and the next
-    invocation redoes exactly the buckets whose lineage never landed.
+    Pending buckets are grouped into commit batches of
+    `buckets_per_commit`. Each batch is ONE `process` call over the
+    batch's pages and ONE Spark write, partitioned by `bucket` with
+    dynamic partition overwrite into out_dir/bucket=<b0:05d>/, b0 being
+    the batch's first bucket — a DETERMINISTIC location, so re-running a
+    batch after a crash replaces its rows instead of duplicating them.
+    The per-bucket page counts and the batch's row count ride the same
+    write as `DataFrame.observe` metrics: no extra count jobs, no
+    re-read.
+
+    Lineage gets one row per bucket: `row_count` is the bucket's page
+    count; `n_triples` (rows written) and `wall_s` of the batch go on
+    b0's row and are 0 on the others. The rows commit only after the
+    write, as one atomic single-file append — kill the process anywhere
+    and the next invocation redoes exactly the buckets whose lineage
+    never landed. Persisted rows are distinct within a batch only; see
+    the module docstring for the multiset contract.
     """
     import datetime as dt
 
@@ -100,29 +128,38 @@ def run_checkpointed(
     batches_run = 0
     for i in range(0, len(pending), buckets_per_commit):
         batch = pending[i : i + buckets_per_commit]
-        rows = []
+        t0 = time.time()
         now = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
-        for b in batch:
-            t0 = time.time()  # per-bucket wall time, not cumulative batch
-            part = bucketed.where(F.col("_bucket") == b)
-            n_pages = part.count()
-            triples = process(part.drop("_bucket"))
-            out_path = os.path.join(out_dir, f"bucket={b:05d}")
-            triples.write.mode("overwrite").parquet(out_path)
-            n_triples = spark.read.parquet(out_path).count()
-            rows.append(
-                dict(
-                    stage=stage,
-                    run_id=run_id,
-                    bucket=b,
-                    row_count=int(n_pages),
-                    n_triples=int(n_triples),
-                    wall_s=float(time.time() - t0),
-                    status="done",
-                    ts=now,
-                )
+        page_obs, triple_obs = Observation(), Observation()
+        part = bucketed.where(F.col("_bucket").isin(batch)).observe(
+            page_obs,
+            *[F.count_if(F.col("_bucket") == b).alias(f"b{b}") for b in batch],
+        )
+        triples = process(part.drop("_bucket")).observe(
+            triple_obs, F.count(F.lit(1)).alias("n")
+        )
+        triples.withColumn("bucket", F.lit(f"{batch[0]:05d}")).write.mode(
+            "overwrite"
+        ).option("partitionOverwriteMode", "dynamic").partitionBy(
+            "bucket"
+        ).parquet(out_dir)
+        n_pages = page_obs.get
+        n_triples = int(triple_obs.get["n"])
+        wall_s = float(time.time() - t0)
+        rows = [
+            dict(
+                stage=stage,
+                run_id=run_id,
+                bucket=b,
+                row_count=int(n_pages[f"b{b}"]),
+                n_triples=n_triples if b == batch[0] else 0,
+                wall_s=wall_s if b == batch[0] else 0.0,
+                status="done",
+                ts=now,
             )
-        # lineage commits AFTER the whole batch's output writes — the
+            for b in batch
+        ]
+        # lineage commits AFTER the batch's output write — the
         # crash-recovery line
         _append_lineage(spark, ckpt_dir, rows)
         batches_run += 1

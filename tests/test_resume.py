@@ -9,6 +9,8 @@ from pyspark.sql import functions as F
 
 from psyndex2linkeddata_spark.datagen.pages import write_pages_parquet
 from psyndex2linkeddata_spark.plans.pipeline import build_triples
+from psyndex2linkeddata_spark.schema import TRIPLE_COLS
+from psyndex2linkeddata_spark.sources import checkpoint
 from psyndex2linkeddata_spark.sources.checkpoint import (
     completed_buckets,
     run_checkpointed,
@@ -63,10 +65,10 @@ def test_crash_mid_run_resumes_exactly(spark, small_pages, tmp_path_factory):
 
     def flaky(pages):
         calls["n"] += 1
-        # process runs once per BUCKET; with buckets_per_commit=2 the
-        # third call is the first bucket of the second batch → batch 1
-        # fully committed, batch 2 never reaches its lineage commit
-        if calls["n"] == 3:
+        # process runs once per commit BATCH; with buckets_per_commit=2
+        # the second call is the second batch → batch 1 fully committed,
+        # batch 2 never reaches its lineage commit
+        if calls["n"] == 2:
             raise RuntimeError("simulated executor loss")
         return build_triples(pages)
 
@@ -86,6 +88,131 @@ def test_crash_mid_run_resumes_exactly(spark, small_pages, tmp_path_factory):
     got = spark.read.parquet(out).drop("bucket").distinct().count()
     expect = build_triples(small_pages).count()
     assert got == expect
+
+
+def test_completed_buckets_fails_loud_on_corrupt_lineage(spark, tmp_path):
+    """Only a missing lineage table reads as a fresh run; a corrupt one
+    raises instead of silently re-running every bucket."""
+    ckpt = str(tmp_path / "ckpt")
+    assert completed_buckets(spark, ckpt, "triples") == set()
+    os.makedirs(os.path.join(ckpt, "lineage"))
+    with open(os.path.join(ckpt, "lineage", "part-00000.parquet"), "wb") as f:
+        f.write(b"not a parquet file")
+    with pytest.raises(Exception):
+        completed_buckets(spark, ckpt, "triples")
+
+
+def _triple_set(df):
+    return {tuple(r) for r in df.select(*TRIPLE_COLS).collect()}
+
+
+def test_crash_at_commit_resumes_with_other_batch_size(
+    spark, small_pages, tmp_path_factory, monkeypatch
+):
+    """The second batch's output lands but its lineage commit dies; the
+    resume regroups the pending buckets one per batch. The persisted
+    distinct set is still exactly the one-shot pipeline's, and every
+    bucket= partition on disk belongs to a committed bucket."""
+    base = str(tmp_path_factory.mktemp("ckpt_regroup"))
+    out, ckpt = os.path.join(base, "out"), os.path.join(base, "ckpt")
+    append = checkpoint._append_lineage
+    commits = {"n": 0}
+
+    def dying_append(*args):
+        commits["n"] += 1
+        if commits["n"] == 2:
+            raise RuntimeError("simulated driver loss before commit")
+        append(*args)
+
+    monkeypatch.setattr(checkpoint, "_append_lineage", dying_append)
+    with pytest.raises(RuntimeError):
+        run_checkpointed(
+            spark, small_pages, out, ckpt, build_triples,
+            n_buckets=N_BUCKETS, buckets_per_commit=2,
+        )
+    monkeypatch.setattr(checkpoint, "_append_lineage", append)
+    assert completed_buckets(spark, ckpt, "triples") == {0, 1}
+    assert sorted(os.listdir(out)) == ["bucket=00000", "bucket=00002"]
+
+    res = run_checkpointed(
+        spark, small_pages, out, ckpt, build_triples,
+        n_buckets=N_BUCKETS, buckets_per_commit=1,
+    )
+    assert (res["resumed_buckets"], res["processed_buckets"]) == (2, 2)
+    assert res["batches"] == 2
+    committed = completed_buckets(spark, ckpt, "triples")
+    assert committed == set(range(N_BUCKETS))
+    on_disk = {
+        int(d.split("=", 1)[1]) for d in os.listdir(out) if d.startswith("bucket=")
+    }
+    assert on_disk <= committed
+    assert _triple_set(spark.read.parquet(out)) == _triple_set(
+        build_triples(small_pages)
+    )
+
+
+def test_lineage_sums_match_pages_and_persisted_rows(
+    spark, small_pages, tmp_path_factory
+):
+    """Per-bucket page counts are exact; a batch's row count and wall
+    time sit on its first bucket only, so lineage sums equal the input
+    pages and the rows on disk."""
+    base = str(tmp_path_factory.mktemp("ckpt_sums"))
+    out, ckpt = os.path.join(base, "out"), os.path.join(base, "ckpt")
+    run_checkpointed(
+        spark, small_pages, out, ckpt, build_triples,
+        n_buckets=N_BUCKETS, buckets_per_commit=3,
+    )
+    rows = {r.bucket: r for r in spark.read.parquet(os.path.join(ckpt, "lineage")).collect()}
+    assert sorted(rows) == list(range(N_BUCKETS))
+    per_bucket = {
+        r.b: r["count"]
+        for r in small_pages.groupBy(checkpoint.bucket_col(N_BUCKETS).alias("b"))
+        .count()
+        .collect()
+    }
+    assert {b: r.row_count for b, r in rows.items()} == {
+        b: per_bucket.get(b, 0) for b in range(N_BUCKETS)
+    }
+    assert sum(r.row_count for r in rows.values()) == N_PAGES
+    persisted = spark.read.parquet(out).count()
+    assert sum(r.n_triples for r in rows.values()) == persisted
+    # batches [0, 1, 2] and [3]: the non-first buckets carry no batch totals
+    assert rows[1].n_triples == rows[2].n_triples == 0
+    assert rows[1].wall_s == rows[2].wall_s == 0.0
+    assert rows[0].n_triples > 0 and rows[3].n_triples > 0
+
+
+def _spark_jobs(spark, group, fn) -> int:
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_commit_batch_job_count_is_independent_of_batch_width(
+    spark, small_pages, tmp_path_factory
+):
+    """A commit batch costs a fixed number of Spark jobs: a batch of four
+    buckets issues no more jobs than a batch of one, so no per-bucket
+    job (count, write or re-read) can creep back in."""
+    base = str(tmp_path_factory.mktemp("ckpt_jobs"))
+
+    def run(tag, n_buckets):
+        return lambda: run_checkpointed(
+            spark, small_pages, os.path.join(base, tag, "out"),
+            os.path.join(base, tag, "ckpt"), build_triples,
+            n_buckets=n_buckets, buckets_per_commit=n_buckets,
+        )
+
+    one = _spark_jobs(spark, "ckpt_jobs_1", run("one", 1))
+    four = _spark_jobs(spark, "ckpt_jobs_4", run("four", 4))
+    assert 0 < four <= one
+    assert four <= 4
 
 
 def test_streaming_incremental(spark, tmp_path_factory):

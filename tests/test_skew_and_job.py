@@ -35,6 +35,7 @@ def test_convert_job_cli(spark, tmp_path_factory):
     from psyndex2linkeddata_spark.datagen.authorities import write_authority_parquets
     from psyndex2linkeddata_spark.datagen.pages import write_pages_parquet
     from psyndex2linkeddata_spark.jobs.convert import main
+    from psyndex2linkeddata_spark.schema import TRIPLE_COLS
 
     base = str(tmp_path_factory.mktemp("job"))
     pages = os.path.join(base, "pages.parquet")
@@ -59,7 +60,7 @@ def test_convert_job_cli(spark, tmp_path_factory):
             "--table", "wh_job.triples",
         ]
     )
-    triples = spark.read.parquet(os.path.join(out, "triples")).drop("batch")
+    triples = spark.read.parquet(os.path.join(out, "triples")).select(*TRIPLE_COLS)
     assert triples.distinct().count() > 1000
     # --table materialized the same triple set as a partitioned table
     tbl = spark.table("wh_job.triples")
