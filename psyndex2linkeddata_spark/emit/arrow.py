@@ -1916,8 +1916,11 @@ def emit_triples_arrow(df, bad_dfks: frozenset | None = None, annif: bool = True
     Input is either the canonical records shape (has a DFK column — output
     of extract_records / starxml) or the raw pages shape (url, text, ...);
     pages are parsed in-stage (parse_page_text). `bad_dfks` applies the
-    S3 kill-list inside the stage (small curated list; the records path
-    keeps using the broadcast anti-join operator). `annif=False` models
+    S3 kill-list inside the stage, on both input shapes: a record whose
+    DFK (the cleaned first value, the one the emit uses) is in the set
+    emits nothing. build_triples collects it from bad_ids once per call;
+    the Column path keeps the broadcast anti-join (filter_bad_ids), the
+    parity reference for this check. `annif=False` models
     the reference's offline degrade (no J8 suggestion for CM-less works —
     the mode the reference-exec oracle compares against).
     """

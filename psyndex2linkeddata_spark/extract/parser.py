@@ -106,7 +106,9 @@ def text_from_html(col: Column) -> Column:
 def filter_bad_ids(records: DataFrame, bad_ids: DataFrame) -> DataFrame:
     """S3/P5 kill-list: reference rereads bad_dfks.tsv per record
     (/root/reference/convert_starxml_to_bf.py:1185-1190, O(records×list));
-    here one broadcast anti-join."""
+    here one broadcast anti-join. This is the Column path's operator and
+    the parity reference for the Arrow path, which applies the same list
+    inside its emit stage (emit_triples_arrow's `bad_dfks`)."""
     return records.join(
         F.broadcast(bad_ids.select(F.col("dfk").alias("DFK"))), "DFK", "left_anti"
     )

@@ -9,10 +9,15 @@ Scale notes:
 - extract+normalize+emit is ONE narrow projection — no shuffle until the
   final dropDuplicates. At 10^12 pages the only shuffle in the core path
   is the dedup exchange, partitioned by all triple columns; AQE coalesces.
-- the default Arrow path (emit/arrow.py) runs parse+emit in Python, in
-  one Arrow-batched mapInPandas stage; the Column path
-  (emit_mode="columns") keeps every emitter a pure column expression, so
-  whole-stage codegen runs end to end with no Python in the per-row path.
+- the default Arrow path (emit/arrow.py) runs parse + S3 kill-list +
+  emit in Python, in one Arrow-batched mapInArrow stage that reads the
+  pages directly: each page is parsed once. The Column parser
+  (extract_records) enters an Arrow plan only when a kerndaten, crossref
+  or tests resolution map needs its mention columns.
+- the Column path (emit_mode="columns") keeps every stage a pure column
+  expression, with the kill-list as a broadcast anti-join
+  (filter_bad_ids), so whole-stage codegen runs end to end with no
+  Python in the per-row path.
 """
 
 from __future__ import annotations
@@ -227,72 +232,73 @@ def _build_triples_arrow(
     authorities: dict[str, DataFrame] | None,
     annif: bool = True,
 ) -> DataFrame:
-    """Arrow path: one narrow mapInPandas stage (emit/arrow.py) does
-    parse+emit; the offline-linking joins (J13-J15) still run as
-    DataFrame joins over the Column-parsed mention columns, reduced to
-    compact per-record resolution maps the Python emitter applies."""
+    """Arrow path: one narrow mapInArrow stage (emit/arrow.py) does
+    parse+emit and drops kill-listed records after its own parse, so the
+    check sees the same cleaned first DFK value the emit uses.
+
+    Pages route (no kerndaten/crossref/tests map): the stage reads the
+    pages and parses each one once. Maps route: the offline-linking joins
+    (J9, J13-J15) run as DataFrame joins over the Column-parsed mention
+    columns, reduced to compact per-record resolution maps the Python
+    emitter applies; a killed record emits nothing, whatever maps it
+    was joined to.
+
+    The kill-list reaches the stage as a frozenset of DFKs, collected
+    from bad_ids in one small job per call. filter_bad_ids'
+    `F.broadcast(bad_ids)` builds the same list on the driver, so the
+    memory contract is unchanged."""
     from psyndex2linkeddata_spark.emit.arrow import emit_triples_arrow
-    from psyndex2linkeddata_spark.extract.parser import filter_bad_ids
 
     auth = authorities or {}
-    need_maps = "crossref" in auth or "tests" in auth or "kerndaten" in auth
-    if need_maps or "bad_ids" in auth:
-        records = extract_records(pages)
-        if "bad_ids" in auth:
-            records = filter_bad_ids(records, auth["bad_ids"])
+    src = pages
+    if "crossref" in auth or "tests" in auth or "kerndaten" in auth:
+        from psyndex2linkeddata_spark.plans import crossref as cr
+
+        src = extract_records(pages)
         if "kerndaten" in auth:
-            records = records.join(
-                kerndaten_resolution_map(records, auth["kerndaten"]),
+            src = src.join(
+                kerndaten_resolution_map(src, auth["kerndaten"]), "url", "left"
+            )
+        norm = normalize(src)
+        if "crossref" in auth:
+            src = src.join(
+                cr.rplic_resolution_map(
+                    norm,
+                    auth["crossref"],
+                    search_threshold=auth.get("crossref_search_threshold"),
+                ),
+                "url",
+                "left",
+            ).join(
+                cr.rel_resolution_map(
+                    norm,
+                    auth["crossref"],
+                    search_threshold=auth.get("crossref_rel_search_threshold"),
+                ),
                 "url",
                 "left",
             )
-        if need_maps:
-            from psyndex2linkeddata_spark.plans import crossref as cr
-
-            norm = normalize(records)
-            if "crossref" in auth:
-                records = records.join(
-                    cr.rplic_resolution_map(
-                        norm,
-                        auth["crossref"],
-                        search_threshold=auth.get("crossref_search_threshold"),
-                    ),
-                    "url",
-                    "left",
-                ).join(
-                    cr.rel_resolution_map(
-                        norm,
-                        auth["crossref"],
-                        search_threshold=auth.get("crossref_rel_search_threshold"),
-                    ),
-                    "url",
-                    "left",
-                )
-            if "tests" in auth:
-                records = records.join(
-                    cr.testg_resolution_map(norm, auth["tests"]), "url", "left"
-                )
-        # barrier: enrich_triples references the set many times. With the
-        # persist in place the DataFrame-level A2 rule costs two cached
-        # reads, so run it here too — it covers the cross-record case
-        # (two pages sharing a DFK, one thesis + one Scholarly*) that the
-        # in-record rule can't see.
-        return finalize(
-            emit_triples_arrow(records, annif=annif),
-            barrier=True,
-            genre_cleanup=True,
-        )
-    # barrier-free fast path: genre_cleanup would re-execute the emit 3×
-    # (no exchange reuse without a barrier — measured). The in-record A2
-    # rule fully covers it as long as the input holds one page per DFK,
-    # which is the pages-table contract (url-keyed records export);
-    # callers with weaker provenance can pass authorities={} to opt into
-    # the barrier + DataFrame-level rule.
-    safe = authorities is not None
+        if "tests" in auth:
+            src = src.join(cr.testg_resolution_map(norm, auth["tests"]), "url", "left")
+    # With authorities: barrier, because enrich_triples references the set
+    # many times; behind the persist the DataFrame-level A2 rule costs two
+    # cached reads, and it covers the cross-record case (two pages sharing
+    # a DFK, one thesis + one Scholarly*) that the in-record rule can't see.
+    # Without: the barrier-free fast path; genre_cleanup would re-execute
+    # the emit 3× (no exchange reuse without a barrier — measured). The
+    # in-record A2 rule fully covers it as long as the input holds one
+    # page per DFK, which is the pages-table contract (url-keyed records
+    # export); callers with weaker provenance can pass authorities={} to
+    # opt into the barrier + DataFrame-level rule.
+    bad = frozenset()
+    if "bad_ids" in auth:
+        rows = auth["bad_ids"].select("dfk").distinct().collect()
+        bad = frozenset(r.dfk for r in rows)
+    linked = authorities is not None
     return finalize(
-        emit_triples_arrow(pages, annif=annif),
-        barrier=safe,
-        genre_cleanup=safe,
+        emit_triples_arrow(src, bad_dfks=bad, annif=annif),
+        barrier=linked,
+        genre_cleanup=linked,
     )
 
 
@@ -306,8 +312,10 @@ def build_triples(
     """pages(url, warc_ts, html, text, lang) → deduplicated triples DF.
 
     With `authorities` (see datagen/authorities.py for the table shapes):
-    the bad_ids kill-list filters records (S3), and the linking stage
-    (plans/enrich.py — J1/J3/J5/J6 + A2 ancestor cleanup) runs after emit.
+    the bad_ids kill-list drops records (S3) — inside the Arrow stage, as
+    a driver-collected set, or as a broadcast anti-join on the Column
+    path — and the linking stage (plans/enrich.py — J1/J3/J5/J6 + A2
+    ancestor cleanup) runs after emit.
 
     `emit_mode` ('arrow' default, or 'columns', env SPARK_GRAFT_EMIT):
     both paths emit byte-identical triple sets (tests/test_arrow_parity);

@@ -9,8 +9,9 @@ Cost control (round-3 verdict #5): the Column path is the expensive side
 scenario in a module-scoped fixture and shared — the plain set serves
 both the pages-input and records-input tests (their column sides are the
 same plan: extract → normalize → emit → finalize), and the authorities
-scenario runs on a deterministic ~1/3 subset of the corpus. 6 full
-Column executions → 2 (one full, one third-size); parity stays exact-set.
+scenarios (with and without resolution maps) run on a deterministic
+~1/3 subset of the corpus. 7 full Column executions → 3 (one full, two
+third-size); parity stays exact-set.
 """
 
 from __future__ import annotations
@@ -41,10 +42,19 @@ def column_plain(spark, pages):
 
 
 @pytest.fixture(scope="module")
-def pages_subset(pages):
+def pages_subset(spark, pages, fixture_dir):
     """Deterministic ~1/3 slice (crc32(url) — stable across jobs, unlike
-    limit(), whose row pick can vary between executions)."""
-    return pages.filter(F.crc32(F.col("url")) % 3 == 0)
+    limit(), whose row pick can vary between executions), plus the pages
+    the bad_ids kill-list names, which the slice alone misses: the
+    kill-list scenarios then drop real pages."""
+    killed = [
+        r.dfk
+        for r in spark.read.parquet(os.path.join(fixture_dir, "bad_ids.parquet"))
+        .select("dfk")
+        .collect()
+    ]
+    dfk = F.regexp_extract(F.col("text"), r"(?m)^DFK (.*)$", 1)
+    return pages.filter((F.crc32(F.col("url")) % 3 == 0) | dfk.isin(*killed))
 
 
 @pytest.fixture(scope="module")
@@ -88,11 +98,68 @@ def test_arrow_matches_columns_records_input(spark, pages, column_plain):
     assert a == column_plain, _diff_msg(a, column_plain)
 
 
-def test_arrow_matches_columns_with_authorities(spark, pages_subset, authorities):
-    """Kill-list + Crossref/TESTG resolution maps applied in-stage."""
-    a = _tset(build_triples(pages_subset, authorities, emit_mode="arrow"))
-    c = _tset(build_triples(pages_subset, authorities, emit_mode="columns"))
+def _job_authorities(authorities):
+    """The authority set jobs/convert.py loads (no resolution maps)."""
+    from psyndex2linkeddata_spark.jobs.convert import AUTHORITY_TABLES
+
+    return {k: authorities[k] for k in AUTHORITY_TABLES}
+
+
+@pytest.mark.parametrize("scenario", ["maps", "job"])
+def test_arrow_matches_columns_with_authorities(
+    spark, pages_subset, authorities, scenario
+):
+    """Kill-list applied in-stage on both Arrow routes: `maps` adds the
+    resolution maps the fixture provides (records input), `job` is the
+    convert job's authority set (pages input)."""
+    from psyndex2linkeddata_spark.extract.parser import extract_records
+
+    auth = authorities if scenario == "maps" else _job_authorities(authorities)
+    killed = extract_records(pages_subset).join(
+        auth["bad_ids"].select(F.col("dfk").alias("DFK")), "DFK"
+    )
+    assert killed.count() > 0
+    a = _tset(build_triples(pages_subset, auth, emit_mode="arrow"))
+    c = _tset(build_triples(pages_subset, auth, emit_mode="columns"))
     assert a == c, _diff_msg(a, c)
+
+
+def test_arrow_linking_parses_pages_once(
+    spark, pages_subset, authorities, fixture_dir, monkeypatch
+):
+    """Plan shape of the Arrow linking path: with the job's authority set
+    neither the Column parser nor the anti-join kill-list enters the plan
+    (the stage parses pages and applies the kill-list itself); a
+    resolution map still needs the Column parser's mention columns."""
+    from psyndex2linkeddata_spark.extract import parser
+    from psyndex2linkeddata_spark.plans import pipeline
+
+    def forbidden(*args, **kwargs):
+        raise AssertionError("Column parser or anti-join on the Arrow pages route")
+
+    monkeypatch.setattr(parser, "filter_bad_ids", forbidden)
+    monkeypatch.setattr(pipeline, "extract_records", forbidden)
+    job = _job_authorities(authorities)
+    assert build_triples(pages_subset, job, emit_mode="arrow").count() > 0
+
+    calls = []
+
+    def spy(pages):
+        calls.append(pages)
+        return parser.extract_records(pages)
+
+    monkeypatch.setattr(pipeline, "extract_records", spy)
+    crossref = spark.createDataFrame(
+        [("10.1000/x", "a title", "an author")],
+        "doi string, title string, authors string",
+    )
+    kern = spark.read.parquet(os.path.join(fixture_dir, "auth_kerndaten.parquet"))
+    for key, table in (("crossref", crossref), ("kerndaten", kern)):
+        calls.clear()
+        build_triples(
+            pages_subset, {"bad_ids": job["bad_ids"], key: table}, emit_mode="arrow"
+        )
+        assert len(calls) == 1, key
 
 
 def test_crlf_pages_match_lf_pages_both_paths(spark, pages_subset):

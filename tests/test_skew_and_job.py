@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from psyndex2linkeddata_spark.operators.skew import salted_collect_set, salted_count
@@ -32,9 +33,12 @@ def test_salted_collect_set_equals_plain(spark):
 
 
 def test_convert_job_cli(spark, tmp_path_factory):
+    from psyndex2linkeddata_spark import namespaces as NS
     from psyndex2linkeddata_spark.datagen.authorities import write_authority_parquets
     from psyndex2linkeddata_spark.datagen.pages import write_pages_parquet
-    from psyndex2linkeddata_spark.jobs.convert import main
+    from psyndex2linkeddata_spark.extract.parser import extract_records
+    from psyndex2linkeddata_spark.jobs.convert import load_authorities, main
+    from psyndex2linkeddata_spark.plans.pipeline import build_triples
     from psyndex2linkeddata_spark.schema import TRIPLE_COLS
 
     base = str(tmp_path_factory.mktemp("job"))
@@ -69,6 +73,15 @@ def test_convert_job_cli(spark, tmp_path_factory):
     spark.sql("drop database if exists wh_job cascade")
     # enrichment ran (ror ids present) and kill-list applied
     assert triples.where(F.col("subj").endswith("_rorid")).count() > 0
+    authorities = load_authorities(spark, auth_dir)
+    killed = {r.dfk for r in authorities["bad_ids"].collect()}
+    pages_df = spark.read.parquet(pages)
+    assert extract_records(pages_df).where(F.col("DFK").isin(*killed)).count() > 0
+    for dfk in killed:
+        assert triples.where(F.col("subj").startswith(NS.WORKS + dfk)).count() == 0
+    # the persisted distinct set is the one-shot pipeline's
+    one_shot = build_triples(pages_df, authorities).select(*TRIPLE_COLS)
+    assert set(triples.distinct().collect()) == set(one_shot.collect())
     lineage = spark.read.parquet(os.path.join(ckpt, "lineage"))
     assert lineage.where(F.col("status") == "done").count() == 4
     assert spark.read.text(nt).count() == triples.distinct().count()
