@@ -6,15 +6,16 @@ higher-order-function lambdas, which Catalyst evaluates INTERPRETED
 (ArrayTransform/ArrayFilter are CodegenFallback): measured ~77 ms of CPU
 per page at sf0.1 — versus ~1.3 ms for the same record→triples
 transformation in plain Python. This module is that Python
-transformation, Arrow-batched via mapInPandas, exactly the architecture
+transformation, Arrow-batched via mapInArrow, exactly the architecture
 BASELINE.json's north_star prescribes ("vectorized Arrow UDFs parse each
 web page's text into bibliographic-style mentions … materialize (subj,
 pred, obj) triples"). Catalyst keeps doing what it is good at — scans,
-filter pushdown, the dedup shuffle, broadcast linking joins — while the
-procedural per-record emission (the reference is a per-record procedural
-converter, convert_starxml_to_bf.py:1177-1503) runs as one narrow
-Arrow-batched stage with no shuffle: embarrassingly parallel at 10^12
-pages, ~60× less CPU per page, and a plan measured in KB instead of MB.
+filter pushdown, the dedup shuffle — while the procedural per-record
+emission and its authority linking (link_record; the reference is a
+per-record procedural converter, convert_starxml_to_bf.py:1177-1503)
+run as one narrow Arrow-batched stage with no shuffle: embarrassingly
+parallel at 10^12 pages, ~60× less CPU per page, and a plan measured in
+KB instead of MB.
 
 Semantics: byte-identical to the Column path (enforced by
 tests/test_arrow_parity.py — exact triple-set equality on the synthetic
@@ -41,6 +42,8 @@ from psyndex2linkeddata_spark import namespaces as NS
 from psyndex2linkeddata_spark.data.tables import (
     cm_mapping_lookup,
     dd_codes,
+    funder_names_full_replacelist,
+    funder_names_substr_replacelist,
     geonames_countries,
     issuancetypes,
 )
@@ -1864,6 +1867,165 @@ def record_triples(rec: dict, sink: Sink | None = None, annif: bool = True):
 
 
 # --------------------------------------------------------------------------
+# in-stage linking: the plans/enrich.py joins as per-record dict lookups
+# --------------------------------------------------------------------------
+
+_KEY_PUNCT_RE = re.compile(r"[.,;:()]+")
+# Java's \s is ASCII-only: NBSP does not fold
+_KEY_SPACE_RE = re.compile(r"[ \t\n\x0b\f\r]+")
+
+
+def norm_key(s):
+    """operators/linking.norm_key: F.lower(F.trim(s)) (F.trim strips only
+    U+0020), punctuation runs and Java \\s runs to one space, F.trim."""
+    if s is None:
+        return None
+    s = _KEY_PUNCT_RE.sub(" ", s.strip(" ").lower())
+    return _KEY_SPACE_RE.sub(" ", s).strip(" ")
+
+
+_FUNDER_FULL = dict(funder_names_full_replacelist)
+
+
+def canonicalize_funder_name(s):
+    """functions/grants.canonicalize_funder_name (F28): the full-name map,
+    then the first substring rule in table order."""
+    s = _FUNDER_FULL.get(s, s)
+    for substr, repl in funder_names_substr_replacelist:
+        if substr in s:
+            return repl
+    return s
+
+
+def authority_links(org_rows=(), concept_rows=()) -> dict:
+    """auth_orgs / auth_concepts rows -> the lookup dicts of link_record,
+    with the winners of plans/enrich.py's authority windows:
+
+    - orgs: norm_key(name or alias) -> (org_id, fundref_doi,
+      country_name); names before aliases, then the lowest org_id
+      (_org_authority; Spark sorts NULL first);
+    - topics: label_en -> uri over terms/addterms; terms first, then the
+      lowest uri (topic_links);
+    - genres, licenses: uri -> [(label_de, label_en), ...], every row
+      (genre_labels / license_labels join the vocab undeduplicated).
+
+    NULL keys are left out, as they never match in a join."""
+    orgs, org_rank = {}, {}
+    for r in org_rows:
+        org_id = r["org_id"]
+        rank_id = (org_id is not None, org_id or "")
+        names = [(r["name"], 0)] + [(a, 1) for a in r["aliases"] or ()]
+        for name, pref in names:
+            key = norm_key(name)
+            if key is None:
+                continue
+            rank = (pref, *rank_id)
+            if key not in org_rank or rank < org_rank[key]:
+                org_rank[key] = rank
+                orgs[key] = (org_id, r["fundref_doi"], r["country_name"])
+    topics, topic_rank = {}, {}
+    genres, licenses = {}, {}
+    for r in concept_rows:
+        vocab, uri, label_en = r["vocab"], r["uri"], r["label_en"]
+        if vocab in ("terms", "addterms") and label_en is not None:
+            rank = (vocab != "terms", uri is not None, uri or "")
+            if label_en not in topic_rank or rank < topic_rank[label_en]:
+                topic_rank[label_en] = rank
+                topics[label_en] = uri
+        elif vocab in ("genres", "licenses") and uri is not None:
+            table = genres if vocab == "genres" else licenses
+            table.setdefault(uri, []).append((r["label_de"], label_en))
+    return {"orgs": orgs, "topics": topics, "genres": genres, "licenses": licenses}
+
+
+def _funder_doi(label, orgs):
+    """J3 + J4: the preferred org for the canonical key; the pre-comma
+    key only when that yields no FundRef DOI."""
+    canon = canonicalize_funder_name(label)
+    hit = orgs.get(norm_key(canon))
+    if (hit is None or hit[1] is None) and "," in canon:
+        hit = orgs.get(norm_key(canon.split(",", 1)[0]))
+    return None if hit is None else hit[1]
+
+
+_ORG = "_organization"
+
+
+def link_record(g: Sink, start: int, links: dict) -> None:
+    """Append the link triples of the record held in g[start:] — the
+    rules of plans/enrich.py (the Column path's joins, and the parity
+    reference), applied per record as the reference does:
+
+    - J5 topic owl:sameAs, J6 genre and license labels;
+    - J1 ROR id nodes and J3/J4 FundRef DOI nodes;
+    - J2 country fill for organizations whose affiliation has no address.
+
+    Exact against the joins: every rule but J2 maps one triple, so
+    applying it before the dedup gives the same set. J2 checks the
+    address per affiliation node, and affiliation nodes are record-local
+    (<W>#contribution<n>_..._affiliation1), so under the pages-table
+    contract (one page per DFK) this record holds every triple of its
+    affiliations."""
+    add = g.add
+    subj, pred, obj, lang = g.subj, g.pred, g.obj, g.lang
+    orgs, topics = links["orgs"], links["topics"]
+    genres, licenses = links["genres"], links["licenses"]
+    org_labels, have_addr = [], set()
+    for i in range(start, len(subj)):
+        p, s, o = pred[i], subj[i], obj[i]
+        if p == NS.RDFS_LABEL:
+            if s.endswith(_ORG):
+                org_labels.append((s, o))
+            elif s.endswith("_funder"):
+                doi = _funder_doi(o, orgs)
+                if doi is not None:
+                    fnode = s + "_funderid"
+                    add(fnode, NS.RDF_TYPE, NS.PXC + "FundRefDoi", iri=True)
+                    add(fnode, NS.RDF + "value", doi)
+                    add(s, NS.BF + "identifiedBy", fnode, iri=True)
+        elif p == NS.SKOS + "prefLabel":
+            if lang[i] == "en" and "#topic" in s:
+                add(s, NS.OWL + "sameAs", topics.get(o), iri=True)
+        elif p == NS.BF + "genreForm":
+            for de, en in genres.get(o, ()):
+                add(o, NS.SKOS + "prefLabel", de, lang="de")
+                add(o, NS.SKOS + "prefLabel", en, lang="en")
+                add(o, NS.RDFS_LABEL, en)
+        elif p == NS.BF + "usageAndAccessPolicy":
+            for de, en in licenses.get(o, ()):
+                add(o, NS.SKOS + "prefLabel", de, lang="de")
+                add(o, NS.SKOS + "prefLabel", en, lang="en")
+        elif p == NS.MADS + "hasAffiliationAddress":
+            have_addr.add(s)
+    for s, label in org_labels:
+        hit = orgs.get(norm_key(label))
+        if hit is None:
+            continue
+        org_id, _doi, country = hit
+        ror = s + "_rorid"
+        add(ror, NS.RDF_TYPE, NS.LOCID + "ror", iri=True)
+        add(ror, NS.RDF + "value", org_id)
+        add(s, NS.BF + "identifiedBy", ror, iri=True)
+        aff = s[: -len(_ORG)]
+        if country is None or aff in have_addr:
+            continue
+        addr = aff + "_address"
+        cnode = addr + "_country"
+        # geonames_name / geonames_id: casefold of the F.trim-ed name
+        geo = _GEO.get(country.strip(" ").casefold())
+        add(aff, NS.MADS + "hasAffiliationAddress", addr, iri=True)
+        add(addr, NS.RDF_TYPE, NS.MADS + "Address", iri=True)
+        add(addr, NS.MADS + "country", cnode, iri=True)
+        add(cnode, NS.RDF_TYPE, NS.MADS + "Country", iri=True)
+        add(cnode, NS.RDFS_LABEL, geo[0] if geo else country)
+        if geo is not None and geo[1] is not None:
+            gnode = cnode + "_geonamesid"
+            add(cnode, NS.BF + "identifiedBy", gnode, iri=True)
+            add(gnode, NS.RDF_TYPE, NS.LOCID + "geonames", iri=True)
+            add(gnode, NS.RDF + "value", geo[1])
+
+
+# --------------------------------------------------------------------------
 # page-text parsing twin (extract/parser.py) + mapInPandas wrapper
 # --------------------------------------------------------------------------
 
@@ -1910,7 +2072,12 @@ def parse_page_text(text: str) -> dict:
 _RES_COLS = ("_rplic_res", "_rel_res", "_testg_res", "_kerndaten")
 
 
-def emit_triples_arrow(df, bad_dfks: frozenset | None = None, annif: bool = True):
+def emit_triples_arrow(
+    df,
+    bad_dfks: frozenset | None = None,
+    annif: bool = True,
+    links: dict | None = None,
+):
     """records-or-pages DataFrame -> triples DataFrame via one Arrow stage.
 
     Input is either the canonical records shape (has a DFK column — output
@@ -1920,7 +2087,10 @@ def emit_triples_arrow(df, bad_dfks: frozenset | None = None, annif: bool = True
     DFK (the cleaned first value, the one the emit uses) is in the set
     emits nothing. build_triples collects it from bad_ids once per call;
     the Column path keeps the broadcast anti-join (filter_bad_ids), the
-    parity reference for this check. `annif=False` models
+    parity reference for this check. `links` (authority_links' dicts)
+    runs link_record over each record's triples, so the stage also emits
+    the J1-J6 link triples that plans/enrich.py joins on the Column path.
+    `annif=False` models
     the reference's offline degrade (no J8 suggestion for CM-less works —
     the mode the reference-exec oracle compares against).
     """
@@ -1977,7 +2147,10 @@ def emit_triples_arrow(df, bad_dfks: frozenset | None = None, annif: bool = True
                     }
                 if rec.get("DFK") is None or rec["DFK"] in bad:
                     continue
+                start = len(g)
                 record_triples(rec, g, annif=annif)
+                if links is not None:
+                    link_record(g, start, links)
                 if len(g) >= flush_rows:
                     yield g.record_batch()
                     g = Sink()

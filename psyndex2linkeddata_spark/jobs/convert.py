@@ -22,11 +22,19 @@ AUTHORITY_TABLES = ("auth_orgs", "auth_concepts", "bad_ids")
 
 
 def load_authorities(spark: SparkSession, auth_dir: str) -> dict:
+    """The AUTHORITY_TABLES present under `auth_dir`, a local path or any
+    Hadoop FS URI (file://, hdfs://, s3a://). A directory holding none of
+    them raises: a job asked to link must not run unlinked."""
+    from psyndex2linkeddata_spark.sources.checkpoint import _path_exists
+
     out = {}
     for name in AUTHORITY_TABLES:
         path = os.path.join(auth_dir, f"{name}.parquet")
-        if os.path.exists(path):
+        if _path_exists(spark, path):
             out[name] = spark.read.parquet(path)
+    if not out:
+        tables = ", ".join(f"{n}.parquet" for n in AUTHORITY_TABLES)
+        raise FileNotFoundError(f"no authority table in {auth_dir} (expected {tables})")
     return out
 
 

@@ -1,10 +1,14 @@
-"""Stage 3 — link/enrich: authority broadcast joins over the emitted
-triples (SURVEY §2.4).
+"""Stage 3 — link/enrich on the Column path: authority broadcast joins
+over the emitted triples (SURVEY §2.4).
 
 The reference enriches per record with live HTTP (ROR, Crossref,
-Skosmos — modules/local_api_lookups.py, redis-cached). Here the
-authorities are input DataFrames and each lookup is ONE broadcast join
-over the distinct mention keys (Spark-native memoization):
+Skosmos — modules/local_api_lookups.py, redis-cached). The default Arrow
+path does the same per record inside its emit stage
+(emit/arrow.link_record, against dicts folded by authority_links); this
+module is the Column path's linking and the parity reference for that
+in-stage pass (tests/test_arrow_linking.py). Here the authorities are
+input DataFrames and each lookup is ONE broadcast join over the distinct
+mention keys (Spark-native memoization):
 
 - J5  topic owl:sameAs from the terms/addterms vocab (label_en → uri;
       'terms' preferred when both vocabs carry the label — mirrors the

@@ -2,21 +2,26 @@
 
 Stage model (SURVEY §7): extract (pages→records, stage 1), normalize
 (records→mentions, stage 2), emit (mentions→triples, stage 5), finalize
-(set-semantics dedup, stage 6). Entity linking (stage 3) and URI
-canonicalization (stage 4) are composable add-ons from operators/.
+(set-semantics dedup, stage 6). Entity linking against the authority
+dictionaries (stage 3) runs inside the Arrow emit stage, or as
+plans/enrich.py joins on the Column path; URI canonicalization (stage 4)
+is a composable add-on from operators/.
 
 Scale notes:
 - extract+normalize+emit is ONE narrow projection — no shuffle until the
   final dropDuplicates. At 10^12 pages the only shuffle in the core path
   is the dedup exchange, partitioned by all triple columns; AQE coalesces.
 - the default Arrow path (emit/arrow.py) runs parse + S3 kill-list +
-  emit in Python, in one Arrow-batched mapInArrow stage that reads the
-  pages directly: each page is parsed once. The Column parser
-  (extract_records) enters an Arrow plan only when a kerndaten, crossref
-  or tests resolution map needs its mention columns.
+  emit + J1-J6 linking in Python, in one Arrow-batched mapInArrow stage
+  that reads the pages directly: each page is parsed once, and each
+  record's triples are linked against driver-built authority dicts
+  before the one dedup. The Column parser (extract_records) enters an
+  Arrow plan only when a kerndaten, crossref or tests resolution map
+  needs its mention columns.
 - the Column path (emit_mode="columns") keeps every stage a pure column
   expression, with the kill-list as a broadcast anti-join
-  (filter_bad_ids), so whole-stage codegen runs end to end with no
+  (filter_bad_ids) and linking as broadcast joins after the emit
+  (plans/enrich.py), so whole-stage codegen runs end to end with no
   Python in the per-row path.
 """
 
@@ -100,17 +105,18 @@ def finalize(
     truncate_lineage: bool = False,
 ) -> DataFrame:
     """A10 (rdflib.Graph set semantics — implicit in every graph.add):
-    exact-duplicate triples collapse, plus (Column path) the
-    authority-free part of the A2 genre cleanup (thesis beats
-    ScholarlyPaper/ScholarlyWork — clean_up_genres runs unconditionally
-    in the reference, convert_starxml_to_bf.py:1455-1458). The one
-    global shuffle of the pipeline; AQE-coalesced.
+    exact-duplicate triples collapse, plus the authority-free part of
+    the A2 genre cleanup (thesis beats ScholarlyPaper/ScholarlyWork —
+    clean_up_genres runs unconditionally in the reference,
+    convert_starxml_to_bf.py:1455-1458). The one global shuffle of the
+    pipeline; AQE-coalesced.
 
-    `genre_cleanup=False` for the Arrow path: emit/arrow.py applies the
-    A2 rule in-record, so the post-emit anti-join is a no-op there.
-    `barrier=False` when nothing downstream references the triple set
-    more than once (the plain no-authority pipeline) — then the pipeline
-    is a single narrow stage + one dedup exchange, no cache.
+    The Arrow path without authorities passes `genre_cleanup=False` and
+    `barrier=False`: emit/arrow.py applies the A2 rule in-record, and
+    nothing downstream references the triple set more than once, so the
+    pipeline is a single narrow stage + one dedup exchange, no cache.
+    With authorities (even `{}`) it keeps both, so the DataFrame-level
+    A2 rule covers pages that share a DFK.
     """
     deduped = triples.dropDuplicates(
         ["subj", "pred", "obj", "obj_is_iri", "lang", "dtype"]
@@ -132,15 +138,15 @@ def finalize(
             return_df = clean_genres(return_df)
         return return_df
     if barrier:
-        # Plan barrier: clean_genres and the enrich joins reference the
-        # triple set many times; without a barrier each reference
+        # Plan barrier: the clean_genres passes reference the triple
+        # set many times; without a barrier each reference
         # re-analyzes and re-executes the whole emit plan. Lazy columnar
         # persist (MEMORY_AND_DISK) materializes once on first use into
         # compressed columnar batches — a few GB at 300k pages / ~63M
         # triples — where localCheckpoint's row-block storage thrashed
         # the heap at that scale (measured: 22× wall-time blowup at 5×
         # data). At cluster scale the equivalent is landing the raw
-        # triples in the warehouse (Iceberg) before the linking stage —
+        # triples in the warehouse (Iceberg) before the A2 cleanup —
         # same barrier, plus durability.
         from pyspark import StorageLevel
 
@@ -227,6 +233,11 @@ def _build_triples_columns(
     return finalize(emit_triples(norm, annif=annif), truncate_lineage=True)
 
 
+# the authority columns the Arrow path folds into authority_links' dicts
+_ORG_COLS = ("name", "aliases", "org_id", "fundref_doi", "country_name")
+_CONCEPT_COLS = ("vocab", "uri", "label_en", "label_de")
+
+
 def _build_triples_arrow(
     pages: DataFrame,
     authorities: dict[str, DataFrame] | None,
@@ -243,11 +254,26 @@ def _build_triples_arrow(
     emitter applies; a killed record emits nothing, whatever maps it
     was joined to.
 
-    The kill-list reaches the stage as a frozenset of DFKs, collected
-    from bad_ids in one small job per call. filter_bad_ids'
-    `F.broadcast(bad_ids)` builds the same list on the driver, so the
-    memory contract is unchanged."""
-    from psyndex2linkeddata_spark.emit.arrow import emit_triples_arrow
+    Linking (J1-J6) runs in the same stage: auth_orgs and auth_concepts
+    are collected once per call and folded into plain dicts
+    (emit/arrow.authority_links), and the kernel applies them to each
+    record's triples (link_record) — the per-record lookups of the
+    reference, with no post-emit join, union or second dedup: finalize
+    deduplicates the link triples with the rest. plans/enrich.py stays
+    the Column path's linking and the parity reference. After finalize,
+    the A2 ancestor cleanup runs as before (clean_genres over the genre
+    closure), so the cross-record case stays covered.
+
+    The kill-list reaches the stage as a frozenset of DFKs, and the
+    authorities as dicts, each collected in one small job per call.
+    filter_bad_ids' and enrich's `F.broadcast` build the same tables on
+    the driver, so the memory contract is unchanged. The dicts ride the
+    kernel closure; PySpark ships a closure over 1 MB as a broadcast
+    variable."""
+    from psyndex2linkeddata_spark.emit.arrow import (
+        authority_links,
+        emit_triples_arrow,
+    )
 
     auth = authorities or {}
     src = pages
@@ -280,7 +306,7 @@ def _build_triples_arrow(
             )
         if "tests" in auth:
             src = src.join(cr.testg_resolution_map(norm, auth["tests"]), "url", "left")
-    # With authorities: barrier, because enrich_triples references the set
+    # With authorities: barrier, because the A2 passes below read the set
     # many times; behind the persist the DataFrame-level A2 rule costs two
     # cached reads, and it covers the cross-record case (two pages sharing
     # a DFK, one thesis + one Scholarly*) that the in-record rule can't see.
@@ -294,12 +320,25 @@ def _build_triples_arrow(
     if "bad_ids" in auth:
         rows = auth["bad_ids"].select("dfk").distinct().collect()
         bad = frozenset(r.dfk for r in rows)
+    orgs, concepts = auth.get("auth_orgs"), auth.get("auth_concepts")
+    links = None
+    if orgs is not None or concepts is not None:
+        links = authority_links(
+            () if orgs is None else orgs.select(*_ORG_COLS).collect(),
+            () if concepts is None else concepts.select(*_CONCEPT_COLS).collect(),
+        )
     linked = authorities is not None
-    return finalize(
-        emit_triples_arrow(src, bad_dfks=bad, annif=annif),
+    out = finalize(
+        emit_triples_arrow(src, bad_dfks=bad, annif=annif, links=links),
         barrier=linked,
         genre_cleanup=linked,
     )
+    if concepts is not None:
+        from psyndex2linkeddata_spark.operators.upsert import clean_genres
+        from psyndex2linkeddata_spark.plans.enrich import genre_ancestor_closure
+
+        out = clean_genres(out, genre_ancestor_closure(concepts))
+    return out
 
 
 def build_triples(
@@ -312,14 +351,15 @@ def build_triples(
     """pages(url, warc_ts, html, text, lang) → deduplicated triples DF.
 
     With `authorities` (see datagen/authorities.py for the table shapes):
-    the bad_ids kill-list drops records (S3) — inside the Arrow stage, as
-    a driver-collected set, or as a broadcast anti-join on the Column
-    path — and the linking stage (plans/enrich.py — J1/J3/J5/J6 + A2
-    ancestor cleanup) runs after emit.
+    the bad_ids kill-list drops records (S3) and the linking rules
+    (J1-J6 + A2 ancestor cleanup) add link triples. On the Arrow path
+    both run inside the emit stage, against driver-collected sets and
+    dicts; on the Column path the kill-list is a broadcast anti-join and
+    plans/enrich.py joins the links after the emit.
 
     `emit_mode` ('arrow' default, or 'columns', env SPARK_GRAFT_EMIT):
     both paths emit byte-identical triple sets (tests/test_arrow_parity);
-    'arrow' is the hot path — one Arrow-batched mapInPandas stage,
+    'arrow' is the hot path — one Arrow-batched mapInArrow stage,
     measured ~60× less CPU per page than the interpreted HOF column tree
     and a KB-scale plan instead of MB-scale (see emit/arrow.py docstring).
     """
@@ -341,10 +381,9 @@ def build_triples(
         )
 
     mode = emit_mode or os.environ.get("SPARK_GRAFT_EMIT", "arrow")
-    if mode == "columns":
-        triples = _build_triples_columns(pages, authorities, annif=annif)
-    else:
-        triples = _build_triples_arrow(pages, authorities, annif=annif)
+    if mode != "columns":
+        return _build_triples_arrow(pages, authorities, annif=annif)
+    triples = _build_triples_columns(pages, authorities, annif=annif)
     if authorities:
         from psyndex2linkeddata_spark.plans.enrich import enrich_triples
 

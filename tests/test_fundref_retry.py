@@ -14,9 +14,11 @@ tier semantics at unit level.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from psyndex2linkeddata_spark import namespaces as NS
+from psyndex2linkeddata_spark.emit.arrow import Sink, authority_links, link_record
 from psyndex2linkeddata_spark.plans.enrich import fundref_links
 
 AUTH_SCHEMA = (
@@ -44,19 +46,16 @@ def _dois(df):
     }
 
 
-def test_truncation_tier_resolves_comma_tail(spark):
-    auth = spark.createDataFrame(
+# name -> (authority rows, funder label, expected FundRef DOIs)
+CASES = {
+    # full key "stiftung warentest berlin" misses; pre-comma key hits
+    "comma_tail": (
         [("https://ror.org/0aaa", "Stiftung Warentest", [], "Germany",
           "10.13039/100")],
-        AUTH_SCHEMA,
-    )
-    t = _funder_triples(spark, ["Stiftung Warentest, Berlin"])
-    # full key "stiftung warentest berlin" misses; pre-comma key hits
-    assert _dois(fundref_links(t, auth)) == {"10.13039/100"}
-
-
-def test_full_name_hit_wins_over_truncation(spark):
-    auth = spark.createDataFrame(
+        "Stiftung Warentest, Berlin",
+        {"10.13039/100"},
+    ),
+    "full_hit_wins": (
         [
             ("https://ror.org/0aaa", "Stiftung Warentest", [], "Germany",
              "10.13039/100"),
@@ -65,35 +64,63 @@ def test_full_name_hit_wins_over_truncation(spark):
             ("https://ror.org/0bbb", "Stiftung Warentest Berlin", [],
              "Germany", "10.13039/200"),
         ],
-        AUTH_SCHEMA,
-    )
-    t = _funder_triples(spark, ["Stiftung Warentest, Berlin"])
-    assert _dois(fundref_links(t, auth)) == {"10.13039/200"}
-
-
-def test_no_comma_never_truncates(spark):
-    auth = spark.createDataFrame(
+        "Stiftung Warentest, Berlin",
+        {"10.13039/200"},
+    ),
+    "no_comma": (
         [("https://ror.org/0aaa", "Stiftung", [], "Germany", "10.13039/100")],
-        AUTH_SCHEMA,
-    )
-    t = _funder_triples(spark, ["Stiftung Warentest"])
-    assert fundref_links(t, auth).count() == 0
-
-
-def test_fundref_less_full_hit_falls_through_to_truncation(spark):
+        "Stiftung Warentest",
+        set(),
+    ),
     # the best full-key row has no fundref_doi → reference sees "no hits"
     # from the funders endpoint and retries truncated
-    auth = spark.createDataFrame(
+    "fundref_less_full_hit": (
         [
             ("https://ror.org/0ccc", "Stiftung Warentest Berlin", [],
              "Germany", None),
             ("https://ror.org/0aaa", "Stiftung Warentest", [], "Germany",
              "10.13039/100"),
         ],
-        AUTH_SCHEMA,
+        "Stiftung Warentest, Berlin",
+        {"10.13039/100"},
+    ),
+}
+
+
+def _join(spark, case):
+    rows, label, _want = CASES[case]
+    return fundref_links(
+        _funder_triples(spark, [label]), spark.createDataFrame(rows, AUTH_SCHEMA)
     )
-    t = _funder_triples(spark, ["Stiftung Warentest, Berlin"])
-    assert _dois(fundref_links(t, auth)) == {"10.13039/100"}
+
+
+def test_truncation_tier_resolves_comma_tail(spark):
+    assert _dois(_join(spark, "comma_tail")) == {"10.13039/100"}
+
+
+def test_full_name_hit_wins_over_truncation(spark):
+    assert _dois(_join(spark, "full_hit_wins")) == {"10.13039/200"}
+
+
+def test_no_comma_never_truncates(spark):
+    assert _join(spark, "no_comma").count() == 0
+
+
+def test_fundref_less_full_hit_falls_through_to_truncation(spark):
+    assert _dois(_join(spark, "fundref_less_full_hit")) == {"10.13039/100"}
+
+
+@pytest.mark.parametrize("case", sorted(CASES))
+def test_kernel_link_pass(case):
+    """The same cases through the Arrow stage's per-record link pass."""
+    rows, label, want = CASES[case]
+    cols = ("org_id", "name", "aliases", "country_name", "fundref_doi")
+    g = Sink()
+    g.add("https://w3id.org/zpid/resources/works/w0_funding0_funder",
+          NS.RDFS_LABEL, label)
+    link_record(g, 0, authority_links([dict(zip(cols, r)) for r in rows]))
+    got = {o for _s, p, o, *_ in g.rows_iter() if p == NS.RDF + "value"}
+    assert got == want
 
 
 def test_node_shape(spark):

@@ -15,6 +15,9 @@ their bibliographic metadata; rejected DOIs deliberately absent).
 
 from __future__ import annotations
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
 from psyndex2linkeddata_spark.plans.pipeline import build_triples
@@ -31,6 +34,14 @@ from tests.reference_fixtures import (
 )
 
 OUR_WORKS = "https://w3id.org/zpid/resources/works/"
+
+
+def _needs(path: str):
+    """Skip a golden gate when the reference checkout is absent; the
+    thesis and documentation tests below need no reference TTL."""
+    return pytest.mark.skipif(
+        not os.path.exists(path), reason="reference TTL not available"
+    )
 
 # Golden drift: testg.ttl was generated before the reference's current
 # title_except gained hyphen-aware ALLCAPS matching. Its CURRENT code
@@ -53,6 +64,7 @@ def _golden(path: str, node_marker: str) -> set:
     return out
 
 
+@_needs(RPLIC_TTL)
 def test_rplic_matches_reference_ttl(spark):
     strings = load_rplic_strings()
     golden = _golden(RPLIC_TTL, "#ReplicationRelationship")
@@ -91,6 +103,7 @@ def test_rplic_matches_reference_ttl(spark):
     )
 
 
+@_needs(TESTG_TTL)
 def test_testg_matches_reference_ttl(spark):
     strings = load_testg_strings()
     golden = _golden(TESTG_TTL, "#TestRelationship")

@@ -91,6 +91,23 @@ def test_convert_job_cli(spark, tmp_path_factory):
     assert spark.read.parquet(os.path.join(ckpt, "lineage")).count() == 4
 
 
+def test_load_authorities_uri_and_empty_dir(spark, tmp_path):
+    """Tables are found through the Hadoop FS, so a file:// URI loads all
+    of them; a directory holding none of them raises."""
+    from psyndex2linkeddata_spark.datagen.authorities import write_authority_parquets
+    from psyndex2linkeddata_spark.jobs.convert import AUTHORITY_TABLES, load_authorities
+
+    auth_dir = tmp_path / "auth"
+    write_authority_parquets(str(auth_dir), 20)
+    loaded = load_authorities(spark, auth_dir.as_uri())
+    assert sorted(loaded) == sorted(AUTHORITY_TABLES)
+    assert loaded["bad_ids"].count() > 0
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    with pytest.raises(FileNotFoundError, match="bad_ids.parquet"):
+        load_authorities(spark, str(empty))
+
+
 def test_warehouse_triple_table(spark, tmp_path):
     """V2 writeTo create → partitioned table; replace + append take the
     documented vanilla-catalog fallbacks; bucket scan prunes partitions."""
