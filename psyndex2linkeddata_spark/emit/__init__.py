@@ -1,10 +1,10 @@
-"""Triple emitters (SURVEY.md §2.6 N1-N20): record → array<triple> columns.
+"""Triple emitters (SURVEY.md §2.6 N1-N20): record → triples.
 
-Every emitter is a pure column expression factory: given the records
-DataFrame's columns it returns one `array<struct<subj,pred,obj,obj_is_iri,
-lang,dtype>>` column. The pipeline concatenates all emitter arrays and
-explodes ONCE — a single scan, a single projection, fully inside
-whole-stage codegen, no Python in the hot path. This is the Spark-first
-replacement for the reference's per-record `graph.add` calls
-(/root/reference/convert_starxml_to_bf.py:1176-1503).
+emit/arrow.py is the record→triples emitter of build_triples: one
+Arrow-batched mapInArrow stage that parses, emits and links each record
+in Python, the way the reference's per-record `graph.add` calls do
+(reference convert_starxml_to_bf.py:1176-1503). emit/normalize.py parses
+the mention columns the offline-linking resolution maps join on. The
+sub-converters (journals, psychauthors, reduced persons) are Column
+expressions over the primitives in emit/base.py.
 """

@@ -1,33 +1,35 @@
 """Arrow-batched record→triples emitter — the pipeline's hot path.
 
-The declarative Column emit layer (emit/*.py) expresses each triple as a
-native expression, but the resulting tree is ~10^4 nodes deep in
-higher-order-function lambdas, which Catalyst evaluates INTERPRETED
-(ArrayTransform/ArrayFilter are CodegenFallback): measured ~77 ms of CPU
-per page at sf0.1 — versus ~1.3 ms for the same record→triples
-transformation in plain Python. This module is that Python
-transformation, Arrow-batched via mapInArrow, exactly the architecture
-BASELINE.json's north_star prescribes ("vectorized Arrow UDFs parse each
-web page's text into bibliographic-style mentions … materialize (subj,
-pred, obj) triples"). Catalyst keeps doing what it is good at — scans,
-filter pushdown, the dedup shuffle — while the procedural per-record
-emission and its authority linking (link_record; the reference is a
-per-record procedural converter, convert_starxml_to_bf.py:1177-1503)
-run as one narrow Arrow-batched stage with no shuffle: embarrassingly
-parallel at 10^12 pages, ~60× less CPU per page, and a plan measured in
-KB instead of MB.
+The record→triples transformation is plain Python, Arrow-batched via
+mapInArrow, exactly the architecture BASELINE.json's north_star
+prescribes ("vectorized Arrow UDFs parse each web page's text into
+bibliographic-style mentions … materialize (subj, pred, obj) triples").
+The same spec as a declarative Column expression tree is ~10^4 nodes
+deep in higher-order-function lambdas, which Catalyst evaluates
+INTERPRETED (ArrayTransform/ArrayFilter are CodegenFallback): measured
+~77 ms of CPU per page at sf0.1 — versus ~1.3 ms here. Catalyst keeps
+doing what it is good at — scans, filter pushdown, the dedup shuffle —
+while the procedural per-record emission and its authority linking
+(link_record; the reference is a per-record procedural converter,
+convert_starxml_to_bf.py:1177-1503) run as one narrow Arrow-batched
+stage with no shuffle: embarrassingly parallel at 10^12 pages, ~60×
+less CPU per page, and a plan measured in KB instead of MB.
 
-Semantics: byte-identical to the Column path (enforced by
-tests/test_arrow_parity.py — exact triple-set equality on the synthetic
-corpus, and by the golden/reference-TTL gates which run this path). The
-helpers below therefore mirror SPARK semantics, not Python defaults:
+Gates: the pure-Python golden oracle (tests/golden_oracle.py, exact set
+equality in tests/test_golden.py) shares no code with this module, and
+tests/test_arrow_parity.py pins each scenario's triple set (recorded
+while a second, Column-expression emitter agreed with this one on every
+scenario). The helpers below mirror SPARK semantics, not Python
+defaults: on the maps route this stage reads records the Column parser
+(extract_records) produced and applies resolution maps indexed over
+normalize's mention columns, so both sides must split and trim alike:
 - trim == Spark `trim` (strips chars <= 0x20, NOT unicode whitespace)
 - concat is NULL-propagating (any None argument -> None)
 - Java regex defaults are mirrored with re.ASCII where \\b/\\w/(?i) occur
 - Java `split` (limit 0) drops trailing empty strings
 
-Reference anchors live in the Column emitters (emit/core.py etc.), which
-remain the citable spec; this file cites only where it deviates.
+Reference anchors (module:lines of the reference converter) sit on the
+emit_* functions below.
 """
 
 from __future__ import annotations
@@ -47,7 +49,6 @@ from psyndex2linkeddata_spark.data.tables import (
     geonames_countries,
     issuancetypes,
 )
-from psyndex2linkeddata_spark.emit.relations import _RPLIC_SKIP, REL_TYPES
 from psyndex2linkeddata_spark.functions.cleaning import _BASIC_ENTITIES
 from psyndex2linkeddata_spark.functions.lang import (
     _DE_STOPWORDS,
@@ -73,11 +74,11 @@ from psyndex2linkeddata_spark.schema import (
 
 # Trim domain: all chars <= 0x20 — the ASCII-control superset of the
 # reference's str.strip() for STAR values. NOTE Spark's F.trim strips
-# ONLY 0x20 (measured on 4.1), so the two emit paths agree at value
-# boundaries only for space/CRLF-free edges; CRLF is normalized out at
-# the page parser (parse_page_text / extract._entries), and the gated
-# corpora contain no other boundary controls (the parity suite pins the
-# pipeline-level equality).
+# ONLY 0x20 (measured on 4.1), so this kernel and the Column parser
+# agree at value boundaries only for space/CRLF-free edges; CRLF is
+# normalized out at both page parsers (parse_page_text /
+# extract._entries), and the gated corpora contain no other boundary
+# controls (the CRLF/CR snapshot tests pin the pipeline-level equality).
 _TRIM = "".join(chr(i) for i in range(0x21))
 
 
@@ -410,7 +411,11 @@ def pct_quote(s):
 
 
 def parse_fuzzy_date(s):
-    """F15 twin: date string 'YYYY-MM-DD' or None (format cascade)."""
+    """F15: date string 'YYYY-MM-DD' or None (format cascade standing in
+    for the reference's dateparser.parse(...).strftime("%Y-%m-%d"),
+    convert_starxml_to_bf.py:318-361, research_info.py:1784-1825).
+    Two-digit years expand with dateparser's PREFER_DATES_FROM='past'
+    century choice (research_info.py:1800)."""
     import datetime as dt
 
     if s is None:
@@ -431,7 +436,9 @@ def parse_fuzzy_date(s):
 
 
 def date_or_year(date_s, *year_fallbacks):
-    """F15/F16 twin -> (value, dtype) with dtype in {'date','gYear',None}."""
+    """F15/F16 -> (value, dtype) with dtype in {'date','gYear',None}: the
+    parsed date, else a bare 4-digit year, else the first year found in
+    the fallbacks."""
     parsed = parse_fuzzy_date(date_s)
     if parsed is not None:
         return (parsed, "date")
@@ -499,9 +506,9 @@ _ANNIF_TOK_RE = re.compile(r"[^a-z0-9]+")
 
 
 def annif_text(title, abstract):
-    """Normalized J8 classifier input — byte-identical twin of
-    emit/genres.py annif_text (concat_ws(' ', title, coalesce(abstract,
-    '')) → lower → [^a-z0-9]+→' ' → trim)."""
+    """Normalized J8 classifier input: title + ' ' + abstract (or ''),
+    lowercased, [^a-z0-9]+ runs → ' ', trimmed (reference
+    local_api_lookups.py:61-95 feeds title + abstract to Annif)."""
     raw = title + " " + (abstract if abstract is not None else "")
     return _ANNIF_TOK_RE.sub(" ", raw.lower()).strip()
 
@@ -585,12 +592,14 @@ def parse_translated_title(s):
 
 
 # --------------------------------------------------------------------------
-# normalize twins (emit/normalize.py)
+# record-level mention parsing (contributions, instances, relations)
 # --------------------------------------------------------------------------
 
 
 def id_sets(values):
-    """A3 twin -> (dois, urls, unknowns) — ordered-distinct lists."""
+    """F3 + A3 -> (dois, urls, unknowns) — ordered-distinct lists; a url
+    containing one of the dois or an OSF doi's shortcode is dropped
+    (reference research_info.py:386-406)."""
     checked = [check_for_url_or_doi(v) for v in values if v is not None]
     dois, urls, unknowns = [], [], []
     for value, typ_ in checked:
@@ -641,7 +650,19 @@ def contribution_role(s, rec):
 
 
 def contributions_of(rec):
-    """contributions_col twin: list of contribution dicts (A1, J9-J12)."""
+    """Record → list of contribution dicts, AUP before AUK, 1-based
+    positions across both (A1, reference modules/contributions.py:
+    224-257, 687-691), with:
+
+    - qualifier first/middle/last by position vs total (F29, :240-255);
+    - ORCID |u matched by name (J10, :500-576), cleaned/validated (F18);
+    - PAUP |n psychauthors id matched by name (J9, :408-498), with the
+      kerndaten alternate names as the fallback tier (:456-498);
+    - EMAIL via EMID name match, else attached to contribution 1
+      (J11, :579-645);
+    - record-level CS/COU affiliation attached to contribution 1 when
+      the person has no |i/|c of its own (J12, :647-682).
+    """
     aup = rec.get("AUP") or []
     auk = rec.get("AUK") or []
     n_aup = len(aup)
@@ -773,8 +794,10 @@ def instances_of(rec):
 
 
 def locator_instance_ns(insts):
-    """A8 twin: ALL target instance n's — the single instance, else
-    every Online one (reference loops without breaking)."""
+    """A8 (reference convert_starxml_to_bf.py:1466-1503): ALL target
+    instance n's of DOI/URL/URN — the single instance, else every Online
+    one (the reference loops without breaking); none when several
+    instances but none Online."""
     if len(insts) == 1:
         return [insts[0]["n"]]
     return [i["n"] for i in insts if i["mediacarrier"] == "Online"]
@@ -803,7 +826,9 @@ _PSY_MARKER_RE = re.compile(r"\(PSYNDEX Tests (Review|Info|Abstract)\)", re.A)
 
 
 def testg_parsed_of(rec, testg_res=None):
-    """testg_parsed_col twin (+ J15 resolution map application)."""
+    """TESTG → the reference's build_related_test dicts
+    (research_info.py:1404-1525 / testing/TESTG/testg.py:105-244), with
+    the J15 resolution map filling test ids of uncontrolled entries."""
     out = []
     for idx, s in enumerate(rec.get("TESTG") or []):
         raw_long = subfield(s, "l")
@@ -931,6 +956,10 @@ def _sub(parent, suffix):
 
 
 def emit_work_core(g, rec, W, B):
+    """N1 (reference convert_starxml_to_bf.py:1196-1205,1316,1324 and
+    modules/publication_types.py:29-108 generate_content_type): work a
+    bf:Work, pxc:MainWork; bf:language from LA; bf:content from DT;
+    work pxp:hasInstanceBundle bundle."""
     is_av = rec.get("DT") == "40"
     content = "spokenWord" if is_av else "text"
     content_uri = NS.CONTENT + content
@@ -948,6 +977,10 @@ def emit_work_core(g, rec, W, B):
 
 
 def emit_titles(g, rec, B):
+    """N2 (reference convert_starxml_to_bf.py:600-705,1432-1449): the
+    bundle's bf:Title with mainTitle/subtitle in the TIL (or guessed)
+    language; TIUE → pxc:TranslatedTitle, a trailing '(DeepL)' marker
+    naming the adminMetadata source."""
     if rec.get("TI") is not None:
         title = B + "#title"
         main = trim(rec["TI"])
@@ -981,6 +1014,9 @@ def emit_titles(g, rec, B):
 
 
 def emit_instances(g, rec, W, B, insts):
+    """N16 (reference convert_starxml_to_bf.py:1310-1420,
+    modules/publication_types.py:675-800): 1-2 bf:Instance nodes with
+    pxp:mediaCarrier and the RDA media/carrier codes."""
     dfk = rec["DFK"]
     for inst in insts:
         uri = f"{NS.INSTANCES}{dfk}#{inst['n']}"
@@ -1002,6 +1038,10 @@ def emit_instances(g, rec, W, B, insts):
 
 
 def emit_identifiers(g, rec, B, insts, doi_checked):
+    """N17 (reference modules/identifiers.py:23-102,
+    convert_starxml_to_bf.py:364-429,1460-1503): DFK node, ISBNs from
+    PU |i/|e only, and DOI (percent-encoded into the node URI,
+    identifiers.py:28), URN and URLI on the A8 target instances."""
     dfk = rec["DFK"]
     dfk_node = B + "_dfk"
     g.add(dfk_node, NS.RDF_TYPE, NS.PXC + "DFK", iri=True)
@@ -1048,6 +1088,9 @@ def emit_identifiers(g, rec, B, insts, doi_checked):
 
 
 def emit_publication(g, rec, B):
+    """N18 (reference convert_starxml_to_bf.py:318-361,457-515): the
+    bf:Publication node; bf:date from PHIST |o, else the RAW PY text typed
+    by length, as the reference does; agent/place from PU |v/|o."""
     node = B + "_publication"
     value, _kind = date_or_year(subfield(rec.get("PHIST"), "o"))
     if value is None:
@@ -1070,6 +1113,10 @@ def emit_publication(g, rec, B):
 
 
 def emit_affiliation(g, c_org, c_country, cnode, agent):
+    """build_affiliation_nodes (reference modules/contributions.py:37-222):
+    the mads:Affiliation with its bf:Organization, and — with a country —
+    the mads:Address and geonames-improved mads:Country (J16,
+    modules/helpers.py:378-382)."""
     if c_org is None and c_country is None:
         return
     aff = _sub(agent, "_affiliation1")
@@ -1102,6 +1149,10 @@ def emit_affiliation(g, c_org, c_country, cnode, agent):
 
 
 def emit_contributions(g, rec, W, contribs):
+    """N3/N4 (reference modules/contributions.py: generate_bf_contribution_node
+    :224-257, add_bf_contributor_person :261-398,
+    add_bf_contributor_corporate_body :685-762, extract_contribution_role
+    :786-806)."""
     for c in contribs:
         cnode = f"{W}#contribution{c['pos']}"
         is_person = c["kind"] == "person"
@@ -1147,6 +1198,8 @@ def emit_contributions(g, rec, W, contribs):
 
 
 def _blocked(rec):
+    """P11 get_abstract_release (reference modules/abstract.py:324-334):
+    Elsevier DOI stem + publisher copyright → abstract blocked."""
     return "10.1016" in (rec.get("DOI") or "") and "PUBL" in (rec.get("COPR") or "")
 
 
@@ -1154,6 +1207,10 @@ _NO_ABSTRACT_RE = re.compile(r"(no abstract|kein Abstract)", re.I | re.A)
 
 
 def emit_abstract(g, rec, W, field, lang_field, origin_field, editor_field, secondary):
+    """N5 (reference modules/abstract.py: get_bf_abstract :128-245,
+    get_bf_secondary_abstract :246-321, add_abstract_licensing_note
+    :61-124; source and editor fields :198-231, 285-304; the 'no abstract'
+    placeholder P7 :131-135, 249-256)."""
     raw = rec.get(field)
     if raw is None:
         return
@@ -1214,6 +1271,11 @@ def emit_abstract(g, rec, W, field, lang_field, origin_field, editor_field, seco
 
 
 def emit_terms(g, rec, W):
+    """N6 (reference modules/terms.py: add_controlled_terms :54-146,
+    subject headings :150-215, add_age_groups :218-276). A4: the topic
+    counter counts only non-empty terms and continues from CT into IT
+    (convert_starxml_to_bf.py:1246-1253); A5: the first subject heading
+    is weighted."""
     # topics: CT then IT, shared counter over non-empty label_en (A4)
     n = 0
     for vocab, fieldname in (("terms", "CT"), ("addterms", "IT")):
@@ -1253,6 +1315,11 @@ def emit_terms(g, rec, W):
 
 
 def emit_genres(g, rec, W, B, annif=True):
+    """N20 (reference modules/publication_types.py: get_issuance_type
+    :634-671, add_work_studytypes :111-342 with the J17 recode table of
+    modules/mappings.py:715-1215 and the A6 counter, add_work_genres
+    :331-478; the F23 license, convert_starxml_to_bf.py:155-301). CM-less
+    records get one J8 Annif stand-in code unless `annif=False`."""
     # issuance
     if rec.get("BE") is not None:
         label = _ISSUANCE.get(trim(rec["BE"])) or "Other"
@@ -1322,7 +1389,7 @@ def emit_genres(g, rec, W, B, annif=True):
     # like the post-emit anti-join). Valid because a work's genre edges
     # all come from its own record; cross-record same-DFK merging (not a
     # shape the reference produces) still needs the DataFrame-level
-    # clean_genres — use emit_mode='columns' or the enrich path then.
+    # clean_genres — pass authorities={} to build_triples then.
     thesis_present = any(x in _THESIS_GENRE_NAMES for x in genres)
     for name in genres:
         node = NS.GENRES + name
@@ -1343,6 +1410,10 @@ _THESIS_GENRE_NAMES = (
 
 
 def emit_funding(g, rec, W):
+    """N7 (reference convert_starxml_to_bf.py get_bf_grants :943-1066, the
+    P10 noise skip :948-951, the F21 grant-number split :792-811).
+    Numbering is by source position, so a skipped noise GRANT still
+    consumes its number."""
     for i, s in enumerate(rec.get("GRANT") or []):
         field = trim(s)
         if field is None or is_grant_noise(field):
@@ -1381,6 +1452,8 @@ def emit_funding(g, rec, W):
 
 
 def emit_conferences(g, rec, W):
+    """N8 (reference convert_starxml_to_bf.py get_bf_conferences
+    :1072-1168), gated on BE ∈ {SS, SM} (P9)."""
     if trim(rec.get("BE") or "") not in ("SS", "SM"):
         return
     for i, s in enumerate(rec.get("CF") or []):
@@ -1413,10 +1486,29 @@ def emit_conferences(g, rec, W):
         g.add(W, NS.BF + "contribution", cr, iri=True)
 
 
+# relation_types config, verbatim semantics from research_info.py:33-177.
+REL_TYPES: dict[str, dict] = {
+    "rd_open_access": dict(relation="hasResearchData", subprop="supplement", subclass="Dataset", reltype="ResearchData", access_label="open access", access_concept="https://w3id.org/zpid/vocabs/access/open"),
+    "rd_restricted_access": dict(relation="hasResearchData", subprop="supplement", subclass="Dataset", reltype="ResearchData", access_label="restricted access", access_concept="https://w3id.org/zpid/vocabs/access/open"),
+    "preregistration": dict(relation="hasPreregistration", subprop="supplement", subclass="Text", reltype="Preregistration", access_label=None, access_concept=None),
+    "replication": dict(relation="isReplicationOf", subprop="relatedTo", subclass="Text", reltype="Replication", access_label=None, access_concept=None),
+    "reanalysis": dict(relation="isReanalysisOf", subprop="relatedTo", subclass="Text", reltype="Reanalysis", access_label=None, access_concept=None),
+    "isRelatedTo": dict(relation="isRelatedTo", subprop="relatedTo", subclass="Text", reltype="RelatedWork", access_label=None, access_concept=None),
+    "hasComment": dict(relation="hasComment", subprop="relatedTo", subclass="Text", reltype="RelatedWork", access_label=None, access_concept=None),
+    "isCommentOn": dict(relation="isCommentOn", subprop="relatedTo", subclass="Text", reltype="RelatedWork", access_label=None, access_concept=None),
+    "isReplyToComment": dict(relation="isReplyToComment", subprop="relatedTo", subclass="Text", reltype="RelatedWork", access_label=None, access_concept=None),
+    "hasReplyToComment": dict(relation="hasReplyToComment", subprop="relatedTo", subclass="Text", reltype="RelatedWork", access_label=None, access_concept=None),
+    "hasReplyToCommentsOnItself": dict(relation="hasReplyToCommentsOnItself", subprop="relatedTo", subclass="Text", reltype="RelatedWork", access_label=None, access_concept=None),
+    "hasOlderEdition": dict(relation="hasOlderEdition", subprop="relatedTo", subclass="Text", reltype="RelatedWork", access_label=None, access_concept=None),
+    "hasArticlePartOfCompilationThesis": dict(relation="hasArticlePartOfCompilationThesis", subprop="relatedTo", subclass="Text", reltype="RelatedWork", access_label=None, access_concept=None),
+}
+
 _ACCESS_OPEN = "https://w3id.org/zpid/vocabs/access/open"
 
 
 def rel_nodes(W, key, count):
+    """(relationship, related work, related instance) node URIs of
+    build_work_relationship_node (reference research_info.py:208-241)."""
     subclass_rel = REL_TYPES[key]["reltype"] + "Relationship"
     rel = f"{W}#{subclass_rel}{count}"
     work = rel + "_work"
@@ -1472,6 +1564,9 @@ def _add_ids(g, inst, ids, note_unknown=True):
 
 
 def emit_research_data(g, rec, W):
+    """N10 (reference research_info.py get_datac/get_urlai :337-496):
+    DATAC (open access, |u/|d) then URLAI (restricted access), the URLAI
+    counter offset by the DATAC count (A7)."""
     datac = rec.get("DATAC") or []
     for i, s in enumerate(datac):
         ids = id_sets([subfield(s, "u"), subfield(s, "d")])
@@ -1484,6 +1579,9 @@ def emit_research_data(g, rec, W):
 
 
 def emit_preregistrations(g, rec, W):
+    """N11 + J20 (reference research_info.py:550-809): one relationship
+    per PRREG; a trial number whose URL a prereg entry already holds
+    enriches that entry, else it gets its own relationship."""
     prreg = rec.get("PRREG") or []
     entries = []
     for i, s in enumerate(prreg):
@@ -1534,7 +1632,14 @@ def emit_preregistrations(g, rec, W):
         g.add(tn, NS.BF + "assigner", reg, iri=True)
 
 
+# citation strings the reference skips (research_info.py RPLIC, P6)
+_RPLIC_SKIP = ["Testeintrag, wieder loeschen", "dittrich, K.", "no URL", "no URL |f  |u  |d "]
+
+
 def emit_replications(g, rec, W, rplic_res=None):
+    """N12 (reference research_info.py:815-1094): identifier priority
+    7-digit |f DFK > doi > url > citation; the P6 skip list; the J13/J14
+    resolution map replaces the candidate DOIs."""
     for idx, s in enumerate(rec.get("RPLIC") or []):
         cstr = trim(s)
         if cstr in _RPLIC_SKIP:
@@ -1568,6 +1673,9 @@ def emit_replications(g, rec, W, rplic_res=None):
 
 
 def emit_related_works(g, rec, W, rel_res=None):
+    """N13 (reference research_info.py build_rels :1167-1351): REL fields
+    typed by BE/BN/CM flags; a |b-only or empty REL aborts the remaining
+    fields (P12); the J14 resolution map supplies searched DOIs."""
     be = trim(rec.get("BE") or "")
     book = be in ("SS", "SM")
     bn = rec.get("BN") or ""
@@ -1629,6 +1737,8 @@ def emit_related_works(g, rec, W, rel_res=None):
 
 
 def emit_tests(g, rec, W, testg_res=None):
+    """N14 (reference research_info.py:1404-1605): work#TestRelationship
+    {index + 1} (1-based, :1524) with its pxc:Test node."""
     for i, p in enumerate(testg_parsed_of(rec, testg_res)):
         if p["short"] is None and p["long"] is None:
             continue
@@ -1669,6 +1779,8 @@ def emit_tests(g, rec, W, testg_res=None):
 
 
 def emit_journal(g, rec, B):
+    """N19 journal and series relationships (reference
+    modules/instance_sources.py:194-288)."""
     if rec.get("JT") is not None:
         jt = trim(rec["JT"])
         vol = trim(rec.get("JBD"))
@@ -1736,6 +1848,8 @@ def emit_journal(g, rec, B):
 
 
 def emit_book(g, rec, B):
+    """N19 / J19 book relationship (reference modules/instance_sources.py
+    :339-428, P8 chapter gate convert_starxml_to_bf.py:1383)."""
     if trim(rec.get("BE") or "") not in ("US", "UR"):
         return
     rel = B + "#bookrel"
@@ -1771,6 +1885,9 @@ def emit_book(g, rec, B):
 
 
 def emit_thesis(g, rec, W, contribs):
+    """N15 (reference research_info.py: thesis_infos :1621-1631, the F16
+    date :1784-1825, build_thesis_nodes :1828-1912,
+    add_thesis_info_to_first_contributon :1913-1960)."""
     # Thesis gate (reference get_thesis_info, research_info.py:1649): only
     # BE=="SH" or DT/DT2=="61" records are theses — GRAD/PD extraction
     # happens inside that branch, so a plain article's PY never becomes a
@@ -1826,8 +1943,9 @@ def emit_thesis(g, rec, W, contribs):
 def record_triples(rec: dict, sink: Sink | None = None, annif: bool = True):
     """One record dict -> (subj, pred, obj, obj_is_iri, lang, dtype) rows.
 
-    Mirrors plans/pipeline.emitter_columns() exactly; parity enforced by
-    tests/test_arrow_parity.py. Optional keys `_rplic_res` / `_rel_res` /
+    The emit_* order below is the emit order; the triple sets are pinned
+    by tests/test_arrow_parity.py and checked against the golden oracle
+    by tests/test_golden.py. Optional keys `_rplic_res` / `_rel_res` /
     `_testg_res` carry the offline-linking resolution maps
     (plans/crossref.py J13-J15) keyed by 0-based mention index.
 
@@ -1953,8 +2071,9 @@ _ORG = "_organization"
 
 def link_record(g: Sink, start: int, links: dict) -> None:
     """Append the link triples of the record held in g[start:] — the
-    rules of plans/enrich.py (the Column path's joins, and the parity
-    reference), applied per record as the reference does:
+    rules of plans/enrich.py (their DataFrame-join form, which
+    tests/test_arrow_linking.py checks this pass against), applied per
+    record as the reference does:
 
     - J5 topic owl:sameAs, J6 genre and license labels;
     - J1 ROR id nodes and J3/J4 FundRef DOI nodes;
@@ -2052,10 +2171,11 @@ def parse_page_text(text: str) -> dict:
     # \r → \n): Common-Crawl-style payloads carry CRLF, and a \r left on
     # a value would hit the one boundary where the two engines' trims
     # disagree (Python str.strip() removes \r, Spark's trim only 0x20);
-    # a BARE \r mid-line would additionally split the two paths at the
-    # regex level (Java's '.' excludes \r, Python's partition keeps it).
-    # Treating every \r as a line break keeps both emit paths identical
-    # on any line-ending convention (test_arrow_parity CRLF/CR tests).
+    # a BARE \r mid-line would additionally split this parser from
+    # extract_records at the regex level (Java's '.' excludes \r,
+    # Python's partition keeps it). Treating every \r as a line break
+    # keeps both parsers identical on any line-ending convention
+    # (test_arrow_parity CRLF/CR tests).
     if "\r" in text:
         text = text.replace("\r\n", "\n").replace("\r", "\n")
     for line in clean_text(text).split("\n"):
@@ -2085,11 +2205,9 @@ def emit_triples_arrow(
     pages are parsed in-stage (parse_page_text). `bad_dfks` applies the
     S3 kill-list inside the stage, on both input shapes: a record whose
     DFK (the cleaned first value, the one the emit uses) is in the set
-    emits nothing. build_triples collects it from bad_ids once per call;
-    the Column path keeps the broadcast anti-join (filter_bad_ids), the
-    parity reference for this check. `links` (authority_links' dicts)
-    runs link_record over each record's triples, so the stage also emits
-    the J1-J6 link triples that plans/enrich.py joins on the Column path.
+    emits nothing. build_triples collects it from bad_ids once per call.
+    `links` (authority_links' dicts) runs link_record over each record's
+    triples, so the stage also emits the J1-J6 link triples.
     `annif=False` models
     the reference's offline degrade (no J8 suggestion for CM-less works —
     the mode the reference-exec oracle compares against).

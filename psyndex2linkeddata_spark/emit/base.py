@@ -1,11 +1,14 @@
-"""Triple-construction primitives.
+"""Triple-construction primitives for the Column-expression emitters.
 
-The reference's atom is rdflib `(URIRef, URIRef, URIRef|Literal(lang,datatype))`
-added to one shared Graph (/root/reference/convert_starxml_to_bf.py:120-122).
-Ours is a flat struct row; URIs are minted with native `concat` — the
-hash-fragment URI scheme (`work#contribution3_personagent` etc.,
-/root/reference/modules/contributions.py:229,273) is deterministic string
-concatenation, so no UDF is ever needed for identity.
+The sub-converters (emit/journals.py, emit/psychauthors.py,
+emit/reduced_persons.py) and the driver entry build triples as struct
+columns from these; normalize and the resolution maps use the mention
+accessors and the work/bundle URI minting. The reference's atom is an
+rdflib `(URIRef, URIRef, URIRef|Literal(lang,datatype))` added to one
+shared Graph (reference convert_starxml_to_bf.py:120-122). Ours is a
+flat struct row; URIs are minted with native `concat` — the
+hash-fragment URI scheme is deterministic string concatenation, so no
+UDF is ever needed for identity.
 """
 
 from __future__ import annotations
@@ -82,25 +85,6 @@ def bundle_uri(dfk: Column) -> Column:
     return F.concat(F.lit(NS.INSTANCEBUNDLES), dfk)
 
 
-def instance_uri(dfk: Column, n: Column | int) -> Column:
-    """instances:{dfk}#<n> (/root/reference/convert_starxml_to_bf.py:1320,1399)."""
-    return F.concat(F.lit(NS.INSTANCES), dfk, F.lit("#"), _c(n).cast("string"))
-
-
-def frag(parent: Column, kind: str, counter: Column | int | None = None) -> Column:
-    """parent + '#' + kind [+ counter] — hash-fragment child node URI
-    (e.g. work#contribution3, /root/reference/modules/contributions.py:229)."""
-    parts = [parent, F.lit("#" + kind)]
-    if counter is not None:
-        parts.append(_c(counter).cast("string"))
-    return F.concat(*parts)
-
-
-def subfrag(parent: Column, suffix: str) -> Column:
-    """parent + '_' + suffix (e.g. …#contribution3_personagent)."""
-    return F.concat(parent, F.lit("_" + suffix))
-
-
 # --- pre-cleaned field accessors ------------------------------------------
 # extract_records cleans the whole text once (F1+F2), so the emit layer's
 # field accessors skip the per-call 140-step replace chain. These wrappers
@@ -116,11 +100,6 @@ def subfield(col: Column, name: str) -> Column:
     from psyndex2linkeddata_spark.functions.cleaning import get_subfield
 
     return get_subfield(col, name, clean=False)
-
-
-def cleaned(col: Column) -> Column:
-    """Identity: the extract stage already applied F1+F2 to the page text."""
-    return col
 
 
 def explode_triples(df: DataFrame, arr: Column) -> DataFrame:

@@ -1,270 +1,35 @@
 """Stage 2 — normalize: records → records + parsed mention columns.
 
-Parses the repeated subfield-encoded strings into typed struct arrays once,
-so every emitter downstream is a pure projection. All record-local matching
-(ORCID↔AUP, PAUP↔AUP, EMID↔AUP — J9-J11 in SURVEY §2.4,
-/root/reference/modules/contributions.py:408-645) happens here. The
-EMID match is the reference's exact comparison; the ORCID/PAUP matchers
-use the reference's fuzz.partial_ratio>80 tier via the shared kernel in
-functions/fuzzy_names.py (Arrow pandas UDF — see contrib_id_cols).
+The maps route of build_triples (plans/pipeline.py) runs the offline
+linking tiers J13-J15 (plans/crossref.py) as DataFrame joins over the
+mention columns parsed here: RPLIC and REL entries with their F3/A3 id
+sets and citations, and TESTG entries with their cleaned long names.
+The emitter itself (emit/arrow.py) re-parses each record in Python and
+applies the resulting per-record resolution maps.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from psyndex2linkeddata_spark.emit.base import bundle_uri, cleaned, mainfield, subfield, work_uri
-from psyndex2linkeddata_spark.functions.cleaning import (nullif_empty)
-from psyndex2linkeddata_spark.functions.instance_fields import clean_email, clean_orcid
-from psyndex2linkeddata_spark.functions.names import (
-    family_name,
-    given_name,
-    sanitize_country_name,
-)
+from psyndex2linkeddata_spark.emit.base import bundle_uri, mainfield, subfield, work_uri
+
+# The parsed mention columns are a large tree of Column operations, and
+# each operation is a py4j round trip to CONSTRUCT, while analysis and
+# optimization are cheap. Columns are unresolved expressions independent
+# of any DataFrame, so the tree is built once per JVM and reused across
+# every normalize call.
+_COLUMN_CACHE: dict = {}
 
 
-def _norm_name(c: Column) -> Column:
-    """Casefolded exact-match key for the record-local name matchers."""
-    return F.lower(F.trim(c))
+def _memo(key: str, build):
+    from pyspark import SparkContext
 
-
-def contrib_id_cols(with_kerndaten: bool = False) -> dict[str, Column]:
-    """J9/J10 pre-materialized match columns: `_aup_orcids` /
-    `_aup_paups` are arrays aligned with AUP positions carrying the
-    LIST of matched ORCID |u / PAUP |n ids in field order (NULL = no
-    match; several fields matching one agent accumulate — the reference
-    graph.add's each rdf:value onto the shared id node). The reference's
-    matcher is fuzz.partial_ratio > 80 over F9-normalized names
-    (contributions.py:408-576) — genuinely procedural, so the shared
-    kernel (functions/fuzzy_names.py, same one the Arrow emitter calls)
-    runs in an Arrow pandas UDF here; like `_testg_longs`, the columns
-    are materialized in their own projection because pandas UDFs can't
-    sit inside higher-order-function lambdas.
-
-    `with_kerndaten`: feed the per-record `_kerndaten` resolution map
-    (paup_id → alternate names, attached by the broadcast authority
-    join in plans/pipeline.py) into the PAUP matcher's fallback tier
-    (contributions.py:456-498)."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    def make(sub: str, with_alts: bool = False):
-        # no type annotations: pandas_udf's hint inference can't resolve
-        # the function-local `pd` import; the returnType string suffices
-        def fn(df):
-            from psyndex2linkeddata_spark.emit import arrow as A
-            from psyndex2linkeddata_spark.functions.fuzzy_names import (
-                match_ids_to_positions,
-            )
-
-            out = []
-            alts_col = df["alts"] if with_alts else None
-            for j, (aup, ids) in enumerate(zip(df["aup"], df["ids"])):
-                aup_l = list(aup) if aup is not None else []
-                ids_l = list(ids) if ids is not None else []
-                alternates = None
-                if alts_col is not None:
-                    a = alts_col.iloc[j]
-                    if isinstance(a, dict):
-                        alternates = a
-                    elif a is not None and not (
-                        isinstance(a, float) and pd.isna(a)
-                    ):
-                        # Arrow map cells arrive as [(k, v), ...]
-                        alternates = dict(a)
-                persons = []
-                for i, s in enumerate(aup_l):
-                    nm = A.mainfield(s)
-                    persons.append((i + 1, A.family_name(nm), A.given_name(nm)))
-                m = match_ids_to_positions(
-                    [(A.mainfield(e), A.subfield(e, sub)) for e in ids_l],
-                    persons,
-                    alternates=alternates,
-                )
-                out.append([m.get(i + 1) for i in range(len(aup_l))])
-            return pd.Series(out)
-
-        return pandas_udf(fn, "array<array<string>>")
-
-    def pair(ids_field: str, sub: str, with_alts: bool = False) -> Column:
-        fields = [
-            F.coalesce(F.col("AUP"), F.array()).alias("aup"),
-            F.coalesce(F.col(ids_field), F.array()).alias("ids"),
-        ]
-        if with_alts:
-            fields.append(F.col("_kerndaten").alias("alts"))
-        return make(sub, with_alts)(F.struct(*fields))
-
-    return {
-        "_aup_orcids": pair("ORCID", "u"),
-        "_aup_paups": pair("PAUP", "n", with_alts=with_kerndaten),
-    }
-
-
-def contributions_col(df: DataFrame) -> Column:
-    """array<struct> of person + corporate contributions, AUP before AUK,
-    1-based positions across both (A1, /root/reference/modules/
-    contributions.py:224-257,687-691), with:
-
-    - qualifier first/middle/last by position vs total (F29, :240-255)
-    - ORCID |u matched by name (J10, :500-576), cleaned/validated (F18)
-    - PAUP |n psychauthors id matched by name (J9, :408-498)
-    - EMAIL via EMID name match, else attached to contribution 1
-      (J11, :579-645)
-    - record-level CS/COU affiliation attached to contribution 1 when the
-      person has no |i affiliation (J12, :647-682)
-    """
-    n_aup = F.size(F.coalesce(F.col("AUP"), F.array()))
-    total = n_aup + F.size(F.coalesce(F.col("AUK"), F.array()))
-
-    def qualifier(pos: Column) -> Column:
-        return (
-            F.when(pos == 1, F.lit("first"))
-            .when(pos == total, F.lit("last"))
-            .otherwise(F.lit("middle"))
-        )
-
-    def role(s: Column) -> Column:
-        """|f contribution role (reference modules/contributions.py:786-806
-        extract_contribution_role): default AU; VE→AU; RE→IVR when the
-        first CM field contains "interview" (case-sensitive — the
-        reference checks ``record.find("CM").text`` raw), else RE→ED.
-        Missing-CM RE records crash the reference; we take the →ED branch
-        (same deviation as the Arrow twin emit/arrow.py contribution_role)."""
-        raw = subfield(s, "f")
-        first_cm = F.try_element_at(F.coalesce(F.col("CM"), F.array()), F.lit(1))
-        interview = first_cm.isNotNull() & first_cm.contains("interview")
-        return (
-            F.when(raw.isNull(), F.lit("AU"))
-            .when(raw == "VE", F.lit("AU"))
-            .when(raw == "RE", F.when(interview, F.lit("IVR")).otherwise(F.lit("ED")))
-            .otherwise(raw)
-        )
-
-    def person(s: Column, i: Column) -> Column:
-        pos = i + 1
-        name = mainfield(s)
-        email_by_name = F.when(
-            _norm_name(F.coalesce(mainfield(F.col("EMID")), F.lit("")))
-            == _norm_name(name),
-            clean_email(F.col("EMAIL")),
-        )
-        # J11 fallback: EMID present but matching nobody → first contribution;
-        # no EMID at all → first contribution too (reference :637-645).
-        email_fallback = F.when(
-            (pos == 1)
-            & (
-                F.col("EMID").isNull()
-                | ~F.exists(
-                    F.coalesce(F.col("AUP"), F.array()),
-                    lambda a: _norm_name(mainfield(a))
-                    == _norm_name(mainfield(F.col("EMID"))),
-                )
-            ),
-            clean_email(F.col("EMAIL")),
-        )
-        own_org = subfield(s, "i")
-        own_country = sanitize_country_name(subfield(s, "c"))
-        # J12 (reference match_CS_COU_affiliations_to_first_contribution,
-        # contributions.py:647-682): record-level CS+COU — both required —
-        # attach to contribution 1; we take them only when AUP carries no
-        # own |i/|c (the reference would write onto the same affiliation1
-        # node URI; this keeps one source of truth per node).
-        cs_applies = (
-            (pos == 1)
-            & own_org.isNull()
-            & own_country.isNull()
-            & nullif_empty(F.col("CS")).isNotNull()
-            & nullif_empty(F.col("COU")).isNotNull()
-        )
-        return F.struct(
-            pos.alias("pos"),
-            F.lit("person").alias("kind"),
-            cleaned(name).alias("name"),
-            family_name(cleaned(name)).alias("family"),
-            given_name(cleaned(name)).alias("given"),
-            qualifier(pos).alias("qualifier"),
-            role(s).alias("role"),
-            F.coalesce(
-                own_org, F.when(cs_applies, cleaned(nullif_empty(F.col("CS"))))
-            ).alias("org"),
-            F.coalesce(
-                own_country,
-                F.when(cs_applies, cleaned(nullif_empty(F.col("COU")))),
-            ).alias("country"),
-            F.filter(
-                F.transform(
-                    F.coalesce(F.try_element_at(F.col("_aup_orcids"), pos), F.array()),
-                    clean_orcid,
-                ),
-                lambda v: v.isNotNull(),
-            ).alias("orcids"),
-            F.coalesce(
-                F.try_element_at(F.col("_aup_paups"), pos),
-                F.array().cast("array<string>"),
-            ).alias("paup_ids"),
-            F.coalesce(email_by_name, email_fallback).alias("email"),
-        )
-
-    def corporate(s: Column, i: Column) -> Column:
-        pos = n_aup + i + 1
-        name = mainfield(s)
-        return F.struct(
-            pos.alias("pos"),
-            F.lit("org").alias("kind"),
-            cleaned(name).alias("name"),
-            F.lit(None).cast("string").alias("family"),
-            F.lit(None).cast("string").alias("given"),
-            qualifier(pos).alias("qualifier"),
-            role(s).alias("role"),
-            F.lit(None).cast("string").alias("org"),
-            subfield(s, "c").alias("country"),
-            F.array().cast("array<string>").alias("orcids"),
-            F.array().cast("array<string>").alias("paup_ids"),
-            F.lit(None).cast("string").alias("email"),
-        )
-
-    return F.concat(
-        F.transform(F.coalesce(F.col("AUP"), F.array()), person),
-        F.transform(F.coalesce(F.col("AUK"), F.array()), corporate),
-    )
-
-
-# media-type label → (pmt suffix, RDA media code, RDA carrier code); reference
-# mediacarrier mapping /root/reference/modules/publication_types.py:675-800.
-_MEDIA = {
-    "Print": ("Print", "n", "nc"),
-    "Online Medium": ("Online", "c", "cr"),
-    "eBook": ("Online", "c", "cr"),
-}
-
-
-def instances_col(df: DataFrame) -> Column:
-    """array<struct<n, mediacarrier, media_code, carrier_code>> from MT/MT2
-    (N16, /root/reference/convert_starxml_to_bf.py:1310-1420): instance 1
-    always exists (mediacarrier NULL when MT missing/unknown — the reference
-    skips the mediaCarrier triples then); instance 2 only when MT2 present."""
-
-    def inst(mt: Column, n: Column) -> Column:
-        pmt = F.lit(None).cast("string")
-        media = F.lit(None).cast("string")
-        carrier = F.lit(None).cast("string")
-        for k, (p, m, c) in _MEDIA.items():
-            pmt = F.when(mt == k, F.lit(p)).otherwise(pmt)
-            media = F.when(mt == k, F.lit(m)).otherwise(media)
-            carrier = F.when(mt == k, F.lit(c)).otherwise(carrier)
-        return F.struct(
-            n.alias("n"),
-            pmt.alias("mediacarrier"),
-            media.alias("media_code"),
-            carrier.alias("carrier_code"),
-        )
-
-    first = inst(F.trim(F.col("MT")), F.lit(1))
-    second = inst(F.trim(F.col("MT2")), F.lit(2))
-    return F.when(
-        F.col("MT2").isNotNull(), F.array(first, second)
-    ).otherwise(F.array(first))
+    ctx = SparkContext._active_spark_context
+    cache_key = (id(ctx), key)
+    if cache_key not in _COLUMN_CACHE:
+        _COLUMN_CACHE[cache_key] = build()
+    return _COLUMN_CACHE[cache_key]
 
 
 def _checked(value: Column) -> Column:
@@ -321,32 +86,15 @@ def id_sets(values: Column) -> Column:
 
 
 def relation_mentions() -> dict[str, Column]:
-    """Heavy parsed columns for the relation emitters (N9-N14). Hoisted into
-    the normalize projection so the expensive F3 subtrees become column
-    ATTRIBUTES downstream — CollapseProject keeps multi-referenced non-cheap
-    aliases in their own projection, which keeps the optimized plan ~100×
-    smaller than inlining (measured: 190s → seconds of planning)."""
-    datac_ids = F.transform(
-        F.coalesce(F.col("DATAC"), F.array()),
-        lambda s: id_sets(F.array(subfield(s, "u"), subfield(s, "d"))),
-    )
-    urlai_ids = F.transform(
-        F.coalesce(F.col("URLAI"), F.array()),
-        lambda s: id_sets(F.array(F.trim(s))),
-    )
-    prereg_entries = F.transform(
-        F.coalesce(F.col("PRREG"), F.array()),
-        lambda s, i: F.struct(
-            (i + 1).alias("n"),
-            id_sets(F.array(subfield(s, "u"), subfield(s, "d"))).alias("ids"),
-            subfield(s, "i").alias("note"),
-        ),
-    )
+    """Heavy parsed RPLIC/REL/TESTG columns for the J13-J15 resolution
+    maps. Hoisted into the normalize projection so the expensive F3
+    subtrees become column ATTRIBUTES downstream — CollapseProject keeps
+    multi-referenced non-cheap aliases in their own projection, which
+    keeps the optimized plan ~100× smaller than inlining (measured: 190s
+    → seconds of planning)."""
     rplic_parsed = F.transform(
         F.coalesce(F.col("RPLIC"), F.array()),
         lambda s: F.struct(
-            F.trim(s).alias("cstr"),
-            subfield(s, "f").alias("dfk"),
             mainfield(s).alias("main"),
             id_sets(
                 F.array(subfield(s, "d"), subfield(s, "u"), mainfield(s))
@@ -382,24 +130,14 @@ def relation_mentions() -> dict[str, Column]:
         F.coalesce(F.col("REL"), F.array()),
         lambda s: F.struct(
             F.trim(s).alias("cstr"),
-            subfield(s, "b").alias("b"),
             _checked(F.trim(s)).alias("checked"),
             _rel_citation(s).alias("citation"),
-            # filled by plans.crossref.resolve_rel_dois (J14, threshold 60)
-            F.lit(None).cast("string").alias("crossref_doi"),
         ),
     )
-    doi_checked = _checked(F.col("DOI"))
-    urli_checked = _checked(F.trim(F.col("URLI")))
     return {
-        "datac_ids": datac_ids,
-        "urlai_ids": urlai_ids,
-        "prereg_entries": prereg_entries,
         "rplic_parsed": rplic_parsed,
         "rel_parsed": rel_parsed,
         "testg_parsed": testg_parsed_col(),
-        "doi_checked": doi_checked,
-        "urli_checked": urli_checked,
     }
 
 
@@ -430,80 +168,41 @@ def testg_longs_cols() -> dict[str, Column]:
 
 
 def testg_parsed_col() -> Column:
-    """TESTG → array<struct> mirroring the reference's build_related_test
-    dict (research_info.py:1404-1525 / testing/TESTG/testg.py:105-244):
-    shortName from the mainfield, longName from |l with '(PSYNDEX Tests
-    Review/Info/Abstract)' markers removed and ALL-CAPS names title-cased
-    (helpers.title_except — Python .isupper()/.title() semantics, so the
-    casing runs in the Arrow-batched UDF over the extracted array),
-    relation usesTest/analyzesTest from |z, test_id |c, allItemsInWork |v,
-    uncontrolledTestId |n (digits only), remark |k extended with the
-    |u/|f/|d annotations.
+    """TESTG → array<struct<long, test_id>>, the two fields of the
+    reference's build_related_test dict (research_info.py:1404-1525 /
+    testing/TESTG/testg.py:105-244) that J15 reads: longName from |l
+    with '(PSYNDEX Tests Review/Info/Abstract)' markers removed and
+    ALL-CAPS names title-cased (helpers.title_except — Python
+    .isupper()/.title() semantics, so the casing runs in the
+    Arrow-batched UDF over the extracted array), and test_id |c.
 
     The cased long names come from the pre-materialized `_testg_longs`
     column (testg_longs_cols): a pandas UDF cannot sit in an expression
     tree containing HOF lambdas, so extraction (native transform) and
     casing (Arrow UDF) live in separate projections."""
-    tg = F.coalesce(F.col("TESTG"), F.array())
     longs = F.col("_testg_longs")
-
-    def one(s: Column, i: Column) -> Column:
-        short = _nonempty(F.trim(mainfield(s)))
-        u_f, f_f, d_f, k_f = (subfield(s, c) for c in ("u", "f", "d", "k"))
-        u_part = F.when(
-            u_f.isNotNull() & (F.trim(u_f) != ""),
-            F.concat(F.lit("; Verwendete Variante oder Unterform: "), F.trim(u_f)),
-        ).otherwise(F.lit(""))
-        f_part = F.when(
-            f_f.isNotNull() & (F.trim(f_f) != ""),
-            F.concat(F.lit("; Langname verwendete Variante: "), F.trim(f_f)),
-        ).otherwise(F.lit(""))
-        d_part = F.when(
-            F.coalesce(F.trim(d_f), F.lit("")) == "x",
-            F.lit("; deutschsprachiger Test trotz englischen Titels"),
-        ).otherwise(F.lit(""))
-        raw = F.concat(F.coalesce(k_f, F.lit("")), u_part, f_part, d_part)
-        remark = F.when(
-            raw.startswith("; "), F.regexp_replace(raw, r"^[; ]+", "")
-        ).otherwise(raw)
-        unc_id = F.when(
-            F.trim(F.coalesce(subfield(s, "n"), F.lit(""))).rlike(r"^[0-9]+$"),
-            F.trim(subfield(s, "n")),
-        )
-        return F.struct(
-            short.alias("short"),
+    return F.transform(
+        F.coalesce(F.col("TESTG"), F.array()),
+        lambda s, i: F.struct(
             F.element_at(longs, i + 1).alias("long"),
-            F.when(
-                F.coalesce(F.trim(subfield(s, "z")), F.lit("")) == "x",
-                F.lit("analyzesTest"),
-            ).otherwise(F.lit("usesTest")).alias("relation"),
             subfield(s, "c").alias("test_id"),
-            (F.coalesce(F.trim(subfield(s, "v")), F.lit("")) == "x").alias("items"),
-            _nonempty(remark).alias("remark"),
-            unc_id.alias("unc_id"),
-        )
-
-    return F.transform(tg, one)
+        ),
+    )
 
 
 def normalize(records: DataFrame) -> DataFrame:
     """records → + work/bundle URI columns + parsed mention structs.
 
     Drops records without a DFK (the reference cannot mint URIs for them
-    either) — everything downstream keys on `work` / `bundle`.
+    either). The crossref and tests resolution maps (plans/crossref.py)
+    read the parsed columns.
     """
-    from psyndex2linkeddata_spark.plans.pipeline import _memo
-
-    kern = "_kerndaten" in records.columns
     cols = _memo(
-        f"normalize_columns_kern={kern}",
+        "normalize_columns",
         lambda: {
             "work": work_uri(F.col("DFK")),
             "bundle": bundle_uri(F.col("DFK")),
             **testg_longs_cols(),
-            **contrib_id_cols(with_kerndaten=kern),
-            "contribs": contributions_col(records),
-            "instances": instances_col(records),
             **relation_mentions(),
         },
     )

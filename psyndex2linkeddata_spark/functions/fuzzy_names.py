@@ -33,10 +33,9 @@ as the `alternates` dict ({paup_id: [name, ...]}), pre-joined per record
 by the broadcast kerndaten resolution map (plans/pipeline.py) — SURVEY
 §1.4's broadcast-person-authority shape.
 
-Used by BOTH emit paths: emit/arrow.py calls it per record; the Column
-path wraps it in an Arrow pandas UDF (emit/normalize.contrib_id_cols)
-because partial_ratio is genuinely procedural. The golden oracle
-carries its own independent implementation (tests/golden_oracle.py).
+emit/arrow.py calls it per record (partial_ratio is genuinely
+procedural). The golden oracle carries its own independent
+implementation (tests/golden_oracle.py).
 """
 
 from __future__ import annotations

@@ -52,9 +52,11 @@ def contaminated_ids(
     broadcast the gram set) dispatches to an Arrow kernel: the benchmark
     gram set is collected once into a Python set of UTF-8 byte strings
     and each document's n-gram windows are probed against it with an
-    early exit on the first hit — the corpus-side explode, the
-    broadcast semi-join and the distinct all disappear, and each
-    contaminated id is emitted exactly once. Gram construction is the
+    early exit on the first hit — the corpus-side explode and the
+    broadcast semi-join disappear. The kernel emits one id per
+    contaminated row, so a final distinct keeps the contract when
+    `docs` repeats an id (decontaminate's left join would fan out
+    otherwise). Gram construction is the
     byte-slice replication of shingle_array (see
     operators/dedup._minhash_signatures_arrow — n ≥ 4 uses the
     quirk-free lookahead semantics; n ≤ 3 replicates the leading-space
@@ -102,7 +104,7 @@ def contaminated_ids(
                 [ids.take(pa.array(hit_idx, pa.int64()))], [id_col]
             )
 
-    return staged.mapInArrow(kernel, f"{id_col} {id_t}")
+    return staged.mapInArrow(kernel, f"{id_col} {id_t}").distinct()
 
 
 def contaminated_ids_native(

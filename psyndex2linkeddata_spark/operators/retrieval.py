@@ -208,8 +208,11 @@ def _bm25_per_posting(
     # the tokenize→explode→semi-join→repartition→groupBy pipeline
     # disappears. One extra null-term marker row per non-empty doc
     # carries (n_docs, sum_dl) so the corpus scalars need no second
-    # tokenization pass. Pinned bit-equal to the native build by
-    # tests/test_arrow_kernel_parity.
+    # tokenization pass. No native build of the postings is kept to
+    # compare against: the scores are held by the DuckDB oracle for
+    # bm25_topk (tools/check_oracles.py) and by
+    # tests/test_operators.py::test_bm25_topk_vs_pure_python (a
+    # row-at-a-time BM25).
     qvocab_set = {r["term"].encode() for r in qvocab.collect()}
     sep = bytes(
         c if chr(c) in "abcdefghijklmnopqrstuvwxyz0123456789" else 0x20

@@ -90,10 +90,9 @@ def rplic_resolution_map(
 ) -> DataFrame:
     """J13/J14 kernel -> (url, _rplic_res: map<idx, array<doi>>).
 
-    The map's value REPLACES `rplic_parsed[idx].ids.dois` (empty array =
-    all candidate DOIs invalid). Consumed either by resolve_rplic_dois
-    (Column path, transform-rewrite) or joined straight onto records for
-    the Arrow emitter (emit/arrow.py record_triples `_rplic_res`).
+    The map's value REPLACES the RPLIC entry's candidate DOIs (empty
+    array = all candidate DOIs invalid); build_triples joins it onto the
+    records for the emitter (emit/arrow.py record_triples `_rplic_res`).
 
     `threshold` is the reference's fuzz threshold (30 for RPLIC).
     `search_threshold` (default = threshold) applies to tier S only: the
@@ -175,37 +174,6 @@ def rplic_resolution_map(
     )
 
 
-def resolve_rplic_dois(
-    records: DataFrame,
-    auth_crossref: DataFrame,
-    threshold: float = 30.0,
-    search_threshold: float | None = None,
-    num_hashes: int = 16,
-) -> DataFrame:
-    """Column-path wrapper: rewrite `rplic_parsed[*].ids.dois` in place
-    through the rplic_resolution_map. Records without RPLIC pass through."""
-    res = rplic_resolution_map(
-        records, auth_crossref, threshold, search_threshold, num_hashes
-    )
-    out = records.join(res, "url", "left")
-    new_parsed = F.transform(
-        F.col("rplic_parsed"),
-        lambda p, i: F.struct(
-            p["cstr"].alias("cstr"),
-            p["dfk"].alias("dfk"),
-            p["main"].alias("main"),
-            F.struct(
-                F.coalesce(
-                    F.try_element_at(F.col("_rplic_res"), i), p["ids"]["dois"]
-                ).alias("dois"),
-                p["ids"]["urls"].alias("urls"),
-                p["ids"]["unknowns"].alias("unknowns"),
-            ).alias("ids"),
-        ),
-    )
-    return out.withColumn("rplic_parsed", new_parsed).drop("_rplic_res")
-
-
 def rel_resolution_map(
     records: DataFrame,
     auth_crossref: DataFrame,
@@ -250,31 +218,6 @@ def rel_resolution_map(
             ).alias("_rel_res")
         )
     )
-
-
-def resolve_rel_dois(
-    records: DataFrame,
-    auth_crossref: DataFrame,
-    threshold: float = 60.0,
-    search_threshold: float | None = None,
-    num_hashes: int = 16,
-) -> DataFrame:
-    """Column-path wrapper: fill `rel_parsed[*].crossref_doi` in place."""
-    res = rel_resolution_map(
-        records, auth_crossref, threshold, search_threshold, num_hashes
-    )
-    out = records.join(res, "url", "left")
-    new_parsed = F.transform(
-        F.col("rel_parsed"),
-        lambda p, i: F.struct(
-            p["cstr"].alias("cstr"),
-            p["b"].alias("b"),
-            p["checked"].alias("checked"),
-            p["citation"].alias("citation"),
-            F.try_element_at(F.col("_rel_res"), i).alias("crossref_doi"),
-        ),
-    )
-    return out.withColumn("rel_parsed", new_parsed).drop("_rel_res")
 
 
 def _dsm_icd_mismatch(a, b):
@@ -357,29 +300,3 @@ def testg_resolution_map(
             ).alias("_testg_res")
         )
     )
-
-
-def resolve_testg_ids(
-    records: DataFrame,
-    auth_tests: DataFrame,
-    threshold: float = 70.0,
-    num_hashes: int = 16,
-) -> DataFrame:
-    """Column-path wrapper: fill `testg_parsed[*].test_id` in place."""
-    res = testg_resolution_map(records, auth_tests, threshold, num_hashes)
-    out = records.join(res, "url", "left")
-    new_parsed = F.transform(
-        F.col("testg_parsed"),
-        lambda p, i: F.struct(
-            p["short"].alias("short"),
-            p["long"].alias("long"),
-            p["relation"].alias("relation"),
-            F.coalesce(
-                p["test_id"], F.try_element_at(F.col("_testg_res"), i)
-            ).alias("test_id"),
-            p["items"].alias("items"),
-            p["remark"].alias("remark"),
-            p["unc_id"].alias("unc_id"),
-        ),
-    )
-    return out.withColumn("testg_parsed", new_parsed).drop("_testg_res")

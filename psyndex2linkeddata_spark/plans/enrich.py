@@ -1,14 +1,16 @@
-"""Stage 3 — link/enrich on the Column path: authority broadcast joins
+"""Stage 3 — link/enrich as DataFrame joins: authority broadcast joins
 over the emitted triples (SURVEY §2.4).
 
 The reference enriches per record with live HTTP (ROR, Crossref,
-Skosmos — modules/local_api_lookups.py, redis-cached). The default Arrow
-path does the same per record inside its emit stage
-(emit/arrow.link_record, against dicts folded by authority_links); this
-module is the Column path's linking and the parity reference for that
-in-stage pass (tests/test_arrow_linking.py). Here the authorities are
-input DataFrames and each lookup is ONE broadcast join over the distinct
-mention keys (Spark-native memoization):
+Skosmos — modules/local_api_lookups.py, redis-cached). build_triples
+does the same per record inside its emit stage (emit/arrow.link_record,
+against dicts folded by authority_links). This module is the join form
+of those rules, and it stays in the package for three users:
+tests/test_arrow_linking.py and tests/test_fundref_retry.py check
+link_record against it; build_triples runs genre_ancestor_closure for the
+A2 cleanup; and perfbench's linked_pages probe stages the joins. Here the
+authorities are input DataFrames and each lookup is ONE broadcast join
+over the distinct mention keys (Spark-native memoization):
 
 - J5  topic owl:sameAs from the terms/addterms vocab (label_en → uri;
       'terms' preferred when both vocabs carry the label — mirrors the
@@ -21,6 +23,8 @@ mention keys (Spark-native memoization):
       stay deterministic vs the golden oracle)
 - J3  FundRef DOIs for funder nodes (F28 canonicalization first,
       convert_starxml_to_bf.py:814-941)
+- J2  country fill for affiliations without an address, with the J16
+      geonames canonical names (geonames_name / geonames_id)
 - J7/A2 genre-hierarchy dedup via the broadcast ancestor closure
       (publication_types.py:481-631)
 
@@ -32,9 +36,12 @@ dirty string resolved once per job, the requests_cache replacement).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from itertools import chain
+
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from psyndex2linkeddata_spark import namespaces as NS
+from psyndex2linkeddata_spark.data.tables import geonames_countries
 from psyndex2linkeddata_spark.functions.grants import canonicalize_funder_name
 from psyndex2linkeddata_spark.operators.linking import norm_key
 from psyndex2linkeddata_spark.schema import TRIPLE_COLS
@@ -123,14 +130,49 @@ def license_labels(triples: DataFrame, concepts: DataFrame) -> DataFrame:
     )
 
 
+def _geo_pairs():
+    """casefold-key → (name, gid), first occurrence wins — the reference
+    table carries literal duplicate rows (Malawi, Taiwan, Czech Republic)
+    and its lookup is first-match (helpers.py:378-382); Spark's
+    create_map refuses duplicate keys (mapKeyDedupPolicy=EXCEPTION)."""
+    seen = {}
+    for name, gid, _iso in geonames_countries:
+        seen.setdefault(name.casefold(), (name, gid))
+    return seen
+
+
+def _geo_lookup(country: Column, field: int) -> Column:
+    from psyndex2linkeddata_spark.functions.names import casefold_compat
+
+    table = F.create_map(
+        *chain.from_iterable(
+            (F.lit(k), F.lit(v[field])) for k, v in _geo_pairs().items()
+        )
+    )
+    return table[casefold_compat(F.trim(country))]
+
+
+def geonames_name(country: Column) -> Column:
+    """J16 canonical name: casefold first-match (reference
+    modules/helpers.py:378-382) over the 190-row geonames country table
+    (static reference data, modules/mappings.py:501-693), inlined as a
+    literal map. The map keys are Python-casefolded, so the lookup side
+    folds with casefold_compat (lower alone would miss e.g. 'Rußland' →
+    'russland')."""
+    return _geo_lookup(country, 0)
+
+
+def geonames_id(country: Column) -> Column:
+    """J16 geonames id of the same first-match row."""
+    return _geo_lookup(country, 1)
+
+
 def country_fill(triples: DataFrame, auth_orgs: DataFrame) -> DataFrame:
     """J2: affiliations WITHOUT a country (no |c subfield → the emit stage
     created no _address node) get one from the resolved ROR org
     (contributions.py:114-222): …_address a mads:Address via
     mads:hasAffiliationAddress, …_address_country a mads:Country with the
     geonames-improved label + _geonamesid a locid:geonames."""
-    from psyndex2linkeddata_spark.emit.contributions import geonames_id, geonames_name
-
     orgs = triples.where(
         F.col("subj").endswith("_organization") & (F.col("pred") == NS.RDFS_LABEL)
     ).select(

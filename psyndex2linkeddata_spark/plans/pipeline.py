@@ -3,98 +3,32 @@
 Stage model (SURVEY §7): extract (pages→records, stage 1), normalize
 (records→mentions, stage 2), emit (mentions→triples, stage 5), finalize
 (set-semantics dedup, stage 6). Entity linking against the authority
-dictionaries (stage 3) runs inside the Arrow emit stage, or as
-plans/enrich.py joins on the Column path; URI canonicalization (stage 4)
-is a composable add-on from operators/.
+dictionaries (stage 3) runs inside the emit stage; URI canonicalization
+(stage 4) is a composable add-on from operators/.
 
 Scale notes:
-- extract+normalize+emit is ONE narrow projection — no shuffle until the
-  final dropDuplicates. At 10^12 pages the only shuffle in the core path
-  is the dedup exchange, partitioned by all triple columns; AQE coalesces.
-- the default Arrow path (emit/arrow.py) runs parse + S3 kill-list +
-  emit + J1-J6 linking in Python, in one Arrow-batched mapInArrow stage
-  that reads the pages directly: each page is parsed once, and each
-  record's triples are linked against driver-built authority dicts
-  before the one dedup. The Column parser (extract_records) enters an
-  Arrow plan only when a kerndaten, crossref or tests resolution map
-  needs its mention columns.
-- the Column path (emit_mode="columns") keeps every stage a pure column
-  expression, with the kill-list as a broadcast anti-join
-  (filter_bad_ids) and linking as broadcast joins after the emit
-  (plans/enrich.py), so whole-stage codegen runs end to end with no
-  Python in the per-row path.
+- the emit stage (emit/arrow.py) runs parse + S3 kill-list + emit +
+  J1-J6 linking in Python, in one Arrow-batched mapInArrow stage that
+  reads the pages directly: each page is parsed once, and each record's
+  triples are linked against driver-built authority dicts before the one
+  dedup. No shuffle until the final dropDuplicates: at 10^12 pages the
+  only shuffle in the core path is the dedup exchange, partitioned by
+  all triple columns; AQE coalesces.
+- the Column parser (extract_records) and normalize enter the plan only
+  when a kerndaten, crossref or tests resolution map needs their
+  mention columns (the maps route).
+- the semantics are held by independent gates rather than a second
+  emitter: the pure-Python golden oracle (tests/test_golden.py, exact
+  set equality) and the pinned scenario triple sets
+  (tests/test_arrow_parity.py).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
-from psyndex2linkeddata_spark.emit import contributions as c_emit, core
-from psyndex2linkeddata_spark.emit.base import explode_triples
 from psyndex2linkeddata_spark.emit.normalize import normalize
 from psyndex2linkeddata_spark.extract.parser import extract_records
-
-
-# The emitter expression tree is ~10^4 Column operations = ~10^4 py4j round
-# trips (~30s) to CONSTRUCT — while analysis/optimization are ~1s. Columns
-# are unresolved expressions independent of any DataFrame, so we build the
-# tree once per JVM and reuse it across every build_triples call.
-_COLUMN_CACHE: dict = {}
-
-
-def _memo(key: str, build):
-    from pyspark import SparkContext
-
-    ctx = SparkContext._active_spark_context
-    cache_key = (id(ctx), key)
-    if cache_key not in _COLUMN_CACHE:
-        _COLUMN_CACHE[cache_key] = build()
-    return _COLUMN_CACHE[cache_key]
-
-
-def emitter_columns(annif: bool = True) -> list[Column]:
-    """All registered emitters (grows as SURVEY §2.6 coverage widens)."""
-    from psyndex2linkeddata_spark.emit import (  # late import: module registry
-        abstracts,
-        funding,
-        genres,
-        relations,
-        terms,
-        thesis,
-    )
-
-    return [
-        core.work_core(),
-        core.titles(),
-        core.instances(),
-        core.identifiers(),
-        core.publication(),
-        c_emit.contributions(),
-        abstracts.abstracts(),
-        terms.topics(),
-        terms.subject_headings(),
-        terms.age_groups(),
-        genres.issuance_and_genres(annif=annif),
-        genres.license_node(),
-        funding.funding(),
-        funding.conferences(),
-        relations.research_data(),
-        relations.preregistrations(),
-        relations.replications(),
-        relations.related_works(),
-        relations.tests_measures(),
-        relations.journal_relation(),
-        relations.book_relation(),
-        thesis.thesis(),
-    ]
-
-
-def emit_triples(norm_records: DataFrame, annif: bool = True) -> DataFrame:
-    """normalized records → raw triples (single scan, single explode)."""
-    arr = _memo(
-        f"emit_array_annif={annif}", lambda: F.concat(*emitter_columns(annif=annif))
-    )
-    return explode_triples(norm_records, arr)
 
 
 def finalize(
@@ -102,7 +36,6 @@ def finalize(
     *,
     barrier: bool = True,
     genre_cleanup: bool = True,
-    truncate_lineage: bool = False,
 ) -> DataFrame:
     """A10 (rdflib.Graph set semantics — implicit in every graph.add):
     exact-duplicate triples collapse, plus the authority-free part of
@@ -111,7 +44,7 @@ def finalize(
     convert_starxml_to_bf.py:1455-1458). The one global shuffle of the
     pipeline; AQE-coalesced.
 
-    The Arrow path without authorities passes `genre_cleanup=False` and
+    Without authorities build_triples passes `genre_cleanup=False` and
     `barrier=False`: emit/arrow.py applies the A2 rule in-record, and
     nothing downstream references the triple set more than once, so the
     pipeline is a single narrow stage + one dedup exchange, no cache.
@@ -121,22 +54,6 @@ def finalize(
     deduped = triples.dropDuplicates(
         ["subj", "pred", "obj", "obj_is_iri", "lang", "dtype"]
     )
-    if truncate_lineage:
-        # Column-path barrier: the interpreted emit tree is ~10^4 nodes,
-        # and every downstream reference (clean_genres reads the set 3×,
-        # enrich 8×) re-ANALYZES the full logical plan — measured 650s of
-        # driver CPU inside a single analyzer rule on a 100-page corpus.
-        # localCheckpoint truncates the logical plan to a LogicalRDD so
-        # each reference analyzes a leaf. Only the spec/test path uses
-        # this; the Arrow production path keeps the columnar persist
-        # (its plan is small, and RDD-block storage thrashes the heap at
-        # the 100M-triple scale — measured 22× blowup at 5× data).
-        return_df = deduped.localCheckpoint()
-        if genre_cleanup:
-            from psyndex2linkeddata_spark.operators.upsert import clean_genres
-
-            return_df = clean_genres(return_df)
-        return return_df
     if barrier:
         # Plan barrier: the clean_genres passes reference the triple
         # set many times; without a barrier each reference
@@ -166,8 +83,8 @@ def kerndaten_resolution_map(records: DataFrame, kern: DataFrame) -> DataFrame:
     SURVEY §1.4 shape: broadcast the person authority (paup_id,
     alternate_names array) against the exploded PAUP mention ids and
     fold back to one compact per-record map column `_kerndaten`
-    ({paup_id: [alternate name, ...]}) that both emit paths feed into
-    the matcher's fallback tier. Only records that mention a known id
+    ({paup_id: [alternate name, ...]}) that the emitter feeds into the
+    matcher's fallback tier. Only records that mention a known id
     get a row — the join stays proportional to the mention count, and
     at a 10^8-author scale the broadcast hint is the only line to drop
     (the shuffle join on paup_id is already the right shape)."""
@@ -190,90 +107,71 @@ def kerndaten_resolution_map(records: DataFrame, kern: DataFrame) -> DataFrame:
     )
 
 
-def _build_triples_columns(
-    pages: DataFrame,
-    authorities: dict[str, DataFrame] | None,
-    annif: bool = True,
-) -> DataFrame:
-    """Declarative path: the full emit as native column expressions."""
-    from psyndex2linkeddata_spark.extract.parser import filter_bad_ids
-
-    records = extract_records(pages)
-    if authorities and "bad_ids" in authorities:
-        records = filter_bad_ids(records, authorities["bad_ids"])
-    if authorities and "kerndaten" in authorities:
-        records = records.join(
-            kerndaten_resolution_map(records, authorities["kerndaten"]),
-            "url",
-            "left",
-        )
-    norm = normalize(records)
-    if authorities and "crossref" in authorities:
-        # J13/J14: offline Crossref DOI validation + citation→DOI search
-        from psyndex2linkeddata_spark.plans.crossref import (
-            resolve_rel_dois,
-            resolve_rplic_dois,
-        )
-
-        norm = resolve_rplic_dois(
-            norm,
-            authorities["crossref"],
-            search_threshold=authorities.get("crossref_search_threshold"),
-        )
-        norm = resolve_rel_dois(
-            norm,
-            authorities["crossref"],
-            search_threshold=authorities.get("crossref_rel_search_threshold"),
-        )
-    if authorities and "tests" in authorities:
-        # J15: fuzzy longName → test database id for uncontrolled TESTG
-        from psyndex2linkeddata_spark.plans.crossref import resolve_testg_ids
-
-        norm = resolve_testg_ids(norm, authorities["tests"])
-    return finalize(emit_triples(norm, annif=annif), truncate_lineage=True)
-
-
-# the authority columns the Arrow path folds into authority_links' dicts
+# the authority columns build_triples folds into authority_links' dicts
 _ORG_COLS = ("name", "aliases", "org_id", "fundref_doi", "country_name")
 _CONCEPT_COLS = ("vocab", "uri", "label_en", "label_de")
 
 
-def _build_triples_arrow(
+def build_triples(
     pages: DataFrame,
-    authorities: dict[str, DataFrame] | None,
+    authorities: dict[str, DataFrame] | None = None,
     annif: bool = True,
+    repair_text: bool = False,
 ) -> DataFrame:
-    """Arrow path: one narrow mapInArrow stage (emit/arrow.py) does
-    parse+emit and drops kill-listed records after its own parse, so the
-    check sees the same cleaned first DFK value the emit uses.
+    """pages(url, warc_ts, html, text, lang) → deduplicated triples DF.
 
-    Pages route (no kerndaten/crossref/tests map): the stage reads the
-    pages and parses each one once. Maps route: the offline-linking joins
-    (J9, J13-J15) run as DataFrame joins over the Column-parsed mention
-    columns, reduced to compact per-record resolution maps the Python
-    emitter applies; a killed record emits nothing, whatever maps it
-    was joined to.
+    One narrow mapInArrow stage (emit/arrow.py) does parse+emit and
+    drops kill-listed records after its own parse, so the check sees the
+    same cleaned first DFK value the emit uses.
 
-    Linking (J1-J6) runs in the same stage: auth_orgs and auth_concepts
-    are collected once per call and folded into plain dicts
-    (emit/arrow.authority_links), and the kernel applies them to each
-    record's triples (link_record) — the per-record lookups of the
-    reference, with no post-emit join, union or second dedup: finalize
-    deduplicates the link triples with the rest. plans/enrich.py stays
-    the Column path's linking and the parity reference. After finalize,
-    the A2 ancestor cleanup runs as before (clean_genres over the genre
-    closure), so the cross-record case stays covered.
+    With `authorities` (see datagen/authorities.py for the table shapes):
+    the bad_ids kill-list drops records (S3) and the linking rules
+    (J1-J6 + A2 ancestor cleanup) add link triples.
+    - Pages route (no kerndaten/crossref/tests map): the stage reads the
+      pages and parses each one once.
+    - Maps route: the offline-linking joins (J9, J13-J15) run as
+      DataFrame joins over the Column-parsed mention columns
+      (extract_records → normalize), reduced to compact per-record
+      resolution maps the emitter applies; a killed record emits
+      nothing, whatever maps it was joined to.
+    - Linking (J1-J6) runs in the same stage: auth_orgs and auth_concepts
+      are collected once per call and folded into plain dicts
+      (emit/arrow.authority_links), and the kernel applies them to each
+      record's triples (link_record) — the per-record lookups of the
+      reference, with no post-emit join, union or second dedup: finalize
+      deduplicates the link triples with the rest. After finalize, the
+      A2 ancestor cleanup runs over the genre closure (clean_genres), so
+      the cross-record case stays covered.
 
     The kill-list reaches the stage as a frozenset of DFKs, and the
-    authorities as dicts, each collected in one small job per call.
-    filter_bad_ids' and enrich's `F.broadcast` build the same tables on
-    the driver, so the memory contract is unchanged. The dicts ride the
-    kernel closure; PySpark ships a closure over 1 MB as a broadcast
-    variable."""
+    authorities as dicts, each collected in one small job per call; a
+    broadcast join would build the same tables on the driver. The dicts
+    ride the kernel closure; PySpark ships a closure over 1 MB as a
+    broadcast variable.
+
+    The emitter runs ~60× less CPU per page than an interpreted
+    higher-order-function Column tree of the same spec, with a KB-scale
+    plan instead of MB-scale (see the emit/arrow.py docstring).
+    """
     from psyndex2linkeddata_spark.emit.arrow import (
         authority_links,
         emit_triples_arrow,
     )
+
+    # Fetch-layer repair (opt-in): captures that arrive without
+    # extracted text (text NULL) recover it from the raw html column —
+    # a narrow projection that fuses into the scan
+    # (operators/extraction.py, byte-stable mode). Opt-in because it
+    # forces the scan to READ the html column; when the upstream table
+    # already guarantees text, column pruning should keep html out of
+    # the scan entirely.
+    if repair_text and "html" in pages.columns:
+        from psyndex2linkeddata_spark.operators.extraction import html_to_text
+
+        pages = pages.withColumn(
+            "text",
+            F.coalesce(F.col("text"), html_to_text(F.col("html"))),
+        )
 
     auth = authorities or {}
     src = pages
@@ -339,53 +237,3 @@ def _build_triples_arrow(
 
         out = clean_genres(out, genre_ancestor_closure(concepts))
     return out
-
-
-def build_triples(
-    pages: DataFrame,
-    authorities: dict[str, DataFrame] | None = None,
-    emit_mode: str | None = None,
-    annif: bool = True,
-    repair_text: bool = False,
-) -> DataFrame:
-    """pages(url, warc_ts, html, text, lang) → deduplicated triples DF.
-
-    With `authorities` (see datagen/authorities.py for the table shapes):
-    the bad_ids kill-list drops records (S3) and the linking rules
-    (J1-J6 + A2 ancestor cleanup) add link triples. On the Arrow path
-    both run inside the emit stage, against driver-collected sets and
-    dicts; on the Column path the kill-list is a broadcast anti-join and
-    plans/enrich.py joins the links after the emit.
-
-    `emit_mode` ('arrow' default, or 'columns', env SPARK_GRAFT_EMIT):
-    both paths emit byte-identical triple sets (tests/test_arrow_parity);
-    'arrow' is the hot path — one Arrow-batched mapInArrow stage,
-    measured ~60× less CPU per page than the interpreted HOF column tree
-    and a KB-scale plan instead of MB-scale (see emit/arrow.py docstring).
-    """
-    import os
-
-    # Fetch-layer repair (opt-in): captures that arrive without
-    # extracted text (text NULL) recover it from the raw html column —
-    # a narrow projection that fuses into the scan
-    # (operators/extraction.py, byte-stable mode). Opt-in because it
-    # forces the scan to READ the html column; when the upstream table
-    # already guarantees text, column pruning should keep html out of
-    # the scan entirely.
-    if repair_text and "html" in pages.columns:
-        from psyndex2linkeddata_spark.operators.extraction import html_to_text
-
-        pages = pages.withColumn(
-            "text",
-            F.coalesce(F.col("text"), html_to_text(F.col("html"))),
-        )
-
-    mode = emit_mode or os.environ.get("SPARK_GRAFT_EMIT", "arrow")
-    if mode != "columns":
-        return _build_triples_arrow(pages, authorities, annif=annif)
-    triples = _build_triples_columns(pages, authorities, annif=annif)
-    if authorities:
-        from psyndex2linkeddata_spark.plans.enrich import enrich_triples
-
-        triples = enrich_triples(triples, authorities)
-    return triples

@@ -486,7 +486,7 @@ def _contribution_role(s, rec):
 
 
 def contributions_of(rec, kerndaten=None):
-    """Mirror of emit/normalize.contributions_col (kerndaten = the
+    """Mirror of emit/arrow.contributions_of (kerndaten = the
     {paup_id: alternate names} authority for the J9 second tier)."""
     aups = [clean(s) for s in rec.get("AUP") or []]
     auks = [clean(s) for s in rec.get("AUK") or []]
@@ -751,7 +751,7 @@ def emit_genres(g, rec, W, B):
         g.add(NS.GENRES + genre, NS.RDF_TYPE, NS.BF + "GenreForm", iri=True)
         g.add(W, NS.BF + "genreForm", NS.GENRES + genre, iri=True)
     # CM methods + genres (J8 stand-in: content hash of the normalized
-    # title+abstract token stream when no CM — mirrors emit/genres.annif_text)
+    # title+abstract token stream when no CM — mirrors emit/arrow.annif_text)
     import zlib
 
     cm_fields = rec.get("CM") or []
@@ -1122,7 +1122,7 @@ def emit_tests(g, rec, W):
                 remark += "; Langname verwendete Variante: " + subfield(c, "f")
             if subfield(c, "d") == "x":
                 remark += "; deutschsprachiger Test trotz englischen Titels"
-        rel = W + "#TestRelationship" + str(i)
+        rel = W + "#TestRelationship" + str(i + 1)
         test = rel + "_test"
         g.add(rel, NS.RDF_TYPE, NS.BFLC + "Relationship", iri=True)
         g.add(rel, NS.RDF_TYPE, NS.PXC + "TestRelationship", iri=True)

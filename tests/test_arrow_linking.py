@@ -1,8 +1,8 @@
 """In-stage linking: emit/arrow.link_record against the plans/enrich.py joins.
 
-The Arrow path links each record's triples inside the emit stage, with
-dict lookups folded on the driver (authority_links). The Column path
-joins the same rules after the emit (topic_links, genre_labels,
+The emit stage links each record's triples itself, with dict lookups
+folded on the driver (authority_links). plans/enrich.py states the same
+rules as joins after the emit (topic_links, genre_labels,
 license_labels, ror_links, fundref_links, country_fill). Both must add
 exactly the same triples; this file pins that on hand-built triples
 whose keys hit the authority windows' tie-breaks and the Spark string

@@ -1,19 +1,14 @@
-"""Arrow-emitter parity gate: the mapInArrow hot path (emit/arrow.py)
-must produce EXACTLY the triple set of the declarative Column path for
-the same input — including the kill-list, the J1-J6 authority links
-(in-stage on the Arrow path, plans/enrich.py joins on the Column path)
-and the J13-J15 offline-linking resolution maps. This is what lets the
-engine run the Python emitter at scale while the Column layer remains
-the citable spec.
+"""Emit-stage regression gate: the mapInArrow emitter (emit/arrow.py)
+must produce EXACTLY the pinned triple set of each scenario in
+tests/triple_snapshots.py — the plain pages, the same pages as
+extract_records output, the convert job's authority set, the maps set
+(kill-list, J1-J6 links and the J13-J15 resolution maps), and CRLF /
+CR-only payloads on the pages route and through extract_records. The
+sets were pinned while the engine carried a second, declarative Column
+emitter and both emitters agreed on every one of them; the golden
+oracle (tests/test_golden.py) is the independent gate on the semantics.
 
-Cost control (round-3 verdict #5): the Column path is the expensive side
-(~10^4-node interpreted expression tree), so it is materialized ONCE per
-scenario in a module-scoped fixture and shared — the plain set serves
-both the pages-input and records-input tests (their column sides are the
-same plan: extract → normalize → emit → finalize), and the authorities
-scenarios (with and without resolution maps) run on a deterministic
-~1/3 subset of the corpus. 7 full Column executions → 3 (one full, two
-third-size); parity stays exact-set.
+A mismatch names the predicates whose triple counts moved.
 """
 
 from __future__ import annotations
@@ -24,112 +19,62 @@ import pytest
 from pyspark.sql import functions as F
 
 from psyndex2linkeddata_spark.plans.pipeline import build_triples
-
-
-def _tset(df):
-    return {(r.subj, r.pred, r.obj, r.obj_is_iri, r.lang, r.dtype) for r in df.collect()}
-
-
-def _diff_msg(a, c):
-    return (
-        f"arrow-only={len(a - c)} column-only={len(c - a)}; "
-        f"examples: {sorted(a ^ c)[:5]}"
-    )
+from tests import triple_snapshots as ts
 
 
 @pytest.fixture(scope="module")
-def column_plain(spark, pages):
-    """The Column-path triple set, computed once for the two plain tests."""
-    return _tset(build_triples(pages, emit_mode="columns"))
+def pinned():
+    return ts.load()
 
 
 @pytest.fixture(scope="module")
 def pages_subset(spark, pages, fixture_dir):
-    """Deterministic ~1/3 slice (crc32(url) — stable across jobs, unlike
-    limit(), whose row pick can vary between executions), plus the pages
-    the bad_ids kill-list names, which the slice alone misses: the
-    kill-list scenarios then drop real pages."""
-    killed = [
-        r.dfk
-        for r in spark.read.parquet(os.path.join(fixture_dir, "bad_ids.parquet"))
-        .select("dfk")
-        .collect()
-    ]
-    dfk = F.regexp_extract(F.col("text"), r"(?m)^DFK (.*)$", 1)
-    return pages.filter((F.crc32(F.col("url")) % 3 == 0) | dfk.isin(*killed))
+    return ts.pages_subset(spark, pages, fixture_dir)
 
 
 @pytest.fixture(scope="module")
 def authorities(spark, fixture_dir):
-    names = ("auth_orgs", "auth_concepts", "bad_ids", "auth_crossref", "auth_tests")
-    loaded = {}
-    for n in names:
-        p = os.path.join(fixture_dir, f"{n}.parquet")
-        if os.path.exists(p):
-            loaded[n] = spark.read.parquet(p)
-    return {
-        k: v
-        for k, v in (
-            ("auth_orgs", loaded.get("auth_orgs")),
-            ("auth_concepts", loaded.get("auth_concepts")),
-            ("bad_ids", loaded.get("bad_ids")),
-            ("crossref", loaded.get("auth_crossref")),
-            ("tests", loaded.get("auth_tests")),
-        )
-        if v is not None
-    }
+    return ts.load_authorities(spark, fixture_dir)
 
 
-def test_arrow_matches_columns_plain(spark, pages, column_plain):
-    a = _tset(build_triples(pages, emit_mode="arrow"))
-    assert a == column_plain, _diff_msg(a, column_plain)
+def _check(name, df, pinned):
+    got = ts.digest(ts.tset(df))
+    assert got == pinned[name], ts.mismatch(name, got, pinned[name])
 
 
-def test_arrow_matches_columns_records_input(spark, pages, column_plain):
-    """records-shaped input (post-extract) through the same Arrow stage.
+def test_plain_matches_snapshot(spark, pages, pinned):
+    _check("plain", build_triples(pages), pinned)
 
-    The column-side expectation is the shared `column_plain` set:
-    build_triples(columns) IS finalize(emit_triples(normalize(extract))),
-    i.e. the very plan this test used to rebuild inline (clean_genres +
-    dedup included via finalize)."""
+
+def test_records_input_matches_snapshot(spark, pages, pinned):
+    """records-shaped input (post-extract) through the same Arrow stage
+    gives the pages route's set."""
     from psyndex2linkeddata_spark.emit.arrow import emit_triples_arrow
     from psyndex2linkeddata_spark.extract.parser import extract_records
 
-    records = extract_records(pages)
-    a = _tset(emit_triples_arrow(records).dropDuplicates())
-    assert a == column_plain, _diff_msg(a, column_plain)
-
-
-def _job_authorities(authorities):
-    """The authority set jobs/convert.py loads (no resolution maps)."""
-    from psyndex2linkeddata_spark.jobs.convert import AUTHORITY_TABLES
-
-    return {k: authorities[k] for k in AUTHORITY_TABLES}
+    _check("plain", emit_triples_arrow(extract_records(pages)).dropDuplicates(), pinned)
 
 
 @pytest.mark.parametrize("scenario", ["maps", "job"])
-def test_arrow_matches_columns_with_authorities(
-    spark, pages_subset, authorities, scenario
+def test_authorities_match_snapshot(
+    spark, pages, pages_subset, authorities, pinned, scenario
 ):
-    """Kill-list applied in-stage on both Arrow routes: `maps` adds the
-    resolution maps the fixture provides (records input), `job` is the
-    convert job's authority set (pages input)."""
+    """Kill-list applied in-stage on both routes: `maps` adds the
+    resolution maps (records input), `job` is the convert job's authority
+    set (pages input)."""
     from psyndex2linkeddata_spark.extract.parser import extract_records
 
-    auth = authorities if scenario == "maps" else _job_authorities(authorities)
     killed = extract_records(pages_subset).join(
-        auth["bad_ids"].select(F.col("dfk").alias("DFK")), "DFK"
+        authorities["bad_ids"].select(F.col("dfk").alias("DFK")), "DFK"
     )
     assert killed.count() > 0
-    a = _tset(build_triples(pages_subset, auth, emit_mode="arrow"))
-    c = _tset(build_triples(pages_subset, auth, emit_mode="columns"))
-    assert a == c, _diff_msg(a, c)
+    _check(scenario, ts.scenario_triples(scenario, pages, pages_subset, authorities), pinned)
 
 
 def test_arrow_linking_parses_pages_once(
     spark, pages_subset, authorities, fixture_dir, monkeypatch
 ):
-    """Plan shape of the Arrow linking path: with the job's authority set
+    """Plan shape of the linking path: with the job's authority set
     neither the Column parser nor the anti-join kill-list enters the plan
     (the stage parses pages and applies the kill-list itself); a
     resolution map still needs the Column parser's mention columns."""
@@ -137,12 +82,12 @@ def test_arrow_linking_parses_pages_once(
     from psyndex2linkeddata_spark.plans import pipeline
 
     def forbidden(*args, **kwargs):
-        raise AssertionError("Column parser or anti-join on the Arrow pages route")
+        raise AssertionError("Column parser or anti-join on the pages route")
 
     monkeypatch.setattr(parser, "filter_bad_ids", forbidden)
     monkeypatch.setattr(pipeline, "extract_records", forbidden)
-    job = _job_authorities(authorities)
-    assert build_triples(pages_subset, job, emit_mode="arrow").count() > 0
+    job = ts.job_authorities(authorities)
+    assert build_triples(pages_subset, job).count() > 0
 
     calls = []
 
@@ -158,22 +103,20 @@ def test_arrow_linking_parses_pages_once(
     kern = spark.read.parquet(os.path.join(fixture_dir, "auth_kerndaten.parquet"))
     for key, table in (("crossref", crossref), ("kerndaten", kern)):
         calls.clear()
-        build_triples(
-            pages_subset, {"bad_ids": job["bad_ids"], key: table}, emit_mode="arrow"
-        )
+        build_triples(pages_subset, {"bad_ids": job["bad_ids"], key: table})
         assert len(calls) == 1, key
 
 
 def test_arrow_linking_runs_no_enrich_joins(
-    spark, pages, pages_subset, authorities, monkeypatch
+    spark, pages_subset, authorities, monkeypatch
 ):
-    """The Arrow path links inside the emit stage: with enrich_triples and
+    """build_triples links inside the emit stage: with enrich_triples and
     its six joins made to raise, the job's authority set still builds,
-    runs and links; the Column path still calls enrich_triples once."""
+    runs and links."""
     from psyndex2linkeddata_spark.plans import enrich
 
     def forbidden(*args, **kwargs):
-        raise AssertionError("plans.enrich join on the Arrow path")
+        raise AssertionError("plans.enrich join in build_triples")
 
     for fn in (
         "enrich_triples",
@@ -185,37 +128,31 @@ def test_arrow_linking_runs_no_enrich_joins(
         "country_fill",
     ):
         monkeypatch.setattr(enrich, fn, forbidden)
-    job = _job_authorities(authorities)
-    linked = build_triples(pages_subset, job, emit_mode="arrow")
+    linked = build_triples(pages_subset, ts.job_authorities(authorities))
     assert linked.where(F.col("subj").endswith("_rorid")).count() > 0
 
-    calls = []
 
-    def spy(triples, auth):
-        calls.append(auth)
-        return triples
-
-    monkeypatch.setattr(enrich, "enrich_triples", spy)
-    build_triples(pages.limit(3), job, emit_mode="columns")
-    assert len(calls) == 1
-
-
-def test_crlf_pages_match_lf_pages_both_paths(spark, pages_subset):
-    """CRLF payloads (the Common-Crawl-reality line ending) must emit the
-    SAME triples as their LF twins on BOTH emit paths: values ending in
+@pytest.mark.parametrize("route", ["pages", "records"])
+def test_crlf_pages_match_snapshots(spark, pages_subset, pinned, route):
+    """CRLF payloads (the Common-Crawl-reality line ending) and CR-only
+    ones must emit the SAME triples as their LF twins: values ending in
     \\r would sit exactly where Spark's trim (0x20 only) and the
-    reference's str.strip() disagree, so the parsers normalize \\r\\n
-    before splitting. Without that normalization the column path leaks
-    \\r into every scalar value (F.trim keeps it) and the two paths
-    diverge from each other AND from the reference."""
-    lf_arrow = _tset(build_triples(pages_subset, emit_mode="arrow"))
-    for ending in ("\r\n", "\r"):  # CRLF and CR-only (old-Mac) conventions
+    reference's str.strip() disagree, so both parsers normalize line
+    endings before splitting. The pages route covers the kernel's parser
+    (parse_page_text); the records route covers extract_records, which
+    the maps route feeds to the resolution maps and the emit stage."""
+    from psyndex2linkeddata_spark.emit.arrow import emit_triples_arrow
+    from psyndex2linkeddata_spark.extract.parser import extract_records
+
+    for ending in ("\r\n", "\r"):
         alt = pages_subset.withColumn(
             "text", F.replace(F.col("text"), F.lit("\n"), F.lit(ending))
         )
-        alt_arrow = _tset(build_triples(alt, emit_mode="arrow"))
-        assert alt_arrow == lf_arrow, ending + ": " + _diff_msg(alt_arrow, lf_arrow)
-        alt_columns = _tset(build_triples(alt, emit_mode="columns"))
-        assert alt_columns == lf_arrow, (
-            ending + ": " + _diff_msg(alt_columns, lf_arrow)
+        if route == "pages":
+            df = build_triples(alt)
+        else:
+            df = emit_triples_arrow(extract_records(alt)).dropDuplicates()
+        got = ts.digest(ts.tset(df))
+        assert got == pinned["subset"], repr(ending) + " " + ts.mismatch(
+            "subset", got, pinned["subset"]
         )

@@ -284,29 +284,17 @@ def test_translated_title(spark):
     assert got[2].t.title == "No subfield at all" and got[2].t.lang_name is None
 
 
-def test_annif_stub_fixed_codes(spark):
+def test_annif_stub_fixed_codes():
     """J8 deterministic Annif stand-in (reference local_api_lookups.py:
     61-95 + publication_types.py:133-198: title+abstract → one method
-    code): content-dependent, pinned expected codes for fixed inputs,
-    identical across the Column expression, the Arrow twin, and the
-    oracle's mirror."""
+    code): content-dependent, pinned expected codes for fixed inputs
+    through the emit kernel (the golden oracle mirrors the stand-in)."""
     from psyndex2linkeddata_spark.emit import arrow as A
-    from psyndex2linkeddata_spark.emit.genres import annif_stub_code, annif_text
 
     cases = [
         ("Mindfulness and stress", "A randomized controlled trial of mindfulness.", "10300"),
         ("Der Einfluss von Achtsamkeit", None, "12100"),
     ]
-    df = spark.createDataFrame(
-        [(t, a) for t, a, _ in cases], "title string, abstract string"
-    )
-    got = [
-        r[0]
-        for r in df.select(
-            annif_stub_code(annif_text(F.col("title"), F.col("abstract")))
-        ).collect()
-    ]
-    assert got == [c for _, _, c in cases]
     for t, a, c in cases:
         assert A.annif_stub_code(A.annif_text(t, a)) == c
 
@@ -478,11 +466,12 @@ def test_casefold_compat_matches_python_casefold(spark):
 
 def test_geonames_and_thesis_gate_use_casefold(spark):
     """'Rußland' resolves through the geonames map (keys are Python-
-    casefolded) and an archaic 'Dißertation' BN gates ThesisDoctoral —
-    both mirror the reference's casefold comparisons."""
+    casefolded) and an archaic 'Dißertation' BN gates ThesisDoctoral in
+    the emit kernel — both mirror the reference's casefold comparisons."""
+    from psyndex2linkeddata_spark import namespaces as NS
     from psyndex2linkeddata_spark.data.tables import geonames_countries
-    from psyndex2linkeddata_spark.emit.contributions import geonames_name
-    from psyndex2linkeddata_spark.emit.genres import work_genres
+    from psyndex2linkeddata_spark.emit.arrow import Sink, emit_genres
+    from psyndex2linkeddata_spark.plans.enrich import geonames_name
 
     has_russland = any(
         n.casefold() == "russland" for n, _, _ in geonames_countries
@@ -491,19 +480,12 @@ def test_geonames_and_thesis_gate_use_casefold(spark):
         df = spark.createDataFrame([("Rußland",)], "c string")
         got = df.select(geonames_name(F.col("c")).alias("n")).collect()
         assert got[0]["n"] is not None
-    df = spark.createDataFrame(
-        [
-            Row(
-                work="w:1",
-                BE="",
-                DT="01",
-                DT2="",
-                BN="Als Dißertation angenommen",
-            )
-        ]
-    )
-    genres = df.select(work_genres().alias("g")).collect()[0]["g"]
-    assert "ThesisDoctoral" in str(genres)
+    g = Sink()
+    rec = {"BE": "", "DT": "01", "DT2": "", "BN": "Als Dißertation angenommen"}
+    emit_genres(g, rec, "w:1", "b:1", annif=False)
+    assert ("w:1", NS.BF + "genreForm", NS.GENRES + "ThesisDoctoral") in {
+        (s, p, o) for s, p, o, *_ in g.rows_iter()
+    }
 
 
 def test_twin_primitives_fuzz_parity(spark):
@@ -517,7 +499,7 @@ def test_twin_primitives_fuzz_parity(spark):
     control chars are the one documented divergence between Spark's trim
     (0x20 only) and the kernel's <=0x20 strip, normalized out of real
     input at the page parser (see the _TRIM note in emit/arrow.py and
-    test_crlf_pages_match_lf_pages_both_paths)."""
+    test_crlf_pages_match_snapshots)."""
     import random
 
     from psyndex2linkeddata_spark.emit import arrow as ak

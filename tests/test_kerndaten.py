@@ -11,7 +11,6 @@ via an alternate.
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from psyndex2linkeddata_spark.functions.fuzzy_names import match_ids_to_positions
@@ -58,8 +57,7 @@ def test_matcher_alternates_tier():
     )
 
 
-@pytest.mark.parametrize("emit_mode", ["arrow", "columns"])
-def test_kerndaten_tier_end_to_end(spark, emit_mode):
+def test_kerndaten_tier_end_to_end(spark):
     from psyndex2linkeddata_spark.plans.pipeline import build_triples
     from psyndex2linkeddata_spark.schema import pages_schema
 
@@ -83,7 +81,7 @@ def test_kerndaten_tier_end_to_end(spark, emit_mode):
         [("p54321", ["Schmidt, Anna", "Degen, A."])],
         "paup_id string, alternate_names array<string>",
     )
-    triples = build_triples(pages, {"kerndaten": kern}, emit_mode=emit_mode)
+    triples = build_triples(pages, {"kerndaten": kern})
     rows = {(r.subj, r.pred, r.obj) for r in triples.collect()}
     agent = (
         "https://w3id.org/zpid/resources/works/0600001_work"

@@ -673,6 +673,27 @@ def test_decontaminate(spark):
     assert got == {1: True, 2: False, 3: False}
 
 
+@pytest.mark.parametrize("broadcast_bench", [True, False])
+def test_decontaminate_keeps_row_count_with_duplicate_ids(spark, broadcast_bench):
+    """A docs table that repeats a contaminated doc_id: contaminated_ids
+    stays distinct on both paths, so the left join neither drops nor
+    fans out rows (2 input rows of id 1 → 2 output rows, not 4)."""
+    from psyndex2linkeddata_spark.operators.decontaminate import decontaminate
+
+    bench = spark.createDataFrame([("what is the capital of france",)], ["text"])
+    text = "quiz leak: what is the capital of france answer paris"
+    docs = spark.createDataFrame(
+        [(1, text), (1, text), (2, "unrelated text about spark shuffle")],
+        "doc_id long, text string",
+    )
+    out = decontaminate(docs, bench, n=5, broadcast_bench=broadcast_bench).collect()
+    assert sorted((r.doc_id, r.contaminated) for r in out) == [
+        (1, True),
+        (1, True),
+        (2, False),
+    ]
+
+
 def test_prepare_training_corpus(spark):
     """End-to-end corpus prep plan: mix → scrub → quality gates →
     decontaminate → near-dup dedup → chunk."""

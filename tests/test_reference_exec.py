@@ -17,10 +17,8 @@ Exclusions (documented in tools/compare_reference.py): blank-node rows
 corpus-level admin subject.
 
 The reference dump is cached at /tmp/ref_triples.tsv (~2 min to produce
-cold). The arrow emit path is gated here; column-path equivalence is
-enforced by the arrow↔column parity gate (tests/test_arrow_parity.py),
-and `python tools/compare_reference.py --emit-mode column` checks it
-directly against the reference (P=R=1.0 as of round 4).
+cold). `python tools/compare_reference.py` runs the same comparison from
+the command line and prints the per-predicate differences.
 """
 
 from __future__ import annotations
@@ -68,7 +66,7 @@ def test_reference_exec_exact_arrow(spark, ref_triples):
 
     pages = star_xml_pages(spark, XML)
     bad = spark.read.option("header", True).option("sep", "\t").csv(BAD).select("dfk")
-    triples = build_triples(pages, {"bad_ids": bad}, emit_mode="arrow", annif=False)
+    triples = build_triples(pages, {"bad_ids": bad}, annif=False)
     ours = {
         (r.subj, r.pred, r.obj, r.obj_is_iri, r.lang, r.dtype)
         for r in triples.collect()

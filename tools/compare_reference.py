@@ -16,7 +16,7 @@ Exclusions (documented, same both sides where applicable):
 
 Usage:
     PYTHONPATH=/root/repo python tools/compare_reference.py \
-        [--ref-tsv /tmp/ref_triples.tsv] [--per-pred N] [--emit-mode arrow]
+        [--ref-tsv /tmp/ref_triples.tsv] [--per-pred N]
 
 With no --ref-tsv, the reference converter is executed first (~2 min)
 and its dump cached at /tmp/ref_triples.tsv for reuse.
@@ -70,7 +70,7 @@ def reference_triples(tsv_path: str) -> set[tuple]:
     return out
 
 
-def engine_triples(emit_mode: str) -> set[tuple]:
+def engine_triples() -> set[tuple]:
     from pyspark.sql import functions as F
 
     from psyndex2linkeddata_spark.plans.pipeline import build_triples
@@ -82,14 +82,14 @@ def engine_triples(emit_mode: str) -> set[tuple]:
     bad = (
         spark.read.option("header", True).option("sep", "\t").csv(BAD).select("dfk")
     )
-    triples = build_triples(pages, {"bad_ids": bad}, emit_mode=emit_mode, annif=False)
+    triples = build_triples(pages, {"bad_ids": bad}, annif=False)
     rows = triples.collect()
     out = {
         (r.subj, r.pred, r.obj, r.obj_is_iri, r.lang, r.dtype)
         for r in rows
         if r.subj != ADMIN_SUBJ
     }
-    print(f"engine ({emit_mode}): {len(out)} triples", file=sys.stderr)
+    print(f"engine: {len(out)} triples", file=sys.stderr)
     return out
 
 
@@ -117,9 +117,8 @@ def main():
 
     tsv = opt("--ref-tsv", DEFAULT_TSV)
     per_pred = int(opt("--per-pred", "2"))
-    emit_mode = opt("--emit-mode", "arrow")
     ref = reference_triples(tsv)
-    ours = engine_triples(emit_mode)
+    ours = engine_triples()
     compare(ours, ref, per_pred)
 
 

@@ -1,7 +1,8 @@
 """Stage-by-stage wall-time profile of the pages→triples pipeline.
 
-Usage: PYTHONPATH=/root/repo python tools/profile_pipeline.py [n_pages] [cpus]
-Prints wall seconds per incremental stage so regressions can be located.
+Usage: python tools/profile_pipeline.py [n_pages] [cpus]
+Prints wall seconds per incremental stage (the Arrow emit stage, then
+emit + finalize) so regressions can be located.
 """
 from __future__ import annotations
 
@@ -22,13 +23,8 @@ def noop(df):
 
 def main():
     from psyndex2linkeddata_spark.datagen.pages import write_pages_parquet
-    from psyndex2linkeddata_spark.extract.parser import extract_records
-    from psyndex2linkeddata_spark.emit.normalize import normalize
-    from psyndex2linkeddata_spark.plans.pipeline import (
-        build_triples,
-        emit_triples,
-        finalize,
-    )
+    from psyndex2linkeddata_spark.emit.arrow import emit_triples_arrow
+    from psyndex2linkeddata_spark.plans.pipeline import build_triples, finalize
     from psyndex2linkeddata_spark.session import get_spark
 
     spark = get_spark(
@@ -52,32 +48,20 @@ def main():
     print(f"warmup(32): {time.time()-t0:.1f}s", flush=True)
 
     t0 = time.time()
-    recs = extract_records(pages)
-    noop(recs)
-    print(f"extract: {time.time()-t0:.1f}s", flush=True)
+    noop(emit_triples_arrow(pages))
+    print(f"emit: {time.time()-t0:.1f}s", flush=True)
 
     t0 = time.time()
-    norm = normalize(recs)
-    noop(norm)
-    print(f"extract+normalize: {time.time()-t0:.1f}s", flush=True)
-
-    t0 = time.time()
-    raw = emit_triples(norm)
-    noop(raw)
-    print(f"extract+normalize+emit: {time.time()-t0:.1f}s", flush=True)
-
-    t0 = time.time()
-    tr = finalize(emit_triples(normalize(extract_records(pages))))
+    tr = finalize(emit_triples_arrow(pages), barrier=False, genre_cleanup=False)
     noop(tr)
     n = tr.count()
-    print(f"full pipeline: {time.time()-t0:.1f}s  ({n} triples)", flush=True)
-    spark.catalog.clearCache()
+    print(f"emit+finalize: {time.time()-t0:.1f}s  ({n} triples)", flush=True)
 
-    # repeat full to see warm steady-state
+    # the whole pipeline, warm
     t0 = time.time()
     tr = build_triples(pages)
     noop(tr)
-    print(f"full pipeline rep2: {time.time()-t0:.1f}s", flush=True)
+    print(f"build_triples: {time.time()-t0:.1f}s", flush=True)
     spark.catalog.clearCache()
 
 
