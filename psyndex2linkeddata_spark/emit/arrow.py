@@ -1388,8 +1388,9 @@ def emit_genres(g, rec, W, B, annif=True):
     # genreForm EDGES (the `a bf:GenreForm` node triples stay, exactly
     # like the post-emit anti-join). Valid because a work's genre edges
     # all come from its own record; cross-record same-DFK merging (not a
-    # shape the reference produces) still needs the DataFrame-level
-    # clean_genres — pass authorities={} to build_triples then.
+    # shape the reference produces) needs the per-subject rule of
+    # operators/upsert.dedup_clean_genres, which build_triples runs
+    # whenever authorities are given — pass authorities={} for it.
     thesis_present = any(x in _THESIS_GENRE_NAMES for x in genres)
     for name in genres:
         node = NS.GENRES + name

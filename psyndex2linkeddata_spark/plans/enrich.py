@@ -5,10 +5,11 @@ The reference enriches per record with live HTTP (ROR, Crossref,
 Skosmos — modules/local_api_lookups.py, redis-cached). build_triples
 does the same per record inside its emit stage (emit/arrow.link_record,
 against dicts folded by authority_links). This module is the join form
-of those rules, and it stays in the package for three users:
+of those rules, and it stays in the package for two users:
 tests/test_arrow_linking.py and tests/test_fundref_retry.py check
-link_record against it; build_triples runs genre_ancestor_closure for the
-A2 cleanup; and perfbench's linked_pages probe stages the joins. Here the
+link_record against it (and tests/test_genre_stage.py checks
+operators/upsert.dedup_clean_genres against genre_ancestor_closure), and
+perfbench's linked_pages probe stages the joins. Here the
 authorities are input DataFrames and each lookup is ONE broadcast join
 over the distinct mention keys (Spark-native memoization):
 
@@ -323,9 +324,9 @@ def enrich_triples(triples: DataFrame, authorities: dict[str, DataFrame]) -> Dat
     deduplicated triple set."""
     from psyndex2linkeddata_spark.operators.upsert import clean_genres
 
-    # upstream finalize() leaves `triples` behind a checkpoint barrier, so
-    # the many references below re-read materialized partitions, not the
-    # emit plan
+    # `triples` is referenced by every join below: give it behind a
+    # barrier (finalize(barrier=True) persists it), or each reference
+    # re-executes its plan
     adds = []
     concepts = authorities.get("auth_concepts")
     orgs = authorities.get("auth_orgs")

@@ -11,9 +11,14 @@ Scale notes:
   J1-J6 linking in Python, in one Arrow-batched mapInArrow stage that
   reads the pages directly: each page is parsed once, and each record's
   triples are linked against driver-built authority dicts before the one
-  dedup. No shuffle until the final dropDuplicates: at 10^12 pages the
-  only shuffle in the core path is the dedup exchange, partitioned by
-  all triple columns; AQE coalesces.
+  dedup. No shuffle until the final dedup: at 10^12 pages the only
+  shuffle in the core path is the dedup exchange; AQE coalesces.
+  Without authorities it is partitioned by all triple columns. With
+  authorities it is partitioned by subj, and the A2 genre cleanup runs
+  as a window over that same partitioning
+  (operators/upsert.dedup_clean_genres), with no cache and no second
+  exchange; hot subjects (genre and vocabulary nodes) land in one
+  partition each.
 - the Column parser (extract_records) and normalize enter the plan only
   when a kerndaten, crossref or tests resolution map needs their
   mention columns (the maps route).
@@ -44,12 +49,15 @@ def finalize(
     convert_starxml_to_bf.py:1455-1458). The one global shuffle of the
     pipeline; AQE-coalesced.
 
-    Without authorities build_triples passes `genre_cleanup=False` and
-    `barrier=False`: emit/arrow.py applies the A2 rule in-record, and
-    nothing downstream references the triple set more than once, so the
-    pipeline is a single narrow stage + one dedup exchange, no cache.
-    With authorities (even `{}`) it keeps both, so the DataFrame-level
-    A2 rule covers pages that share a DFK.
+    build_triples calls it only without authorities, with
+    `genre_cleanup=False` and `barrier=False`: emit/arrow.py applies the
+    A2 rule in-record, and nothing downstream references the triple set
+    more than once, so the pipeline is a single narrow stage + one dedup
+    exchange, no cache. With authorities (even `{}`) build_triples uses
+    operators/upsert.dedup_clean_genres instead, which dedups and applies
+    both A2 rules after one exchange on subj, so the rules also cover
+    pages that share a DFK. The barrier and the DataFrame-level rule here
+    serve only the benchmark's staged probe and the tests.
     """
     deduped = triples.dropDuplicates(
         ["subj", "pred", "obj", "obj_is_iri", "lang", "dtype"]
@@ -108,8 +116,9 @@ def kerndaten_resolution_map(records: DataFrame, kern: DataFrame) -> DataFrame:
 
 
 # the authority columns build_triples folds into authority_links' dicts
+# (and, for the genres vocab, into the A2 ancestor map)
 _ORG_COLS = ("name", "aliases", "org_id", "fundref_doi", "country_name")
-_CONCEPT_COLS = ("vocab", "uri", "label_en", "label_de")
+_CONCEPT_COLS = ("vocab", "uri", "label_en", "label_de", "ancestors")
 
 
 def build_triples(
@@ -138,10 +147,13 @@ def build_triples(
       are collected once per call and folded into plain dicts
       (emit/arrow.authority_links), and the kernel applies them to each
       record's triples (link_record) — the per-record lookups of the
-      reference, with no post-emit join, union or second dedup: finalize
-      deduplicates the link triples with the rest. After finalize, the
-      A2 ancestor cleanup runs over the genre closure (clean_genres), so
-      the cross-record case stays covered.
+      reference, with no post-emit join, union or second dedup: the one
+      dedup covers the link triples with the rest.
+    - A2 genre cleanup: dedup_clean_genres dedups and applies the thesis
+      rule and, with auth_concepts, the ancestor rule per subject after
+      one exchange on subj, so the cross-record case stays covered. The
+      ancestor map comes from the same auth_concepts collect as the
+      linking dicts.
 
     The kill-list reaches the stage as a frozenset of DFKs, and the
     authorities as dicts, each collected in one small job per call; a
@@ -204,36 +216,33 @@ def build_triples(
             )
         if "tests" in auth:
             src = src.join(cr.testg_resolution_map(norm, auth["tests"]), "url", "left")
-    # With authorities: barrier, because the A2 passes below read the set
-    # many times; behind the persist the DataFrame-level A2 rule costs two
-    # cached reads, and it covers the cross-record case (two pages sharing
-    # a DFK, one thesis + one Scholarly*) that the in-record rule can't see.
-    # Without: the barrier-free fast path; genre_cleanup would re-execute
-    # the emit 3× (no exchange reuse without a barrier — measured). The
-    # in-record A2 rule fully covers it as long as the input holds one
-    # page per DFK, which is the pages-table contract (url-keyed records
-    # export); callers with weaker provenance can pass authorities={} to
-    # opt into the barrier + DataFrame-level rule.
+    # Without authorities: one narrow stage + the dedup exchange, no
+    # cache; the in-record A2 rule 1 in the kernel covers the genre
+    # cleanup as long as the input holds one page per DFK, which is the
+    # pages-table contract (url-keyed records export). With authorities
+    # (even {}): dedup_clean_genres, which applies A2 per subject after
+    # one exchange on subj, so two pages sharing a DFK (one thesis + one
+    # Scholarly*) are cleaned too; callers with weaker provenance pass
+    # authorities={} for that.
     bad = frozenset()
     if "bad_ids" in auth:
         rows = auth["bad_ids"].select("dfk").distinct().collect()
         bad = frozenset(r.dfk for r in rows)
     orgs, concepts = auth.get("auth_orgs"), auth.get("auth_concepts")
+    concept_rows = () if concepts is None else concepts.select(*_CONCEPT_COLS).collect()
     links = None
     if orgs is not None or concepts is not None:
         links = authority_links(
-            () if orgs is None else orgs.select(*_ORG_COLS).collect(),
-            () if concepts is None else concepts.select(*_CONCEPT_COLS).collect(),
+            () if orgs is None else orgs.select(*_ORG_COLS).collect(), concept_rows
         )
-    linked = authorities is not None
-    out = finalize(
-        emit_triples_arrow(src, bad_dfks=bad, annif=annif, links=links),
-        barrier=linked,
-        genre_cleanup=linked,
+    raw = emit_triples_arrow(src, bad_dfks=bad, annif=annif, links=links)
+    if authorities is None:
+        return finalize(raw, barrier=False, genre_cleanup=False)
+    from psyndex2linkeddata_spark.operators.upsert import (
+        dedup_clean_genres,
+        genre_ancestor_map,
     )
-    if concepts is not None:
-        from psyndex2linkeddata_spark.operators.upsert import clean_genres
-        from psyndex2linkeddata_spark.plans.enrich import genre_ancestor_closure
 
-        out = clean_genres(out, genre_ancestor_closure(concepts))
-    return out
+    return dedup_clean_genres(
+        raw, None if concepts is None else genre_ancestor_map(concept_rows)
+    )

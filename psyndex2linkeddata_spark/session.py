@@ -9,6 +9,7 @@ defaults on a real multi-executor cluster at 100 TB:
 - Arrow on for the few pandas-UDF stages.
 - shuffle.partitions sized to cores locally; on a cluster this is overridden
   per-job (or left to AQE coalesce from a high initial number).
+- driver heap: SPARK_DRIVER_MEMORY, else half of host RAM.
 """
 
 from __future__ import annotations
@@ -16,6 +17,15 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+def default_driver_memory(total_bytes: int | None = None) -> str:
+    """Half of host RAM (MemTotal), at least 1g. A fixed 16g heap can
+    outgrow physical memory on a small host, and the kernel then
+    OOM-kills the driver JVM."""
+    if total_bytes is None:
+        total_bytes = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{max(1, total_bytes // (2 << 30))}g"
 
 
 def get_spark(
@@ -82,7 +92,10 @@ def get_spark(
         .config("spark.sql.files.minPartitionNum", str(shuffle_partitions))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

@@ -11,6 +11,18 @@ from psyndex2linkeddata_spark.session import get_spark
 N_FIXTURE_PAGES = 300
 
 
+def spark_jobs(spark, group, fn) -> int:
+    """The number of Spark jobs `fn()` runs, counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(app_name="tests", master="local[4]", shuffle_partitions=4)

@@ -16,6 +16,7 @@ from psyndex2linkeddata_spark.sources.checkpoint import (
     run_checkpointed,
     run_manifest,
 )
+from tests.conftest import spark_jobs
 
 N_PAGES = 80
 N_BUCKETS = 4
@@ -183,17 +184,6 @@ def test_lineage_sums_match_pages_and_persisted_rows(
     assert rows[0].n_triples > 0 and rows[3].n_triples > 0
 
 
-def _spark_jobs(spark, group, fn) -> int:
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_commit_batch_job_count_is_independent_of_batch_width(
     spark, small_pages, tmp_path_factory
 ):
@@ -209,8 +199,8 @@ def test_commit_batch_job_count_is_independent_of_batch_width(
             n_buckets=n_buckets, buckets_per_commit=n_buckets,
         )
 
-    one = _spark_jobs(spark, "ckpt_jobs_1", run("one", 1))
-    four = _spark_jobs(spark, "ckpt_jobs_4", run("four", 4))
+    one = spark_jobs(spark, "ckpt_jobs_1", run("one", 1))
+    four = spark_jobs(spark, "ckpt_jobs_4", run("four", 4))
     assert 0 < four <= one
     assert four <= 4
 
