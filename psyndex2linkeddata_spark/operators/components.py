@@ -6,20 +6,86 @@ the same entity (e.g. one author across thousands of pages). Entity-link
 candidate pairs (operators/linking.py) form an edge list; each connected
 component collapses to one canonical id (its minimum member).
 
-Algorithm: hash-to-min label propagation (GraphFrames-style driver loop):
-    label(v) ← min(label(v), min over neighbors label(u))
-repeated until fixpoint. Each round is one shuffle (groupBy vertex).
-`localCheckpoint` every `checkpoint_every` rounds truncates the lineage so
-plans don't grow with iterations (Catalyst cannot express iteration —
-this is deliberately a driver-side loop). Convergence in O(diameter)
-rounds; for the hub-and-spoke components entity resolution produces,
-diameter is small (≤ ~6). Skewed hub vertices are fine: the min-agg is
-a partial (map-side) aggregation.
+Algorithm (connected_components):
+  1. contract: per input partition (no shuffle) a mapInArrow kernel
+     closes the partition's edges exactly (`_min_label_closure`) and
+     emits one STAR edge (node → local component min) per distinct node;
+  2. count the star: one job, which also materializes its checkpoint;
+  3. close in one task: within `_ONE_TASK_MAX_ROWS` star rows the same
+     kernel runs once more over the star in ONE partition — on a single
+     partition local closure is global closure;
+  4. over that budget, the distributed hash-to-min driver loop
+     (`_connected_components_loop`) closes the star instead, one shuffle
+     round per step, and raises if `max_iter` rounds do not converge.
+
+`_min_label_closure` is exact at its fixpoint: it runs hook-at-parents
+plus full pointer jumping until no label moves, with no pass cap (labels
+only decrease, so it terminates; a random-order chain closes in
+O(log n) rounds). semantic_clusters_arrow (operators/similarity.py)
+shares it.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+
+# star rows one Python task closes; above it the distributed loop runs.
+# The kernel holds ~12 int64 words per row plus the Arrow node dictionary.
+_ONE_TASK_MAX_ROWS = 1_000_000
+
+
+def _min_label_closure(ru, rv, n: int):
+    """Exact connected components of nodes 0..n-1 under edges (ru, rv):
+    returns int64 labels with lab[i] = the smallest node in i's component.
+
+    Each round hooks every edge's endpoints AND their current parents to
+    the edge's smaller label, then pointer-jumps until lab[lab] == lab.
+    A round that moves no label proves the fixpoint: every edge then has
+    equal labels at both ends and every label is a root, so each
+    component is one star rooted at its minimum."""
+    import numpy as np
+
+    lab = np.arange(n, dtype=np.int64)
+    while True:
+        lu, lv = lab[ru], lab[rv]
+        m = np.minimum(lu, lv)
+        new = lab.copy()
+        for idx in (ru, rv, lu, lv):
+            np.minimum.at(new, idx, m)
+        while True:
+            jumped = new[new]
+            if np.array_equal(jumped, new):
+                break
+            new = jumped
+        if np.array_equal(new, lab):
+            return lab
+        lab = new
+
+
+def _contract(batches):
+    """mapInArrow kernel: (src, dst) edges → one (src=node, dst=min node
+    of its component) row per distinct node among the edges. Nodes are
+    ranked by VALUE (Arrow's unsigned-byte string order == the JVM's
+    UTF8String compare), so the label index is the minimum id."""
+    import numpy as np
+    import pyarrow as pa
+
+    chunks = [pa.Table.from_batches([b]) for b in batches]
+    if not chunks:
+        return
+    t = pa.concat_tables(chunks).combine_chunks()
+    if t.num_rows == 0:
+        return
+    both = pa.concat_arrays([t.column("src").chunk(0), t.column("dst").chunk(0)])
+    de = both.dictionary_encode()
+    n = len(de.dictionary)
+    codes = de.indices.to_numpy().astype(np.int64)
+    sort_idx = pa.compute.sort_indices(de.dictionary)
+    nodes = de.dictionary.take(sort_idx)
+    rank = np.empty(n, dtype=np.int64)
+    rank[sort_idx.to_numpy()] = np.arange(n)
+    lab = _min_label_closure(rank[codes[: t.num_rows]], rank[codes[t.num_rows :]], n)
+    yield pa.RecordBatch.from_arrays([nodes, nodes.take(pa.array(lab))], ["src", "dst"])
 
 
 def connected_components(
@@ -29,71 +95,37 @@ def connected_components(
     max_iter: int = 25,
 ) -> DataFrame:
     """edge list → (node, component) with component = min node id of the
-    component (ids compared as their natural type).
+    component (ids compared as their natural type), checkpointed: callers
+    may read it more than once.
 
-    r06 second wave: one partition-local contraction kernel runs BEFORE
-    the distributed loop. Per input partition (no shuffle — the edges
-    arrive however the producer left them) a mapInArrow kernel closes
-    the partition's edges with numpy hash-to-min + pointer jumping over
-    value-ranked local codes and emits one STAR edge (node → local
-    component min) per distinct node in the partition. The union of the
-    stars has exactly the original components (every original edge
-    (u, v) lies in some partition whose local closure connects u and v
-    through their shared local root, and every star edge is within one
-    original component), and the loop then runs on |distinct nodes per
+    The per-partition contraction keeps exactly the original components:
+    every original edge (u, v) lies in some partition whose local closure
+    links u and v through their shared local root, and every star edge
+    lies within one original component. It emits |distinct nodes per
     partition| ≤ partitions × |V| rows instead of 2|E| — for the dense
-    near-dup pair graphs this engine closes (cliques from LSH buckets /
-    IVF cells), |E| is quadratic in cluster size and the contraction
-    removes ~all of it (semantic_dedup's 7.9M-pair closure: 7.2s → the
-    loop sees ~40k star rows). Output is EXACTLY the same (node,
-    min-id) labeling: connected components are algorithm-independent,
-    and the value ranking inside the kernel uses Arrow's unsigned-byte
-    string order == the JVM's UTF8String compare. Pinned equal to the
-    pure-loop form (`_connected_components_loop`) by
+    near-dup pair graphs this engine closes (cliques from LSH buckets or
+    IVF cells) it removes ~all of |E|. Within `_ONE_TASK_MAX_ROWS` star
+    rows the closure then finishes in one task: 3 Spark jobs in all (the
+    star count, whose shuffle stage AQE runs as a job of its own, and
+    the output checkpoint). `max_iter` bounds only the over-budget
+    fallback loop, which raises RuntimeError when it does not converge.
+    Pinned equal to the pure loop on a random graph by
     tests/test_arrow_kernel_parity."""
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).where(
         F.col("src").isNotNull() & F.col("dst").isNotNull()
     )
     node_t = e.schema["src"].dataType.simpleString()
-
-    def contract(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        chunks = [pa.Table.from_batches([b]) for b in batches]
-        if not chunks:
-            return
-        t = pa.concat_tables(chunks).combine_chunks()
-        if t.num_rows == 0:
-            return
-        both = pa.concat_arrays(
-            [t.column("src").chunk(0), t.column("dst").chunk(0)]
-        )
-        de = both.dictionary_encode()
-        n = len(de.dictionary)
-        codes = de.indices.to_numpy().astype(np.int64)
-        # rank nodes by VALUE so the local root is the local min id
-        sort_idx = pa.compute.sort_indices(de.dictionary)
-        sorted_dict = de.dictionary.take(sort_idx)
-        rank = np.empty(n, dtype=np.int64)
-        rank[sort_idx.to_numpy()] = np.arange(n)
-        ru = rank[codes[: t.num_rows]]
-        rv = rank[codes[t.num_rows :]]
-        lab = np.arange(n, dtype=np.int64)
-        for _ in range(64):
-            m = np.minimum(lab[ru], lab[rv])
-            before = lab.copy()
-            np.minimum.at(lab, ru, m)
-            np.minimum.at(lab, rv, m)
-            lab = lab[lab]  # pointer jumping
-            if np.array_equal(lab, before):
-                break
-        nodes = sorted_dict
-        roots = sorted_dict.take(pa.array(lab))
-        yield pa.RecordBatch.from_arrays([nodes, roots], ["src", "dst"])
-
-    star = e.mapInArrow(contract, f"src {node_t}, dst {node_t}")
-    return _connected_components_loop(star, "src", "dst", max_iter)
+    star_t = f"src {node_t}, dst {node_t}"
+    # lazy checkpoint + count = one execution (see the loop below)
+    star = e.mapInArrow(_contract, star_t).localCheckpoint(eager=False)
+    if star.count() > _ONE_TASK_MAX_ROWS:
+        return _connected_components_loop(star, "src", "dst", max_iter)
+    return (
+        star.coalesce(1)
+        .mapInArrow(_contract, star_t)
+        .toDF("node", "component")
+        .localCheckpoint()
+    )
 
 
 def _connected_components_loop(
@@ -102,9 +134,11 @@ def _connected_components_loop(
     dst: str = "dst",
     max_iter: int = 25,
 ) -> DataFrame:
-    """The distributed hash-to-min loop (the full algorithm on its own —
-    kept as connected_components' cross-check and as its second phase
-    over the contracted star graph)."""
+    """The distributed hash-to-min loop: label(v) ← min(label(v), min
+    over neighbors label(u)), one groupBy shuffle per round, O(diameter)
+    rounds. connected_components' over-budget fallback and its
+    cross-check. Raises RuntimeError when round `max_iter` still moved a
+    label, instead of returning unconverged labels."""
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).where(
         F.col("src").isNotNull() & F.col("dst").isNotNull()
     )
@@ -116,7 +150,7 @@ def _connected_components_loop(
         .distinct()
         .withColumn("component", F.col("node"))
     )
-    for i in range(max_iter):
+    for _ in range(max_iter):
         neighbor_min = (
             und.join(labels, und["dst"] == labels["node"])
             .groupBy(und["src"].alias("node"))
@@ -146,86 +180,10 @@ def _connected_components_loop(
         changed = new_labels.where(F.col("_changed")).limit(1).count()
         labels = new_labels.drop("_changed")
         if changed == 0:
-            break
-    return labels
-
-
-def connected_components_star(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 50,
-) -> DataFrame:
-    """Alternating large-star/small-star contraction (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond", SoCC'14) — the
-    O(log n)-round alternative to hash-to-min for chain-heavy graphs
-    (hash-to-min is O(diameter): fine for the hub-and-spoke components
-    entity resolution yields, pathological on long chains).
-
-    large-star: per node u, attach every LARGER neighbor to
-    m = min(Γ(u) ∪ {u}); small-star: per node u, attach its smaller
-    neighbors (and u) to m. Each phase is one groupBy shuffle + one
-    join; at fixpoint the edge set is a star forest (node → component
-    min). Same output contract as connected_components.
-    """
-    e0 = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).where(
-        F.col("u").isNotNull() & F.col("v").isNotNull() & (F.col("u") != F.col("v"))
-    )
-    nodes = (
-        e0.select(F.col("u").alias("node"))
-        .union(e0.select(F.col("v").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
-    a = e0.distinct().localCheckpoint()
-
-    def _sym(e: DataFrame) -> DataFrame:
-        return e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-
-    def large_star(e: DataFrame) -> DataFrame:
-        s = _sym(e)
-        mn = s.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("mn"))
-        return (
-            s.join(mn, "u")
-            .where(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("mn").alias("v"))
-            .distinct()
-        )
-
-    def small_star(e: DataFrame) -> DataFrame:
-        # orient u ≥ v so every node groups with its smaller neighbors
-        s = (
-            e.select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        mn = s.groupBy("u").agg(F.min("v").alias("mn"))
-        return (
-            s.join(mn, "u")
-            .select(F.col("v").alias("u"), F.col("mn").alias("v"))
-            .union(mn.select("u", F.col("mn").alias("v")))
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-        )
-
-    prev_sig = None
-    for _ in range(max_iter):
-        a = small_star(large_star(a)).localCheckpoint()
-        sig = a.select(
-            F.count(F.lit(1)).alias("n"),
-            # bit_xor: order-independent and cannot overflow (ANSI mode)
-            F.bit_xor(F.xxhash64("u", "v")).alias("h"),
-        ).collect()[0]
-        sig = (sig.n, sig.h)
-        if sig == prev_sig:
-            break
-        prev_sig = sig
-    # at fixpoint `a` is (node → root); roots map to themselves
-    return (
-        nodes.join(a, nodes["node"] == a["u"], "left")
-        .select("node", F.coalesce(F.col("v"), F.col("node")).alias("component"))
-        .groupBy("node")
-        .agg(F.min("component").alias("component"))
+            return labels
+    raise RuntimeError(
+        f"connected components did not converge in max_iter={max_iter} "
+        "rounds; raise max_iter"
     )
 
 

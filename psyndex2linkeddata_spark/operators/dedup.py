@@ -742,7 +742,6 @@ def neardup_clusters(
     num_hashes: int = 16,
     bands: int = 4,
     n: int = 3,
-    use_star: bool = False,
 ) -> DataFrame:
     """Near-duplicate document clustering: MinHash-LSH candidate pairs →
     connected components → one canonical representative per cluster.
@@ -755,21 +754,15 @@ def neardup_clusters(
     `where is_canonical`.
 
     Scale shape: the pair list is the LSH bucket join (never all-pairs);
-    the closure runs hash-to-min label propagation over pairs only —
-    near-dup graphs are tiny relative to the corpus (pairs ≪ docs), so
-    the iterative part touches a sliver of the data and the final
-    assignment is one left join back to the corpus on the doc id.
-    `use_star=True` switches to the large-star/small-star contraction
-    (O(log n) rounds) for pathological chain-shaped clusters.
+    the closure (operators/components.connected_components) runs over
+    pairs only — near-dup graphs are tiny relative to the corpus
+    (pairs ≪ docs), so the closure touches a sliver of the data and the
+    final assignment is one left join back to the corpus on the doc id.
     """
-    from psyndex2linkeddata_spark.operators.components import (
-        connected_components,
-        connected_components_star,
-    )
+    from psyndex2linkeddata_spark.operators.components import connected_components
 
     pairs = minhash_lsh_pairs(df, id_col, text_col, num_hashes, bands, n)
-    cc = connected_components_star if use_star else connected_components
-    comp = cc(pairs, src="id_a", dst="id_b")
+    comp = connected_components(pairs, src="id_a", dst="id_b")
     cluster = F.coalesce(F.col("component"), F.col(id_col))
     return (
         df.select(id_col)
@@ -1015,7 +1008,6 @@ def incremental_neardup(
     bands: int = 4,
     n: int = 3,
     max_bucket_size: int | None = None,
-    use_star: bool = False,
 ) -> DataFrame:
     """Filter a NEW batch of documents against a persisted band-key index.
 
@@ -1042,10 +1034,7 @@ def incremental_neardup(
     `max_bucket_size` guard as minhash_lsh_pairs. Both shuffles key on
     uniform md5 band keys; the closure runs over batch-batch pairs only
     (pairs ≪ batch ≪ corpus)."""
-    from psyndex2linkeddata_spark.operators.components import (
-        connected_components,
-        connected_components_star,
-    )
+    from psyndex2linkeddata_spark.operators.components import connected_components
 
     index_id_col = index_id_col or id_col
     # the batch's band rows feed BOTH pair sides and the index probe —
@@ -1084,8 +1073,7 @@ def incremental_neardup(
         .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
         .distinct()
     )
-    cc = connected_components_star if use_star else connected_components
-    comp = cc(pairs, src="id_a", dst="id_b")
+    comp = connected_components(pairs, src="id_a", dst="id_b")
     clusters = (
         batch.select(id_col)
         .join(comp, F.col(id_col) == F.col("node"), "left")

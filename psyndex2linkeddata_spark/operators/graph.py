@@ -3,9 +3,10 @@
 A web-corpus pipeline ranks hosts/pages by link authority (crawl
 prioritization, quality priors for data selection à la CCNet/RefinedWeb
 domain weighting). Spark has no built-in graph engine; this is the same
-driver-loop shape as operators/components.py connected_components —
-Catalyst cannot express iteration, so each superstep is one declarative
-join+groupBy round with lazy localCheckpoint lineage truncation.
+driver-loop shape as operators/components._connected_components_loop
+(connected_components' over-budget fallback) — Catalyst cannot express
+iteration, so each superstep is one declarative join+groupBy round with
+lazy localCheckpoint lineage truncation.
 
 Determinism contract (what lets a DuckDB oracle replay it bit-exactly):
 ranks are SCALED BIGINTS (fixed point at 1/scale resolution, default

@@ -565,7 +565,6 @@ def semantic_dedup(
     centroids: DataFrame | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    use_star: bool = False,
     scorer: str = "arrow",
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
@@ -594,10 +593,7 @@ def semantic_dedup(
     re-decided with the native scorer's exact sequential arithmetic, so
     the pair set equals scorer='native' (the all-JVM expression path,
     kept as the cross-check) bit-for-bit."""
-    from psyndex2linkeddata_spark.operators.components import (
-        connected_components,
-        connected_components_star,
-    )
+    from psyndex2linkeddata_spark.operators.components import connected_components
 
     if scorer not in ("native", "arrow"):
         raise ValueError(
@@ -677,8 +673,7 @@ def semantic_dedup(
             )
             .select(F.col("_ida").alias("id_a"), F.col("_idb").alias("id_b"))
         )
-        cc = connected_components_star if use_star else connected_components
-        comp = cc(pairs, src="id_a", dst="id_b")
+        comp = connected_components(pairs, src="id_a", dst="id_b")
         cl = (
             withc.join(comp, F.col(id_col) == F.col("node"), "left")
             .select(
@@ -793,8 +788,9 @@ def semantic_clusters_arrow(
     (r06 second wave). Pair decisions are exactly
     semantic_pairs_arrow's (gemm scores; boundary-band pairs re-decided
     with the native scorer's sequential double arithmetic — pinned
-    equal by tests/test_operators and the oracle); a local union-find
-    (hash-to-min + pointer jumping over id-value ranks) then labels
+    equal by tests/test_operators and the oracle); the exact closure
+    kernel shared with connected_components
+    (components._min_label_closure, over id-value ranks) then labels
     each vector with its component's MINIMUM member id. Valid because
     the pair graph is cell-confined by construction — a vector belongs
     to exactly one cell, so no component spans cells and the per-cell
@@ -803,6 +799,8 @@ def semantic_clusters_arrow(
     import math
 
     import pandas as pd
+
+    from psyndex2linkeddata_spark.operators.components import _min_label_closure
 
     def _clusters(pdf: "pd.DataFrame") -> "pd.DataFrame":
         import numpy as np
@@ -840,18 +838,7 @@ def semantic_clusters_arrow(
         order = np.argsort(ids, kind="stable")
         rank = np.empty(n_rows, dtype=np.int64)
         rank[order] = np.arange(n_rows)
-        lab = np.arange(n_rows, dtype=np.int64)
-        if len(ia):
-            ru = rank[ia]
-            rv = rank[ib]
-            for _ in range(64):
-                mm = np.minimum(lab[ru], lab[rv])
-                before = lab.copy()
-                np.minimum.at(lab, ru, mm)
-                np.minimum.at(lab, rv, mm)
-                lab = lab[lab]
-                if np.array_equal(lab, before):
-                    break
+        lab = _min_label_closure(rank[ia], rank[ib], n_rows)
         ids_sorted = ids[order]
         cluster = ids_sorted[lab[rank]]
         return pd.DataFrame(

@@ -46,7 +46,6 @@ def prepare_training_corpus(
     max_dup_word_frac: float = 0.9,
     max_top_bigram_frac: float | None = None,
     dedup: bool = True,
-    dedup_use_star: bool = False,
     chunking: str = "cdc",
     chunk_window: int = 512,
     chunk_stride: int = 448,
@@ -129,9 +128,7 @@ def prepare_training_corpus(
         # reusable barrier either way. Streaming micro-batches run
         # dedup=False and never hit it.
         d = d.localCheckpoint(eager=False)
-        keep = neardup_clusters(
-            d, id_col, text_col, use_star=dedup_use_star
-        ).where("is_canonical")
+        keep = neardup_clusters(d, id_col, text_col).where("is_canonical")
         d = d.join(keep.select(id_col), id_col, "left_semi")
     if chunking == "none":
         return d
@@ -147,7 +144,6 @@ def prepare_web_corpus(
     host_blocklist: DataFrame | None = None,
     max_per_host: int | None = None,
     extract_when_null: bool = True,
-    dedup_use_star: bool = True,
     **prep_kwargs,
 ) -> DataFrame:
     """Captures → training chunks: the full web path in one plan.
@@ -169,14 +165,11 @@ def prepare_web_corpus(
     `prep_kwargs` pass through to prepare_training_corpus (benchmark=,
     mix_rates=, chunking=, ...).
 
-    `dedup_use_star=True` (default here, unlike the doc-level plan):
-    web corpora are template-heavy — shared boilerplate makes GIANT
-    near-dup components, where hash-to-min label propagation pays
-    O(component diameter) driver-scheduled rounds (measured: ~25 rounds,
-    ~350s of a 404s 400k-capture run on the synthetic corpus, whose
-    records share a field skeleton exactly like real site templates).
-    Large-star/small-star contracts the same components in O(log n)
-    rounds (operators/components.py).
+    Web corpora are template-heavy: shared boilerplate makes GIANT,
+    long-diameter near-dup components. The near-dup closure
+    (operators/components.connected_components) contracts them per
+    partition and closes the star in one task, so its cost does not
+    grow with component diameter.
     """
     from psyndex2linkeddata_spark.operators.extraction import (
         html_to_text,
@@ -203,6 +196,5 @@ def prepare_web_corpus(
         d,
         id_col="canonical_url",
         text_col="text",
-        dedup_use_star=dedup_use_star,
         **prep_kwargs,
     )

@@ -28,15 +28,13 @@ north-star names "work splitting" alongside contribution/instance):
 
 Output: one row per record — (rec_id, work_id, block_size, relation)
 with work_id = min rec_id of its same-work cluster (connected
-components over merge edges; cluster size is bounded by max_block, so
-hash-to-min converges in ≤ max_block-1 rounds) and relation the
-record's strongest pair class (merged > preprint > serial >
-blocked_series > singleton).
+components over merge edges) and relation the record's strongest pair
+class (merged > preprint > serial > blocked_series > singleton).
 
 Scale shape: one shuffle to count block sizes (window over the block
 key), one bounded self-join inside small blocks only, and the
-components rounds on the (tiny) merge-edge set. Everything is native
-Column expressions — md5/lower/regexp_replace are JVM built-ins.
+components closure of the (tiny) merge-edge set. Everything else is
+native Column expressions — md5/lower/regexp_replace are JVM built-ins.
 """
 
 from __future__ import annotations
@@ -241,6 +239,8 @@ def extract_works(
     merge_edges = classed.where(F.col("relation") == "merged").select(
         F.col("rec_a").alias("src"), F.col("rec_b").alias("dst")
     )
+    # max_iter bounds only the distributed fallback for a star over the
+    # one-task budget; cluster size ≤ max_block keeps its rounds under it
     cc = connected_components(merge_edges, max_iter=max(max_block, 2))
 
     rank = F.when(F.col("relation") == "merged", 3).when(

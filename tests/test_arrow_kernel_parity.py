@@ -121,19 +121,82 @@ def test_nb_scoring_kernel_matches_native(corpus):
     assert b.exceptAll(a).count() == 0
 
 
-def test_connected_components_contraction_matches_loop(spark):
+def _cc_graph():
+    """A random multi-component graph plus a 50-node chain, self loops and
+    duplicate edges."""
     import random
-
-    from psyndex2linkeddata_spark.operators.components import (
-        _connected_components_loop,
-        connected_components,
-    )
 
     rng = random.Random(7)
     edges = [(rng.randint(0, 2000), rng.randint(0, 2000)) for _ in range(4000)]
     edges += [(i, i + 1) for i in range(3000, 3050)]  # 50-node chain
     edges += [(5, 5), (7, 7)]  # self loops
     edges += edges[:100]  # duplicates
+    return edges
+
+
+def _union_find_min(n, edges):
+    """Reference closure: each node's label is its component's minimum."""
+    parent = list(range(n))
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for u, v in edges:
+        a, b = find(u), find(v)
+        if a != b:
+            parent[max(a, b)] = min(a, b)
+    return [find(i) for i in range(n)]
+
+
+def _closure_matches_union_find(n, edges):
+    import numpy as np
+
+    from psyndex2linkeddata_spark.operators.components import _min_label_closure
+
+    ru = np.array([u for u, _ in edges], dtype=np.int64)
+    rv = np.array([v for _, v in edges], dtype=np.int64)
+    lab = _min_label_closure(ru, rv, n)
+    assert lab.tolist() == _union_find_min(n, edges)
+
+
+@pytest.mark.parametrize("n", [1000, 10_000])
+def test_min_label_closure_random_order_chain(n):
+    import random
+
+    rng = random.Random(n)
+    ids = list(range(n))
+    rng.shuffle(ids)
+    chain = list(zip(ids, ids[1:]))
+    rng.shuffle(chain)
+    _closure_matches_union_find(n, chain)
+
+
+@pytest.mark.parametrize("n,m", [(50, 30), (2000, 1500), (20_000, 30_000)])
+def test_min_label_closure_random_graph(n, m):
+    import random
+
+    rng = random.Random(m)
+    edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(m)]
+    _closure_matches_union_find(n, edges)
+
+
+def test_min_label_closure_self_loops_duplicates_and_isolated():
+    # node 3 and 6 touch only self loops, node 7 has no edge at all
+    edges = [(3, 3), (0, 5), (5, 0), (0, 5), (6, 6), (2, 4), (4, 1), (1, 2)]
+    _closure_matches_union_find(8, edges)
+    _closure_matches_union_find(4, [])
+
+
+def test_connected_components_contraction_matches_loop(spark):
+    from psyndex2linkeddata_spark.operators.components import (
+        _connected_components_loop,
+        connected_components,
+    )
+
+    edges = _cc_graph()
     # max_iter=60 so the pure loop converges on the chain: the kernel
     # version computes the TRUE closure; equality is the loop's
     # converged fixpoint
@@ -156,6 +219,32 @@ def test_connected_components_contraction_matches_loop(spark):
         )
         assert bad.count() == 0
         assert a.count() == b.count() > 0
+
+
+def test_connected_components_over_budget_fallback_matches(spark, monkeypatch):
+    """Over the one-task row budget the distributed loop closes the star:
+    the same (node, component) set."""
+    from psyndex2linkeddata_spark.operators import components
+
+    d = spark.createDataFrame(_cc_graph(), "src long, dst long").repartition(7)
+    one_task = {tuple(r) for r in components.connected_components(d).collect()}
+    monkeypatch.setattr(components, "_ONE_TASK_MAX_ROWS", 0)
+    fallback = {
+        tuple(r) for r in components.connected_components(d, max_iter=60).collect()
+    }
+    assert fallback == one_task
+    assert len(one_task) == len({x for e in _cc_graph() for x in e})
+
+
+def test_connected_components_fallback_raises_unconverged(spark, monkeypatch):
+    from psyndex2linkeddata_spark.operators import components
+
+    monkeypatch.setattr(components, "_ONE_TASK_MAX_ROWS", 0)
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(20)], "src long, dst long"
+    ).coalesce(1)
+    with pytest.raises(RuntimeError, match="max_iter=1"):
+        components.connected_components(chain, max_iter=1)
 
 
 @pytest.mark.parametrize("k,divisor", [(3, 8), (2, 5)])
@@ -265,6 +354,29 @@ def test_semantic_cluster_kernel_matches_native_scorer(spark):
     assert a.exceptAll(b).count() == 0
     assert b.exceptAll(a).count() == 0
     assert a.count() == 400
+
+
+def test_semantic_clusters_long_chain_one_cluster(spark):
+    """Unit vectors 0.01 rad apart with a threshold between one and two
+    steps: the above-threshold pairs of the cell form a 1,000-node chain,
+    which is one cluster labelled with its minimum id."""
+    import math
+    import random
+
+    from psyndex2linkeddata_spark.operators.similarity import semantic_clusters_arrow
+
+    rng = random.Random(5)
+    ids = rng.sample(range(10**9), 1000)
+    rows = [
+        (0, vid, [math.cos(0.01 * k), math.sin(0.01 * k)], 1.0)
+        for k, vid in enumerate(ids)
+    ]
+    withc = spark.createDataFrame(
+        rows, "cell int, vec_id long, embedding array<double>, _ccos double"
+    )
+    got = semantic_clusters_arrow(withc, threshold=math.cos(0.015)).collect()
+    assert len(got) == 1000
+    assert {r.cluster_id for r in got} == {min(ids)}
 
 
 def test_rolling_fp_kernel_matches_expression(corpus):

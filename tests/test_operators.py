@@ -127,45 +127,26 @@ def test_connected_components_known_graph(spark):
     assert comps["p"] == "p"
 
 
-def test_connected_components_star_matches_hash_to_min(spark):
-    """Large-star/small-star (O(log n) rounds) agrees with hash-to-min
-    on a random multi-component graph."""
+def test_connected_components_long_chain_one_component(spark):
+    """A 1,000-node chain with shuffled ids in one partition is ONE
+    component labelled with its minimum: the closure runs to its
+    fixpoint, where a pass-capped loop split it into several."""
     import random
 
-    from psyndex2linkeddata_spark.operators.components import (
-        connected_components_star,
-    )
-
-    rng = random.Random(7)
-    pairs = [
-        (f"n{rng.randrange(60)}", f"n{rng.randrange(60)}") for _ in range(80)
-    ]
-    edges = spark.createDataFrame(pairs, ["src", "dst"]).coalesce(2)
-    want = {r.node: r.component for r in connected_components(edges).collect()}
-    got = {
-        r.node: r.component for r in connected_components_star(edges).collect()
-    }
-    assert got == want
-
-
-def test_connected_components_star_chain_round_bound(spark):
-    """A 64-node chain: hash-to-min needs O(diameter)=~63 rounds (its
-    max_iter=25 default would NOT converge); star contraction finishes
-    inside ~2·log2(n) rounds and still labels the whole chain with its
-    minimum."""
-    from psyndex2linkeddata_spark.operators.components import (
-        connected_components_star,
-    )
-
-    n = 64
-    chain = [(f"c{i:03d}", f"c{i + 1:03d}") for i in range(n - 1)]
-    edges = spark.createDataFrame(chain, ["src", "dst"]).coalesce(1)
-    got = {
-        r.node: r.component
-        for r in connected_components_star(edges, max_iter=12).collect()
-    }
-    assert set(got.values()) == {"c000"}
-    assert len(got) == n
+    rng = random.Random(11)
+    ids = rng.sample(range(10**12), 1000)
+    chain = list(zip(ids, ids[1:]))
+    rng.shuffle(chain)
+    for schema, mk in (
+        ("src long, dst long", lambda x: x),
+        ("src string, dst string", lambda x: f"uri:{x}"),
+    ):
+        edges = spark.createDataFrame(
+            [(mk(u), mk(v)) for u, v in chain], schema
+        ).coalesce(1)
+        got = {r.node: r.component for r in connected_components(edges).collect()}
+        assert len(got) == 1000
+        assert set(got.values()) == {min(mk(x) for x in ids)}
 
 
 def test_canonicalize_uris(spark):
@@ -432,19 +413,16 @@ def test_neardup_clusters(spark):
         ],
         "doc_id long, text string",
     )
-    for star in (False, True):
-        got = {
-            r.doc_id: (r.cluster_id, r.is_canonical)
-            for r in neardup_clusters(
-                df, num_hashes=8, bands=4, n=3, use_star=star
-            ).collect()
-        }
-        assert len(got) == 4
-        # 1 and 2 share nearly all shingles -> same cluster, 1 canonical
-        assert got[2][0] == got[1][0] == 1
-        assert got[1][1] is True and got[2][1] is False
-        # 3 is a singleton: its own cluster, canonical
-        assert got[3] == (3, True)
+    got = {
+        r.doc_id: (r.cluster_id, r.is_canonical)
+        for r in neardup_clusters(df, num_hashes=8, bands=4, n=3).collect()
+    }
+    assert len(got) == 4
+    # 1 and 2 share nearly all shingles -> same cluster, 1 canonical
+    assert got[2][0] == got[1][0] == 1
+    assert got[1][1] is True and got[2][1] is False
+    # 3 is a singleton: its own cluster, canonical
+    assert got[3] == (3, True)
 
 
 def test_incremental_neardup_family_kill(spark):

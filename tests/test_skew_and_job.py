@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from psyndex2linkeddata_spark.operators.skew import salted_collect_set, salted_count
+from tests.conftest import spark_jobs
 
 
 def test_salted_count_equals_plain(spark):
@@ -89,6 +90,57 @@ def test_convert_job_cli(spark, tmp_path_factory):
     main(["--pages", pages, "--out", out, "--ckpt", ckpt,
           "--authorities", auth_dir, "--buckets", "4", "--per-commit", "2"])
     assert spark.read.parquet(os.path.join(ckpt, "lineage")).count() == 4
+
+
+def test_convert_job_canonicalize(spark, tmp_path):
+    """--canonicalize rewrites every URI of an owl:sameAs component to the
+    component's minimum: the exported set equals a pure-Python union-find
+    canonicalization of the persisted distinct set, and the closure runs
+    in a bounded number of Spark jobs."""
+    from psyndex2linkeddata_spark import namespaces as NS
+    from psyndex2linkeddata_spark.datagen.pages import write_pages_parquet
+    from psyndex2linkeddata_spark.jobs.convert import main
+    from psyndex2linkeddata_spark.operators.components import connected_components
+    from psyndex2linkeddata_spark.schema import TRIPLE_COLS
+
+    pages = str(tmp_path / "pages.parquet")
+    write_pages_parquet(pages, 40)
+    out = str(tmp_path / "out")
+    main(["--pages", pages, "--out", out, "--ckpt", str(tmp_path / "ckpt"),
+          "--buckets", "4", "--per-commit", "2", "--canonicalize"])
+    triples = spark.read.parquet(os.path.join(out, "triples")).select(*TRIPLE_COLS)
+    persisted = {tuple(r) for r in triples.distinct().collect()}
+    same_as = [(t[0], t[2]) for t in persisted if t[1] == NS.OWL + "sameAs"]
+    assert len(same_as) > 50
+
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for u, v in same_as:
+        a, b = find(u), find(v)
+        if a != b:
+            parent[max(a, b)] = min(a, b)
+    canon = {x: find(x) for x in list(parent)}
+    want = {
+        (canon.get(s, s), p, canon.get(o, o) if iri else o, iri, lang, dt)
+        for s, p, o, iri, lang, dt in persisted
+    }
+    assert len(set(canon.values())) < len(canon)
+    got = spark.read.parquet(os.path.join(out, "triples_canonical")).select(
+        *TRIPLE_COLS
+    )
+    assert {tuple(r) for r in got.distinct().collect()} == want
+
+    edges = triples.where(F.col("pred") == NS.OWL + "sameAs").select(
+        F.col("subj").alias("src"), F.col("obj").alias("dst")
+    )
+    assert spark_jobs(spark, "cc", lambda: connected_components(edges)) <= 4
 
 
 def test_load_authorities_uri_and_empty_dir(spark, tmp_path):
