@@ -1518,7 +1518,8 @@ _MINHASH = (
 mh as (
   select doc_id,
          """
-    # seed i = 8 hex chars carved from md5 number i//4 (dedup.seed_hash)
+    # seed i = 8 hex chars carved from md5 number i//4 (the seed_hash of
+    # tests/native_twins.py)
     + ",\n         ".join(
         f"list_aggregate(list_transform(s, x -> substr(md5('{i // 4}:' || x), {(i % 4) * 8 + 1}, 8)), 'min') as m{i}"
         for i in range(8)

@@ -213,14 +213,6 @@ def write_journal_lookups(dirpath: str, records: list[dict]) -> None:
                 w.writerow([rec["JTC"], policies[j % len(policies)]])
 
 
-def load_review_lookup(dirpath: str) -> dict[str, str]:
-    out = {}
-    with open(os.path.join(dirpath, "review_lookup.csv"), newline="") as f:
-        for row in csv.DictReader(f):
-            out[row["JTC"]] = row["RV"]
-    return out
-
-
 def journals_df(spark, records: list[dict]):
     """records → Spark DataFrame (seq column preserves document order —
     the reference's mutable-instance carry-over is order-dependent)."""

@@ -1,11 +1,10 @@
-"""F21/F28/P10 — funding-field functions.
+"""F28 — funder-name canonicalization as a column expression
+(the reference's convert_starxml_to_bf.py:814-837 over
+modules/mappings.py:418-495): full-name replacement first, then substring
+rules — both native (map + when-chain built from the data table).
 
-- F21 grant-number splitter (/root/reference/convert_starxml_to_bf.py:792-811):
-  'and'/'und'/'&'/';' normalized to commas, split on ', '.
-- F28 funder-name canonicalization (convert_starxml_to_bf.py:814-837 over
-  modules/mappings.py:418-495): full-name replacement first, then substring
-  rules — both native (map + when-chain built from the data table).
-- P10 grant noise filter (convert_starxml_to_bf.py:948-951).
+The grant-number splitter (F21) and the grant noise filter (P10) run
+only inside the Arrow emit kernel (emit/arrow.py).
 """
 
 from __future__ import annotations
@@ -15,17 +14,6 @@ from itertools import chain
 from pyspark.sql import Column, functions as F
 
 from psyndex2linkeddata_spark.data import tables
-
-
-def split_grant_numbers(col: Column) -> Column:
-    """F21: array of individual grant numbers from a |n subfield value."""
-    s = col
-    for token in (" and ", " und ", " & ", "; "):
-        s = F.replace(s, F.lit(token), F.lit(", "))
-    return F.filter(
-        F.transform(F.split(s, ", "), lambda x: F.trim(x)),
-        lambda x: F.length(x) > 0,
-    )
 
 
 def canonicalize_funder_name(col: Column) -> Column:
@@ -43,8 +31,3 @@ def canonicalize_funder_name(col: Column) -> Column:
         expr = F.when(cond, F.lit(repl)) if expr is None else expr.when(cond, F.lit(repl))
     return expr.otherwise(out) if expr is not None else out
 
-
-def is_grant_noise(col: Column) -> Column:
-    """P10: GRANT values that are just OA-deal boilerplate, to be dropped."""
-    low = F.lower(col)
-    return low.contains("projekt deal") | low.contains("open access")

@@ -1,12 +1,8 @@
-"""F12–F14, F17, F18 — instance-level field parsers as column expressions.
+"""F14 — ISSN normalization and validation as column expressions (the
+reference's check_issn_format, modules/helpers.py:308-322).
 
-- F12 split_pages (/root/reference/modules/instance_sources.py:57-105):
-  PAGE → struct(page_start, page_end, extent, article_number).
-- F13 split_series_title_volume (instance_sources.py:108-126):
-  SE → struct(series_title, series_volume).
-- F14 check_issn_format (/root/reference/modules/helpers.py:308-322).
-- F17 email cleanup+validation (/root/reference/modules/contributions.py:586-604).
-- F18 ORCID cleanup+validation (contributions.py:506-522).
+The page (F12), series (F13), email (F17) and ORCID (F18) parsers run
+only inside the Arrow emit kernel (emit/arrow.py).
 """
 
 from __future__ import annotations
@@ -14,60 +10,6 @@ from __future__ import annotations
 from pyspark.sql import Column, functions as F
 
 from psyndex2linkeddata_spark.functions.cleaning import clean_text
-
-
-def split_pages(col: Column) -> Column:
-    """F12: struct(page_start, page_end, extent, article_number) — the
-    reference's if/elif cascade re-expressed as when-chains."""
-    s = col
-    has_dash = s.contains("-")
-    starts_lower = s.rlike("^[a-z]")
-    # reference split("-", maxsplit=1) does NOT strip — '164 -180' keeps
-    # page_start '164 ' (instance_sources.py:73-76)
-    first = F.try_element_at(F.split(s, "-", 2), F.lit(1))
-    second = F.try_element_at(F.split(s, "-", 2), F.lit(2))
-    after_space = F.try_element_at(F.split(s, " ", 2), F.lit(2))
-
-    page_start = F.when(has_dash, first)
-    page_end = F.when(has_dash, second)
-    extent = (
-        F.when(has_dash, F.lit(None).cast("string"))
-        .when(s.startswith("Insgesamt"), F.try_element_at(F.split(s, " "), F.lit(2)))
-        .when(s.rlike(r"^[0-9]+$"), s)
-    )
-    article_number = F.when(
-        ~has_dash & ~s.startswith("Insgesamt") & ~s.rlike(r"^[0-9]+$"),
-        F.when(starts_lower, s).when(
-            s.startswith("No") | s.startswith("Art"), after_space
-        ),
-    )
-    return F.struct(
-        page_start.alias("page_start"),
-        page_end.alias("page_end"),
-        extent.alias("extent"),
-        article_number.alias("article_number"),
-    )
-
-
-def split_series(col: Column) -> Column:
-    """F13: struct(series_title, series_volume).
-
-    'UTB, Band 5591' → ('UTB', '5591'); 'essentials' → ('essentials', NULL);
-    tail must start with Vol/Band or be all digits to count as a volume."""
-    s = col
-    parts = F.split(s, ", ", 2)
-    tail = F.try_element_at(parts, F.lit(2))
-    tail_is_volume = tail.rlike(r"^(Vol|Band)") | tail.rlike(r"^[0-9]+$")
-    has_comma = s.contains(",") & (F.size(parts) == 2)
-    # reference: volume = tail.split(" ", 1)[-1] → after first space, or whole
-    vol = F.when(
-        tail.contains(" "), F.try_element_at(F.split(tail, " ", 2), F.lit(2))
-    ).otherwise(tail)
-    series_title = F.when(has_comma & tail_is_volume, F.try_element_at(parts, F.lit(1))).otherwise(s)
-    series_volume = F.when(has_comma & tail_is_volume, vol)
-    return F.struct(
-        series_title.alias("series_title"), series_volume.alias("series_volume")
-    )
 
 
 def normalize_issn(col: Column) -> Column:
@@ -81,26 +23,3 @@ def issn_is_valid(col: Column) -> Column:
     return normalize_issn(col).rlike(r"^\d{4}-\d{3}[\dX]$")
 
 
-def clean_email(col: Column) -> Column:
-    """F17: repair 'name @domain' / underscore-space damage, validate, NULL
-    if invalid (reference regex, contributions.py:593-600)."""
-    s = F.trim(col)
-    s = F.regexp_replace(s, r"\s*@\s*", "@")
-    s = F.regexp_replace(s, r"\s+", "_")
-    valid = s.rlike(r"^[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}$")
-    return F.when(valid, s)
-
-
-def email_mailto(col: Column) -> Column:
-    e = clean_email(col)
-    return F.when(e.isNotNull(), F.concat(F.lit("mailto:"), e))
-
-
-ORCID_RE = r"(\d{4}-){3}\d{3}[\dX]"
-
-
-def clean_orcid(col: Column) -> Column:
-    """F18: strip URL prefixes/junk, keep the bare 19-char ORCID id, NULL if
-    no valid id present (contributions.py:506-522)."""
-    m = F.regexp_extract(F.trim(col), ORCID_RE, 0)
-    return F.when(F.length(m) > 0, m)

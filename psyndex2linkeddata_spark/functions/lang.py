@@ -45,12 +45,6 @@ def _lang_map(index: int) -> Column:
     )
 
 
-def langtag2(col: Column) -> Column:
-    """F4[0]: two-letter langstring tag; 'und' if unknown (incl. NULL input →
-    NULL stays NULL at call sites that guard)."""
-    return F.coalesce(_lang_map(0)[col], F.lit("und"))
-
-
 def langtag3(col: Column) -> Column:
     """F4[1]: three-letter LoC iso639-2 code; 'und' if unknown."""
     return F.coalesce(_lang_map(1)[col], F.lit("und"))

@@ -1,21 +1,18 @@
-"""F22/F23 — license-code → vocabulary URI and abstract-origin recode.
+"""F22/F23 lookup tables: license code → vocabulary-URI suffix and
+abstract-origin variant → canonical origin label.
 
+The emit kernel (emit/arrow.license_uri, abstract_origin) and the golden
+oracle read them:
 - F23: the reference's ~25-branch if/elif over COPR |c
-  (/root/reference/convert_starxml_to_bf.py:155-243) as a when-chain:
-  exact code matches first, then prefix/contains fallbacks, in source order.
-- F22: abstract-origin initials/name variants → canonical origin label
-  (/root/reference/modules/abstract.py:41-58 over the lists in
-  modules/mappings.py:176-325) as a literal map lookup.
+  (convert_starxml_to_bf.py:155-243) — these exact codes first, then
+  prefix/contains fallbacks, in source order.
+- F22: the reference's abstract.py:41-58 over the lists in
+  modules/mappings.py:176-325, first list wins.
 """
 
 from __future__ import annotations
 
-from itertools import chain
-
-from pyspark.sql import Column, functions as F
-
 from psyndex2linkeddata_spark.data import tables
-from psyndex2linkeddata_spark.namespaces import LICENSES
 
 _EXACT_LICENSE_CODES = {
     "CC": "C00_1_0",
@@ -39,28 +36,6 @@ _EXACT_LICENSE_CODES = {
 }
 
 
-def license_uri(code: Column, german_label: Column) -> Column:
-    """F23: COPR |c code (+ |d german label for the PUBL fallback) → license
-    vocabulary URI; NULL when unmapped (reference logs & skips)."""
-    expr = F.when(F.lit(False), F.lit(None).cast("string"))
-    for c, suffix in _EXACT_LICENSE_CODES.items():
-        expr = expr.when(code == F.lit(c), F.lit(LICENSES + suffix))
-    expr = (
-        expr.when(code.startswith("AUTH"), F.lit(LICENSES + "AUTH"))
-        .when(
-            code.startswith("PUBL")
-            | F.coalesce(german_label, F.lit("")).startswith(
-                "Volles Urheberrecht des Verlags"
-            ),
-            F.lit(LICENSES + "PUBL"),
-        )
-        .when(code.startswith("Hogrefe OpenMind"), F.lit(LICENSES + "HogrefeOpenMind"))
-        .when(code.contains("Springer"), F.lit(LICENSES + "ExclusiveSpringer"))
-        .when(code.startswith("OTHER"), F.lit(LICENSES + "UnspecifiedOpenLicense"))
-    )
-    return expr
-
-
 _ORIGIN_MAP: dict[str, str] = {}
 for values, canon in [
     (tables.abstract_origin_original, "Original"),
@@ -73,11 +48,3 @@ for values, canon in [
     for v in values:
         _ORIGIN_MAP.setdefault(v, canon)
 
-
-def abstract_origin(col: Column) -> Column:
-    """F22: initials/name variants → canonical origin, pass-through if
-    unlisted (abstract.py:41-58)."""
-    m = F.create_map(
-        *chain.from_iterable((F.lit(k), F.lit(v)) for k, v in _ORIGIN_MAP.items())
-    )
-    return F.coalesce(m[col], col)

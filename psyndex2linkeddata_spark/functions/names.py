@@ -1,82 +1,23 @@
-"""F6–F9 — person/country name handling as native column expressions.
+"""Person/country name helpers as native column expressions.
 
-Reference semantics:
-- F6 sanitize_country_names (/root/reference/modules/helpers.py:384-395):
-  fix truncated country names.
-- F7 country_geonames_lookup (helpers.py:378-382): casefold first-match over
-  the 190-row geonames table → broadcast join helper in linking/exact.py; here
-  we expose the normalized-key expression.
-- F8 split_family_and_given_name (helpers.py:397-411): split at the first
-  comma — family, given (given NULL if no single comma split).
-- F9 normalize_names (/root/reference/modules/contributions.py:764-784):
-  umlaut→ascii on family name + given name abbreviated to initial.
+- ascii_umlauts: umlaut→ascii (the reference's normalize_names,
+  modules/contributions.py:764-784), used by the fuzzy name matcher.
+- casefold_compat: Python str.casefold() over Latin-script text, the key
+  of the geonames first-match lookup (F7, helpers.py:378-382).
+
+Country-name repair (F6) and the family/given split (F8) run only inside
+the Arrow emit kernel (emit/arrow.py).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, functions as F
 
-_COUNTRY_FIXES = {
-    "COSTA": "Costa Rica",
-    "CZECH": "Czech Republic",
-    "NEW": "New Zealand",
-    "SAUDI": "Saudi Arabia",
-    "PEOPLES": "People's Republic of China",
-}
-
-
-def sanitize_country_name(col: Column) -> Column:
-    """F6: repair names truncated at the first space by STAR."""
-    expr = None
-    for bad, good in _COUNTRY_FIXES.items():
-        cond = col == F.lit(bad)
-        expr = F.when(cond, F.lit(good)) if expr is None else expr.when(cond, F.lit(good))
-    return expr.otherwise(col)
-
-
-def family_name(col: Column) -> Column:
-    """F8 family part: before the first comma, whole string if none
-    (reference contributions.py:287-293 takes split(',')[0]/[1] whatever
-    the comma count — 'Perdue, Meaghan, V' → family 'Perdue')."""
-    name = F.trim(col)
-    parts = F.split(name, ",")
-    return F.when(F.size(parts) >= 2, F.trim(F.try_element_at(parts, F.lit(1)))).otherwise(name)
-
-
-def given_name(col: Column) -> Column:
-    """F8 given part: second comma segment, extra segments dropped
-    (Spark split keeps trailing empties, matching Python str.split —
-    'X (nifbe),' → given ''); empty string when there is no comma: the
-    reference's except branch (contributions.py:291-303) sets
-    givenname='' and still emits the triple."""
-    name = F.trim(col)
-    parts = F.split(name, ",")
-    return (
-        F.when(name.isNull(), F.lit(None).cast("string"))
-        .when(F.size(parts) >= 2, F.trim(F.try_element_at(parts, F.lit(2))))
-        .otherwise(F.lit(""))
-    )
-
-
 def ascii_umlauts(col: Column) -> Column:
     out = col
     for raw, rep in [("ä", "ae"), ("ö", "oe"), ("ü", "ue"), ("Ä", "Ae"), ("Ö", "Oe"), ("Ü", "Ue"), ("ß", "ss")]:
         out = F.replace(out, F.lit(raw), F.lit(rep))
     return out
-
-
-def normalize_name(family: Column, given: Column) -> Column:
-    """F9: 'Müller, Thomas' → 'Mueller, T.' (abbrev given, ascii umlauts)."""
-    fam = ascii_umlauts(family)
-    return F.when(
-        given.isNotNull() & (F.length(given) > 0),
-        F.concat(fam, F.lit(", "), F.substring(given, 1, 1), F.lit(".")),
-    ).otherwise(fam)
-
-
-def casefold_key(col: Column) -> Column:
-    """Join key used for the geonames case-insensitive first-match lookup."""
-    return F.lower(F.trim(col))
 
 
 # Python str.casefold() expansions JVM lower() lacks, restricted to the

@@ -1,17 +1,17 @@
-"""F10/F11/F24–F27 — text-shaping functions.
+"""F10/F27 — text-shaping functions.
 
-- F10 title_except (/root/reference/modules/helpers.py:95-154): stop-word
-  title casing — genuinely procedural → Arrow pandas UDF.
-- F11 camel_case (helpers.py:169-175): native expression.
-- F24 ToC split from abstract (/root/reference/modules/abstract.py:149-169).
-- F25 abstract licensing-note split (abstract.py:61-124).
-- F26 translated-title parse (/root/reference/convert_starxml_to_bf.py:667-705).
+- F10 title casing (the reference's modules/helpers.py:95-154): stop-word
+  title casing — genuinely procedural: `_title_one` is the Python port the
+  emit kernel calls, `title_except_if_upper_arr` its Arrow pandas-UDF
+  tier for repeated fields.
 - F27 full-title concat (convert_starxml_to_bf.py:638-640).
+
+camel_case (F11), the ToC and licensing-note splits (F24, F25) and the
+translated-title parse (F26) run only inside the Arrow emit kernel
+(emit/arrow.py).
 """
 
 from __future__ import annotations
-
-import re
 
 import pandas as pd
 from pyspark.sql import Column, functions as F
@@ -68,16 +68,6 @@ def _title_one(text):
     )
 
 
-def _title_except_fn(s: pd.Series) -> pd.Series:
-    return s.map(_title_one)
-
-
-def title_except(col: Column) -> Column:
-    """F10 (Arrow tier): title-case with German/English stop words and
-    ALLCAPS exceptions."""
-    return pandas_udf(_title_except_fn, "string")(col)
-
-
 def _title_except_if_upper_arr_fn(s: pd.Series) -> pd.Series:
     def _arr(values):
         if values is None:
@@ -99,71 +89,16 @@ def title_except_if_upper_arr(col: Column) -> Column:
     return pandas_udf(_title_except_if_upper_arr_fn, "array<string>")(col)
 
 
-def camel_case(col: Column) -> Column:
-    """F11: 'Preschool Age' → 'preschoolAge' (underscores/hyphens → spaces,
-    initcap each word, join, lowercase first letter)."""
-    spaced = F.regexp_replace(col, r"(_|-)+", " ")
-    joined = F.regexp_replace(F.initcap(spaced), " ", "")
-    return F.concat(F.lower(F.substring(joined, 1, 1)), F.substring(joined, 2, 1000000))
-
-
 # reference abstract.py:149 — no DOTALL (a multi-line abstract never
 # splits) and optional space before the colon
 TOC_RE = r"^(.*)[-–]\s*(Contents|Inhalt)\s*:\s*(.*)$"
-
-
-def split_toc(col: Column) -> Column:
-    """F24: struct(abstract, toc, toc_is_url) — trailing '- Contents:'/
-    '- Inhalt:' table of contents peeled off the abstract text."""
-    has = col.rlike(TOC_RE)
-    body = F.when(has, F.trim(F.regexp_extract(col, TOC_RE, 1))).otherwise(col)
-    toc = F.when(has, F.trim(F.regexp_extract(col, TOC_RE, 3)))
-    # reference abstract.py:160: a ToC is a URL iff it startswith "http"
-    toc_is_url = F.when(toc.isNotNull(), toc.startswith("http")).otherwise(F.lit(False))
-    return F.struct(body.alias("abstract"), toc.alias("toc"), toc_is_url.alias("toc_is_url"))
 
 
 _DEEPL_RE = r"(?is)^(.*)\s\((translated by DeepL)\)$"
 _COPYRIGHT_RE = r"(?is)^(.*)(\(c\).*)$"
 
 
-def split_licensing_note(col: Column) -> Column:
-    """F25: struct(abstract, note) — '(translated by DeepL)' trailer takes
-    precedence; else a short trailing '(c) ...' (<100 chars) unless a '(b)'
-    precedes it (lettered-list exclusion). Mirrors abstract.py:61-124."""
-    has_deepl = col.rlike(_DEEPL_RE)
-    after_deepl = F.when(has_deepl, F.regexp_extract(col, _DEEPL_RE, 1)).otherwise(col)
-    deepl_note = F.when(has_deepl, F.lit("translated by DeepL"))
-
-    c_part = F.regexp_extract(after_deepl, _COPYRIGHT_RE, 2)
-    c_body = F.regexp_extract(after_deepl, _COPYRIGHT_RE, 1)
-    c_applies = (
-        (F.length(c_part) > 0)
-        & (F.length(c_part) < 100)
-        & ~c_body.rlike(r"(?is).*\(b\).*")
-    )
-    body = F.when(c_applies, c_body).otherwise(after_deepl)
-    note = F.coalesce(deepl_note, F.when(c_applies, c_part))
-    return F.struct(F.trim(body).alias("abstract"), note.alias("note"))
-
-
 _TRANS_TITLE_DEEPL_RE = r"(?s)^(.*)\s*\((DeepL)\)\s*$"
-
-
-def parse_translated_title(col: Column) -> Column:
-    """F26: TIUE 'Title. (DeepL) |s German' → struct(title, lang_name, origin).
-
-    Mirrors convert_starxml_to_bf.py:667-705: |s subfield is the language,
-    a trailing '(DeepL)' marks machine translation origin."""
-    main = F.trim(F.try_element_at(F.split(col, r"\|", 2), F.lit(1)))
-    lang_name = F.when(
-        col.contains("|s"),
-        F.trim(F.try_element_at(F.split(F.try_element_at(F.split(col, r"\|s", 3), F.lit(2)), r"\|", 2), F.lit(1))),
-    )
-    has_deepl = main.rlike(_TRANS_TITLE_DEEPL_RE)
-    title = F.when(has_deepl, F.trim(F.regexp_extract(main, _TRANS_TITLE_DEEPL_RE, 1))).otherwise(main)
-    origin = F.when(has_deepl, F.lit("DeepL"))
-    return F.struct(title.alias("title"), lang_name.alias("lang_name"), origin.alias("origin"))
 
 
 def full_title(ti: Column, tiu: Column) -> Column:

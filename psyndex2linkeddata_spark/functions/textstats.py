@@ -201,25 +201,6 @@ def bag_fingerprint(col: Column) -> Column:
     return F.md5(F.concat_ws(" ", toks))
 
 
-def rolling_fingerprint_of(toks: Column, n: int = 5) -> Column:
-    """Winnowing-style fingerprint over a PRE-STAGED token attribute:
-    minimum md5 over word n-gram shingles (one representative hash per
-    document; equal for docs sharing their minimal shingle — a blocking
-    key). Stage the tokens first — see operators/dedup.shingles_of on
-    why an inline token expression goes O(n²) interpreted."""
-    from psyndex2linkeddata_spark.operators.dedup import shingles_of
-
-    return F.array_min(F.transform(shingles_of(toks, n), F.md5))
-
-
-def rolling_fingerprint(col: Column, n: int = 5) -> Column:
-    """rolling_fingerprint_of over inline-tokenized text — convenience
-    for short docs/tests; hot paths stage the token column."""
-    from psyndex2linkeddata_spark.operators.dedup import tokens
-
-    return rolling_fingerprint_of(tokens(col), n)
-
-
 def with_rolling_fp(staged, norm_col: str, n: int = 5, out_col: str = "rolling_fp"):
     """staged (any columns + `norm_col` = norm_text output) → same rows
     with norm_col replaced by out_col = the rolling fingerprint
@@ -280,26 +261,26 @@ def repetition_stats(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> "DataFrame":
-    """Gopher-style repetition signals — dispatches to the Arrow kernel;
-    the all-JVM form is kept as `repetition_stats_native` (cross-check,
-    pinned bit-equal by tests/test_arrow_kernel_parity). The kernel
-    consumes the JVM-staged case-preserving whitespace-collapsed text
-    and emits the INTEGER stats only (token count, distinct-token count,
-    mode bigram count, bigram count) — splitting its bytes on the space
-    byte reproduces Spark's split(trim, '\\s+') including the
-    leading/trailing empty-token and the gram_array leading-space
-    duplication quirks (see operators/dedup._minhash_signatures_arrow);
-    byte equality == the JVM's string equality, and a sorted array's
-    longest equal run IS the multiset mode count. The divisions and
-    round(…, 4) stay the identical JVM expressions."""
-    return _repetition_stats_arrow(df, id_col, text_col)
+    """Gopher-style within-document repetition signals (Rae et al. 2021,
+    §A1.1 repetition filters): (id, dup_word_frac, top_bigram_frac).
 
+    - dup_word_frac: fraction of tokens that are repeats of an earlier
+      token (1 - distinct/total).
+    - top_bigram_frac: fraction of all bigram occurrences taken by the
+      single most frequent bigram — boilerplate/spam pages score high.
 
-def _repetition_stats_arrow(
-    df: "DataFrame",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> "DataFrame":
+    Fractions round to 4dp so the DuckDB oracle compares stably. One
+    mapInArrow kernel, zero shuffles: it consumes the JVM-staged
+    case-preserving whitespace-collapsed text and emits the INTEGER
+    stats only (token count, distinct-token count, mode bigram count,
+    bigram count) — splitting its bytes on the space byte reproduces
+    Spark's split(trim, '\\s+') including the leading/trailing
+    empty-token and the JVM bigram construction's leading-space
+    duplication quirks (see operators/dedup.minhash_signatures); byte
+    equality == the JVM's string equality. The divisions and round(…, 4)
+    stay JVM expressions. Pinned bit-equal to the all-JVM sorted-run
+    form tests/native_twins.repetition_stats_native by
+    tests/test_arrow_kernel_parity."""
     import pyarrow as pa
 
     norm_case = F.regexp_replace(
@@ -324,7 +305,8 @@ def _repetition_stats_arrow(
                 toks = [t for t in raw if t]
                 if len(toks) >= 2:
                     if nb.startswith(b" "):
-                        # gram_array's leading-space quirk: both offsets
+                        # the JVM gram construction's leading-space quirk
+                        # (tests/native_twins.gram_array): both offsets
                         # degenerate to offset 0 and CONCAT duplicates
                         # the stride-2 windows
                         wins = [
@@ -375,103 +357,22 @@ def _repetition_stats_arrow(
     )
 
 
-def repetition_stats_native(
-    df: "DataFrame",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> "DataFrame":
-    """Gopher-style within-document repetition signals (Rae et al. 2021,
-    §A1.1 repetition filters): (id, dup_word_frac, top_bigram_frac).
-
-    - dup_word_frac: fraction of tokens that are repeats of an earlier
-      token (1 - distinct/total) — computed per-row, no shuffle.
-    - top_bigram_frac: fraction of all bigram occurrences taken by the
-      single most frequent bigram — boilerplate/spam pages score high.
-      Computed per-row as the longest equal run of the SORTED bigram
-      array (mode count without a frequency map): staged attribute
-      columns + one aggregate lambda — ZERO shuffles. Measured 10×
-      faster (7s vs 72s on 100k × 600-token docs) than the obvious
-      explode → groupBy(doc, bigram) → max/sum plan, which shuffles one
-      row per distinct bigram occurrence; at corpus scale that shuffle
-      is the entire cost of the operator.
-
-    Fractions round to 4dp so the DuckDB oracle compares stably (the
-    oracle keeps the frequency-map formulation — same values).
-    """
-    from psyndex2linkeddata_spark.operators.chunking import tokens
-    from psyndex2linkeddata_spark.operators.selection import gram_array
-
-    toks = tokens(F.col(text_col))
-    n = F.size(toks)
-    # case-preserving single-space form of the token stream: gram_array
-    # over it yields exactly the concat_ws bigrams of `tokens` (with
-    # multiplicity), built by two codegen regex extractions instead of
-    # an interpreted transform with two element_at calls per element
-    # (r06; measured 3.1s → 2.2s for the sorted-bigram stage at 50k
-    # docs). NOT norm_text — that lowercases, which would case-fold
-    # distinct bigrams together and change the mode count.
-    norm_case = F.regexp_replace(
-        F.trim(F.coalesce(F.col(text_col), F.lit(""))), r"\s+", " "
-    )
-    base = df.select(
-        F.col(id_col),
-        norm_case.alias("_nc"),
-        F.when(
-            n > 0,
-            F.round((n - F.size(F.array_distinct(toks))) / n.cast("double"), 4),
-        )
-        .otherwise(F.lit(0.0))
-        .alias("dup_word_frac"),
-    )
-    sorted_b = base.select(
-        id_col,
-        "dup_word_frac",
-        F.array_sort(gram_array(F.col("_nc"), 2)).alias("_b"),
-    )
-    acc0 = F.struct(
-        F.lit("").alias("prev"), F.lit(0).alias("run"), F.lit(0).alias("best")
-    )
-    max_run = F.aggregate(
-        F.col("_b"),
-        acc0,
-        lambda a, x: F.struct(
-            x.alias("prev"),
-            F.when(x == a["prev"], a["run"] + 1).otherwise(F.lit(1)).alias("run"),
-            F.greatest(
-                a["best"],
-                F.when(x == a["prev"], a["run"] + 1).otherwise(F.lit(1)),
-            ).alias("best"),
-        ),
-        lambda a: a["best"],
-    )
-    return sorted_b.select(
-        id_col,
-        "dup_word_frac",
-        F.when(
-            F.size(F.col("_b")) > 0,
-            F.round(max_run / F.size(F.col("_b")).cast("double"), 4),
-        )
-        .otherwise(F.lit(0.0))
-        .alias("top_bigram_frac"),
-    )
-
-
 def with_top_bigram_frac(
     df: "DataFrame", text_col: str = "text", out_col: str = "top_bigram_frac"
 ) -> "DataFrame":
     """Append the per-row top-bigram fraction, preserving all other
-    columns — dispatches to the Arrow kernel; the all-JVM sorted-run
-    form is kept as `with_top_bigram_frac_native` (cross-check, pinned
-    bit-equal by tests/test_arrow_kernel_parity). The kernel is the
-    repetition_stats one minus the distinct-token stats: integer
-    (mode-bigram, bigram) counts from the byte-split of the JVM-staged
-    whitespace-collapsed text — HERE over the RAW token sequence with
-    Spark's empty leading/trailing split tokens kept, exactly the
-    concat_ws bigrams of chunking.tokens — with the division and
-    round(…, 4) left as the identical JVM expressions. The pushdown
-    hazard of the native form (see its tail comment) cannot occur: the
-    kernel's outputs are real attributes behind an opaque Python node,
-    which PushPredicateThroughNonJoin never substitutes into."""
+    columns — the filter-friendly form of the repetition_stats signal.
+    The kernel is the repetition_stats one minus the distinct-token
+    stats: integer (mode-bigram, bigram) counts from the byte-split of
+    the JVM-staged whitespace-collapsed text — HERE over the RAW token
+    sequence with Spark's empty leading/trailing split tokens kept,
+    exactly the concat_ws bigrams of chunking.tokens — with the division
+    and round(…, 4) left as JVM expressions. The outputs are real
+    attributes behind an opaque Python node, so a `.where` on out_col is
+    safe: PushPredicateThroughNonJoin never substitutes into it. Pinned
+    bit-equal to the all-JVM form
+    tests/native_twins.with_top_bigram_frac_native by
+    tests/test_arrow_kernel_parity."""
     import pyarrow as pa
 
     keep = df.columns
@@ -523,58 +424,3 @@ def with_top_bigram_frac(
     ).otherwise(F.lit(0.0))
     return stats.select(*keep, frac.alias(out_col))
 
-
-def with_top_bigram_frac_native(
-    df: "DataFrame", text_col: str = "text", out_col: str = "top_bigram_frac"
-) -> "DataFrame":
-    """Append the per-row top-bigram fraction, preserving all other
-    columns — the filter-friendly form of the repetition_stats signal
-    (same staged sorted-run computation, zero shuffles)."""
-    from psyndex2linkeddata_spark.operators.chunking import tokens
-
-    keep = df.columns
-    staged = df.select("*", tokens(F.col(text_col)).alias("__tbf_t"))
-    bigrams = F.when(
-        F.size(F.col("__tbf_t")) >= 2,
-        F.transform(
-            F.sequence(F.lit(0), F.size(F.col("__tbf_t")) - 2),
-            lambda i: F.concat_ws(
-                " ",
-                F.element_at(F.col("__tbf_t"), i + 1),
-                F.element_at(F.col("__tbf_t"), i + 2),
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    sb = staged.select("*", F.array_sort(bigrams).alias("__tbf_b"))
-    acc0 = F.struct(
-        F.lit("").alias("prev"), F.lit(0).alias("run"), F.lit(0).alias("best")
-    )
-    max_run = F.aggregate(
-        F.col("__tbf_b"),
-        acc0,
-        lambda a, x: F.struct(
-            x.alias("prev"),
-            F.when(x == a["prev"], a["run"] + 1).otherwise(F.lit(1)).alias("run"),
-            F.greatest(
-                a["best"],
-                F.when(x == a["prev"], a["run"] + 1).otherwise(F.lit(1)),
-            ).alias("best"),
-        ),
-        lambda a: a["best"],
-    )
-    frac = F.when(
-        F.size(F.col("__tbf_b")) > 0,
-        F.round(max_run / F.size(F.col("__tbf_b")).cast("double"), 4),
-    ).otherwise(F.lit(0.0))
-    # PUSHDOWN HAZARD (measured, sf0.1/local[32]): do NOT `.where` on
-    # out_col over a live lineage. PushPredicateThroughNonJoin substitutes
-    # the aliased expression into the predicate with no cheapness check,
-    # so the interpreted aggregate plus the staged token/bigram arrays
-    # (and any upstream scrub chain) re-inline per reference and the
-    # element_at lambda re-evaluates the split per ELEMENT: 1.2s unfiltered
-    # → 19s filtered bare → 152s filtered behind a regex scrub. Filter on
-    # a materialized barrier instead (localCheckpoint / a written table),
-    # where out_col is a stored attribute — plans/corpus.py does exactly
-    # that. (A dummy non-deterministic projection column does NOT protect
-    # this: fixed-point column pruning deletes it before pushdown runs.)
-    return sb.select(*keep, frac.alias(out_col))

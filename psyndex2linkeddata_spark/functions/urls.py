@@ -37,19 +37,8 @@ def sanitize_url_or_doi(col: Column) -> Column:
 
 # printable-ASCII characters urllib.parse.quote(s) percent-encodes with the
 # default safe='/' (everything outside [A-Za-z0-9_.~/-]); '%' must be first
-# so already-substituted escapes aren't re-encoded.
+# so already-substituted escapes aren't re-encoded (emit/arrow.pct_quote).
 _PCT_UNSAFE = "% !\"#$&'()*+,:;<=>?@[\\]^`{|}"
-
-
-def pct_quote(col: Column) -> Column:
-    """urllib.parse.quote twin for ASCII strings (reference
-    modules/identifiers.py:28 encodes the DOI into its node URI this way).
-    Chained literal replaces — stays inside whole-stage codegen; non-ASCII
-    input (absent from real DOIs) is passed through unencoded (documented
-    deviation: quote would UTF-8 percent-encode it)."""
-    for c in _PCT_UNSAFE:
-        col = F.replace(col, F.lit(c), F.lit("%%%02X" % ord(c)))
-    return col
 
 
 def extract_doi(col: Column) -> Column:

@@ -116,10 +116,13 @@ def main(argv=None) -> None:
             F.col("subj").alias("src"), F.col("obj").alias("dst")
         )
         comps = connected_components(edges)
-        triples = canonicalize_uris(triples, comps)
-        triples.write.mode("overwrite").parquet(
-            os.path.join(args.out, "triples_canonical")
+        canonical = os.path.join(args.out, "triples_canonical")
+        canonicalize_uris(triples, comps).write.mode("overwrite").parquet(
+            canonical
         )
+        # the count and the exports read the written table back instead
+        # of re-running the two canonicalize_uris joins per consumer
+        triples = spark.read.parquet(canonical)
 
     if args.nt:
         from psyndex2linkeddata_spark.sources.export import write_nt

@@ -2,7 +2,7 @@
 
 - dedup: exact / MinHash-LSH / SimHash / n-gram-Jaccard / embedding near-dup
 - similarity: brute-force + LSH-bucketed cosine top-k
-- linking: tiered entity linking (exact → replace-list → LSH + verify)
+- linking: entity linking (exact, LSH + verify, affiliation containment)
 - components: connected-components URI canonicalization
 - textstats: language-ID, quality scoring, token counts, fingerprints
 - multimodal: binary-column decode/feature plumbing (Arrow-batched)

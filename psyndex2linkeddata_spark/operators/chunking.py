@@ -90,31 +90,31 @@ def cdc_chunks(
     k: int = 3,
     divisor: int = 8,
 ) -> DataFrame:
-    """Content-defined chunking — dispatches to the Arrow kernel
-    (`_cdc_chunks_arrow`); the per-row HOF plan is kept as
-    `cdc_chunks_native` (cross-check, pinned bit-equal by
-    tests/test_arrow_kernel_parity). Kernel exactness: the JVM stages
-    the case-preserving whitespace-collapsed text (trim + \\s+ → one
-    space — Unicode/regex semantics stay in Catalyst); splitting its
-    UTF-8 bytes on the space byte WITH empties kept reproduces Spark's
-    split(trim(text), '\\s+') exactly (leading non-space whitespace
-    yields the same leading empty token, Spark's limit=-1 keeps the same
-    trailing empty), boundary decisions hash the same b\" \"-joined
-    k-gram bytes through md5 (first 32 digest bits mod divisor — the
-    general _gram_hash32 rule, which the divisor∣16 hex-char shortcut
-    equals by construction), and chunk texts are the same single-space
-    joins. Replaces the interpreted per-(row, position) HOF tower with
-    a per-batch Python loop over ~n_tokens md5 calls."""
-    return _cdc_chunks_arrow(df, id_col, text_col, k, divisor)
+    """Content-defined chunking: (id, chunk_id, chunk_text, n_tokens)
+    where a boundary falls AFTER token i whenever the hash of the k-gram
+    ending at i ≡ 0 (mod divisor) — expected chunk length = `divisor`
+    tokens.
 
+    Why content-defined instead of fixed windows: boundaries depend only
+    on a local k-token context, so inserting or deleting text re-chunks
+    ONLY the neighborhood of the edit — every downstream chunk hash
+    (dedup keys, embedding cache keys) stays stable, where fixed windows
+    shift every subsequent chunk. That stability is the point at 100 TB:
+    recrawls of near-identical pages dedup at the chunk level.
 
-def _cdc_chunks_arrow(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
-    divisor: int = 8,
-) -> DataFrame:
+    Plan shape: one mapInArrow kernel, entirely per-row, zero shuffles.
+    Kernel exactness: the JVM stages the case-preserving
+    whitespace-collapsed text (trim + \\s+ → one space — Unicode/regex
+    semantics stay in Catalyst); splitting its UTF-8 bytes on the space
+    byte WITH empties kept reproduces Spark's split(trim(text), '\\s+')
+    exactly (leading non-space whitespace yields the same leading empty
+    token, Spark's limit=-1 keeps the same trailing empty), boundary
+    decisions hash the same b\" \"-joined k-gram bytes through md5
+    (first 32 digest bits mod divisor — the _gram_hash32 rule the DuckDB
+    oracle replays), and chunk texts are the same single-space joins.
+    Pinned bit-equal to the per-row HOF plan
+    tests/native_twins.cdc_chunks_native by
+    tests/test_arrow_kernel_parity."""
     import pyarrow as pa
 
     norm_case = F.regexp_replace(
@@ -169,99 +169,6 @@ def _cdc_chunks_arrow(
     return staged.mapInArrow(
         kernel,
         f"{id_col} {id_t}, chunk_id long, chunk_text string, n_tokens long",
-    )
-
-
-def cdc_chunks_native(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
-    divisor: int = 8,
-) -> DataFrame:
-    """Content-defined chunking: a boundary falls AFTER token i whenever
-    the hash of the k-gram ending at i ≡ 0 (mod divisor) — expected
-    chunk length = `divisor` tokens.
-
-    Why content-defined instead of fixed windows: boundaries depend only
-    on a local k-token context, so inserting or deleting text re-chunks
-    ONLY the neighborhood of the edit — every downstream chunk hash
-    (dedup keys, embedding cache keys) stays stable, where fixed windows
-    shift every subsequent chunk. That stability is the point at 100 TB:
-    recrawls of near-identical pages dedup at the chunk level.
-
-    Plan shape: entirely per-row (boundary positions → adjacent-pair
-    slices → one explode), zero shuffles. The k-gram scan uses JVM
-    higher-order functions — interpreted, not codegen, but array-local
-    and Python-free; if profiling ever makes this the bottleneck the
-    same function drops into the sanctioned Arrow emit pattern
-    (emit/arrow.py) unchanged in semantics.
-
-    Cost discipline: `_t`/`_e` are staged as real attribute columns —
-    each multi-referenced, so CollapseProject will NOT inline them —
-    because inlining re-embeds the whole md5 boundary filter at every
-    reference and the interpreted evaluator then recomputes it per chunk
-    element (measured 143s → ~3s at sf0.1 for this exact rewrite; see
-    the plan-cost memo in ac36c48).
-    """
-    toks = tokens(F.col(text_col))
-    staged = df.select(F.col(id_col), toks.alias("_t"))
-    t, n = F.col("_t"), F.size(F.col("_t"))
-    # boundary after position i (1-based, i in [k, n-1]): hash of
-    # toks[i-k+1 .. i] divisible by `divisor`; never after the last token.
-    # Guard: sequence(a, b) with b < a yields a DESCENDING sequence, so
-    # docs shorter than k+1 tokens must short-circuit to "no boundaries".
-    if divisor >= 1 and 16 % divisor == 0:
-        # hash32 % d (d | 16) depends only on the value's low bits, i.e.
-        # on the 8th hex char of the md5 — membership in a precomputed
-        # char set replaces F.conv, an interpreted BigInteger parse that
-        # dominated the per-position lambda (r06; same boundary bits).
-        zero_chars = [h for h in "0123456789abcdef" if int(h, 16) % divisor == 0]
-
-        def _is_boundary(i):
-            return F.substring(
-                F.md5(F.array_join(F.slice(t, i - (k - 1), k), " ")), 8, 1
-            ).isin(*zero_chars)
-
-    else:
-
-        def _is_boundary(i):
-            return (
-                F.pmod(
-                    _gram_hash32(F.array_join(F.slice(t, i - (k - 1), k), " ")),
-                    F.lit(divisor),
-                )
-                == 0
-            )
-
-    bpos = F.when(
-        n - 1 >= k,
-        F.filter(F.sequence(F.lit(k), n - 1), _is_boundary),
-    ).otherwise(F.array().cast("array<int>"))
-    edged = staged.select(
-        id_col,
-        "_t",
-        F.concat(F.array(F.lit(0)), bpos, F.array(n)).alias("_e"),
-    )
-    e = F.col("_e")
-    chunks = F.transform(
-        F.sequence(F.lit(0), F.size(e) - 2),
-        lambda j: F.slice(t, e[j] + 1, e[j + 1] - e[j]),
-    )
-    return (
-        # outer: chunks has >= 1 element always (the [0, n] edge pair),
-        # so rows are identical and the inferred size>0 pre-filter —
-        # which would re-evaluate the whole chunk transform per row —
-        # never appears
-        edged.select(
-            F.col(id_col), F.posexplode_outer(chunks).alias("chunk_id", "_c")
-        )
-        .select(
-            id_col,
-            F.col("chunk_id").cast("long").alias("chunk_id"),
-            F.array_join(F.col("_c"), " ").alias("chunk_text"),
-            F.size(F.col("_c")).cast("long").alias("n_tokens"),
-        )
     )
 
 

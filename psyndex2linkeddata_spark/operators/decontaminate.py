@@ -11,7 +11,8 @@ check is a broadcast LEFT SEMI join on the exploded doc grams — the
 corpus side never shuffles; the explode is narrow and the semi-join
 short-circuits per match. `broadcast_bench=False` degrades to a plain
 shuffle semi-join for oversized benchmark sets. Token/shingle arrays are
-staged as attributes (see dedup.shingles_of on why inlining goes O(n²)).
+staged as attributes: an inlined expression is re-evaluated by the
+interpreted HOF evaluator per element, O(n²) per doc.
 """
 
 from __future__ import annotations
@@ -25,9 +26,8 @@ def _grams(
     df: DataFrame, text_col: str, n: int, extra_cols: list[str]
 ) -> DataFrame:
     # explode_OUTER: avoids Catalyst's inferred size>0 pre-filter,
-    # which re-evaluates the staged shingle construction per row (see
-    # dedup.minhash_signatures); shingle_array is never empty/null, so
-    # the rows are identical.
+    # which re-evaluates the staged shingle construction per row;
+    # shingle_array is never empty/null, so the rows are identical.
     return df.select(
         *extra_cols, norm_text(F.col(text_col)).alias("_norm")
     ).select(
@@ -58,7 +58,7 @@ def contaminated_ids(
     `docs` repeats an id (decontaminate's left join would fan out
     otherwise). Gram construction is the
     byte-slice replication of shingle_array (see
-    operators/dedup._minhash_signatures_arrow — n ≥ 4 uses the
+    operators/dedup.minhash_signatures — n ≥ 4 uses the
     quirk-free lookahead semantics; n ≤ 3 replicates the leading-space
     stride); set membership is byte equality == the JVM's string
     equality. Pinned bit-equal to the native form

@@ -8,8 +8,8 @@ Scale design:
 - MinHash-LSH: signatures are row-local (narrow); the candidate join
   shuffles on (band_index, band_hash) — bucket keys are uniform by
   construction, so no skew; candidate verification is again row-local.
-- SimHash: row-local signature, self-join on full signature (or banded
-  prefixes for hamming<k at scale).
+- SimHash: a row-local signature table (simhash_hex_table); grouping
+  documents by signature is one uniform-key shuffle.
 - n-gram Jaccard: exact verification for candidate pairs, or exhaustive
   at small scale (explode→join on shingle→agg), shuffling on shingle —
   stopword-like shingles are the skew risk; cap shingle frequency.
@@ -31,32 +31,6 @@ def tokens(col: Column) -> Column:
     )
 
 
-def shingles_of(toks: Column, n: int = 3) -> Column:
-    """Word n-gram shingles over a PRE-STAGED token column, space-joined,
-    distinct. `toks` must be a real projection attribute, not an inline
-    expression: the transform lambda references it per element, and the
-    interpreted HOF evaluator re-computes a non-attribute argument for
-    every shingle — O(n²) per doc (measured 41× slower on 800-token
-    docs). Stage with `df.select(..., tokens(col).alias("_toks"))`."""
-    k = F.size(toks) - (n - 1)
-    return F.array_distinct(
-        F.when(
-            k > 0,
-            F.transform(
-                F.sequence(F.lit(1), F.greatest(k, F.lit(1))),
-                lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-            ),
-        ).otherwise(F.array(F.concat_ws(" ", toks)))
-    )
-
-
-def shingles(col: Column, n: int = 3) -> Column:
-    """Word n-gram shingles of a raw text column. Convenience wrapper for
-    short-document / test contexts — DataFrame-level operators stage the
-    token array first and use shingles_of (see its docstring)."""
-    return shingles_of(tokens(col), n)
-
-
 def norm_text(col: Column) -> Column:
     """Lowercased, whitespace-collapsed text — the string whose
     single-space token stream equals tokens(col)."""
@@ -64,18 +38,18 @@ def norm_text(col: Column) -> Column:
 
 
 def shingle_array(norm: Column, n: int = 3) -> Column:
-    """SET-equal to shingles_of(tokens(col), n) over norm_text(col), but
-    codegen-only: the transform/slice HOF tower evaluates interpreted and
-    was the hot spot of every shingle consumer (23.6s → 8.2s for 100k ×
-    600-token docs at local[32]). Construction: n interleaved
+    """The distinct word n-gram shingles (n consecutive tokens,
+    space-joined) of a norm_text column, built codegen-only: a
+    transform/slice HOF tower over a token array evaluates interpreted
+    and was the hot spot of every shingle consumer (23.6s → 8.2s for
+    100k × 600-token docs at local[32]). Construction: n interleaved
     NON-overlapping regexp extractions — offset o strips o leading tokens,
     then `\\S+( \\S+){n-1}` takes consecutive n-token groups, so offsets
     0..n-1 together yield every overlapping shingle exactly once —
-    concatenated and array_distinct'ed. Element ORDER differs from
-    shingles_of (interleaved, not positional); every consumer is
-    order-insensitive (min-hash, md5-min fingerprints, set joins). Docs
-    with fewer than n tokens yield the whole normalized text, matching
-    shingles_of's ≥1-element guarantee.
+    concatenated and array_distinct'ed. Element ORDER is interleaved,
+    not positional; every consumer is order-insensitive (min-hash,
+    md5-min fingerprints, set joins). Docs with fewer than n tokens
+    yield the whole normalized text, so the array is never empty.
 
     For n ≥ 4 the n interleaved extractions are replaced by ONE
     lookahead-capture pass (r06): `(?=(tok( tok){n-1}))tok` captures the
@@ -102,18 +76,6 @@ def shingle_array(norm: Column, n: int = 3) -> Column:
     )
 
 
-def seed_hash(shingle: Column, i: int) -> Column:
-    """Seed-i shingle hash: 8 hex chars (32 bits) carved from md5 number
-    i//4 of the shingle — ONE md5 yields four independent seed hashes, so
-    a 16-hash signature costs 4 md5 evaluations per shingle instead of 16
-    (the md5 itself dominated minhash: 22.9s → 10.1s for the 8-hash
-    signature aggregation at 100k × 600-token docs). String min over
-    fixed-width lowercase hex equals numeric min over the 32-bit value,
-    and DuckDB replays `substr(md5('{j}:' || x), …, 8)` byte-identically."""
-    digest = F.md5(F.concat(F.lit(f"{i // 4}:"), shingle))
-    return F.substring(digest, (i % 4) * 8 + 1, 8)
-
-
 def content_hash(col: Column) -> Column:
     """Exact-dup key: md5 of the raw text."""
     return F.md5(col)
@@ -137,24 +99,6 @@ def exact_duplicate_groups(
     )
 
 
-def minhash_signature(col: Column, num_hashes: int = 16, n: int = 3) -> Column:
-    """array<string> MinHash signature as a single Column: per hash seed i,
-    the minimum md5(i || ':' || shingle) over the document's shingles.
-
-    NOTE: this HOF form evaluates interpreted and re-derives the shingle
-    array per seed — fine for one-off expressions over short strings, but
-    the hot path (minhash_lsh_pairs, link_fuzzy) uses the explode→groupBy
-    `minhash_signatures` DataFrame operator instead (measured 4.5× faster
-    at sf0.1)."""
-    sh = shingles(col, n)
-    return F.array(
-        *[
-            F.array_min(F.transform(sh, lambda s: seed_hash(s, i)))
-            for i in range(num_hashes)
-        ]
-    )
-
-
 def minhash_signatures(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -162,22 +106,10 @@ def minhash_signatures(
     num_hashes: int = 16,
     n: int = 3,
 ) -> DataFrame:
-    """(id, _sig array<string>) MinHash signatures — dispatches to the
-    Arrow kernel (`_minhash_signatures_arrow`), byte-identical to the
-    explode→groupBy JVM form (`minhash_signatures_native`, kept as the
-    cross-check). See the kernel docstring for the exactness argument."""
-    return _minhash_signatures_arrow(df, id_col, text_col, num_hashes, n)
-
-
-def _minhash_signatures_arrow(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 16,
-    n: int = 3,
-) -> DataFrame:
-    """(id, _sig array<string>) via one mapInArrow kernel over the
-    JVM-staged shingle arrays (r06 second Arrow wave).
+    """(id, _sig array<string>) MinHash signatures via one mapInArrow
+    kernel over the JVM-normalized text (r06 second Arrow wave):
+    signature i is the minimum over the document's word n-gram shingles
+    of 8 hex chars carved from md5("{i//4}:" + shingle).
 
     All STRING SEMANTICS stay in the JVM: norm_text + shingle_array build
     the shingle set with Catalyst expressions exactly as before, and the
@@ -188,12 +120,13 @@ def _minhash_signatures_arrow(
     computes hashlib.md5(b"{g}:" + shingle_bytes) per digest group
     (byte-identical to the JVM's md5(concat(lit, col)): Spark casts the
     string to its UTF-8 bytes), carves each 16-byte digest into four
-    big-endian uint32 seed hashes (== seed_hash's 8-hex-char substrings),
+    big-endian uint32 seed hashes (== the 8-hex-char digest substrings),
     takes the per-document minimum with one segmented numpy reduction,
     and formats the minima back to 8-char lowercase hex. min over
     fixed-width lowercase hex strings == min over the uint32 values, so
-    the output equals the JVM aggregation bit-for-bit (pinned by
-    tests/test_arrow_kernel_parity).
+    the output equals the explode→groupBy JVM aggregation bit-for-bit
+    (the reference form is tests/native_twins.minhash_signatures_native,
+    pinned by tests/test_arrow_kernel_parity).
 
     This replaces the per-row seed-hash evaluation + min(string)
     SortAggregate (string buffers are not hash-aggregable) and its
@@ -299,58 +232,6 @@ def _minhash_signatures_arrow(
     )
 
 
-def minhash_signatures_native(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 16,
-    n: int = 3,
-) -> DataFrame:
-    """(id, _sig array<string>) MinHash signatures via explode→groupBy —
-    the all-JVM cross-check form of `minhash_signatures`.
-
-    One narrow explode of the codegen-built shingle array (shingle_array —
-    no interpreted HOF), ceil(num_hashes/4) md5 digests per shingle row
-    carved into 32-bit seed hashes (seed_hash), then a single
-    groupBy(id).agg(min…) with map-side partial aggregation — one uniform
-    shuffle on the doc id. The per-row HOF tower
-    (minhash_signature) evaluates interpreted and recomputes the shingle
-    array per seed. `shingle_array` always yields ≥1 element, so no rows
-    are dropped."""
-    # explode_OUTER (r06): plain explode makes Catalyst infer a
-    # size(...) > 0 pre-filter (InferFiltersFromGenerate) and push it
-    # below the projection that stages the shingle array — re-evaluating
-    # the whole multi-regex construction once more per row (measured 2×
-    # the stage). shingle_array guarantees ≥1 non-null element, so the
-    # outer explode emits exactly the same rows and no null ever
-    # appears; it just never triggers the inference.
-    ex = df.select(
-        F.col(id_col), norm_text(F.col(text_col)).alias("_norm")
-    ).select(
-        F.col(id_col),
-        F.explode_outer(shingle_array(F.col("_norm"), n)).alias("_s"),
-    )
-    # Aggregation-form note (r06, measured at 50k × ~52-shingle docs):
-    # min(string) forces a SortAggregate (string buffers are not
-    # hash-aggregable), but converting the seed hashes to ints for a
-    # HashAggregate LOSES — F.conv is an interpreted BigInteger parse and
-    # 8 of them per shingle row cost more than the sort (8.4s string
-    # SortAgg vs 11.9s int HashAgg vs 9.1-9.3s staged-substring
-    # variants); codegen subexpression elimination already evaluates the
-    # two md5 digests once per row inside the aggregate expressions, so
-    # the string form stands.
-    agg = ex.groupBy(id_col).agg(
-        *[
-            F.min(seed_hash(F.col("_s"), i)).alias(f"_m{i}")
-            for i in range(num_hashes)
-        ]
-    )
-    return agg.select(
-        F.col(id_col),
-        F.array(*[F.col(f"_m{i}") for i in range(num_hashes)]).alias("_sig"),
-    )
-
-
 def lsh_bands(sig: Column, bands: int, rows_per_band: int) -> Column:
     """array<struct<band,key>>: md5 over each band's concatenated minhashes."""
     return F.array(
@@ -395,7 +276,7 @@ def minhash_lsh_pairs(
     from pyspark.sql import Window
 
     rows_per_band = num_hashes // bands
-    # explode→groupBy signatures (scale path; see minhash_signatures)
+    # narrow Arrow signature pass (see minhash_signatures)
     sigd = minhash_signatures(df, id_col, text_col, num_hashes, n)
     banded = sigd.select(
         F.col(id_col),
@@ -490,8 +371,9 @@ def ngram_jaccard_pairs(
     sh = df.select(
         F.col(id_col), norm_text(F.col(text_col)).alias("_norm")
     ).select(F.col(id_col), shingle_array(F.col("_norm"), n).alias("_sh"))
-    # explode_OUTER: see minhash_signatures — avoids the inferred
-    # size>0 filter that re-evaluates the staged shingle construction
+    # explode_OUTER: plain explode makes Catalyst infer a size>0
+    # pre-filter that re-evaluates the staged shingle construction;
+    # shingle_array is never empty, so the rows are identical
     ex = sh.select(
         F.col(id_col),
         F.size("_sh").alias("n_sh"),
@@ -533,94 +415,24 @@ def ngram_jaccard_pairs(
     ).where(F.col("jaccard") >= threshold)
 
 
-def simhash(col: Column, bits: int = 32) -> Column:
-    """SimHash over word tokens: bit b is 1 when the weighted sum of token
-    hash bits is positive. Token hash = first 8 md5 hex chars as a 32-bit
-    int (cross-engine reproducible).
-
-    Single pass: one `aggregate` over the token-hash array carrying a
-    `bits`-element vote accumulator (zip_with), instead of one traversal
-    per bit. Bit b of x is extracted as floor(x / 2^b) % 2 — exact in
-    doubles for 32-bit values."""
-    toks = tokens(col)
-    h = F.transform(toks, lambda t: F.conv(F.substring(F.md5(t), 1, 8), 16, 10).cast("long"))
-    idx = F.sequence(F.lit(0), F.lit(bits - 1))
-    votes = F.aggregate(
-        h,
-        F.array_repeat(F.lit(0).cast("long"), bits),
-        lambda acc, x: F.zip_with(
-            acc,
-            F.transform(
-                idx,
-                lambda b: (
-                    F.floor(x / F.pow(F.lit(2.0), b.cast("double"))).cast("long") % 2
-                )
-                * 2
-                - 1,
-            ),
-            lambda a, v: a + v.cast("long"),
-        ),
-    )
-    weighted = F.zip_with(
-        votes,
-        idx,
-        lambda v, b: F.when(v > 0, F.pow(F.lit(2.0), b.cast("double"))).otherwise(
-            F.lit(0.0)
-        ),
-    )
-    return F.aggregate(weighted, F.lit(0.0), lambda acc, x: acc + x).cast("long")
-
-
-def simhash_hex(col: Column) -> Column:
-    """32-bit SimHash as a '0'/'1' string, one bit per md5 hex position:
-    bit p is 1 when most tokens' md5 has a high hex digit (≥'8') at
-    position p. Byte-wise string compare makes this identical across
-    engines (the DuckDB oracle computes the same string).
-
-    Single pass: each token's 32 hex chars become a ±1 vote array once
-    (split → slice to exactly 32: Spark's split keeps a trailing empty
-    element), summed into a 32-element accumulator via zip_with —
-    instead of 32 independent aggregate traversals."""
-    mds = F.transform(tokens(col), F.md5)
-    votes = F.aggregate(
-        mds,
-        F.array_repeat(F.lit(0), 32),
-        lambda acc, x: F.zip_with(
-            acc,
-            F.transform(
-                F.slice(F.split(x, ""), 1, 32),
-                lambda c: F.when(c >= "8", F.lit(1)).otherwise(F.lit(-1)),
-            ),
-            lambda a, v: a + v,
-        ),
-    )
-    return F.array_join(
-        F.transform(votes, lambda v: F.when(v > 0, F.lit("1")).otherwise(F.lit("0"))),
-        "",
-    )
-
-
 def simhash_hex_table(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    """(id, simhash) — dispatches to the Arrow kernel, value-identical
-    to the explode→32-vote-aggregate JVM form kept as
-    `simhash_hex_table_native` (see that docstring). Kernel exactness:
-    tokenization stays a JVM expression (`tokens`); the kernel
-    dictionary-encodes the flattened token column, md5s each DISTINCT
-    token's UTF-8 bytes once (byte-identical to the JVM md5), turns the
-    32 lowercase-hex digest chars into ±1 votes (char ≥ '8' ⇔ ASCII byte
-    ≥ 56 — hex digits are '0'-'9','a'-'f'), and takes per-document vote
-    sums with an exact integer prefix-sum difference (handles empty/null
-    token arrays as all-zero votes → '0'*32, exactly what the native
-    form's left-join restoration and null-token fold produce). Pinned by
-    tests/test_arrow_kernel_parity."""
-    return _simhash_hex_table_arrow(df, id_col, text_col)
+    """(id, simhash): 32-bit SimHash as a '0'/'1' string, one bit per
+    md5 hex position — bit p is 1 when most of the document's lowercased
+    whitespace tokens have a high hex digit (≥ '8') at position p of
+    their md5. Byte-wise string compare makes this identical across
+    engines (the DuckDB oracle computes the same string).
 
-
-def _simhash_hex_table_arrow(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+    One mapInArrow kernel over the JVM-normalized text: it md5s each
+    DISTINCT token's UTF-8 bytes once per task (byte-identical to the
+    JVM md5), turns the 32 lowercase-hex digest chars into ±1 votes
+    (char ≥ '8' ⇔ ASCII byte ≥ 56 — hex digits are '0'-'9','a'-'f'),
+    and sums the votes per document as exact integers. A document with
+    no tokens (empty, blank or NULL text) gets all-zero votes → '0'*32.
+    The value equals the explode→32-vote-aggregate JVM form
+    tests/native_twins.simhash_hex_table_native (pinned by
+    tests/test_arrow_kernel_parity)."""
     import pyarrow as pa
 
     from psyndex2linkeddata_spark.operators.skew import fanout_partitions
@@ -678,61 +490,6 @@ def _simhash_hex_table_arrow(
             yield pa.RecordBatch.from_arrays([ids, sigs], [id_col, "simhash"])
 
     return staged.mapInArrow(kernel, f"{id_col} {id_t}, simhash string")
-
-
-def simhash_hex_table_native(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """(id, simhash) — the all-JVM DataFrame-level form of `simhash_hex`,
-    value-identical bit strings (r06; measured 14.4s → ~3s at 50k docs).
-
-    The per-row Column form folds a 32-wide vote accumulator through an
-    interpreted aggregate/zip_with tower per token; this form explodes
-    tokens, computes ONE codegen md5 per token row, and reduces with a
-    single hash aggregate of 32 integer ±1-vote sums (map-side partial
-    combine — the exchange carries one 33-column row per doc per map
-    partition). Docs with no tokens never reach the aggregate and are
-    restored by the left join with the all-zero-votes signature '0'*32 —
-    exactly what the empty fold yields."""
-    # explode_OUTER: no inferred size>0 re-tokenization; an empty doc's
-    # null token row yields all-null substrings, every when() falls to
-    # its -1 branch, and negative votes render '0'*32 — the same
-    # signature the left-join restoration produces, so outputs match.
-    ex = df.select(
-        F.col(id_col), F.explode_outer(tokens(F.col(text_col))).alias("_t")
-    )
-    md = ex.select(F.col(id_col), F.md5(F.col("_t")).alias("_m"))
-    votes = md.groupBy(id_col).agg(
-        *[
-            F.sum(
-                F.when(F.substring(F.col("_m"), p, 1) >= "8", 1).otherwise(-1)
-            ).alias(f"_v{p}")
-            for p in range(1, 33)
-        ]
-    )
-    sig = F.concat(
-        *[
-            F.when(F.col(f"_v{p}") > 0, F.lit("1")).otherwise(F.lit("0"))
-            for p in range(1, 33)
-        ]
-    )
-    return df.select(id_col).join(votes, id_col, "left").select(
-        F.col(id_col),
-        F.coalesce(sig, F.lit("0" * 32)).alias("simhash"),
-    )
-
-
-def simhash_duplicate_groups(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", bits: int = 32
-) -> DataFrame:
-    """Documents sharing an identical SimHash (hamming distance 0 tier;
-    the <k tier at scale joins on bit-band prefixes instead)."""
-    return (
-        df.select(F.col(id_col), simhash(F.col(text_col), bits).alias("simhash"))
-        .groupBy("simhash")
-        .agg(F.count("*").alias("n_docs"), F.sort_array(F.collect_list(id_col)).alias("doc_ids"))
-        .where(F.col("n_docs") > 1)
-    )
 
 
 def neardup_clusters(
@@ -861,8 +618,10 @@ def duplicate_spans(
     window also occurs in ≥ min_docs distinct documents (self included).
 
     Plan shape: the k-gram fan-out is row-local over a PRE-STAGED token
-    attribute (see shingles_of on why the transform argument must be an
-    attribute); the one real exchange is the groupBy on the 16-hex-char
+    attribute — the transform lambda references it per element, and the
+    interpreted HOF evaluator re-computes a non-attribute argument for
+    every window, O(n²) per doc (measured 41× slower on 800-token
+    docs); the one real exchange is the groupBy on the 16-hex-char
     gram hash — uniform by construction, partial map-side count. The
     join back to positions shuffles on the same key (no new partitioning).
     Span merging is a per-document window over the few surviving
@@ -982,7 +741,7 @@ def minhash_band_index(
 ) -> DataFrame:
     """(id, band, key) LSH band-key rows — the persisted near-dup index.
 
-    One narrow signature pass (minhash_signatures' explode→groupBy) and a
+    One narrow signature pass (minhash_signatures' Arrow kernel) and a
     band explode; no join. The RECOMMENDED persisted layout is the
     min-aggregated form `groupBy(band, key).agg(min(id))` — one row per
     bucket, idempotent under re-aggregation (min of mins), which is what

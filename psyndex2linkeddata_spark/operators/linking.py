@@ -1,12 +1,13 @@
-"""Tiered entity linking against broadcast authority tables (SURVEY §2.4
+"""Entity linking against broadcast authority tables (SURVEY §2.4
 J1-J18). The reference's per-row HTTP lookups (ROR/Crossref/Skosmos, redis-
 cached — local_api_lookups.py) become offline authority DataFrames joined
-in three tiers, cheapest first:
+by one of three matchers:
 
-  tier 1  exact broadcast hash join on the normalized key
-  tier 2  replace-list recode (mappings.py:332-495) then exact join
-  tier 3  MinHash-LSH blocking + similarity verification (fuzzy joins
-          J1/J9-J15/J18) — candidates only, then a row-local score
+  link_exact        exact broadcast hash join on the normalized key
+  link_fuzzy        MinHash-LSH blocking + similarity verification (fuzzy
+                    joins J1/J9-J15/J18) — candidates only, then a
+                    row-local score
+  link_affiliation  ROR-affiliation-style token containment
 
 Spark-native memoization (replacing requests_cache/redis): `distinct()`
 the mention keys before the expensive tier, join once, re-join to rows —
@@ -23,7 +24,6 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.functions import pandas_udf
 
-from psyndex2linkeddata_spark.data import tables
 from psyndex2linkeddata_spark.operators.dedup import lsh_bands, minhash_signatures
 
 
@@ -93,16 +93,6 @@ def token_sort_ratio_udf(a: Column, b: Column) -> Column:
     return fn(F.struct(a.alias("a"), b.alias("b")))
 
 
-def affiliation_replacelist(col: Column) -> Column:
-    """Tier-2 recode: org-name substrings ROR can't resolve → canonical
-    names (mappings.py:332-416), first match in table order."""
-    expr = None
-    for substr, repl in tables.affilation_org_substr_replacelist:
-        cond = col.contains(substr)
-        expr = F.when(cond, F.lit(repl)) if expr is None else expr.when(cond, F.lit(repl))
-    return expr.otherwise(col) if expr is not None else col
-
-
 def link_exact(
     mentions: DataFrame,
     authority: DataFrame,
@@ -139,7 +129,7 @@ def link_fuzzy(
     re-join to mention rows. Returns mentions + auth_cols + `_score`."""
     keys = mentions.select(norm_key(F.col(mention_key)).alias("_mkey")).distinct()
     rows_per_band = num_hashes // bands
-    # explode→groupBy signatures (scale path, see dedup.minhash_signatures)
+    # narrow Arrow signature pass (see dedup.minhash_signatures)
     m_sig = minhash_signatures(keys, "_mkey", "_mkey", num_hashes, shingle_n).select(
         "_mkey",
         F.explode(lsh_bands(F.col("_sig"), bands, rows_per_band)).alias("b"),
@@ -175,46 +165,6 @@ def link_fuzzy(
         .join(F.broadcast(best), "_mkey", "left")
         .drop("_mkey", "_akey")
     )
-
-
-def link_tiered(
-    mentions: DataFrame,
-    authority: DataFrame,
-    mention_key: str,
-    auth_key: str,
-    auth_cols: list[str],
-    threshold: float = 0.5,
-    replacelist=None,
-) -> DataFrame:
-    """exact → replace-list → LSH+verify; first tier that resolves wins.
-    Result column `_tier` ∈ {exact, replaced, fuzzy, null}."""
-    t1 = link_exact(mentions, authority, mention_key, auth_key, auth_cols)
-    matched1 = t1.where(F.col(auth_cols[0]).isNotNull()).withColumn(
-        "_tier", F.lit("exact")
-    )
-    rest1 = t1.where(F.col(auth_cols[0]).isNull()).drop(*auth_cols)
-    if replacelist is not None:
-        rest1 = rest1.withColumn("_recoded", replacelist(F.col(mention_key)))
-        t2 = link_exact(rest1, authority, "_recoded", auth_key, auth_cols)
-        matched2 = (
-            t2.where(F.col(auth_cols[0]).isNotNull())
-            .withColumn("_tier", F.lit("replaced"))
-            .drop("_recoded")
-        )
-        rest2 = t2.where(F.col(auth_cols[0]).isNull()).drop(*auth_cols, "_recoded")
-    else:
-        matched2 = None
-        rest2 = rest1
-    t3 = link_fuzzy(
-        rest2, authority, mention_key, auth_key, auth_cols, threshold=threshold
-    )
-    matched3 = t3.withColumn(
-        "_tier", F.when(F.col(auth_cols[0]).isNotNull(), F.lit("fuzzy"))
-    ).drop("_score")
-    out = matched1.unionByName(matched3)
-    if matched2 is not None:
-        out = out.unionByName(matched2)
-    return out
 
 
 def link_affiliation(

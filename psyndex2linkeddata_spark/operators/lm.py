@@ -25,12 +25,10 @@ Scale design:
 - the target corpus is tokenized once behind a lazy localCheckpoint
   and re-read by the vocab/unigram/bigram aggregations (three uniform-
   key groupBys) — never re-tokenized per consumer.
-- the scoring pass explodes corpus bigrams, maps both slots to vocab
-  via broadcast joins, picks numerator/backoff/denominator with two
-  more broadcast joins, and reduces with ONE doc-keyed decimal sum —
-  the only corpus-sized shuffle, uniform in doc_id. With a huge vocab
-  the model joins degrade gracefully to shuffle joins on w1/(w1,w2);
-  nothing is ever collected to the driver.
+- the model is bounded by construction (V+1 backoff/denominator rows,
+  ≤ (V+1)² seen-bigram rows), so the scoring pass collects it once and
+  scores every document in one narrow mapInArrow kernel — no
+  corpus-sized shuffle.
 - docs with < 2 tokens have no bigram evidence and are passed through
   with NULL mean_nll (callers decide; perplexity_filter keeps them).
 """
@@ -55,22 +53,13 @@ def _bigrams(toks):
     )
 
 
-def lm_mean_nll(
-    docs: DataFrame,
-    model_docs: DataFrame,
-    vocab_size: int = 512,
-    alpha: float = 0.5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    scoring: str = "arrow",
-) -> DataFrame:
-    """(doc_id, n_bigrams, mean_nll): mean negative log-likelihood of
-    each document under the bigram model trained on `model_docs`.
-    mean_nll is exact-decimal-sum / n_bigrams rendered as a double;
-    lower = more target-like. Docs with < 2 tokens get NULL mean_nll.
-    `scoring='native'` selects the all-JVM scoring tail (cross-check;
-    pinned equal to the default Arrow kernel by
-    tests/test_arrow_kernel_parity)."""
+def _lm_model(
+    model_docs: DataFrame, vocab_size: int, alpha: float, text_col: str
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+    """The bigram model trained on `model_docs` as four small tables:
+    (vocab (term), bigram_l (w1, w2, _num_l), backoff_l (w2, _back_l),
+    denom_l (w1, _den_l)) — the log tables as UNSCALED bigints of their
+    decimal(20,10) values."""
     if vocab_size <= 0:
         raise ValueError("vocab_size must be > 0")
     mtoks = model_docs.select(
@@ -165,8 +154,6 @@ def lm_mean_nll(
     # corpus bigram stream, reconstructed exactly for the output (the
     # operators/retrieval pattern; |log| < 10^6 so every cast is exact
     # and a doc's sum stays far inside bigint)
-    from psyndex2linkeddata_spark.operators.retrieval import _unscaled_to_decimal
-
     def _l(c: str):
         return (
             F.col(c).cast("decimal(16,10)") * F.lit(10_000_000_000)
@@ -175,10 +162,26 @@ def lm_mean_nll(
     bigram_l = bigram.select("w1", "w2", _l("l_num").alias("_num_l"))
     backoff_l = backoff.select("w2", _l("l_backoff").alias("_back_l"))
     denom_l = denom.select("w1", _l("l_denom").alias("_den_l"))
-    if scoring == "native":
-        return _lm_score_native(
-            docs, vocab, bigram_l, backoff_l, denom_l, id_col, text_col
-        )
+    return vocab, bigram_l, backoff_l, denom_l
+
+
+def lm_mean_nll(
+    docs: DataFrame,
+    model_docs: DataFrame,
+    vocab_size: int = 512,
+    alpha: float = 0.5,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+) -> DataFrame:
+    """(doc_id, n_bigrams, mean_nll): mean negative log-likelihood of
+    each document under the bigram model trained on `model_docs`.
+    mean_nll is exact-decimal-sum / n_bigrams rendered as a double;
+    lower = more target-like. Docs with < 2 tokens get NULL mean_nll."""
+    from psyndex2linkeddata_spark.operators.retrieval import _unscaled_to_decimal
+
+    vocab, bigram_l, backoff_l, denom_l = _lm_model(
+        model_docs, vocab_size, alpha, text_col
+    )
     # ---- Arrow scoring kernel (r06 second wave) ----
     # The model is bounded by construction (V+1 backoff/denominator
     # rows, ≤ (V+1)² seen-bigram rows — the same bound that lets the
@@ -198,7 +201,8 @@ def lm_mean_nll(
     # batch, and emits ONE row per document. Sums of unscaled bigints
     # are exact; the decimal reconstruction, the double division and the
     # round(…, 4) stay the identical JVM expressions. Pinned equal to
-    # the all-JVM form by tests/test_arrow_kernel_parity.
+    # the all-JVM scoring tail tests/native_twins.lm_score_native by
+    # tests/test_arrow_kernel_parity.
     vocab_terms = [r[0] for r in vocab.collect()]
     vmap = {t.encode(): i for i, t in enumerate(vocab_terms)}
     V1 = len(vocab_terms) + 1  # + <unk>
@@ -299,91 +303,6 @@ def lm_mean_nll(
                 4,
             ),
         ).alias("mean_nll"),
-    )
-
-
-def _lm_score_native(
-    docs: DataFrame,
-    vocab: DataFrame,
-    bigram_l: DataFrame,
-    backoff_l: DataFrame,
-    denom_l: DataFrame,
-    id_col: str,
-    text_col: str,
-) -> DataFrame:
-    """The all-JVM scoring tail (cross-check form of lm_mean_nll's Arrow
-    kernel): interpreted zip_with bigram fan-out, vocab/unk mapping via
-    broadcast joins, unscaled-bigint doc sum, left join back."""
-    from psyndex2linkeddata_spark.operators.retrieval import _unscaled_to_decimal
-
-    dtoks = docs.select(
-        F.col(id_col), tokenize_terms(F.col(text_col)).alias("_toks")
-    )
-    # bigram fan-out without the two pushdown traps (r06): the old
-    # where(size >= 2) pushed a size(tokenize) predicate below the
-    # staging projection (tokenizing every row twice), and the plain
-    # explode added an inferred size(_bigrams)>0 pre-filter that built
-    # the interpreted bigram array twice per row. The when() guard keeps
-    # short docs at an empty array (slice with a negative length would
-    # throw), explode_OUTER triggers no inference, and the null filter
-    # on the generated attribute drops exactly the <2-token docs the old
-    # where() dropped.
-    bg_arr = F.when(
-        F.size("_toks") >= 2, _bigrams(F.col("_toks"))
-    ).otherwise(F.array().cast("array<struct<w1:string,w2:string>>"))
-    dbg = (
-        dtoks.select(id_col, F.explode_outer(bg_arr).alias("bg"))
-        .where(F.col("bg").isNotNull())
-        .select(id_col, F.col("bg.w1").alias("rw1"), F.col("bg.w2").alias("rw2"))
-        .join(
-            F.broadcast(vocab.select(F.col("term").alias("rw1"), F.lit(1).alias("_i1"))),
-            "rw1",
-            "left",
-        )
-        .join(
-            F.broadcast(vocab.select(F.col("term").alias("rw2"), F.lit(1).alias("_i2"))),
-            "rw2",
-            "left",
-        )
-        .select(
-            id_col,
-            F.when(F.col("_i1").isNotNull(), F.col("rw1")).otherwise(F.lit(UNK)).alias("w1"),
-            F.when(F.col("_i2").isNotNull(), F.col("rw2")).otherwise(F.lit(UNK)).alias("w2"),
-        )
-    )
-    scored = (
-        dbg.join(F.broadcast(bigram_l), ["w1", "w2"], "left")
-        .join(F.broadcast(backoff_l), "w2")
-        .join(F.broadcast(denom_l), "w1")
-        .select(
-            id_col,
-            (
-                F.coalesce(F.col("_num_l"), F.col("_back_l")) - F.col("_den_l")
-            ).alias("_lp_l"),
-        )
-        .groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_bigrams"),
-            F.sum("_lp_l").alias("_sum_lp_l"),
-        )
-        .select(
-            id_col,
-            "n_bigrams",
-            F.round(
-                (-_unscaled_to_decimal(F.col("_sum_lp_l")).cast("double"))
-                / F.col("n_bigrams"),
-                4,
-            ).alias("mean_nll"),
-        )
-    )
-    return (
-        docs.select(id_col)
-        .join(scored, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce(F.col("n_bigrams"), F.lit(0)).alias("n_bigrams"),
-            "mean_nll",
-        )
     )
 
 

@@ -32,31 +32,6 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 from psyndex2linkeddata_spark.operators.dedup import norm_text
 
 
-def gram_array(norm: Column, n: int) -> Column:
-    """Word n-grams WITH multiplicity (unlike dedup.shingle_array, which
-    is a set) — DSIR's features are counts. Same codegen-only interleaved
-    construction: offset o strips o leading tokens, then consecutive
-    non-overlapping n-token groups; offsets 0..n-1 yield every
-    overlapping n-gram exactly once. Empty/short texts yield []."""
-    if n == 1:
-        return F.filter(F.split(norm, " "), lambda t: F.length(t) > 0)
-    pat = r"\S+(?: \S+){%d}" % (n - 1)
-    arrs = []
-    for o in range(n):
-        s = F.regexp_replace(norm, r"^(?:\S+ ){%d}" % o, "") if o else norm
-        arrs.append(F.regexp_extract_all(s, F.lit(pat), F.lit(0)))
-    return F.concat(*arrs)
-
-
-def gram_bucket(gram: Column, n_buckets: int) -> Column:
-    """Feature bucket: first 32 md5 bits of the gram, mod n_buckets —
-    DuckDB replays ('0x' || substr(md5(g),1,8))::bigint % B."""
-    return (
-        F.conv(F.substring(F.md5(gram), 1, 8), 16, 10).cast("bigint")
-        % F.lit(n_buckets)
-    ).cast("int")
-
-
 def hashed_ngram_counts(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -64,31 +39,19 @@ def hashed_ngram_counts(
     n_buckets: int = 1024,
     max_n: int = 2,
 ) -> DataFrame:
-    """(id, bucket, cnt): hashed uni..max_n-gram counts per document —
-    dispatches to the Arrow kernel; the explode→groupBy JVM form is kept
-    as `hashed_ngram_counts_native` (cross-check, pinned equal by
-    tests/test_arrow_kernel_parity)."""
-    return _hashed_ngram_counts_arrow(df, id_col, text_col, n_buckets, max_n)
-
-
-def _hashed_ngram_counts_arrow(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_buckets: int = 1024,
-    max_n: int = 2,
-) -> DataFrame:
-    """(id, bucket, cnt) via one mapInArrow kernel over the JVM-staged
-    gram arrays (r06 second Arrow wave — the same
-    dictionary-encode-then-hash-distinct-values shape as the minhash
-    signature kernel).
+    """(id, bucket, cnt): hashed uni..max_n-gram counts per document, via
+    one mapInArrow kernel over the JVM-normalized text (r06 second Arrow
+    wave — the same hash-each-distinct-value-once shape as the minhash
+    signature kernel). A gram's bucket is the first 32 md5 bits of its
+    UTF-8 bytes mod n_buckets — DuckDB replays
+    ('0x' || substr(md5(g),1,8))::bigint % B.
 
     String semantics stay in the JVM (norm_text); the kernel sees UTF-8
     bytes and builds the grams itself as byte slices of the normalized
     text (norm_text is single-space separated, so splitting on the space
-    byte with empties dropped is byte-for-byte the gram_array token run
-    set, and joining n-token windows with b" " reproduces exactly the
-    substrings gram_array extracts — multiplicity preserved). Each
+    byte with empties dropped is byte-for-byte the JVM's `\\S+` token
+    run set, and joining n-token windows with b" " reproduces exactly
+    the n-grams with multiplicity). Each
     DISTINCT gram is bucketed once per task as
     int.from_bytes(md5(bytes)[:4], 'big') % B — byte-identical to the
     JVM's conv(substring(md5(g),1,8),16,10) % B, both the unsigned
@@ -98,8 +61,9 @@ def _hashed_ngram_counts_arrow(
     batch and the (id, bucket) grain is final — the multi-regex gram
     construction, the per-row interpreted conv, the explode, the
     explicit exchange and both aggregations all disappear. Docs with no
-    grams emit nothing, exactly like the explode_outer + isNotNull
-    form."""
+    grams emit nothing. Pinned equal to the explode→groupBy JVM form
+    tests/native_twins.hashed_ngram_counts_native by
+    tests/test_arrow_kernel_parity."""
     import pyarrow as pa
 
     from psyndex2linkeddata_spark.operators.skew import fanout_partitions
@@ -140,10 +104,10 @@ def _hashed_ngram_counts_arrow(
                 if not toks:
                     continue
                 row_buckets = [_bucket(t) for t in toks]
-                # gram_array quirk replicated (see the kernel docstring
-                # note in operators/dedup._minhash_signatures_arrow):
+                # the JVM gram construction's quirk replicated (see
+                # the kernel docstring of dedup.minhash_signatures):
                 # leading-space norm degenerates every offset to offset
-                # 0, and gram_array CONCATS without distinct — n copies
+                # 0, and the grams CONCAT without distinct — n copies
                 # of the stride-n windows
                 leading = nb.startswith(b" ")
                 for n in range(2, max_n + 1):
@@ -179,44 +143,6 @@ def _hashed_ngram_counts_arrow(
 
     return staged.mapInArrow(
         kernel, f"{id_col} {id_t}, bucket int, cnt bigint"
-    )
-
-
-def hashed_ngram_counts_native(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_buckets: int = 1024,
-    max_n: int = 2,
-) -> DataFrame:
-    """(id, bucket, cnt) — the all-JVM form of `hashed_ngram_counts`:
-    one narrow explode over staged gram arrays, one doc-keyed groupBy.
-
-    The explicit doc-keyed exchange (r06) fixes the same AQE blind spot
-    as the bm25 postings build: the (id, bucket) aggregation's exchange
-    was sized from its small map output and coalesced to ~one partition,
-    serializing the feature aggregation; partitioning by the doc id at
-    operator-chosen width ALSO satisfies ClusteredDistribution for this
-    groupBy and for the downstream per-doc weight sum (dsir_weights), so
-    both aggregate exchange-free and in parallel."""
-    norm = norm_text(F.col(text_col))
-    grams = F.concat(*[gram_array(norm, n) for n in range(1, max_n + 1)])
-    from psyndex2linkeddata_spark.operators.skew import fanout_partitions
-
-    n_parts = fanout_partitions(df)
-    # explode_OUTER + an explicit null filter on the exploded ATTRIBUTE
-    # (r06): plain explode makes Catalyst infer a size>0 pre-filter that
-    # re-evaluates the whole multi-regex gram construction per row;
-    # gram_array CAN be empty (short docs), so unlike the shingle sites
-    # the null row must be dropped explicitly — the filter runs on the
-    # generated column and never re-inlines the construction.
-    return (
-        df.select(F.col(id_col), F.explode_outer(grams).alias("_g"))
-        .where(F.col("_g").isNotNull())
-        .select(F.col(id_col), gram_bucket(F.col("_g"), n_buckets).alias("bucket"))
-        .repartition(n_parts, id_col)
-        .groupBy(id_col, "bucket")
-        .agg(F.count("*").alias("cnt"))
     )
 
 

@@ -18,6 +18,14 @@ import hashlib
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+# Decision margin of the gemm kernels (assign_cells,
+# semantic_clusters_arrow): a gemm score decides only when it is more
+# than this far from the decision boundary; closer races are re-decided
+# with the exact sequential double arithmetic of the JVM expressions.
+# BLAS-vs-sequential summation error is ≲1e-12 for unit-scale vectors,
+# orders below the margin.
+_BOUNDARY_EPS = 1e-6
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -346,59 +354,16 @@ def assign_cells(
     crossJoin + interpreted-HOF dot fold that dominated semantic_dedup
     and ivf training (measured 6.2s → sub-second per assignment pass at
     20k × 64-dim × 32 cells). Gate-exactness uses the
-    semantic_pairs_arrow recipe: a row keeps its gemm argmax only when
-    the runner-up is more than `boundary_eps` behind (BLAS-vs-
-    sequential error ≲1e-12, orders below the 1e-6 margin); rows with a
+    semantic_clusters_arrow recipe: a row keeps its gemm argmax only
+    when the runner-up is more than _BOUNDARY_EPS behind; rows with a
     closer race — or any non-finite cosine — are re-decided with the
     exact sequential double arithmetic of the previous JVM expression
     (left-fold dot / sqrt-fold norms, max_by(cos, -cell) semantics
     including NaN-greatest and smallest-cell ties), so the assignment
-    equals the native plan bit-for-bit and stays DuckDB-replayable."""
-    return _assign_cells_arrow(corpus, centroids, id_col, vec_col)
-
-
-def _assign_cells_native(
-    corpus: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """The all-JVM expression form of assign_cells (kept as the
-    cross-check / fallback): broadcast centroids, per-(row, cell) dot
-    fold, max_by(cell, (cos, -cell)) under a groupBy on the unique id.
-    Norms are staged once per side so the per-pair work is only the dot
-    product — bit-identical to cosine(v, cv)."""
-    c = F.broadcast(
-        centroids.select(
-            "cell",
-            F.col("centroid").alias("_cv"),
-            norm(F.col("centroid")).alias("_cn"),
-        )
-    )
-    scored = (
-        corpus.withColumn("_vd", F.col(vec_col).cast("array<double>"))
-        .withColumn("_vn", norm(F.col("_vd")))
-        .crossJoin(c)
-        .withColumn(
-            "_cos", dot(F.col("_vd"), F.col("_cv")) / (F.col("_vn") * F.col("_cn"))
-        )
-    )
-    return scored.groupBy(id_col, vec_col).agg(
-        F.max_by(
-            F.col("cell"), F.struct(F.col("_cos"), (-F.col("cell")).alias("_nc"))
-        ).alias("cell")
-    )
-
-
-def _assign_cells_arrow(
-    corpus: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    boundary_eps: float = 1e-6,
-) -> DataFrame:
-    """Vectorized assign_cells kernel — see assign_cells docstring for
-    the exactness contract."""
+    equals the all-JVM expression plan bit-for-bit and stays
+    DuckDB-replayable (the reference form is
+    tests/native_twins.assign_cells_native, pinned by
+    tests/test_r06_optimizations)."""
     import math
 
     import pandas as pd
@@ -460,7 +425,7 @@ def _assign_cells_arrow(
             chosen = cell_ids[top]
             if s.shape[1] > 1:
                 gap = s[np.arange(len(s)), top] - s[np.arange(len(s)), order[:, 1]]
-                unsure = (gap < boundary_eps) | ~np.isfinite(s).all(axis=1)
+                unsure = (gap < _BOUNDARY_EPS) | ~np.isfinite(s).all(axis=1)
             else:
                 unsure = ~np.isfinite(s[:, 0])
             for i in np.where(unsure)[0]:
@@ -565,7 +530,6 @@ def semantic_dedup(
     centroids: DataFrame | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    scorer: str = "arrow",
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): quantize the corpus into IVF cells, find
@@ -579,26 +543,20 @@ def semantic_dedup(
 
     Scale shape: the quadratic part is confined to cells (the paper's
     own approximation — cross-cell near-dups are deliberately missed, so
-    recall is tuned by n_cells): the pair join shuffles on `cell`, and a
-    cell of k vectors contributes k² candidate rows — size n_cells so
-    that corpus/n_cells stays bounded (SemDeDup uses ~0.1% of corpus
-    size). Centroid training is the deterministic exact-decimal Lloyd
-    step of ivf_centroids (broadcast centroids, narrow assignment);
-    pass a precomputed `centroids` table to amortize across corpus
-    slices. The closure runs over above-threshold pairs only.
+    recall is tuned by n_cells): the per-cell kernel groups on `cell`,
+    and a cell of k vectors costs a k×k gemm — size n_cells so that
+    corpus/n_cells stays bounded (SemDeDup uses ~0.1% of corpus size).
+    Centroid training is the deterministic exact-decimal Lloyd step of
+    ivf_centroids (broadcast centroids, narrow assignment); pass a
+    precomputed `centroids` table to amortize across corpus slices.
 
-    scorer='arrow' (default) runs the quadratic stage as the per-cell
-    numpy matmul kernel (semantic_pairs_arrow) — the deployment path at
-    real cell sizes, and gate-exact: threshold-boundary pairs are
-    re-decided with the native scorer's exact sequential arithmetic, so
-    the pair set equals scorer='native' (the all-JVM expression path,
-    kept as the cross-check) bit-for-bit."""
-    from psyndex2linkeddata_spark.operators.components import connected_components
-
-    if scorer not in ("native", "arrow"):
-        raise ValueError(
-            f"scorer must be 'native' or 'arrow', got {scorer!r}"
-        )
+    The pair scoring and the closure run in one per-cell kernel
+    (semantic_clusters_arrow). It is gate-exact: threshold-boundary
+    pairs are re-decided with the JVM expression's sequential
+    arithmetic, so the result equals the all-JVM pairs →
+    connected_components form tests/native_twins.semantic_dedup_native
+    bit-for-bit (pinned by tests/test_arrow_kernel_parity and
+    tests/test_operators)."""
     if centroids is None:
         centroids = ivf_centroids(
             corpus, n_cells, refine_iters=refine_iters, id_col=id_col, vec_col=vec_col
@@ -615,12 +573,8 @@ def semantic_dedup(
             norm(F.col("centroid")).alias("_cn"),
         )
     )
-    # per-row norm staged ONCE: the pair predicate then evaluates only the
-    # dot product — dot/(na·nb) is the exact same double arithmetic as
-    # cosine(va, vb) (norms are per-vector values), at a third of the
-    # interpreted-HOF traversals per candidate pair (the quadratic part);
-    # the centroid norm is likewise staged in the broadcast dim, not
-    # refolded per corpus row
+    # the centroid norm is staged in the broadcast dim, not refolded per
+    # corpus row
     withc = assigned.join(c, "cell").select(
         F.col(id_col),
         F.col(vec_col).cast("array<double>").alias(vec_col),
@@ -629,59 +583,21 @@ def semantic_dedup(
             dot(F.col(vec_col).cast("array<double>"), F.col("_cv"))
             / (norm(F.col(vec_col).cast("array<double>")) * F.col("_cn"))
         ).alias("_ccos"),
-        norm(F.col(vec_col).cast("array<double>")).alias("_nrm"),
     )
-    # the assignment table feeds BOTH pair sides, the cluster join and the
-    # keeper fold — materialize it once (this is also the deployment
-    # shape: SemDeDup stores the cluster-assignment table and runs the
-    # per-cell pass over it, rather than re-quantizing per consumer)
+    # the assignment table feeds the per-cell kernel and the keeper fold —
+    # materialize it once (this is also the deployment shape: SemDeDup
+    # stores the cluster-assignment table and runs the per-cell pass over
+    # it, rather than re-quantizing per consumer)
     withc = withc.localCheckpoint(eager=True)
-    a = withc.select(
-        F.col("cell"),
-        F.col(id_col).alias("_ida"),
-        F.col(vec_col).alias("_va"),
-        F.col("_nrm").alias("_na"),
-    )
-    b = withc.select(
-        F.col("cell"),
-        F.col(id_col).alias("_idb"),
-        F.col(vec_col).alias("_vb"),
-        F.col("_nrm").alias("_nb"),
-    )
-    if scorer == "arrow":
-        # Fused cluster kernel (r06 second wave): the pair graph is
-        # CELL-CONFINED by construction (a vector belongs to exactly one
-        # cell and pairs only form within cells), so connected
-        # components can never span cells — the transitive closure is
-        # computed inside the same per-cell kernel that scores the
-        # pairs (semantic_clusters_arrow: the gate-exact gemm +
-        # boundary re-decide of semantic_pairs_arrow, then a local
-        # union-find whose labels are the component minima by id
-        # value). The 7.9M-pair table, its checkpoint and the whole
-        # distributed closure disappear; cluster ids are identical (min
-        # member id per component — algorithm-independent). The native
-        # scorer path below keeps the pairs→connected_components shape
-        # as the engine-replayable cross-check the oracle gates.
-        cl = semantic_clusters_arrow(withc, threshold, id_col, vec_col)
-    else:
-        pairs = (
-            a.join(b, ["cell"])
-            .where(F.col("_ida") < F.col("_idb"))
-            .where(
-                dot(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb"))
-                >= F.lit(threshold)
-            )
-            .select(F.col("_ida").alias("id_a"), F.col("_idb").alias("id_b"))
-        )
-        comp = connected_components(pairs, src="id_a", dst="id_b")
-        cl = (
-            withc.join(comp, F.col(id_col) == F.col("node"), "left")
-            .select(
-                F.col(id_col),
-                F.coalesce(F.col("component"), F.col(id_col)).alias("cluster_id"),
-                F.col("_ccos"),
-            )
-        )
+    # Fused cluster kernel (r06 second wave): the pair graph is
+    # CELL-CONFINED by construction (a vector belongs to exactly one cell
+    # and pairs only form within cells), so connected components can
+    # never span cells — the transitive closure is computed inside the
+    # same per-cell kernel that scores the pairs. The 7.9M-pair table,
+    # its checkpoint and the whole distributed closure disappear; cluster
+    # ids are identical (min member id per component —
+    # algorithm-independent).
+    cl = semantic_clusters_arrow(withc, threshold, id_col, vec_col)
     keep = cl.groupBy("cluster_id").agg(
         F.min_by(F.col(id_col), F.struct(F.col("_ccos"), F.col(id_col))).alias(
             "canonical_id"
@@ -695,38 +611,45 @@ def semantic_dedup(
     )
 
 
-def semantic_pairs_arrow(
+def semantic_clusters_arrow(
     withc: DataFrame,
     threshold: float,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    boundary_eps: float = 1e-6,
 ) -> DataFrame:
-    """Within-cell pair scoring as ONE vectorized numpy matmul per cell
-    (applyInPandas over groupBy(cell)) — the scale path for
-    semantic_dedup's quadratic stage: per cell of k vectors the candidate
-    scoring is a k×k BLAS gemm on normalized rows instead of k²
-    interpreted HOF folds (isolated pair-stage measurement at 64 cells ×
-    600 × 64-dim, identical 11.5M-pair output: 8.7s vs 87.3s cold, 4.3s
-    vs 5.8s warm on this quota-drifting host — the gemm's advantage
-    widens with cell size and dims since the HOF fold is interpreted per
-    element). Memory is k·dims per task, bounded by cell sizing.
+    """(id, cluster_id, _ccos) per vector — semantic_dedup's quadratic
+    stage AND its transitive closure fused into one per-cell kernel
+    (applyInPandas over groupBy(cell); r06 second wave).
 
-    Pair sets are EXACTLY the native scorer's: the gemm decides only
-    pairs whose cosine is more than `boundary_eps` from the threshold
-    (BLAS-vs-sequential summation error is ≲1e-12 for unit-scale
-    vectors, orders below the 1e-6 margin); the few boundary pairs are
-    re-decided with the identical sequential double arithmetic the
-    native scorer evaluates (left-fold dot / (sqrt-fold norms)), so the
+    Pair scoring is ONE numpy gemm per cell on normalized rows instead
+    of k² interpreted HOF folds (isolated pair-stage measurement at 64
+    cells × 600 × 64-dim, identical 11.5M-pair output: 8.7s vs 87.3s
+    cold, 4.3s vs 5.8s warm on a quota-drifting host — the gemm's
+    advantage widens with cell size and dims since the HOF fold is
+    interpreted per element). Memory is k·dims per task, bounded by
+    cell sizing.
+
+    Pair decisions are EXACTLY the JVM expression's
+    dot(va, vb) / (norm(va)·norm(vb)) ≥ threshold: the gemm decides only
+    pairs whose cosine is more than _BOUNDARY_EPS from the threshold;
+    the few boundary pairs are re-decided with the identical sequential
+    double arithmetic (left-fold dot / (sqrt-fold norms)), so the
     keep/drop bit matches the JVM expression — and the DuckDB oracle —
-    bit-for-bit. That makes this kernel gate-exact, not just
-    approximately equal, and it is both the deployment path and the
-    oracle-gated driver path."""
+    bit-for-bit (pinned by tests/test_operators against the all-JVM
+    reference in tests/native_twins). The exact closure kernel shared
+    with connected_components (components._min_label_closure, over
+    id-value ranks) then labels each vector with its component's
+    MINIMUM member id. Valid because the pair graph is cell-confined by
+    construction — a vector belongs to exactly one cell, so no component
+    spans cells and the per-cell closure IS the global closure. _ccos
+    passes through so the keeper fold needs no join back."""
+    import math
+
     import pandas as pd
 
-    def _pairs(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        import math
+    from psyndex2linkeddata_spark.operators.components import _min_label_closure
 
+    def _clusters(pdf: "pd.DataFrame") -> "pd.DataFrame":
         import numpy as np
 
         ids = pdf[id_col].to_numpy()
@@ -735,15 +658,13 @@ def semantic_pairs_arrow(
         with np.errstate(divide="ignore", invalid="ignore"):
             u = m / nrm
         s = u @ u.T
-        # candidates include the boundary band; pairs clearly above
-        # threshold keep on the gemm score alone
-        ia, ib = np.where(np.triu(s >= threshold - boundary_eps, k=1))
-        sure = s[ia, ib] >= threshold + boundary_eps
+        ia, ib = np.where(np.triu(s >= threshold - _BOUNDARY_EPS, k=1))
+        sure = s[ia, ib] >= threshold + _BOUNDARY_EPS
         border = ~sure
         if border.any():
-            rows = m  # raw (un-normalized) vectors, as the native scorer sees them
+            rows = m  # raw (un-normalized) vectors, as the JVM sees them
 
-            def _native_keep(i: int, j: int) -> bool:
+            def _exact_keep(i: int, j: int) -> bool:
                 # exact replay of the JVM expression: sequential
                 # left-fold dot and sum-of-squares, then one division —
                 # every intermediate a double op in the same order
@@ -761,78 +682,7 @@ def semantic_pairs_arrow(
 
             keep = sure.copy()
             for n in np.where(border)[0]:
-                keep[n] = _native_keep(int(ia[n]), int(ib[n]))
-            ia, ib = ia[keep], ib[keep]
-        a, b = ids[ia], ids[ib]
-        lo, hi = np.minimum(a, b), np.maximum(a, b)
-        return pd.DataFrame({"id_a": lo, "id_b": hi})
-
-    # pair schema follows the caller's id column type (the native scorer
-    # is type-agnostic; hardcoding bigint here silently miscast other
-    # id types)
-    id_t = withc.schema[id_col].dataType.simpleString()
-    return withc.groupBy("cell").applyInPandas(
-        _pairs, f"id_a {id_t}, id_b {id_t}"
-    )
-
-
-def semantic_clusters_arrow(
-    withc: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    boundary_eps: float = 1e-6,
-) -> DataFrame:
-    """(id, cluster_id, _ccos) per vector — semantic_dedup's quadratic
-    stage AND its transitive closure fused into the per-cell kernel
-    (r06 second wave). Pair decisions are exactly
-    semantic_pairs_arrow's (gemm scores; boundary-band pairs re-decided
-    with the native scorer's sequential double arithmetic — pinned
-    equal by tests/test_operators and the oracle); the exact closure
-    kernel shared with connected_components
-    (components._min_label_closure, over id-value ranks) then labels
-    each vector with its component's MINIMUM member id. Valid because
-    the pair graph is cell-confined by construction — a vector belongs
-    to exactly one cell, so no component spans cells and the per-cell
-    closure IS the global closure. _ccos passes through so the keeper
-    fold needs no join back."""
-    import math
-
-    import pandas as pd
-
-    from psyndex2linkeddata_spark.operators.components import _min_label_closure
-
-    def _clusters(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        import numpy as np
-
-        ids = pdf[id_col].to_numpy()
-        m = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-        nrm = np.linalg.norm(m, axis=1, keepdims=True)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            u = m / nrm
-        s = u @ u.T
-        ia, ib = np.where(np.triu(s >= threshold - boundary_eps, k=1))
-        sure = s[ia, ib] >= threshold + boundary_eps
-        border = ~sure
-        if border.any():
-            rows = m
-
-            def _native_keep(i: int, j: int) -> bool:
-                va, vb = rows[i], rows[j]
-                acc = 0.0
-                na = 0.0
-                nb = 0.0
-                for k in range(va.shape[0]):
-                    x = float(va[k])
-                    y = float(vb[k])
-                    acc = acc + x * y
-                    na = na + x * x
-                    nb = nb + y * y
-                return acc / (math.sqrt(na) * math.sqrt(nb)) >= threshold
-
-            keep = sure.copy()
-            for n in np.where(border)[0]:
-                keep[n] = _native_keep(int(ia[n]), int(ib[n]))
+                keep[n] = _exact_keep(int(ia[n]), int(ib[n]))
             ia, ib = ia[keep], ib[keep]
         n_rows = len(ids)
         order = np.argsort(ids, kind="stable")

@@ -105,17 +105,6 @@ def pages_schema() -> T.StructType:
     )
 
 
-def record_schema() -> T.StructType:
-    """Fixed record StructType: scalars string, repeated array<string>."""
-    fields = [T.StructField("url", T.StringType(), False)]
-    fields += [T.StructField(f, T.StringType(), True) for f in SCALAR_FIELDS]
-    fields += [
-        T.StructField(f, T.ArrayType(T.StringType(), True), True)
-        for f in REPEATED_FIELDS
-    ]
-    return T.StructType(fields)
-
-
 def triples_schema() -> T.StructType:
     """Output atom: (subj, pred, obj) + literal metadata.
 

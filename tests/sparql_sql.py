@@ -14,6 +14,7 @@ CORRECTNESS gate uses for every other operator.
 The FILTER strings plans.sparql produces are engine-portable Spark SQL;
 the only dialect seams are backtick quoting (→ double quotes) and
 ``regexp_like`` (→ DuckDB ``regexp_matches`` — both are partial-match).
+Only the DuckDB reference checks use it, so it lives with the tests.
 """
 
 from __future__ import annotations

@@ -1,10 +1,11 @@
 """r06 second Arrow wave: the dictionary-encode-then-hash-distinct
 kernels (minhash signatures, simhash vote table, DSIR hashed n-gram
-counts) must equal their all-JVM cross-check forms BIT-FOR-BIT — the
-kernels only reproduce byte arithmetic (md5 over the JVM-built strings'
-UTF-8 bytes, integer vote sums, fixed-width hex minima); every string
-semantic (lowercase, tokenization, shingling) stays a Catalyst
-expression upstream of the kernel."""
+counts, ...) must equal their all-JVM cross-check forms BIT-FOR-BIT —
+the kernels only reproduce byte arithmetic (md5 over the JVM-built
+strings' UTF-8 bytes, integer vote sums, fixed-width hex minima); every
+string semantic (lowercase, tokenization, shingling) stays a Catalyst
+expression upstream of the kernel. The JVM forms live in
+tests/native_twins.py."""
 
 from __future__ import annotations
 
@@ -12,15 +13,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from psyndex2linkeddata_spark.operators.dedup import (
-    _minhash_signatures_arrow,
-    _simhash_hex_table_arrow,
-    minhash_signatures_native,
-    simhash_hex_table_native,
+    minhash_signatures,
+    simhash_hex_table,
 )
-from psyndex2linkeddata_spark.operators.selection import (
-    _hashed_ngram_counts_arrow,
-    hashed_ngram_counts_native,
-)
+from psyndex2linkeddata_spark.operators.selection import hashed_ngram_counts
+from tests import native_twins
 
 EDGES = [
     (900001, ""),
@@ -58,8 +55,8 @@ def corpus(spark):
 
 @pytest.mark.parametrize("num_hashes,n", [(8, 3), (16, 3), (8, 5)])
 def test_minhash_signatures_arrow_matches_native(corpus, num_hashes, n):
-    a = _minhash_signatures_arrow(corpus, num_hashes=num_hashes, n=n)
-    b = minhash_signatures_native(corpus, num_hashes=num_hashes, n=n)
+    a = minhash_signatures(corpus, num_hashes=num_hashes, n=n)
+    b = native_twins.minhash_signatures_native(corpus, num_hashes=num_hashes, n=n)
     j = a.withColumnRenamed("_sig", "sa").join(
         b.withColumnRenamed("_sig", "sb"), "doc_id", "full"
     )
@@ -71,8 +68,10 @@ def test_minhash_signatures_arrow_matches_native(corpus, num_hashes, n):
 
 
 def test_simhash_hex_arrow_matches_native(corpus):
-    a = _simhash_hex_table_arrow(corpus).withColumnRenamed("simhash", "sa")
-    b = simhash_hex_table_native(corpus).withColumnRenamed("simhash", "sb")
+    a = simhash_hex_table(corpus).withColumnRenamed("simhash", "sa")
+    b = native_twins.simhash_hex_table_native(corpus).withColumnRenamed(
+        "simhash", "sb"
+    )
     j = a.join(b, "doc_id", "full")
     bad = j.where(
         F.col("sa").isNull() | F.col("sb").isNull() | (F.col("sa") != F.col("sb"))
@@ -82,19 +81,20 @@ def test_simhash_hex_arrow_matches_native(corpus):
 
 
 def test_hashed_ngram_counts_arrow_matches_native(corpus):
-    a = _hashed_ngram_counts_arrow(corpus, n_buckets=256, max_n=2)
-    b = hashed_ngram_counts_native(corpus, n_buckets=256, max_n=2)
+    a = hashed_ngram_counts(corpus, n_buckets=256, max_n=2)
+    b = native_twins.hashed_ngram_counts_native(corpus, n_buckets=256, max_n=2)
     assert a.exceptAll(b).count() == 0
     assert b.exceptAll(a).count() == 0
     assert a.count() == b.count()
 
 
 def test_lm_scoring_kernel_matches_native(corpus):
-    from psyndex2linkeddata_spark.operators.lm import lm_mean_nll
+    from psyndex2linkeddata_spark.operators.lm import _lm_model, lm_mean_nll
 
     model = corpus.where(F.col("doc_id") % 7 == 0)
     a = lm_mean_nll(corpus, model, vocab_size=16, alpha=0.5)
-    b = lm_mean_nll(corpus, model, vocab_size=16, alpha=0.5, scoring="native")
+    tables = _lm_model(model, vocab_size=16, alpha=0.5, text_col="text")
+    b = native_twins.lm_score_native(corpus, *tables, "doc_id", "text")
     assert a.exceptAll(b).count() == 0
     assert b.exceptAll(a).count() == 0
     assert a.count() == corpus.count()
@@ -249,26 +249,20 @@ def test_connected_components_fallback_raises_unconverged(spark, monkeypatch):
 
 @pytest.mark.parametrize("k,divisor", [(3, 8), (2, 5)])
 def test_cdc_chunks_kernel_matches_native(corpus, k, divisor):
-    from psyndex2linkeddata_spark.operators.chunking import (
-        cdc_chunks,
-        cdc_chunks_native,
-    )
+    from psyndex2linkeddata_spark.operators.chunking import cdc_chunks
 
     a = cdc_chunks(corpus, k=k, divisor=divisor)
-    b = cdc_chunks_native(corpus, k=k, divisor=divisor)
+    b = native_twins.cdc_chunks_native(corpus, k=k, divisor=divisor)
     assert a.exceptAll(b).count() == 0
     assert b.exceptAll(a).count() == 0
     assert a.count() == b.count() > 0
 
 
 def test_repetition_stats_kernel_matches_native(corpus):
-    from psyndex2linkeddata_spark.functions.textstats import (
-        repetition_stats,
-        repetition_stats_native,
-    )
+    from psyndex2linkeddata_spark.functions.textstats import repetition_stats
 
     a = repetition_stats(corpus)
-    b = repetition_stats_native(corpus)
+    b = native_twins.repetition_stats_native(corpus)
     assert a.exceptAll(b).count() == 0
     assert b.exceptAll(a).count() == 0
     assert a.count() == corpus.count()
@@ -290,13 +284,10 @@ def test_contaminated_ids_kernel_matches_native(corpus, n):
 
 
 def test_with_top_bigram_frac_kernel_matches_native(corpus):
-    from psyndex2linkeddata_spark.functions.textstats import (
-        with_top_bigram_frac,
-        with_top_bigram_frac_native,
-    )
+    from psyndex2linkeddata_spark.functions.textstats import with_top_bigram_frac
 
     a = with_top_bigram_frac(corpus)
-    b = with_top_bigram_frac_native(corpus)
+    b = native_twins.with_top_bigram_frac_native(corpus)
     assert a.exceptAll(b).count() == 0
     assert b.exceptAll(a).count() == 0
     assert a.columns == b.columns
@@ -348,8 +339,8 @@ def test_semantic_cluster_kernel_matches_native_scorer(spark):
         rows, "vec_id long, embedding array<float>, label int"
     ).repartition(5)
     a = semantic_dedup(e, n_cells=8, threshold=0.9, refine_iters=1)
-    b = semantic_dedup(
-        e, n_cells=8, threshold=0.9, refine_iters=1, scorer="native"
+    b = native_twins.semantic_dedup_native(
+        e, n_cells=8, threshold=0.9, refine_iters=1
     )
     assert a.exceptAll(b).count() == 0
     assert b.exceptAll(a).count() == 0

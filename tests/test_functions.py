@@ -1,5 +1,8 @@
 """Scalar-function library (F1–F29 subset) vs pure-Python reference oracles,
-driven by the reference's own fixture corpora (tests/data/fx_*.json)."""
+driven by the reference's own fixture corpora (tests/data/fx_*.json).
+
+Field functions that exist only in the Arrow emit kernel are tested on
+the kernel's own pure-Python functions (emit/arrow.py), without Spark."""
 
 from __future__ import annotations
 
@@ -11,7 +14,9 @@ import pytest
 from pyspark.sql import Row, functions as F
 
 from psyndex2linkeddata_spark.data.tables import dd_codes
-from psyndex2linkeddata_spark.functions import cleaning, grants, instance_fields, lang, licenses, names, text, trials, urls
+from psyndex2linkeddata_spark.emit import arrow as A
+from psyndex2linkeddata_spark.functions import cleaning, grants, instance_fields, lang, names, trials, urls
+from psyndex2linkeddata_spark.functions.text import _title_one
 from tests import oracles
 
 DATA = os.path.join(os.path.dirname(__file__), "data")
@@ -81,31 +86,25 @@ def test_check_for_url_or_doi_on_rplic_corpus(spark):
         assert (g.r.value, g.r.type) == w, s
 
 
-def test_split_pages_variants(spark):
+def test_split_pages_variants():
     variants = [
         "i-iii", "E14-E23", "B97-B109", "S389-S405", "F1-F9", "I/117-I/129",
         "e12655", "e66", "Art. 1", "5-19", "122", "Insgesamt 162",
         "No. e94617", "tgaa050", "No. 000010151520210111", "No. 310", "No. 2",
         "No e99675", "1-10",
     ]
-    df = corpus_df(spark, variants)
-    got = df.select(instance_fields.split_pages(F.col("s")).alias("p")).collect()
-    for row, s in zip(got, variants):
-        assert (
-            row.p.page_start, row.p.page_end, row.p.extent, row.p.article_number
-        ) == oracles.split_pages(s), s
+    for s in variants:
+        assert A.split_pages_f(s) == oracles.split_pages(s), s
 
 
-def test_split_series_variants(spark):
+def test_split_series_variants():
     variants = [
         "UTB, Band 5591", "essentials", "Psychologie Kompakt, Vol. 12",
         "Tests und Trends, 19", "Reihe ohne Band, irgendwas",
         "Schriftenreihe, Band 3 mit Zusatz",
     ]
-    df = corpus_df(spark, variants)
-    got = df.select(instance_fields.split_series(F.col("s")).alias("p")).collect()
-    for row, s in zip(got, variants):
-        assert (row.p.series_title, row.p.series_volume) == oracles.split_series(s), s
+    for s in variants:
+        assert A.split_series_f(s) == oracles.split_series(s), s
 
 
 def test_issn_email_orcid(spark):
@@ -122,14 +121,12 @@ def test_issn_email_orcid(spark):
     assert got[3] == ("123-456", False)
     assert got[4] == ("2190-622X", True)
 
-    df = corpus_df(spark, ["a.b @ uni.de", "not an email", "x y@z.org"])
-    got = [r[0] for r in df.select(instance_fields.clean_email(F.col("s"))).collect()]
+    got = [A.clean_email(s) for s in ["a.b @ uni.de", "not an email", "x y@z.org"]]
     assert got == ["a.b@uni.de", None, "x_y@z.org"]
 
-    df = corpus_df(spark, [
+    got = [A.clean_orcid(s) for s in [
         "https://orcid.org/0000-0002-5803-9923", "0000-0002-0004-784X", "junk",
-    ])
-    got = [r[0] for r in df.select(instance_fields.clean_orcid(F.col("s"))).collect()]
+    ]]
     assert got == ["0000-0002-5803-9923", "0000-0002-0004-784X", None]
 
 
@@ -139,9 +136,9 @@ def test_langtags(spark):
         "Silent": ("zxx", "zxx"), "Klingon": ("und", "und"), "Deutsch": ("de", "ger"),
     }
     df = corpus_df(spark, list(cases))
-    got = df.select(F.col("s"), lang.langtag2(F.col("s")), lang.langtag3(F.col("s"))).collect()
-    for s, t2, t3 in got:
-        assert (t2, t3) == cases[s]
+    got = df.select(F.col("s"), lang.langtag3(F.col("s"))).collect()
+    for s, t3 in got:
+        assert (A.langtag2(s), t3) == cases[s]
 
 
 def test_guess_language_heuristic(spark):
@@ -171,33 +168,28 @@ def test_lang_id_ngram_profiles(spark):
     assert got == ["en", "de", "fr", "es", "it", "nl", "und", "und"]
 
 
-def test_camel_case(spark):
-    df = corpus_df(spark, ["Preschool Age", "school-age", "Very Old", "adulthood"])
-    got = [r[0] for r in df.select(text.camel_case(F.col("s"))).collect()]
+def test_camel_case():
+    got = [A.camel_case(s) for s in ["Preschool Age", "school-age", "Very Old", "adulthood"]]
     assert got == ["preschoolAge", "schoolAge", "veryOld", "adulthood"]
 
 
-def test_title_casing_and_names(spark):
-    df = corpus_df(spark, ["der einfluss von achtsamkeit", "WHO report for DSM-IV"])
-    got = [r[0] for r in df.select(text.title_except(F.col("s"))).collect()]
+def test_title_casing_and_names():
+    got = [_title_one(s) for s in ["der einfluss von achtsamkeit", "WHO report for DSM-IV"]]
     assert got == ["Der Einfluss von Achtsamkeit", "WHO Report for DSM-IV"]
 
-    df = corpus_df(spark, ["Müller, Thomas", "Einname", "von Humboldt, Alexander"])
-    got = df.select(
-        names.family_name(F.col("s")),
-        names.given_name(F.col("s")),
-        names.normalize_name(names.family_name(F.col("s")), names.given_name(F.col("s"))),
-    ).collect()
-    assert tuple(got[0]) == ("Müller", "Thomas", "Mueller, T.")
+    got = [
+        (A.family_name(s), A.given_name(s))
+        for s in ["Müller, Thomas", "Einname", "von Humboldt, Alexander"]
+    ]
+    assert got[0] == ("Müller", "Thomas")
     # no comma → given '' (reference contributions.py:291-303 emits the
     # empty-string givenName literal from its except branch)
-    assert tuple(got[1]) == ("Einname", "", "Einname")
-    assert tuple(got[2]) == ("von Humboldt", "Alexander", "von Humboldt, A.")
+    assert got[1] == ("Einname", "")
+    assert got[2] == ("von Humboldt", "Alexander")
 
 
-def test_country_fixes(spark):
-    df = corpus_df(spark, ["COSTA", "CZECH", "PEOPLES", "Germany"])
-    got = [r[0] for r in df.select(names.sanitize_country_name(F.col("s"))).collect()]
+def test_country_fixes():
+    got = [A.sanitize_country_name(s) for s in ["COSTA", "CZECH", "PEOPLES", "Germany"]]
     assert got == ["Costa Rica", "Czech Republic", "People's Republic of China", "Germany"]
 
 
@@ -216,25 +208,22 @@ def test_trial_numbers(spark):
     assert got[2] == []
 
 
-def test_license_uri(spark):
-    df = spark.createDataFrame(
-        [
-            Row(c="CC BY 4.0", d=None),
-            Row(c="PUBL", d=None),
-            Row(c="XYZ", d="Volles Urheberrecht des Verlags bla"),
-            Row(c="Hogrefe OpenMind Lizenz", d=None),
-            Row(c="Exclusive Springer something", d=None),
-            Row(c="nonsense", d=None),
-        ]
-    )
-    got = [r[0] for r in df.select(licenses.license_uri(F.col("c"), F.col("d"))).collect()]
+def test_license_uri():
+    cases = [
+        ("CC BY 4.0", None),
+        ("PUBL", None),
+        ("XYZ", "Volles Urheberrecht des Verlags bla"),
+        ("Hogrefe OpenMind Lizenz", None),
+        ("Exclusive Springer something", None),
+        ("nonsense", None),
+    ]
+    got = [A.license_uri(c, d) for c, d in cases]
     L = "https://w3id.org/zpid/vocabs/licenses/"
     assert got == [L + "CC_BY_4_0", L + "PUBL", L + "PUBL", L + "HogrefeOpenMind", L + "ExclusiveSpringer", None]
 
 
 def test_grant_split_and_funder_canonicalization(spark):
-    df = corpus_df(spark, ["12345, 67890 and 13579", "1 und 2", "77 & 88; 99"])
-    got = [r[0] for r in df.select(grants.split_grant_numbers(F.col("s"))).collect()]
+    got = [A.split_grant_numbers(s) for s in ["12345, 67890 and 13579", "1 und 2", "77 & 88; 99"]]
     assert got == [["12345", "67890", "13579"], ["1", "2"], ["77", "88", "99"]]
 
     df = corpus_df(spark, ["DFG", "German Research Council", "Unknown Funder e.V."])
@@ -243,45 +232,44 @@ def test_grant_split_and_funder_canonicalization(spark):
     assert out[1] == "Deutsche Forschungsgemeinschaft (DFG)"
     assert out[2] == "Unknown Funder e.V."
 
-    df = corpus_df(spark, ["Open Access funding via Projekt DEAL", "DFG grant"])
-    got = [r[0] for r in df.select(grants.is_grant_noise(F.col("s"))).collect()]
+    got = [A.is_grant_noise(s) for s in ["Open Access funding via Projekt DEAL", "DFG grant"]]
     assert got == [True, False]
 
 
-def test_abstract_splits(spark):
-    df = corpus_df(spark, [
+def test_abstract_splits():
+    # split_toc -> (abstract, toc, toc_is_url)
+    got = [A.split_toc(s) for s in [
         "Body text here. - Contents: 1. Intro 2. Methods",
         "Plain abstract without toc.",
         "Ein Abstract. – Inhalt: https://example.org/toc.pdf",
-    ])
-    got = df.select(text.split_toc(F.col("s")).alias("t")).collect()
-    assert got[0].t.abstract == "Body text here." and got[0].t.toc.startswith("1. Intro")
-    assert got[1].t.toc is None
-    assert got[2].t.toc_is_url is True
+    ]]
+    assert got[0][0] == "Body text here." and got[0][1].startswith("1. Intro")
+    assert got[1][1] is None
+    assert got[2][2] is True
 
-    df = corpus_df(spark, [
+    # split_licensing_note -> (abstract, note)
+    got = [A.split_licensing_note(s) for s in [
         "Abstract body. (translated by DeepL)",
         "Abstract body. (c) 2022 Hogrefe",
         "List (b) item then (c) something",
         "No note at all",
-    ])
-    got = df.select(text.split_licensing_note(F.col("s")).alias("t")).collect()
-    assert got[0].t.note == "translated by DeepL" and got[0].t.abstract == "Abstract body."
-    assert got[1].t.note == "(c) 2022 Hogrefe" and got[1].t.abstract == "Abstract body."
-    assert got[2].t.note is None
-    assert got[3].t.note is None and got[3].t.abstract == "No note at all"
+    ]]
+    assert got[0] == ("Abstract body.", "translated by DeepL")
+    assert got[1] == ("Abstract body.", "(c) 2022 Hogrefe")
+    assert got[2][1] is None
+    assert got[3] == ("No note at all", None)
 
 
-def test_translated_title(spark):
-    df = corpus_df(spark, [
+def test_translated_title():
+    # parse_translated_title -> (title, lang_name, origin)
+    got = [A.parse_translated_title(s) for s in [
         "Elektrophysiologischer Datensatz. (DeepL) |s German",
         "A plain translated title |s English",
         "No subfield at all",
-    ])
-    got = df.select(text.parse_translated_title(F.col("s")).alias("t")).collect()
-    assert got[0].t.title == "Elektrophysiologischer Datensatz." and got[0].t.lang_name == "German" and got[0].t.origin == "DeepL"
-    assert got[1].t.title == "A plain translated title" and got[1].t.lang_name == "English" and got[1].t.origin is None
-    assert got[2].t.title == "No subfield at all" and got[2].t.lang_name is None
+    ]]
+    assert got[0] == ("Elektrophysiologischer Datensatz.", "German", "DeepL")
+    assert got[1] == ("A plain translated title", "English", None)
+    assert got[2][:2] == ("No subfield at all", None)
 
 
 def test_annif_stub_fixed_codes():

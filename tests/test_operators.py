@@ -67,7 +67,7 @@ def test_ngram_jaccard_exact_values(spark, docs):
 
 
 def test_simhash_identical_for_dups(spark, docs):
-    rows = {r.doc_id: r.sh for r in docs.select("doc_id", dedup.simhash_hex(F.col("text")).alias("sh")).collect()}
+    rows = {r.doc_id: r.simhash for r in dedup.simhash_hex_table(docs).collect()}
     assert rows[1] == rows[2]
     assert len(rows[1]) == 32 and set(rows[1]) <= {"0", "1"}
     # bag-identical docs (same tokens, different order) hash identically
@@ -505,11 +505,13 @@ def test_semantic_dedup_keeper_rule(spark):
     assert got[4] == (4, 4, True)
 
 
-def test_semantic_pairs_arrow_matches_native_on_boundary(spark):
-    """The arrow (numpy gemm) pair scorer must produce EXACTLY the
-    native JVM-expression scorer's pair set — including pairs whose
-    cosine sits at or within float-summation error of the threshold,
-    which the kernel re-decides with the native sequential arithmetic.
+def test_semantic_dedup_matches_native_on_boundary(spark):
+    """semantic_dedup's per-cell kernel (numpy gemm pair scoring plus
+    the local closure) must produce EXACTLY the all-JVM reference's
+    clusters (tests/native_twins.semantic_dedup_native: JVM cosine pair
+    predicate → connected_components) — including pairs whose cosine
+    sits at or within float-summation error of the threshold, which the
+    kernel re-decides with the JVM expression's sequential arithmetic.
     Stress data: many vector pairs engineered to land exactly ON the
     0.8 threshold in exact math (cos([1,0],[4,3])=0.8, plus scaled and
     rotated copies), where BLAS-vs-sequential rounding is most likely
@@ -518,6 +520,7 @@ def test_semantic_pairs_arrow_matches_native_on_boundary(spark):
         ivf_centroids,
         semantic_dedup,
     )
+    from tests.native_twins import semantic_dedup_native
 
     rows = []
     vid = 0
@@ -534,16 +537,37 @@ def test_semantic_pairs_arrow_matches_native_on_boundary(spark):
         rows.append((vid, [0.0, 1.0, 0.0, float(fam)])); vid += 1
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
-    def run(scorer):
+    def run(dedup_fn):
         cents = ivf_centroids(df, 4, refine_iters=1)
         return {
             (r.vec_id, r.cluster_id, r.canonical_id, r.is_canonical)
-            for r in semantic_dedup(
-                df, n_cells=4, threshold=0.8, centroids=cents, scorer=scorer
+            for r in dedup_fn(
+                df, n_cells=4, threshold=0.8, centroids=cents
             ).collect()
         }
 
-    assert run("arrow") == run("native")
+    assert run(semantic_dedup) == run(semantic_dedup_native)
+
+    # The same rows with each family in its own cell: a family's cluster
+    # then hinges on its own boundary pairs, which the cross-family
+    # merges above can mask. Family 0 (scale 1.0) sits exactly on 0.8 in
+    # double arithmetic, so a kernel that drops ties splits it.
+    from psyndex2linkeddata_spark.operators.similarity import (
+        semantic_clusters_arrow,
+    )
+    from tests.native_twins import semantic_clusters_native
+
+    withc = spark.createDataFrame(
+        [(v // 3, v, emb, 0.0) for v, emb in rows],
+        "cell int, vec_id long, embedding array<double>, _ccos double",
+    )
+
+    def clusters(cluster_fn):
+        return {tuple(r) for r in cluster_fn(withc, 0.8).collect()}
+
+    want = clusters(semantic_clusters_native)
+    assert {c for v, c, _ in want if v < 3} == {0}
+    assert clusters(semantic_clusters_arrow) == want
 
 
 def test_dsir_select_prefers_target_like(spark):

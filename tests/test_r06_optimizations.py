@@ -1,7 +1,8 @@
 """Round-6 optimization equivalence pins: every operator whose
-INTERNALS changed for performance keeps a second, simpler form (or a
-prior formulation) in-tree, and these tests pin the two bit-equal on
-corpora built to hit the edge cases the rewrites had to preserve."""
+INTERNALS changed for performance is pinned bit-equal to a second,
+simpler form (a general package path, or the prior formulation kept in
+tests/native_twins.py) on corpora built to hit the edge cases the
+rewrites had to preserve."""
 
 from __future__ import annotations
 
@@ -66,10 +67,8 @@ def test_assign_cells_arrow_matches_native_with_near_ties(spark):
     argmax bit-for-bit, including a constructed near-tie (two centroids
     almost equidistant from one vector) that forces the exact-re-decide
     branch."""
-    from psyndex2linkeddata_spark.operators.similarity import (
-        _assign_cells_native,
-        assign_cells,
-    )
+    from psyndex2linkeddata_spark.operators.similarity import assign_cells
+    from tests.native_twins import assign_cells_native
 
     corpus = spark.createDataFrame(
         [
@@ -91,40 +90,9 @@ def test_assign_cells_arrow_matches_native_with_near_ties(spark):
     }
     want = {
         r.vec_id: r.cell
-        for r in _assign_cells_native(corpus, cents).collect()
+        for r in assign_cells_native(corpus, cents).collect()
     }
     assert got == want
-
-
-def test_simhash_table_equals_column_form_including_empty_doc(spark):
-    """simhash_hex_table (explode + vote aggregate) must equal the
-    per-row Column fold, including the empty/blank-doc all-zero
-    signature restored via the outer explode / left join."""
-    from psyndex2linkeddata_spark.operators.dedup import (
-        simhash_hex,
-        simhash_hex_table,
-    )
-
-    docs = _docs(
-        spark,
-        [
-            (1, "the quick brown fox"),
-            (2, "the the the"),
-            (3, ""),
-            (4, "   "),
-            (5, "Mixed CASE Tokens repeat repeat"),
-        ],
-    )
-    table = {
-        r.doc_id: r.simhash for r in simhash_hex_table(docs).collect()
-    }
-    column = {
-        r.doc_id: r.sh
-        for r in docs.select(
-            "doc_id", simhash_hex(F.col("text")).alias("sh")
-        ).collect()
-    }
-    assert table == column
 
 
 def test_ngram_jaccard_pair_parallelism_invariance(spark):

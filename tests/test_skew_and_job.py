@@ -92,11 +92,12 @@ def test_convert_job_cli(spark, tmp_path_factory):
     assert spark.read.parquet(os.path.join(ckpt, "lineage")).count() == 4
 
 
-def test_convert_job_canonicalize(spark, tmp_path):
+def test_convert_job_canonicalize(spark, tmp_path, capsys):
     """--canonicalize rewrites every URI of an owl:sameAs component to the
     component's minimum: the exported set equals a pure-Python union-find
-    canonicalization of the persisted distinct set, and the closure runs
-    in a bounded number of Spark jobs."""
+    canonicalization of the persisted distinct set, the printed triple
+    count is the distinct count of that exported set, and the closure
+    runs in a bounded number of Spark jobs."""
     from psyndex2linkeddata_spark import namespaces as NS
     from psyndex2linkeddata_spark.datagen.pages import write_pages_parquet
     from psyndex2linkeddata_spark.jobs.convert import main
@@ -108,6 +109,7 @@ def test_convert_job_canonicalize(spark, tmp_path):
     out = str(tmp_path / "out")
     main(["--pages", pages, "--out", out, "--ckpt", str(tmp_path / "ckpt"),
           "--buckets", "4", "--per-commit", "2", "--canonicalize"])
+    printed = capsys.readouterr().out
     triples = spark.read.parquet(os.path.join(out, "triples")).select(*TRIPLE_COLS)
     persisted = {tuple(r) for r in triples.distinct().collect()}
     same_as = [(t[0], t[2]) for t in persisted if t[1] == NS.OWL + "sameAs"]
@@ -136,6 +138,7 @@ def test_convert_job_canonicalize(spark, tmp_path):
         *TRIPLE_COLS
     )
     assert {tuple(r) for r in got.distinct().collect()} == want
+    assert f"triples={got.distinct().count()}" in printed.split()
 
     edges = triples.where(F.col("pred") == NS.OWL + "sameAs").select(
         F.col("subj").alias("src"), F.col("obj").alias("dst")

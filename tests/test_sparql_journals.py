@@ -44,8 +44,8 @@ from collections import Counter
 import pytest
 
 from psyndex2linkeddata_spark.plans.sparql import sparql_select
-from psyndex2linkeddata_spark.plans.sparql_sql import to_sql
 from psyndex2linkeddata_spark.schema import triples_schema
+from tests.sparql_sql import to_sql
 
 SPARQL_DIR = (
     "/root/reference/other_conversions/serials_journals/testing/sparql"

@@ -31,9 +31,9 @@ from collections import Counter
 import pytest
 
 from psyndex2linkeddata_spark.plans.sparql import parse_sparql, sparql_select
-from psyndex2linkeddata_spark.plans.sparql_sql import to_sql
 from psyndex2linkeddata_spark.schema import triples_schema
 from psyndex2linkeddata_spark.sources.turtle import TurtleDoc
+from tests.sparql_sql import to_sql
 
 NB = "/root/reference/sparql_queries.ipynb"
 TTL = "/root/reference/ttl-data/bibframe_records.ttl"

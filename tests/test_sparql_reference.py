@@ -7,7 +7,7 @@ files UNMODIFIED through the plans.sparql front-end over the reference's
 own checked-in golden TTL and gates the results three ways:
 
 1. **Cross-engine execution oracle**: the same parsed query is compiled
-   a second time, to portable SQL (plans.sparql_sql.to_sql), and DuckDB
+   a second time, to portable SQL (tests/sparql_sql.to_sql), and DuckDB
    executes it over the identical triple rows. The two engines' solution
    MULTISETS must agree exactly — this gates the whole Spark compilation
    (self-joins, OPTIONAL left joins, NOT-EXISTS anti joins, sequence-path
@@ -50,9 +50,9 @@ from psyndex2linkeddata_spark.plans.sparql import (
     sparql_construct,
     sparql_select,
 )
-from psyndex2linkeddata_spark.plans.sparql_sql import to_sql
 from psyndex2linkeddata_spark.schema import triples_schema
 from psyndex2linkeddata_spark.sources.turtle import parse_turtle
+from tests.sparql_sql import to_sql
 
 TESTING = "/root/reference/testing"
 TTL = "/root/reference/ttl-data/bibframe_records.ttl"
