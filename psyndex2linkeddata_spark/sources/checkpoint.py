@@ -28,6 +28,12 @@ batches is stored once per batch. Readers deduplicate, as
 S9/S10 (log sink, run manifest) map to the same table: `run_manifest`
 rows carry generationProcess/generationDate like the reference's
 AdminMetadata bnode (convert_starxml_to_bf.py:1518-1549).
+
+Lineage and manifest rows are built on the driver and reach the JVM as
+one Arrow batch (`local_frame`): a local relation, so a commit is one
+one-task Spark job and starts no Python worker. `createDataFrame` over a
+Python list would instead run a PythonRDD, whose partitions each pay a
+Python-worker round trip inside the commit's `coalesce(1)` task.
 """
 
 from __future__ import annotations
@@ -51,6 +57,22 @@ CKPT_SCHEMA = T.StructType(
         T.StructField("ts", T.TimestampType(), False),
     ]
 )
+
+
+def local_frame(
+    spark: SparkSession, rows: list[dict], schema: T.StructType
+) -> DataFrame:
+    """`rows` (dicts keyed by field name) as a DataFrame with `schema`,
+    shipped to the JVM as one Arrow batch in the schema's field order.
+
+    Unlike `createDataFrame(<list>)` no task starts a Python worker.
+    Timestamp fields are UTC instants: a naive datetime is read as UTC
+    wall time, an aware one is converted."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    table = pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema=schema)
 
 
 def bucket_col(n_buckets: int):
@@ -82,8 +104,10 @@ def completed_buckets(spark: SparkSession, ckpt_dir: str, stage: str) -> set[int
 def _append_lineage(spark, ckpt_dir: str, rows: list[dict]) -> None:
     # coalesce(1): the whole batch's lineage lands as ONE file (written
     # via temp + rename) — a crash can lose the entire commit but never
-    # persist half of it, so resume sees a batch as all-done or all-pending
-    spark.createDataFrame(rows, schema=CKPT_SCHEMA).coalesce(1).write.mode(
+    # persist half of it, so resume sees a batch as all-done or all-pending.
+    # local_frame: the rows are a local relation, so the commit is one
+    # one-task job with no Python worker
+    local_frame(spark, rows, CKPT_SCHEMA).coalesce(1).write.mode(
         "append"
     ).parquet(os.path.join(ckpt_dir, "lineage"))
 
@@ -182,6 +206,17 @@ def run_manifest(spark: SparkSession, ckpt_dir: str, run_id: str, **attrs) -> No
         "generation_date": dt.datetime.now(dt.timezone.utc).replace(tzinfo=None),
         **{k: str(v) for k, v in attrs.items()},
     }
-    spark.createDataFrame([row]).write.mode("append").parquet(
+    # the schema Spark infers for this dict: sorted keys, all strings
+    # but the timestamp, so new rows append to existing manifest tables
+    schema = T.StructType(
+        [
+            T.StructField(
+                k,
+                T.TimestampType() if k == "generation_date" else T.StringType(),
+            )
+            for k in sorted(row)
+        ]
+    )
+    local_frame(spark, [row], schema).write.mode("append").parquet(
         os.path.join(ckpt_dir, "run_manifest")
     )

@@ -24,9 +24,13 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import types as T
 
 from psyndex2linkeddata_spark.plans.pipeline import build_triples
 from psyndex2linkeddata_spark.schema import pages_schema
+from psyndex2linkeddata_spark.sources.checkpoint import local_frame
+
+_METRICS_SCHEMA = T.StructType([T.StructField("n_pages", T.LongType())])
 
 
 def stream_triples(
@@ -59,8 +63,8 @@ def stream_triples(
         # the batch_id=<id> partition directory encodes the id; keeping it
         # out of the data schema avoids the COLUMN_ALREADY_EXISTS conflict
         # on read (partition discovery restores the column)
-        spark_.createDataFrame(
-            [(int(n_pages),)], "n_pages long"
+        local_frame(
+            spark_, [{"n_pages": int(n_pages)}], _METRICS_SCHEMA
         ).withColumn("ts", F.current_timestamp()).coalesce(1).write.mode(
             "overwrite"
         ).parquet(os.path.join(metrics_path, f"batch_id={int(batch_id)}"))

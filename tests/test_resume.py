@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import datetime as dt
 import os
 
 import pytest
@@ -203,6 +204,146 @@ def test_commit_batch_job_count_is_independent_of_batch_width(
     four = spark_jobs(spark, "ckpt_jobs_4", run("four", 4))
     assert 0 < four <= one
     assert four <= 4
+
+
+def _utc_now():
+    return dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
+
+
+def _lineage_rows(run_id, buckets, ts):
+    return [
+        dict(
+            stage="triples", run_id=run_id, bucket=b, row_count=10 + b,
+            n_triples=100 if b == buckets[0] else 0,
+            wall_s=1.25 if b == buckets[0] else 0.0, status="done", ts=ts,
+        )
+        for b in buckets
+    ]
+
+
+def _job_tasks(spark, group):
+    tracker = spark.sparkContext.statusTracker()
+    return [
+        sum(
+            tracker.getStageInfo(s).numTasks
+            for s in tracker.getJobInfo(j).stageIds
+        )
+        for j in tracker.getJobIdsForGroup(group)
+    ]
+
+
+def test_commits_start_no_python_worker(
+    spark, small_pages, tmp_path_factory, monkeypatch
+):
+    """Lineage and manifest rows reach the JVM as one Arrow batch: with
+    `SparkContext.parallelize` (the PythonRDD entry of
+    `createDataFrame(<list>)`) raising, a checkpointed run and its
+    manifest still complete, and one lineage commit is one Spark job of
+    one task. Each row's `ts` is the commit's UTC instant."""
+    import time
+
+    from pyspark import SparkContext
+
+    def no_parallelize(*args, **kwargs):
+        raise AssertionError("driver rows went through a PythonRDD")
+
+    monkeypatch.setattr(SparkContext, "parallelize", no_parallelize)
+    base = str(tmp_path_factory.mktemp("ckpt_arrow"))
+    out, ckpt = os.path.join(base, "out"), os.path.join(base, "ckpt")
+    t0 = int(time.time() * 1e6)
+    res = run_checkpointed(
+        spark, small_pages, out, ckpt, build_triples,
+        n_buckets=N_BUCKETS, buckets_per_commit=2,
+    )
+    t1 = int(time.time() * 1e6)
+    run_manifest(spark, ckpt, res["run_id"], pages=N_PAGES)
+    assert res["batches"] == 2
+    micros = [
+        r.us
+        for r in spark.read.parquet(os.path.join(ckpt, "lineage"))
+        .select(F.unix_micros("ts").alias("us"))
+        .collect()
+    ]
+    assert len(micros) == N_BUCKETS and all(t0 <= us <= t1 for us in micros)
+    assert spark.read.parquet(os.path.join(ckpt, "run_manifest")).count() == 1
+
+    rows = _lineage_rows("one_job", [0, 1, 2, 3], _utc_now())
+    one = str(tmp_path_factory.mktemp("one_commit"))
+    jobs = spark_jobs(
+        spark, "lineage_commit", lambda: checkpoint._append_lineage(spark, one, rows)
+    )
+    assert jobs == 1
+    assert _job_tasks(spark, "lineage_commit") == [1]
+
+
+def test_lineage_round_trip(spark, tmp_path):
+    """Committed lineage reads back value for value, with CKPT_SCHEMA's
+    types; `ts` (a naive UTC datetime) is that UTC instant."""
+    ts = dt.datetime(2026, 1, 2, 3, 4, 5, 678901)
+    rows = _lineage_rows("rt", [5, 6, 7], ts)
+    checkpoint._append_lineage(spark, str(tmp_path), rows)
+    df = spark.read.parquet(str(tmp_path / "lineage"))
+    assert [(f.name, f.dataType) for f in df.schema.fields] == [
+        (f.name, f.dataType) for f in checkpoint.CKPT_SCHEMA.fields
+    ]
+    assert sorted((r.asDict() for r in df.collect()), key=lambda r: r["bucket"]) == rows
+    assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+    (got,) = df.select(
+        F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("s"),
+        F.unix_micros("ts").alias("us"),
+    ).distinct().collect()
+    assert got.s == "2026-01-02 03:04:05.678901"
+    want_us = int(ts.replace(tzinfo=dt.timezone.utc).timestamp()) * 10**6 + 678901
+    assert got.us == want_us
+
+
+def test_mixed_lineage_table_resumes(spark, small_pages, tmp_path):
+    """A lineage table holding one batch file written the earlier way,
+    `createDataFrame(<list>, CKPT_SCHEMA)`, and one written by
+    `_append_lineage` reads as both batches; a resumed run redoes
+    nothing."""
+    ckpt = str(tmp_path / "ckpt")
+    ts = _utc_now()
+    spark.createDataFrame(
+        _lineage_rows("old", [0, 1], ts), checkpoint.CKPT_SCHEMA
+    ).coalesce(1).write.mode("append").parquet(os.path.join(ckpt, "lineage"))
+    checkpoint._append_lineage(spark, ckpt, _lineage_rows("new", [2, 3], ts))
+    assert completed_buckets(spark, ckpt, "triples") == set(range(N_BUCKETS))
+    assert spark.read.parquet(os.path.join(ckpt, "lineage")).count() == N_BUCKETS
+
+    def must_not_run(pages):
+        raise AssertionError("a committed bucket was redone")
+
+    res = run_checkpointed(
+        spark, small_pages, str(tmp_path / "out"), ckpt, must_not_run,
+        n_buckets=N_BUCKETS, buckets_per_commit=2,
+    )
+    assert (res["resumed_buckets"], res["processed_buckets"]) == (N_BUCKETS, 0)
+
+
+def test_mixed_run_manifest_table(spark, tmp_path):
+    """A manifest row appended by `run_manifest` lands in a table whose
+    first row was written with `createDataFrame([<dict>])`; the table
+    keeps that inferred schema (sorted keys, a timestamp, strings)."""
+    ckpt = str(tmp_path)
+    old = {
+        "run_id": "old",
+        "generation_process": "psyndex2linkeddata_spark",
+        "generation_date": _utc_now(),
+        "pages": "80",
+        "out": "triples",
+    }
+    inferred = spark.createDataFrame([old])
+    inferred.write.mode("append").parquet(os.path.join(ckpt, "run_manifest"))
+    run_manifest(spark, ckpt, "new", pages=80, out="triples")
+    df = spark.read.parquet(os.path.join(ckpt, "run_manifest"))
+    assert df.schema == inferred.schema
+    assert [f.name for f in df.schema.fields] == sorted(old)
+    got = {r.run_id: r for r in df.collect()}
+    assert sorted(got) == ["new", "old"]
+    assert (got["new"].pages, got["new"].out) == ("80", "triples")
+    assert got["new"].generation_process == "psyndex2linkeddata_spark"
+    assert got["new"].generation_date >= got["old"].generation_date
 
 
 def test_streaming_incremental(spark, tmp_path_factory):

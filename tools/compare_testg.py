@@ -23,8 +23,8 @@ def main():
     from psyndex2linkeddata_spark.sources.turtle import parse_turtle
     from tests.reference_fixtures import (
         TESTG_TTL,
+        build_testg_auth_rows,
         load_testg_strings,
-        testg_auth_tests,
     )
 
     strings = load_testg_strings()
@@ -40,7 +40,7 @@ def main():
         rows.append((f"starxml://{dfk}", None, None, f"DFK {dfk}\nTESTG {s}", None))
     pages = spark.createDataFrame(rows, schema=pages_schema())
     auth = spark.createDataFrame(
-        testg_auth_tests(), "test_id string, long_name string"
+        build_testg_auth_rows(), "test_id string, long_name string"
     )
     print(f"auth_tests rows: {auth.count()}", file=sys.stderr)
     triples = build_triples(pages, authorities={"tests": auth})
