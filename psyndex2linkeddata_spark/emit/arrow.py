@@ -2206,7 +2206,7 @@ def emit_triples_arrow(
     pages are parsed in-stage (parse_page_text). `bad_dfks` applies the
     S3 kill-list inside the stage, on both input shapes: a record whose
     DFK (the cleaned first value, the one the emit uses) is in the set
-    emits nothing. build_triples collects it from bad_ids once per call.
+    emits nothing. build_triples collects it from bad_ids once per builder.
     `links` (authority_links' dicts) runs link_record over each record's
     triples, so the stage also emits the J1-J6 link triples.
     `annif=False` models

@@ -1,5 +1,6 @@
-"""F14 — ISSN normalization and validation as column expressions (the
-reference's check_issn_format, modules/helpers.py:308-322).
+"""F14 — ISSN normalization as a column expression (the reference's
+check_issn_format, modules/helpers.py:308-322; its validation step is a
+test reference in tests/test_functions.py).
 
 The page (F12), series (F13), email (F17) and ORCID (F18) parsers run
 only inside the Arrow emit kernel (emit/arrow.py).
@@ -16,10 +17,3 @@ def normalize_issn(col: Column) -> Column:
     """F14 normalization: strip, upper, ^DD-clean, ^DDS→'-'."""
     s = clean_text(F.upper(F.trim(col)))
     return F.regexp_replace(s, r"\^DDS", "-")
-
-
-def issn_is_valid(col: Column) -> Column:
-    """F14 validation over the normalized value."""
-    return normalize_issn(col).rlike(r"^\d{4}-\d{3}[\dX]$")
-
-

@@ -65,7 +65,7 @@ def main(argv=None) -> None:
     args = ap.parse_args(argv)
 
     from psyndex2linkeddata_spark import namespaces as NS, schema
-    from psyndex2linkeddata_spark.plans.pipeline import build_triples
+    from psyndex2linkeddata_spark.plans.pipeline import triples_builder
     from psyndex2linkeddata_spark.session import get_spark
     from psyndex2linkeddata_spark.sources.checkpoint import (
         run_checkpointed,
@@ -78,24 +78,26 @@ def main(argv=None) -> None:
         load_authorities(spark, args.authorities) if args.authorities else None
     )
 
-    def process(p):
-        return build_triples(p, authorities)
-
+    # one builder per run: the authority tables are collected by the
+    # first batch and reused by every later one
     res = run_checkpointed(
         spark,
         pages,
         os.path.join(args.out, "triples"),
         args.ckpt,
-        process,
+        triples_builder(authorities),
         n_buckets=args.buckets,
         buckets_per_commit=args.per_commit,
     )
     run_manifest(spark, args.ckpt, res["run_id"], pages=args.pages, out=args.out)
     # the bucket= partition column is storage layout, not part of a triple;
     # the persisted set is a multiset (see sources/checkpoint.py), so the
-    # exports and the count below deduplicate
-    triples = spark.read.parquet(os.path.join(args.out, "triples")).select(
-        *schema.TRIPLE_COLS
+    # exports and the count below deduplicate. The known schema spares
+    # the read its schema-inference job.
+    triples = (
+        spark.read.schema(schema.triples_schema())
+        .parquet(os.path.join(args.out, "triples"))
+        .select(*schema.TRIPLE_COLS)
     )
 
     if args.report:
@@ -104,8 +106,9 @@ def main(argv=None) -> None:
         summary = write_run_report(spark, pages, args.ckpt, res["run_id"])
         print(f"report: {summary}")
 
+    n = None
     if args.canonicalize:
-        from pyspark.sql import functions as F
+        from pyspark.sql import Observation, functions as F
 
         from psyndex2linkeddata_spark.operators.components import (
             canonicalize_uris,
@@ -117,26 +120,31 @@ def main(argv=None) -> None:
         )
         comps = connected_components(edges)
         canonical = os.path.join(args.out, "triples_canonical")
-        canonicalize_uris(triples, comps).write.mode("overwrite").parquet(
-            canonical
-        )
-        # the count and the exports read the written table back instead
-        # of re-running the two canonicalize_uris joins per consumer
+        # the table holds each triple once; its row count is observed in
+        # the write's result stage, after the dedup, so no pass re-reads it
+        obs = Observation("triples_canonical")
+        canonicalize_uris(triples, comps).distinct().observe(
+            obs, F.count(F.lit(1)).alias("n")
+        ).write.mode("overwrite").parquet(canonical)
+        n = obs.get["n"]
+        # the exports read the written table back instead of re-running
+        # the two canonicalize_uris joins per consumer
         triples = spark.read.parquet(canonical)
+    else:
+        triples = triples.distinct()
 
     if args.nt:
         from psyndex2linkeddata_spark.sources.export import write_nt
 
-        write_nt(triples.distinct(), args.nt)
+        write_nt(triples, args.nt)
 
     if args.table:
         from psyndex2linkeddata_spark.sources.warehouse import write_triples_table
 
-        write_triples_table(
-            triples.distinct(), args.table, buckets=args.buckets, mode="replace"
-        )
+        write_triples_table(triples, args.table, buckets=args.buckets, mode="replace")
 
-    n = triples.distinct().count()
+    if n is None:
+        n = triples.count()
     print(f"run_id={res['run_id']} buckets={res['processed_buckets']} triples={n}")
 
 

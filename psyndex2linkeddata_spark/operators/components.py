@@ -6,15 +6,19 @@ the same entity (e.g. one author across thousands of pages). Entity-link
 candidate pairs (operators/linking.py) form an edge list; each connected
 component collapses to one canonical id (its minimum member).
 
-Algorithm (connected_components):
-  1. contract: per input partition (no shuffle) a mapInArrow kernel
-     closes the partition's edges exactly (`_min_label_closure`) and
-     emits one STAR edge (node → local component min) per distinct node;
-  2. count the star: one job, which also materializes its checkpoint;
-  3. close in one task: within `_ONE_TASK_MAX_ROWS` star rows the same
-     kernel runs once more over the star in ONE partition — on a single
-     partition local closure is global closure;
-  4. over that budget, the distributed hash-to-min driver loop
+Algorithm (connected_components), with B = `_DRIVER_MAX_ROWS`:
+  1. collect: one job fetches at most B + 1 edges as Arrow
+     (`limit(B + 1).toArrow()`);
+  2. close on the driver: within B rows the driver process runs the
+     contraction kernel (`_contract`, an exact closure by
+     `_min_label_closure`) once over all edges — local closure of the
+     whole edge list is global closure — and returns the labels as an
+     Arrow local relation: no Python worker, nothing to checkpoint;
+  3. over B edges: per input partition (no shuffle) a mapInArrow stage
+     runs the same kernel and emits one STAR edge (node → local
+     component min) per distinct node; the star is collected the same
+     way and, within B rows, closed on the driver as in step 2;
+  4. over B star rows, the distributed hash-to-min driver loop
      (`_connected_components_loop`) closes the star instead, one shuffle
      round per step, and raises if `max_iter` rounds do not converge.
 
@@ -29,9 +33,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-# star rows one Python task closes; above it the distributed loop runs.
-# The kernel holds ~12 int64 words per row plus the Arrow node dictionary.
-_ONE_TASK_MAX_ROWS = 1_000_000
+# edge (or star) rows the driver collects and closes; above it the
+# distributed loop runs. The kernel holds ~12 int64 words per row plus
+# the Arrow node dictionary.
+_DRIVER_MAX_ROWS = 1_000_000
 
 
 def _min_label_closure(ru, rv, n: int):
@@ -95,36 +100,41 @@ def connected_components(
     max_iter: int = 25,
 ) -> DataFrame:
     """edge list → (node, component) with component = min node id of the
-    component (ids compared as their natural type), checkpointed: callers
-    may read it more than once.
+    component (ids compared as their natural type); callers may read it
+    more than once.
 
-    The per-partition contraction keeps exactly the original components:
-    every original edge (u, v) lies in some partition whose local closure
-    links u and v through their shared local root, and every star edge
-    lies within one original component. It emits |distinct nodes per
-    partition| ≤ partitions × |V| rows instead of 2|E| — for the dense
-    near-dup pair graphs this engine closes (cliques from LSH buckets or
-    IVF cells) it removes ~all of |E|. Within `_ONE_TASK_MAX_ROWS` star
-    rows the closure then finishes in one task: 3 Spark jobs in all (the
-    star count, whose shuffle stage AQE runs as a job of its own, and
-    the output checkpoint). `max_iter` bounds only the over-budget
-    fallback loop, which raises RuntimeError when it does not converge.
-    Pinned equal to the pure loop on a random graph by
-    tests/test_arrow_kernel_parity."""
+    Within `_DRIVER_MAX_ROWS` edges the closure is one Spark job (the
+    edge collect) and the labels come back as a local relation. Over it,
+    the per-partition contraction keeps exactly the original
+    components: every original edge (u, v) lies in some partition whose
+    local closure links u and v through their shared local root, and
+    every star edge lies within one original component. It emits
+    |distinct nodes per partition| ≤ partitions × |V| rows instead of
+    2|E| — for the dense near-dup pair graphs this engine closes
+    (cliques from LSH buckets or IVF cells) it removes ~all of |E| — and
+    a star within the budget closes on the driver. `max_iter` bounds
+    only the over-budget fallback loop, which raises RuntimeError when
+    it does not converge. Pinned equal to the pure loop on a random
+    graph by tests/test_arrow_kernel_parity."""
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).where(
         F.col("src").isNotNull() & F.col("dst").isNotNull()
     )
     node_t = e.schema["src"].dataType.simpleString()
-    star_t = f"src {node_t}, dst {node_t}"
-    # lazy checkpoint + count = one execution (see the loop below)
-    star = e.mapInArrow(_contract, star_t).localCheckpoint(eager=False)
-    if star.count() > _ONE_TASK_MAX_ROWS:
-        return _connected_components_loop(star, "src", "dst", max_iter)
-    return (
-        star.coalesce(1)
-        .mapInArrow(_contract, star_t)
-        .toDF("node", "component")
-        .localCheckpoint()
+    t = e.limit(_DRIVER_MAX_ROWS + 1).toArrow()
+    if t.num_rows > _DRIVER_MAX_ROWS:
+        star = e.mapInArrow(_contract, f"src {node_t}, dst {node_t}")
+        t = star.limit(_DRIVER_MAX_ROWS + 1).toArrow()
+        if t.num_rows > _DRIVER_MAX_ROWS:
+            return _connected_components_loop(star, "src", "dst", max_iter)
+    # close in the driver process; the labels reach the JVM as Arrow and
+    # become a local relation, as in sources/checkpoint.local_frame
+    import pyarrow as pa
+
+    out = list(_contract(t.to_batches()))
+    labels = pa.Table.from_batches(out) if out else t.slice(0, 0)
+    return edges.sparkSession.createDataFrame(
+        labels.rename_columns(["node", "component"]),
+        schema=f"node {node_t}, component {node_t}",
     )
 
 

@@ -167,9 +167,9 @@ def prepare_web_corpus(
 
     Web corpora are template-heavy: shared boilerplate makes GIANT,
     long-diameter near-dup components. The near-dup closure
-    (operators/components.connected_components) contracts them per
-    partition and closes the star in one task, so its cost does not
-    grow with component diameter.
+    (operators/components.connected_components) closes them on the
+    driver (over its row budget, after a per-partition contraction), so
+    its cost does not grow with component diameter.
     """
     from psyndex2linkeddata_spark.operators.extraction import (
         html_to_text,

@@ -30,6 +30,8 @@ Scale notes:
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, functions as F
 
 from psyndex2linkeddata_spark.emit.normalize import normalize
@@ -144,11 +146,11 @@ def build_triples(
       resolution maps the emitter applies; a killed record emits
       nothing, whatever maps it was joined to.
     - Linking (J1-J6) runs in the same stage: auth_orgs and auth_concepts
-      are collected once per call and folded into plain dicts
-      (emit/arrow.authority_links), and the kernel applies them to each
-      record's triples (link_record) — the per-record lookups of the
-      reference, with no post-emit join, union or second dedup: the one
-      dedup covers the link triples with the rest.
+      are collected once per builder (triples_builder) and folded into
+      plain dicts (emit/arrow.authority_links), and the kernel applies
+      them to each record's triples (link_record) — the per-record
+      lookups of the reference, with no post-emit join, union or second
+      dedup: the one dedup covers the link triples with the rest.
     - A2 genre cleanup: dedup_clean_genres dedups and applies the thesis
       rule and, with auth_concepts, the ancestor rule per subject after
       one exchange on subj, so the cross-record case stays covered. The
@@ -156,7 +158,7 @@ def build_triples(
       linking dicts.
 
     The kill-list reaches the stage as a frozenset of DFKs, and the
-    authorities as dicts, each collected in one small job per call; a
+    authorities as dicts, each collected in one small job per builder; a
     broadcast join would build the same tables on the driver. The dicts
     ride the kernel closure; PySpark ships a closure over 1 MB as a
     broadcast variable.
@@ -165,84 +167,109 @@ def build_triples(
     higher-order-function Column tree of the same spec, with a KB-scale
     plan instead of MB-scale (see the emit/arrow.py docstring).
     """
+    return triples_builder(authorities, annif=annif, repair_text=repair_text)(pages)
+
+
+def triples_builder(
+    authorities: dict[str, DataFrame] | None = None,
+    annif: bool = True,
+    repair_text: bool = False,
+):
+    """build_triples with everything but the pages bound: the returned
+    pages → triples function collects the kill-list and the authority
+    tables on its first call and reuses them on every later one, so a
+    job that builds once per batch (jobs/convert.py) collects them once
+    per run. The maps route's joins are planned per call."""
     from psyndex2linkeddata_spark.emit.arrow import (
         authority_links,
         emit_triples_arrow,
     )
-
-    # Fetch-layer repair (opt-in): captures that arrive without
-    # extracted text (text NULL) recover it from the raw html column —
-    # a narrow projection that fuses into the scan
-    # (operators/extraction.py, byte-stable mode). Opt-in because it
-    # forces the scan to READ the html column; when the upstream table
-    # already guarantees text, column pruning should keep html out of
-    # the scan entirely.
-    if repair_text and "html" in pages.columns:
-        from psyndex2linkeddata_spark.operators.extraction import html_to_text
-
-        pages = pages.withColumn(
-            "text",
-            F.coalesce(F.col("text"), html_to_text(F.col("html"))),
-        )
-
-    auth = authorities or {}
-    src = pages
-    if "crossref" in auth or "tests" in auth or "kerndaten" in auth:
-        from psyndex2linkeddata_spark.plans import crossref as cr
-
-        src = extract_records(pages)
-        if "kerndaten" in auth:
-            src = src.join(
-                kerndaten_resolution_map(src, auth["kerndaten"]), "url", "left"
-            )
-        norm = normalize(src)
-        if "crossref" in auth:
-            src = src.join(
-                cr.rplic_resolution_map(
-                    norm,
-                    auth["crossref"],
-                    search_threshold=auth.get("crossref_search_threshold"),
-                ),
-                "url",
-                "left",
-            ).join(
-                cr.rel_resolution_map(
-                    norm,
-                    auth["crossref"],
-                    search_threshold=auth.get("crossref_rel_search_threshold"),
-                ),
-                "url",
-                "left",
-            )
-        if "tests" in auth:
-            src = src.join(cr.testg_resolution_map(norm, auth["tests"]), "url", "left")
-    # Without authorities: one narrow stage + the dedup exchange, no
-    # cache; the in-record A2 rule 1 in the kernel covers the genre
-    # cleanup as long as the input holds one page per DFK, which is the
-    # pages-table contract (url-keyed records export). With authorities
-    # (even {}): dedup_clean_genres, which applies A2 per subject after
-    # one exchange on subj, so two pages sharing a DFK (one thesis + one
-    # Scholarly*) are cleaned too; callers with weaker provenance pass
-    # authorities={} for that.
-    bad = frozenset()
-    if "bad_ids" in auth:
-        rows = auth["bad_ids"].select("dfk").distinct().collect()
-        bad = frozenset(r.dfk for r in rows)
-    orgs, concepts = auth.get("auth_orgs"), auth.get("auth_concepts")
-    concept_rows = () if concepts is None else concepts.select(*_CONCEPT_COLS).collect()
-    links = None
-    if orgs is not None or concepts is not None:
-        links = authority_links(
-            () if orgs is None else orgs.select(*_ORG_COLS).collect(), concept_rows
-        )
-    raw = emit_triples_arrow(src, bad_dfks=bad, annif=annif, links=links)
-    if authorities is None:
-        return finalize(raw, barrier=False, genre_cleanup=False)
     from psyndex2linkeddata_spark.operators.upsert import (
         dedup_clean_genres,
         genre_ancestor_map,
     )
 
-    return dedup_clean_genres(
-        raw, None if concepts is None else genre_ancestor_map(concept_rows)
-    )
+    auth = authorities or {}
+
+    @functools.cache
+    def collect():
+        bad = frozenset()
+        if "bad_ids" in auth:
+            rows = auth["bad_ids"].select("dfk").distinct().collect()
+            bad = frozenset(r.dfk for r in rows)
+        orgs, concepts = auth.get("auth_orgs"), auth.get("auth_concepts")
+        concept_rows = (
+            () if concepts is None else concepts.select(*_CONCEPT_COLS).collect()
+        )
+        links = None
+        if orgs is not None or concepts is not None:
+            links = authority_links(
+                () if orgs is None else orgs.select(*_ORG_COLS).collect(),
+                concept_rows,
+            )
+        ancestors = None if concepts is None else genre_ancestor_map(concept_rows)
+        return bad, links, ancestors
+
+    def build(pages: DataFrame) -> DataFrame:
+        # Fetch-layer repair (opt-in): captures that arrive without
+        # extracted text (text NULL) recover it from the raw html column —
+        # a narrow projection that fuses into the scan
+        # (operators/extraction.py, byte-stable mode). Opt-in because it
+        # forces the scan to READ the html column; when the upstream table
+        # already guarantees text, column pruning should keep html out of
+        # the scan entirely.
+        if repair_text and "html" in pages.columns:
+            from psyndex2linkeddata_spark.operators.extraction import html_to_text
+
+            pages = pages.withColumn(
+                "text",
+                F.coalesce(F.col("text"), html_to_text(F.col("html"))),
+            )
+
+        src = pages
+        if "crossref" in auth or "tests" in auth or "kerndaten" in auth:
+            from psyndex2linkeddata_spark.plans import crossref as cr
+
+            src = extract_records(pages)
+            if "kerndaten" in auth:
+                src = src.join(
+                    kerndaten_resolution_map(src, auth["kerndaten"]), "url", "left"
+                )
+            norm = normalize(src)
+            if "crossref" in auth:
+                src = src.join(
+                    cr.rplic_resolution_map(
+                        norm,
+                        auth["crossref"],
+                        search_threshold=auth.get("crossref_search_threshold"),
+                    ),
+                    "url",
+                    "left",
+                ).join(
+                    cr.rel_resolution_map(
+                        norm,
+                        auth["crossref"],
+                        search_threshold=auth.get("crossref_rel_search_threshold"),
+                    ),
+                    "url",
+                    "left",
+                )
+            if "tests" in auth:
+                src = src.join(
+                    cr.testg_resolution_map(norm, auth["tests"]), "url", "left"
+                )
+        # Without authorities: one narrow stage + the dedup exchange, no
+        # cache; the in-record A2 rule 1 in the kernel covers the genre
+        # cleanup as long as the input holds one page per DFK, which is the
+        # pages-table contract (url-keyed records export). With authorities
+        # (even {}): dedup_clean_genres, which applies A2 per subject after
+        # one exchange on subj, so two pages sharing a DFK (one thesis + one
+        # Scholarly*) are cleaned too; callers with weaker provenance pass
+        # authorities={} for that.
+        bad, links, ancestors = collect()
+        raw = emit_triples_arrow(src, bad_dfks=bad, annif=annif, links=links)
+        if authorities is None:
+            return finalize(raw, barrier=False, genre_cleanup=False)
+        return dedup_clean_genres(raw, ancestors)
+
+    return build

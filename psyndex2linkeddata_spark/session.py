@@ -10,6 +10,12 @@ defaults on a real multi-executor cluster at 100 TB:
 - shuffle.partitions sized to cores locally; on a cluster this is overridden
   per-job (or left to AQE coalesce from a high initial number).
 - driver heap: SPARK_DRIVER_MEMORY, else half of host RAM.
+- DataFrame debugging off (spark.python.sql.dataFrameDebugging.enabled):
+  with it on, every pyspark.sql.functions call walks the Python stack
+  and makes 3-4 py4j round trips to record its call site, and the first
+  walk imports IPython where it is installed (0.5-0.6 s). Errors keep
+  their Python and JVM tracebacks; only the Python call site in the
+  DataFrame query context of an error is lost.
 """
 
 from __future__ import annotations
@@ -91,6 +97,7 @@ def get_spark(
         # it is a no-op.
         .config("spark.sql.files.minPartitionNum", str(shuffle_partitions))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .config(
             "spark.driver.memory",

@@ -222,13 +222,13 @@ def test_connected_components_contraction_matches_loop(spark):
 
 
 def test_connected_components_over_budget_fallback_matches(spark, monkeypatch):
-    """Over the one-task row budget the distributed loop closes the star:
+    """Over the driver row budget the distributed loop closes the star:
     the same (node, component) set."""
     from psyndex2linkeddata_spark.operators import components
 
     d = spark.createDataFrame(_cc_graph(), "src long, dst long").repartition(7)
     one_task = {tuple(r) for r in components.connected_components(d).collect()}
-    monkeypatch.setattr(components, "_ONE_TASK_MAX_ROWS", 0)
+    monkeypatch.setattr(components, "_DRIVER_MAX_ROWS", 0)
     fallback = {
         tuple(r) for r in components.connected_components(d, max_iter=60).collect()
     }
@@ -236,10 +236,50 @@ def test_connected_components_over_budget_fallback_matches(spark, monkeypatch):
     assert len(one_task) == len({x for e in _cc_graph() for x in e})
 
 
+def test_connected_components_dense_cliques_contract_then_close_on_driver(
+    spark, monkeypatch
+):
+    """Dense cliques with the budget between |V| and |E|: the edges are
+    over it, the per-partition star is within it, so the contraction
+    stage runs and the driver closes the star. The labels equal the
+    distributed loop's."""
+    from tests.conftest import spark_jobs
+
+    from psyndex2linkeddata_spark.operators import components
+
+    cliques = [range(k * 100, k * 100 + 30) for k in range(5)]
+    edges = [(u, v) for c in cliques for u in c for v in c if u < v]
+    n_nodes = sum(len(c) for c in cliques)
+    # checkpointed: the closure's input is 4 partitions with no exchange
+    d = spark.createDataFrame(edges, "src long, dst long").repartition(4)
+    d = d.localCheckpoint()
+    want = {
+        tuple(r)
+        for r in components._connected_components_loop(d, max_iter=60).collect()
+    }
+    budget = 4 * n_nodes  # ≥ the star's rows: 4 partitions × |V|
+    assert n_nodes < budget < len(edges)
+    monkeypatch.setattr(components, "_DRIVER_MAX_ROWS", budget)
+
+    def no_loop(*a, **k):
+        raise AssertionError("the star is within the budget")
+
+    monkeypatch.setattr(components, "_connected_components_loop", no_loop)
+    got = []
+    # the edge collect, then the contraction stage's star collect
+    jobs = spark_jobs(
+        spark, "cc_dense", lambda: got.append(components.connected_components(d))
+    )
+    assert jobs == 2
+    assert {tuple(r) for r in got[0].collect()} == want
+    assert len(want) == n_nodes
+    assert {c for _n, c in want} == {c[0] for c in cliques}
+
+
 def test_connected_components_fallback_raises_unconverged(spark, monkeypatch):
     from psyndex2linkeddata_spark.operators import components
 
-    monkeypatch.setattr(components, "_ONE_TASK_MAX_ROWS", 0)
+    monkeypatch.setattr(components, "_DRIVER_MAX_ROWS", 0)
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(20)], "src long, dst long"
     ).coalesce(1)

@@ -127,6 +127,25 @@ def test_connected_components_known_graph(spark):
     assert comps["p"] == "p"
 
 
+def test_connected_components_within_budget_closes_on_driver(spark):
+    """Within the driver budget the closure is one Spark job (the edge
+    collect) and its result is a local relation: no mapInArrow stage,
+    no Python worker, nothing to checkpoint."""
+    from tests.conftest import spark_jobs
+
+    # 4 range partitions, no exchange: ten stars of ten nodes each
+    edges = spark.range(0, 100, numPartitions=4).select(
+        (F.col("id") - F.col("id") % 10).alias("src"), F.col("id").alias("dst")
+    )
+    got = []
+    assert spark_jobs(spark, "cc_driver", lambda: got.append(connected_components(edges))) == 1
+    plan = got[0]._jdf.queryExecution().analyzed().toString()
+    assert plan.lstrip().startswith("LocalRelation")
+    assert "MapInArrow" not in plan
+    comps = {r.node: r.component for r in got[0].collect()}
+    assert comps == {i: i - i % 10 for i in range(100)}
+
+
 def test_connected_components_long_chain_one_component(spark):
     """A 1,000-node chain with shuffled ids in one partition is ONE
     component labelled with its minimum: the closure runs to its

@@ -10,6 +10,11 @@ from pyspark.sql import functions as F
 from psyndex2linkeddata_spark.operators.skew import salted_collect_set, salted_count
 from tests.conftest import spark_jobs
 
+# Spark jobs of `jobs/convert.py --canonicalize` after its last lineage
+# commit, on 40 pages: the run-manifest write, the sameAs edge collect
+# and the four jobs of the deduplicating canonical write under AQE
+TAIL_JOBS = 6
+
 
 def test_salted_count_equals_plain(spark):
     # hot key: 'a' carries 90% of rows
@@ -92,23 +97,39 @@ def test_convert_job_cli(spark, tmp_path_factory):
     assert spark.read.parquet(os.path.join(ckpt, "lineage")).count() == 4
 
 
-def test_convert_job_canonicalize(spark, tmp_path, capsys):
+def test_convert_job_canonicalize(spark, tmp_path, capsys, monkeypatch):
     """--canonicalize rewrites every URI of an owl:sameAs component to the
     component's minimum: the exported set equals a pure-Python union-find
-    canonicalization of the persisted distinct set, the printed triple
-    count is the distinct count of that exported set, and the closure
-    runs in a bounded number of Spark jobs."""
+    canonicalization of the persisted distinct set, holds each triple
+    once, the printed triple count is its distinct count, and the tail
+    after the checkpointed batches and the closure run in a pinned
+    number of Spark jobs."""
     from psyndex2linkeddata_spark import namespaces as NS
     from psyndex2linkeddata_spark.datagen.pages import write_pages_parquet
     from psyndex2linkeddata_spark.jobs.convert import main
     from psyndex2linkeddata_spark.operators.components import connected_components
     from psyndex2linkeddata_spark.schema import TRIPLE_COLS
+    from psyndex2linkeddata_spark.sources import checkpoint
 
     pages = str(tmp_path / "pages.parquet")
     write_pages_parquet(pages, 40)
     out = str(tmp_path / "out")
-    main(["--pages", pages, "--out", out, "--ckpt", str(tmp_path / "ckpt"),
-          "--buckets", "4", "--per-commit", "2", "--canonicalize"])
+    run = checkpoint.run_checkpointed
+
+    def run_then_tail(*args, **kwargs):
+        res = run(*args, **kwargs)
+        spark.sparkContext.setJobGroup("convert_tail", "convert_tail")
+        return res
+
+    monkeypatch.setattr(checkpoint, "run_checkpointed", run_then_tail)
+    try:
+        main(["--pages", pages, "--out", out, "--ckpt", str(tmp_path / "ckpt"),
+              "--buckets", "4", "--per-commit", "2", "--canonicalize"])
+    finally:
+        spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+        spark.sparkContext.setLocalProperty("spark.job.description", None)
+    tracker = spark.sparkContext.statusTracker()
+    assert len(tracker.getJobIdsForGroup("convert_tail")) == TAIL_JOBS
     printed = capsys.readouterr().out
     triples = spark.read.parquet(os.path.join(out, "triples")).select(*TRIPLE_COLS)
     persisted = {tuple(r) for r in triples.distinct().collect()}
@@ -138,12 +159,48 @@ def test_convert_job_canonicalize(spark, tmp_path, capsys):
         *TRIPLE_COLS
     )
     assert {tuple(r) for r in got.distinct().collect()} == want
+    assert got.count() == got.distinct().count()
     assert f"triples={got.distinct().count()}" in printed.split()
 
     edges = triples.where(F.col("pred") == NS.OWL + "sameAs").select(
         F.col("subj").alias("src"), F.col("obj").alias("dst")
     )
-    assert spark_jobs(spark, "cc", lambda: connected_components(edges)) <= 4
+    assert spark_jobs(spark, "cc", lambda: connected_components(edges)) <= 2
+
+
+def test_convert_job_collects_authorities_once(spark, tmp_path, monkeypatch):
+    """One builder per run: the first batch collects the kill-list and
+    the authority tables, a second batch issues no Spark job while it
+    builds its plan."""
+    from psyndex2linkeddata_spark.datagen.authorities import write_authority_parquets
+    from psyndex2linkeddata_spark.datagen.pages import write_pages_parquet
+    from psyndex2linkeddata_spark.jobs.convert import main
+    from psyndex2linkeddata_spark.sources import checkpoint
+
+    pages = str(tmp_path / "pages.parquet")
+    write_pages_parquet(pages, 40)
+    auth_dir = str(tmp_path / "auth")
+    write_authority_parquets(auth_dir, 40)
+    run = checkpoint.run_checkpointed
+    build_jobs = []
+
+    def run_counting_builds(spark_, pages_df, out, ckpt, process, **kwargs):
+        def counted(p):
+            built = []
+            group = f"convert_build{len(build_jobs)}"
+            build_jobs.append(spark_jobs(spark, group, lambda: built.append(process(p))))
+            return built[0]
+
+        return run(spark_, pages_df, out, ckpt, counted, **kwargs)
+
+    monkeypatch.setattr(checkpoint, "run_checkpointed", run_counting_builds)
+    main(["--pages", pages, "--out", str(tmp_path / "out"),
+          "--ckpt", str(tmp_path / "ckpt"), "--authorities", auth_dir,
+          "--buckets", "4", "--per-commit", "2"])
+    # bad_ids distinct, auth_concepts and auth_orgs collects
+    assert len(build_jobs) == 2
+    assert build_jobs[0] >= 3
+    assert build_jobs[1] == 0
 
 
 def test_load_authorities_uri_and_empty_dir(spark, tmp_path):
