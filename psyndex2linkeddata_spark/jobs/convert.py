@@ -106,7 +106,6 @@ def main(argv=None) -> None:
         summary = write_run_report(spark, pages, args.ckpt, res["run_id"])
         print(f"report: {summary}")
 
-    n = None
     if args.canonicalize:
         from pyspark.sql import Observation, functions as F
 
@@ -132,6 +131,7 @@ def main(argv=None) -> None:
         triples = spark.read.parquet(canonical)
     else:
         triples = triples.distinct()
+        n = triples.count()
 
     if args.nt:
         from psyndex2linkeddata_spark.sources.export import write_nt
@@ -143,8 +143,6 @@ def main(argv=None) -> None:
 
         write_triples_table(triples, args.table, buckets=args.buckets, mode="replace")
 
-    if n is None:
-        n = triples.count()
     print(f"run_id={res['run_id']} buckets={res['processed_buckets']} triples={n}")
 
 
