@@ -19,10 +19,14 @@ Gates: the pure-Python golden oracle (tests/golden_oracle.py, exact set
 equality in tests/test_golden.py) shares no code with this module, and
 tests/test_arrow_parity.py pins each scenario's triple set (recorded
 while a second, Column-expression emitter agreed with this one on every
-scenario). The helpers below mirror SPARK semantics, not Python
-defaults: on the maps route this stage reads records the Column parser
-(extract_records) produced and applies resolution maps indexed over
-normalize's mention columns, so both sides must split and trim alike:
+scenario). Every route of build_triples feeds this stage pages and
+parses them here (parse_page_text); the resolution maps of the maps
+route index the mention rows of mentions_arrow, which runs the same
+parser, so their indexes line up with the emit by construction. The
+helpers below mirror SPARK semantics, not Python defaults, for
+records-shaped input (emit_triples_arrow's records mode, fed by the
+Column parser extract_records): there both parsers must split and trim
+alike:
 - trim == Spark `trim` (strips chars <= 0x20, NOT unicode whitespace)
 - concat is NULL-propagating (any None argument -> None)
 - Java regex defaults are mirrored with re.ASCII where \\b/\\w/(?i) occur
@@ -825,20 +829,26 @@ def rel_citation(s):
 _PSY_MARKER_RE = re.compile(r"\(PSYNDEX Tests (Review|Info|Abstract)\)", re.A)
 
 
+def testg_long(s):
+    """TESTG |l long name: '(PSYNDEX Tests Review/Info/Abstract)' markers
+    removed, ALL-CAPS names title-cased (research_info.py:1434-1437 —
+    Python .isupper(): at least one cased char, all of them uppercase)."""
+    raw_long = subfield(s, "l")
+    if raw_long is None:
+        return None
+    long_v = _PSY_MARKER_RE.sub("", raw_long)
+    if trim(long_v) == "":
+        return None
+    return _title_one(long_v) if long_v.isupper() else long_v
+
+
 def testg_parsed_of(rec, testg_res=None):
     """TESTG → the reference's build_related_test dicts
     (research_info.py:1404-1525 / testing/TESTG/testg.py:105-244), with
     the J15 resolution map filling test ids of uncontrolled entries."""
     out = []
     for idx, s in enumerate(rec.get("TESTG") or []):
-        raw_long = subfield(s, "l")
-        long_v = None
-        if raw_long is not None:
-            stripped = _PSY_MARKER_RE.sub("", raw_long)
-            if stripped is not None and trim(stripped) != "":
-                long_v = stripped
-        if long_v is not None and long_v.isupper():
-            long_v = _title_one(long_v)
+        long_v = testg_long(s)
         short = mainfield(s)
         u_f, f_f, d_f, k_f = (subfield(s, c) for c in ("u", "f", "d", "k"))
         u_part = (
@@ -1635,6 +1645,8 @@ def emit_preregistrations(g, rec, W):
 
 # citation strings the reference skips (research_info.py RPLIC, P6)
 _RPLIC_SKIP = ["Testeintrag, wieder loeschen", "dittrich, K.", "no URL", "no URL |f  |u  |d "]
+# a 7-digit DFK: an RPLIC |f id, or the head of a REL field
+_DFK7_RE = re.compile(r"^\d{7}$", re.A)
 
 
 def emit_replications(g, rec, W, rplic_res=None):
@@ -1651,7 +1663,7 @@ def emit_replications(g, rec, W, rplic_res=None):
         if rplic_res is not None and idx in rplic_res and rplic_res[idx] is not None:
             ids = (list(rplic_res[idx]), ids[1], ids[2])
         dois, urls, unknowns = ids
-        dfk_ok = dfk is not None and re.search(r"^\d{7}$", dfk, re.A)
+        dfk_ok = dfk is not None and _DFK7_RE.search(dfk)
         doi = dois[0] if dois else None
         url = urls[0] if urls else None
         citation = unknowns[0] if unknowns else None
@@ -1716,7 +1728,7 @@ def emit_related_works(g, rec, W, rel_res=None):
         key = rel_key(b)
         rel, work, inst = rel_base(g, W, key, i + 1)
         head = cstr[:7]
-        dfk = head if re.search(r"^\d{7}$", head, re.A) else None
+        dfk = head if _DFK7_RE.search(head) else None
         value, typ_ = check_for_url_or_doi(trim(s))
         doi = value if (dfk is None and typ_ == "doi") else None
         url = value if (dfk is None and typ_ == "url") else None
@@ -2203,7 +2215,9 @@ def emit_triples_arrow(
 
     Input is either the canonical records shape (has a DFK column — output
     of extract_records / starxml) or the raw pages shape (url, text, ...);
-    pages are parsed in-stage (parse_page_text). `bad_dfks` applies the
+    pages are parsed in-stage (parse_page_text). On both shapes the
+    `_RES_COLS` resolution maps ride along as columns (build_triples'
+    maps route joins them onto the pages on url). `bad_dfks` applies the
     S3 kill-list inside the stage, on both input shapes: a record whose
     DFK (the cleaned first value, the one the emit uses) is in the set
     emits nothing. build_triples collects it from bad_ids once per builder.
@@ -2276,3 +2290,80 @@ def emit_triples_arrow(
         yield g.record_batch()
 
     return src.mapInArrow(run, triples_schema())
+
+
+# --------------------------------------------------------------------------
+# mention pass: the rows the offline-linking resolution maps join on
+# --------------------------------------------------------------------------
+
+
+def page_mentions(url, rec):
+    """One parsed record -> (url, kind, idx, main, dois, n_urls, key) rows,
+    only for the entries a resolution map reads. `idx` is the entry's
+    position in its field, counted as the emitter counts it, so a map
+    keyed by it lines up with the emit by construction:
+    - paup: PAUP entries with an |n id (key; J9 kerndaten fallback);
+    - rplic: every RPLIC entry (emit_replications counts P6 skips too),
+      with its main part, its id_sets DOIs, the number of its URLs and
+      its first unknown (key; J13/J14);
+    - rel: REL entries whose trimmed string is neither DOI nor URL, with
+      a citation (key) and no 7-digit DFK head (J14);
+    - testg: TESTG entries with no |c test id and a long name (key; J15).
+    A record without a DFK emits nothing, so it has no mentions."""
+    if rec.get("DFK") is None:
+        return
+    for idx, s in enumerate(rec.get("PAUP") or []):
+        paup_id = subfield(s, "n")
+        if paup_id is not None:
+            yield (url, "paup", idx, None, None, None, paup_id)
+    for idx, s in enumerate(rec.get("RPLIC") or []):
+        main = mainfield(s)
+        dois, urls, unknowns = id_sets([subfield(s, "d"), subfield(s, "u"), main])
+        first_unknown = unknowns[0] if unknowns else None
+        yield (url, "rplic", idx, main, dois, len(urls), first_unknown)
+    for idx, s in enumerate(rec.get("REL") or []):
+        cstr = trim(s)
+        citation = rel_citation(s)
+        if (
+            citation is not None
+            and not _DFK7_RE.search(cstr[:7])
+            and check_for_url_or_doi(cstr)[1] == "unknown"
+        ):
+            yield (url, "rel", idx, None, None, None, citation)
+    for idx, s in enumerate(rec.get("TESTG") or []):
+        if subfield(s, "c") is None:
+            long_v = testg_long(s)
+            if long_v is not None:
+                yield (url, "testg", idx, None, None, None, long_v)
+
+
+def mentions_arrow(pages):
+    """pages(url, text) -> the mention table (url, kind, idx, main, dois,
+    n_urls, key) via one narrow mapInArrow stage over the emitter's own
+    parser (parse_page_text, page_mentions). The kerndaten and
+    Crossref/tests resolution maps filter it on `kind`."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    schema = pa.schema([
+        ("url", pa.string()), ("kind", pa.string()), ("idx", pa.int32()),
+        ("main", pa.string()), ("dois", pa.list_(pa.string())),
+        ("n_urls", pa.int32()), ("key", pa.string()),
+    ])
+
+    def run(batches):
+        for batch in batches:
+            urls = batch.column("url").to_pylist()
+            texts = batch.column("text").to_pylist()
+            rows = [
+                row
+                for url, text in zip(urls, texts)
+                for row in page_mentions(url, parse_page_text(text))
+            ]
+            cols = list(zip(*rows)) or [()] * len(schema)
+            yield pa.record_batch(
+                [pa.array(c, type=f.type) for c, f in zip(cols, schema)],
+                schema=schema,
+            )
+
+    return pages.select("url", "text").mapInArrow(run, from_arrow_schema(schema))

@@ -2,8 +2,8 @@
 
 The sub-converters (emit/journals.py, emit/psychauthors.py,
 emit/reduced_persons.py) and the driver entry build triples as struct
-columns from these; normalize and the resolution maps use the mention
-accessors and the work/bundle URI minting. The reference's atom is an
+columns from these; the driver entry's mainfield/subfield leaf also uses
+the field accessors. The reference's atom is an
 rdflib `(URIRef, URIRef, URIRef|Literal(lang,datatype))` added to one
 shared Graph (reference convert_starxml_to_bf.py:120-122). Ours is a
 flat struct row; URIs are minted with native `concat` — the
@@ -73,22 +73,10 @@ def label(subj: Column | str, obj: Column, lang: Column | str | None = None) -> 
     return T(subj, NS.RDFS_LABEL, obj, lang=lang)
 
 
-# --- URI minting (deterministic concat; reference scheme per SURVEY §1.3) ---
-
-def work_uri(dfk: Column) -> Column:
-    """works:{dfk}_work (/root/reference/convert_starxml_to_bf.py:1196-1198)."""
-    return F.concat(F.lit(NS.WORKS), dfk, F.lit("_work"))
-
-
-def bundle_uri(dfk: Column) -> Column:
-    """instancebundles:{dfk} (/root/reference/convert_starxml_to_bf.py:1315)."""
-    return F.concat(F.lit(NS.INSTANCEBUNDLES), dfk)
-
-
 # --- pre-cleaned field accessors ------------------------------------------
-# extract_records cleans the whole text once (F1+F2), so the emit layer's
-# field accessors skip the per-call 140-step replace chain. These wrappers
-# make that contract explicit.
+# The input is cleaned once (F1+F2; extract_records does it for the whole
+# text), so these field accessors skip the per-call 140-step replace
+# chain. These wrappers make that contract explicit.
 
 def mainfield(col: Column) -> Column:
     from psyndex2linkeddata_spark.functions.cleaning import get_mainfield

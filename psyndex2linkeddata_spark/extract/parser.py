@@ -60,10 +60,11 @@ def extract_records(pages: DataFrame, keep_page_cols: bool = False) -> DataFrame
     keeps the 140-step replace chain out of every downstream field expression
     (a ~100× Catalyst-tree-size reduction for the emit stage).
 
-    build_triples uses it on the maps route only: the kerndaten, crossref
-    and tests resolution maps join on mention columns parsed from these
-    records, and the emit stage then reads the records. The pages route
-    parses in-stage instead (emit/arrow.parse_page_text).
+    No build_triples route uses it: every route parses the pages in the
+    Arrow stage (emit/arrow.parse_page_text), and the resolution maps
+    read that parser's mention rows (emit/arrow.mentions_arrow). It stays
+    for records-shaped input (emit_triples_arrow's records mode) and for
+    perfbench's staged linked_pages probe, which times it as a layer.
     """
     from psyndex2linkeddata_spark.functions.cleaning import clean_text
 
@@ -111,10 +112,10 @@ def text_from_html(col: Column) -> Column:
 def filter_bad_ids(records: DataFrame, bad_ids: DataFrame) -> DataFrame:
     """S3/P5 kill-list: reference rereads bad_dfks.tsv per record
     (/root/reference/convert_starxml_to_bf.py:1185-1190, O(records×list));
-    here one broadcast anti-join over records. build_triples applies the
-    same list inside its emit stage instead (emit_triples_arrow's
-    `bad_dfks`); this operator stays for callers that filter records
-    themselves, and perfbench's linked_pages probe stages it."""
+    here one broadcast anti-join over records. No build_triples route
+    uses it: the emit stage applies the same list itself
+    (emit_triples_arrow's `bad_dfks`). It stays for callers that filter
+    records themselves, and perfbench's linked_pages probe stages it."""
     return records.join(
         F.broadcast(bad_ids.select(F.col("dfk").alias("DFK"))), "DFK", "left_anti"
     )

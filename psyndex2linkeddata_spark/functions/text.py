@@ -1,21 +1,15 @@
-"""F10/F27 — text-shaping functions.
+"""F10 — title casing (the reference's modules/helpers.py:95-154).
 
-- F10 title casing (the reference's modules/helpers.py:95-154): stop-word
-  title casing — genuinely procedural: `_title_one` is the Python port the
-  emit kernel calls, `title_except_if_upper_arr` its Arrow pandas-UDF
-  tier for repeated fields.
-- F27 full-title concat (convert_starxml_to_bf.py:638-640).
+Stop-word title casing is genuinely procedural: `_title_one` is the
+Python port the emit kernel calls (emit/arrow.py: the TESTG long names
+in `testg_long`, which the emit and the mention pass both read).
 
-camel_case (F11), the ToC and licensing-note splits (F24, F25) and the
-translated-title parse (F26) run only inside the Arrow emit kernel
-(emit/arrow.py).
+F11 camel case, F24/F25 the ToC and licensing-note splits, F26 the
+translated-title parse and F27 the full-title concat run only inside the
+Arrow emit kernel (emit/arrow.py).
 """
 
 from __future__ import annotations
-
-import pandas as pd
-from pyspark.sql import Column, functions as F
-from pyspark.sql.functions import pandas_udf
 
 _TITLE_STOPWORDS = [
     "und", "bis", "zu", "zum", "von", "der", "die", "das", "des", "dem",
@@ -66,44 +60,3 @@ def _title_one(text):
         w if w in allcaps else token(w, i == 0)
         for i, w in enumerate(text.split())
     )
-
-
-def _title_except_if_upper_arr_fn(s: pd.Series) -> pd.Series:
-    def _arr(values):
-        if values is None:
-            return None
-        # reference gate: `if longName and longName.isupper()` — Python
-        # semantics (at least one cased char, all of them uppercase)
-        return [
-            _title_one(v) if v is not None and v.isupper() else v for v in values
-        ]
-
-    return s.map(_arr)
-
-
-def title_except_if_upper_arr(col: Column) -> Column:
-    """Array tier of F10 for repeated fields (pandas UDFs can't run inside
-    higher-order-function lambdas): title-case each element that Python's
-    str.isupper() flags as ALL-CAPS, pass others through unchanged
-    (research_info.py:1434-1437)."""
-    return pandas_udf(_title_except_if_upper_arr_fn, "array<string>")(col)
-
-
-# reference abstract.py:149 — no DOTALL (a multi-line abstract never
-# splits) and optional space before the colon
-TOC_RE = r"^(.*)[-–]\s*(Contents|Inhalt)\s*:\s*(.*)$"
-
-
-_DEEPL_RE = r"(?is)^(.*)\s\((translated by DeepL)\)$"
-_COPYRIGHT_RE = r"(?is)^(.*)(\(c\).*)$"
-
-
-_TRANS_TITLE_DEEPL_RE = r"(?s)^(.*)\s*\((DeepL)\)\s*$"
-
-
-def full_title(ti: Column, tiu: Column) -> Column:
-    """F27: main title + '. ' + subtitle when present
-    (convert_starxml_to_bf.py:638-640)."""
-    return F.when(
-        tiu.isNotNull() & (F.length(tiu) > 0), F.concat(ti, F.lit(". "), tiu)
-    ).otherwise(ti)

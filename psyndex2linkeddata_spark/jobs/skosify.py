@@ -40,8 +40,8 @@ def main(argv=None) -> None:
     ap.add_argument("--out-parquet", action="store_true",
                     help="write parquet instead of Turtle")
     ap.add_argument("--max-iter", type=int, default=30,
-                    help="hierarchy-closure round bound (strict: raises "
-                         "if the vocabulary is deeper)")
+                    help="hierarchy-closure round bound (raises if the "
+                         "vocabulary is deeper)")
     args = ap.parse_args(argv)
 
     spark = get_spark(app_name="skosify")

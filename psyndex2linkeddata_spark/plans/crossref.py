@@ -22,8 +22,9 @@ and accepts the top hit when fuzz.token_sort_ratio ≥ threshold
 
 Scale: the authority table is Crossref-sized (10^8 rows, NOT broadcast);
 tier V is one shuffled equi-join on the doi key, tier S shuffles on the
-LSH band key. Both run on the exploded mention set (records with RPLIC
-fields ≪ pages), never on the page table itself.
+LSH band key. Both run on the mention rows (emit/arrow.mentions_arrow:
+one row per mention entry the maps read, ≪ pages), never on the page
+table itself; each map filters them on `kind`.
 """
 
 from __future__ import annotations
@@ -82,17 +83,18 @@ def _citation_search(
 
 
 def rplic_resolution_map(
-    records: DataFrame,
+    mentions: DataFrame,
     auth_crossref: DataFrame,
     threshold: float = 30.0,
     search_threshold: float | None = None,
     num_hashes: int = 16,
 ) -> DataFrame:
-    """J13/J14 kernel -> (url, _rplic_res: map<idx, array<doi>>).
+    """J13/J14 kernel: `rplic` mention rows -> (url, _rplic_res:
+    map<idx, array<doi>>).
 
     The map's value REPLACES the RPLIC entry's candidate DOIs (empty
     array = all candidate DOIs invalid); build_triples joins it onto the
-    records for the emitter (emit/arrow.py record_triples `_rplic_res`).
+    pages for the emitter (emit/arrow.py record_triples `_rplic_res`).
 
     `threshold` is the reference's fuzz threshold (30 for RPLIC).
     `search_threshold` (default = threshold) applies to tier S only: the
@@ -109,15 +111,13 @@ def rplic_resolution_map(
         F.col("doi").alias("_doi_out"),
     ).dropDuplicates(["_adoi"])
 
-    ex = records.select(
-        F.col("url"), F.posexplode("rplic_parsed").alias("_idx", "_p")
-    ).select(
+    ex = mentions.where(F.col("kind") == "rplic").select(
         "url",
-        "_idx",
-        F.col("_p")["main"].alias("_main"),
-        F.col("_p")["ids"]["dois"].alias("_dois"),
-        F.size(F.col("_p")["ids"]["urls"]).alias("_n_urls"),
-        F.try_element_at(F.col("_p")["ids"]["unknowns"], F.lit(1)).alias("_unk"),
+        F.col("idx").alias("_idx"),
+        F.col("main").alias("_main"),
+        F.col("dois").alias("_dois"),
+        F.col("n_urls").alias("_n_urls"),
+        F.col("key").alias("_unk"),
     )
     ex = ex.localCheckpoint(eager=False)  # consumed by 3 joins below
 
@@ -175,18 +175,19 @@ def rplic_resolution_map(
 
 
 def rel_resolution_map(
-    records: DataFrame,
+    mentions: DataFrame,
     auth_crossref: DataFrame,
     threshold: float = 60.0,
     search_threshold: float | None = None,
     num_hashes: int = 16,
 ) -> DataFrame:
-    """J14 for REL fields -> (url, _rel_res: map<idx, doi>): searched DOI
-    for the composed |a/|t/|j/|q citation (research_info.py:1268-1276;
-    similarity_threshold=60 — 'low … to get most of the RELs'). Only
-    entries whose whole string classified as 'unknown' (no inline
-    DOI/URL) and that don't lead with a DFK are searched; REL has no
-    validation tier (inline DOIs are trusted)."""
+    """J14 for REL fields: `rel` mention rows -> (url, _rel_res:
+    map<idx, doi>): searched DOI for the composed |a/|t/|j/|q citation
+    (research_info.py:1268-1276; similarity_threshold=60 — 'low … to get
+    most of the RELs'). Only entries whose whole string classified as
+    'unknown' (no inline DOI/URL) and that don't lead with a DFK have a
+    row (emit/arrow.page_mentions); REL has no validation tier (inline
+    DOIs are trusted)."""
     if search_threshold is None:
         search_threshold = threshold
     auth = auth_crossref.select(
@@ -197,13 +198,9 @@ def rel_resolution_map(
         F.col("doi").alias("_doi_out"),
     ).dropDuplicates(["_adoi"])
 
-    ex = records.select(
-        F.col("url"), F.posexplode("rel_parsed").alias("_idx", "_p")
-    ).where(
-        (F.col("_p")["checked"]["type"] == "unknown")
-        & F.col("_p")["citation"].isNotNull()
-        & ~F.substring(F.col("_p")["cstr"], 1, 7).rlike(r"^\d{7}$")
-    ).select("url", "_idx", F.lower(F.col("_p")["citation"]).alias("_ckey"))
+    ex = mentions.where(F.col("kind") == "rel").select(
+        "url", F.col("idx").alias("_idx"), F.lower(F.col("key")).alias("_ckey")
+    )
 
     best = _citation_search(
         ex.select("_ckey").distinct(), auth, search_threshold, num_hashes
@@ -236,16 +233,17 @@ def _dsm_icd_mismatch(a, b):
 
 
 def testg_resolution_map(
-    records: DataFrame,
+    mentions: DataFrame,
     auth_tests: DataFrame,
     threshold: float = 70.0,
     num_hashes: int = 16,
 ) -> DataFrame:
-    """J15 -> (url, _testg_res: map<idx, test_id>): fill
-    `testg_parsed[*].test_id` for uncontrolled entries by
-    fuzzy longName lookup against the offline test database
-    (auth_tests(test_id, long_name) — the all_tests.json dump the
-    reference loads in research_info.py:1355-1373).
+    """J15: `testg` mention rows -> (url, _testg_res: map<idx, test_id>):
+    fill the test id of uncontrolled entries (no |c; emit/arrow.py
+    testg_parsed_of reads the map) by fuzzy longName lookup against the
+    offline test database (auth_tests(test_id, long_name) — the
+    all_tests.json dump the reference loads in
+    research_info.py:1355-1373).
 
     Blocking: word-MinHash LSH on punctuation-normalized lowercased names
     (rows_per_band=1); scoring: token_sort_ratio on the RAW names (the
@@ -259,11 +257,9 @@ def testg_resolution_map(
         F.col("test_id").alias("_tid"), F.col("long_name").alias("_aname")
     ).dropDuplicates(["_aname"])
 
-    ex = records.select(
-        F.col("url"), F.posexplode("testg_parsed").alias("_idx", "_p")
-    ).where(
-        F.col("_p")["test_id"].isNull() & F.col("_p")["long"].isNotNull()
-    ).select("url", "_idx", F.col("_p")["long"].alias("_lname"))
+    ex = mentions.where(F.col("kind") == "testg").select(
+        "url", F.col("idx").alias("_idx"), F.col("key").alias("_lname")
+    )
 
     keys = ex.select("_lname").distinct().withColumn(
         "_lname_b", norm_key(F.col("_lname"))

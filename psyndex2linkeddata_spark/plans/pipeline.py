@@ -1,10 +1,11 @@
 """The KG-construction pipeline: pages → records → triples.
 
 Stage model (SURVEY §7): extract (pages→records, stage 1), normalize
-(records→mentions, stage 2), emit (mentions→triples, stage 5), finalize
-(set-semantics dedup, stage 6). Entity linking against the authority
-dictionaries (stage 3) runs inside the emit stage; URI canonicalization
-(stage 4) is a composable add-on from operators/.
+(records→mentions, stage 2), emit (mentions→triples, stage 5) and
+finalize (set-semantics dedup, stage 6). The first three run in one
+Arrow stage (emit/arrow.py), as does entity linking against the
+authority dictionaries (stage 3); URI canonicalization (stage 4) is a
+composable add-on from operators/.
 
 Scale notes:
 - the emit stage (emit/arrow.py) runs parse + S3 kill-list + emit +
@@ -19,9 +20,12 @@ Scale notes:
   (operators/upsert.dedup_clean_genres), with no cache and no second
   exchange; hot subjects (genre and vocabulary nodes) land in one
   partition each.
-- the Column parser (extract_records) and normalize enter the plan only
-  when a kerndaten, crossref or tests resolution map needs their
-  mention columns (the maps route).
+- the maps route (a kerndaten, crossref or tests authority): one more
+  narrow mapInArrow pass over the pages (emit/arrow.mentions_arrow, the
+  emit's own parser) emits the mention rows the resolution maps join
+  on; the maps are joined onto the pages on url, and the emit stage
+  reads those pages as on the other routes. No route plans the Column
+  parser (extract/parser.py).
 - the semantics are held by independent gates rather than a second
   emitter: the pure-Python golden oracle (tests/test_golden.py, exact
   set equality) and the pinned scenario triple sets
@@ -34,8 +38,8 @@ import functools
 
 from pyspark.sql import DataFrame, functions as F
 
-from psyndex2linkeddata_spark.emit.normalize import normalize
-from psyndex2linkeddata_spark.extract.parser import extract_records
+# unused here: perfbench's PATCH_POINTS wraps it (--trace 1 needs the name)
+from psyndex2linkeddata_spark.extract.parser import extract_records  # noqa: F401
 
 
 def finalize(
@@ -85,29 +89,27 @@ def finalize(
     return deduped
 
 
-def kerndaten_resolution_map(records: DataFrame, kern: DataFrame) -> DataFrame:
+def kerndaten_resolution_map(mentions: DataFrame, kern: DataFrame) -> DataFrame:
     """J9 second tier (reference modules/contributions.py:405-407,
     456-498: kerndaten.ttl parsed at import; unmatched PAUP ids fall
     back to the person's schema:alternateName variants).
 
     SURVEY §1.4 shape: broadcast the person authority (paup_id,
-    alternate_names array) against the exploded PAUP mention ids and
-    fold back to one compact per-record map column `_kerndaten`
-    ({paup_id: [alternate name, ...]}) that the emitter feeds into the
-    matcher's fallback tier. Only records that mention a known id
-    get a row — the join stays proportional to the mention count, and
-    at a 10^8-author scale the broadcast hint is the only line to drop
-    (the shuffle join on paup_id is already the right shape)."""
-    from psyndex2linkeddata_spark.emit.base import subfield
-
-    mentions = (
-        records.select("url", F.explode(F.col("PAUP")).alias("_e"))
-        .select("url", subfield(F.col("_e"), "n").alias("paup_id"))
-        .where(F.col("paup_id").isNotNull())
+    alternate_names array) against the PAUP mention ids (the `paup`
+    rows of emit/arrow.mentions_arrow) and fold back to one compact
+    per-page map column `_kerndaten` ({paup_id: [alternate name, ...]})
+    that the emitter feeds into the matcher's fallback tier. Only pages
+    that mention a known id get a row — the join stays proportional to
+    the mention count, and at a 10^8-author scale the broadcast hint is
+    the only line to drop (the shuffle join on paup_id is already the
+    right shape)."""
+    ids = (
+        mentions.where(F.col("kind") == "paup")
+        .select("url", F.col("key").alias("paup_id"))
         .distinct()
     )
     return (
-        mentions.join(F.broadcast(kern), "paup_id")
+        ids.join(F.broadcast(kern), "paup_id")
         .groupBy("url")
         .agg(
             F.map_from_entries(
@@ -140,11 +142,13 @@ def build_triples(
     (J1-J6 + A2 ancestor cleanup) add link triples.
     - Pages route (no kerndaten/crossref/tests map): the stage reads the
       pages and parses each one once.
-    - Maps route: the offline-linking joins (J9, J13-J15) run as
-      DataFrame joins over the Column-parsed mention columns
-      (extract_records → normalize), reduced to compact per-record
-      resolution maps the emitter applies; a killed record emits
-      nothing, whatever maps it was joined to.
+    - Maps route (kerndaten, crossref or tests): the offline-linking
+      joins (J9, J13-J15) run as DataFrame joins over the mention rows
+      of emit/arrow.mentions_arrow (the emit's own parser, so each
+      map's index lines up with the emit), reduced to compact per-page
+      resolution maps that are joined onto the pages on url and that
+      the emitter applies; a killed record emits nothing, whatever maps
+      it was joined to.
     - Linking (J1-J6) runs in the same stage: auth_orgs and auth_concepts
       are collected once per builder (triples_builder) and folded into
       plain dicts (emit/arrow.authority_links), and the kernel applies
@@ -183,6 +187,7 @@ def triples_builder(
     from psyndex2linkeddata_spark.emit.arrow import (
         authority_links,
         emit_triples_arrow,
+        mentions_arrow,
     )
     from psyndex2linkeddata_spark.operators.upsert import (
         dedup_clean_genres,
@@ -230,34 +235,25 @@ def triples_builder(
         if "crossref" in auth or "tests" in auth or "kerndaten" in auth:
             from psyndex2linkeddata_spark.plans import crossref as cr
 
-            src = extract_records(pages)
+            mentions = mentions_arrow(pages)
+            maps = []
             if "kerndaten" in auth:
-                src = src.join(
-                    kerndaten_resolution_map(src, auth["kerndaten"]), "url", "left"
-                )
-            norm = normalize(src)
+                maps.append(kerndaten_resolution_map(mentions, auth["kerndaten"]))
             if "crossref" in auth:
-                src = src.join(
-                    cr.rplic_resolution_map(
-                        norm,
-                        auth["crossref"],
-                        search_threshold=auth.get("crossref_search_threshold"),
-                    ),
-                    "url",
-                    "left",
-                ).join(
-                    cr.rel_resolution_map(
-                        norm,
-                        auth["crossref"],
-                        search_threshold=auth.get("crossref_rel_search_threshold"),
-                    ),
-                    "url",
-                    "left",
-                )
+                maps.append(cr.rplic_resolution_map(
+                    mentions,
+                    auth["crossref"],
+                    search_threshold=auth.get("crossref_search_threshold"),
+                ))
+                maps.append(cr.rel_resolution_map(
+                    mentions,
+                    auth["crossref"],
+                    search_threshold=auth.get("crossref_rel_search_threshold"),
+                ))
             if "tests" in auth:
-                src = src.join(
-                    cr.testg_resolution_map(norm, auth["tests"]), "url", "left"
-                )
+                maps.append(cr.testg_resolution_map(mentions, auth["tests"]))
+            for res in maps:
+                src = src.join(res, "url", "left")
         # Without authorities: one narrow stage + the dedup exchange, no
         # cache; the in-record A2 rule 1 in the kernel covers the genre
         # cleanup as long as the input holds one page per DFK, which is the

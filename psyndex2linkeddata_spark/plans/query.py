@@ -50,7 +50,9 @@ def path_closure(
     localCheckpoint exactly like operators/components.py. Hierarchies
     this is used for (genre broader-trees, org containment, geo
     containment) have single-digit depth, where the win is mostly
-    fewer scheduled Spark jobs; on deep graphs it is asymptotic.
+    fewer scheduled Spark jobs; on deep graphs it is asymptotic. A graph
+    that `max_iter` rounds do not close raises ValueError
+    (:func:`edge_closure`).
     """
     e = (
         triples.where(F.col("pred") == F.lit(pred))
@@ -62,9 +64,7 @@ def path_closure(
     return edge_closure(e, max_iter=max_iter)
 
 
-def edge_closure(
-    edges: DataFrame, max_iter: int = 20, strict: bool = False
-) -> DataFrame:
+def edge_closure(edges: DataFrame, max_iter: int = 20) -> DataFrame:
     """Transitive closure of an arbitrary ``(subj, obj)`` edge DataFrame —
     the semi-naive kernel behind :func:`path_closure`, exposed for callers
     whose edge set is not a single predicate (e.g. plans/skos.py, where
@@ -72,14 +72,14 @@ def edge_closure(
     ``skos:narrower``).
 
     Doubling rounds: round r covers (at least) all pairs within 2^r
-    hops, so with ``strict=False`` (the pred+ default) a graph deeper
-    than ~2^max_iter hops returns a truncated closure; ``strict=True``
-    raises on non-convergence instead — callers whose SEMANTICS need
-    the full closure (the Skosify related-vs-hierarchy repair) must not
-    silently under-close. Convergence (an empty frontier) implies the
-    exact full closure: if (a,b),(b,c) were known but (a,c) missing,
-    the round in which the later of the two halves was new would have
-    derived (a,c) from a frontier×closure or closure×frontier join.
+    hops. A graph deeper than ~2^max_iter hops raises ValueError rather
+    than return a truncated closure: SPARQL ``pred+`` and the Skosify
+    related-vs-hierarchy repair both promise the full closure, so an
+    under-closed result must not pass for one. Convergence (an empty
+    frontier) implies the exact full closure: if (a,b),(b,c) were known
+    but (a,c) missing, the round in which the later of the two halves
+    was new would have derived (a,c) from a frontier×closure or
+    closure×frontier join.
     """
     e = edges.select("subj", "obj").distinct().localCheckpoint()
     closure = e
@@ -120,7 +120,7 @@ def edge_closure(
             break
         closure = closure.union(new).localCheckpoint(eager=False)
         frontier = new
-    if strict and not converged:
+    if not converged:
         raise ValueError(
             f"edge_closure did not converge within max_iter={max_iter} "
             "doubling rounds; raise max_iter (graph deeper than the bound)"

@@ -69,10 +69,10 @@ def skosify_hygiene(triples: DataFrame, max_iter: int = 30) -> DataFrame:
     # Skosify infers the broader/narrower mutual inverses before either
     # check, so the hierarchy edge set is the union of both directions.
     hier = broader.union(narrower_inv)
-    # strict: a hierarchy deeper than max_iter must raise, not silently
-    # under-close (an under-closed broaderTransitive set would leave
-    # related triples Skosify removes)
-    closure = edge_closure(hier, max_iter=max_iter, strict=True)
+    # a hierarchy deeper than max_iter raises rather than under-close (an
+    # under-closed broaderTransitive set would leave related triples
+    # Skosify removes)
+    closure = edge_closure(hier, max_iter=max_iter)
 
     # related pairs hierarchically connected in either direction; the
     # symmetric related triples are materialized both ways in the data,

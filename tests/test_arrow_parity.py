@@ -59,9 +59,9 @@ def test_records_input_matches_snapshot(spark, pages, pinned):
 def test_authorities_match_snapshot(
     spark, pages, pages_subset, authorities, pinned, scenario
 ):
-    """Kill-list applied in-stage on both routes: `maps` adds the
-    resolution maps (records input), `job` is the convert job's authority
-    set (pages input)."""
+    """Kill-list applied in-stage on both routes, both on pages input:
+    `maps` adds the resolution maps, `job` is the convert job's
+    authority set."""
     from psyndex2linkeddata_spark.extract.parser import extract_records
 
     killed = extract_records(pages_subset).join(
@@ -74,37 +74,31 @@ def test_authorities_match_snapshot(
 def test_arrow_linking_parses_pages_once(
     spark, pages_subset, authorities, fixture_dir, monkeypatch
 ):
-    """Plan shape of the linking path: with the job's authority set
-    neither the Column parser nor the anti-join kill-list enters the plan
-    (the stage parses pages and applies the kill-list itself); a
-    resolution map still needs the Column parser's mention columns."""
+    """Plan shape of the linking path: neither the Column parser nor the
+    anti-join kill-list enters the plan on either route. With the job's
+    authority set the stage parses pages and applies the kill-list
+    itself; with the kerndaten, crossref and tests maps the maps read the
+    mention rows of the kernel's own parser (emit/arrow.mentions_arrow)."""
     from psyndex2linkeddata_spark.extract import parser
     from psyndex2linkeddata_spark.plans import pipeline
 
     def forbidden(*args, **kwargs):
-        raise AssertionError("Column parser or anti-join on the pages route")
+        raise AssertionError("Column parser or anti-join in build_triples")
 
     monkeypatch.setattr(parser, "filter_bad_ids", forbidden)
+    monkeypatch.setattr(parser, "extract_records", forbidden)
     monkeypatch.setattr(pipeline, "extract_records", forbidden)
     job = ts.job_authorities(authorities)
     assert build_triples(pages_subset, job).count() > 0
 
-    calls = []
-
-    def spy(pages):
-        calls.append(pages)
-        return parser.extract_records(pages)
-
-    monkeypatch.setattr(pipeline, "extract_records", spy)
-    crossref = spark.createDataFrame(
-        [("10.1000/x", "a title", "an author")],
-        "doi string, title string, authors string",
-    )
     kern = spark.read.parquet(os.path.join(fixture_dir, "auth_kerndaten.parquet"))
-    for key, table in (("crossref", crossref), ("kerndaten", kern)):
-        calls.clear()
-        build_triples(pages_subset, {"bad_ids": job["bad_ids"], key: table})
-        assert len(calls) == 1, key
+    maps = {
+        "bad_ids": job["bad_ids"],
+        "crossref": authorities["crossref"],
+        "tests": authorities["tests"],
+        "kerndaten": kern,
+    }
+    assert build_triples(pages_subset, maps).count() > 0
 
 
 def test_arrow_linking_runs_no_enrich_joins(
@@ -139,8 +133,9 @@ def test_crlf_pages_match_snapshots(spark, pages_subset, pinned, route):
     \\r would sit exactly where Spark's trim (0x20 only) and the
     reference's str.strip() disagree, so both parsers normalize line
     endings before splitting. The pages route covers the kernel's parser
-    (parse_page_text); the records route covers extract_records, which
-    the maps route feeds to the resolution maps and the emit stage."""
+    (parse_page_text), which the emit and the maps route's mention pass
+    share (tests/test_mentions.py covers the mention rows); the records
+    route covers extract_records, the emit's records-mode input."""
     from psyndex2linkeddata_spark.emit.arrow import emit_triples_arrow
     from psyndex2linkeddata_spark.extract.parser import extract_records
 

@@ -1765,10 +1765,10 @@ def test_path_closure_and_bgp_property_path(spark):
 
 def test_edge_closure_doubling_deep_chain(spark):
     """The doubling kernel closes a depth-300 chain within ~log2(300)+1
-    rounds: max_iter=12 must CONVERGE (strict raises otherwise) and the
+    rounds: max_iter=12 must CONVERGE (it raises otherwise) and the
     pair set is complete — a one-hop-per-round semi-naive loop would
-    need 300 rounds. Also pins the strict non-convergence error for a
-    bound that genuinely is too small."""
+    need 300 rounds. Also pins the non-convergence error for a bound
+    that genuinely is too small."""
     import pytest as _pytest
     from pyspark.sql import functions as F
 
@@ -1779,14 +1779,32 @@ def test_edge_closure_doubling_deep_chain(spark):
         F.col("id").cast("string").alias("subj"),
         (F.col("id") + 1).cast("string").alias("obj"),
     )
-    closed = edge_closure(chain, max_iter=12, strict=True)
+    closed = edge_closure(chain, max_iter=12)
     assert closed.count() == depth * (depth + 1) // 2
     # spot-check the longest path closed
     assert closed.where(
         (F.col("subj") == "0") & (F.col("obj") == str(depth))
     ).count() == 1
     with _pytest.raises(ValueError, match="did not converge"):
-        edge_closure(chain, max_iter=3, strict=True).count()
+        edge_closure(chain, max_iter=3).count()
+
+
+def test_path_closure_raises_when_unconverged(spark):
+    """SPARQL pred+ promises the full closure: a chain deeper than
+    2^max_iter hops raises instead of returning the pairs the rounds
+    reached."""
+    import pytest as _pytest
+
+    from psyndex2linkeddata_spark.plans.query import path_closure
+
+    depth = 20  # > 2^3 + 1 hops
+    t = spark.createDataFrame(
+        [(str(i), "in", str(i + 1)) for i in range(depth)],
+        "subj string, pred string, obj string",
+    )
+    with _pytest.raises(ValueError, match="did not converge"):
+        path_closure(t, "in", max_iter=3)
+    assert path_closure(t, "in", max_iter=6).count() == depth * (depth + 1) // 2
 
 
 def test_bgp_optional(spark):

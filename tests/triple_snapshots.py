@@ -14,7 +14,8 @@ pages and authority tables, seed 42):
 - subset: a deterministic ~1/3 slice plus the pages bad_ids names;
 - job: the subset with the convert job's authority set (pages route);
 - maps: the subset with every fixture authority, the crossref and
-  tests resolution maps included (records route, via extract_records).
+  tests resolution maps included (pages route plus the mention pass,
+  emit/arrow.mentions_arrow).
 
 Re-pin after an intended change to emit semantics or to datagen:
     python -m tests.triple_snapshots
