@@ -2,7 +2,8 @@
 
 - dedup: exact / MinHash-LSH / SimHash / n-gram-Jaccard / embedding near-dup
 - similarity: brute-force + LSH-bucketed cosine top-k
-- linking: entity linking (exact, LSH + verify, affiliation containment)
+- linking: entity linking (exact, affiliation containment) and the fuzzy
+  tiers' key normalization and scorer
 - components: connected-components URI canonicalization
 - textstats: language-ID, quality scoring, token counts, fingerprints
 - multimodal: binary-column decode/feature plumbing (Arrow-batched)

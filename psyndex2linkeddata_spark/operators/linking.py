@@ -1,21 +1,18 @@
-"""Entity linking against broadcast authority tables (SURVEY §2.4
-J1-J18). The reference's per-row HTTP lookups (ROR/Crossref/Skosmos, redis-
-cached — local_api_lookups.py) become offline authority DataFrames joined
-by one of three matchers:
+"""Entity linking against authority tables (SURVEY §2.4 J1-J18). The
+reference's per-row HTTP lookups (ROR/Crossref/Skosmos, redis-cached —
+local_api_lookups.py) become offline authority DataFrames joined by one
+of two matchers:
 
   link_exact        exact broadcast hash join on the normalized key
-  link_fuzzy        MinHash-LSH blocking + similarity verification (fuzzy
-                    joins J1/J9-J15/J18) — candidates only, then a
-                    row-local score
   link_affiliation  ROR-affiliation-style token containment
+
+The fuzzy tiers (J13-J15: LSH blocking, a token_sort_ratio score, the
+top hit per key) are one search in plans/crossref.py; this module holds
+their key normalization (`norm_key`) and scorer (`token_sort_ratio_udf`).
 
 Spark-native memoization (replacing requests_cache/redis): `distinct()`
 the mention keys before the expensive tier, join once, re-join to rows —
 each unique dirty string is scored exactly once per job.
-
-The verifier is a native token-set similarity (array_intersect/union) —
-a deterministic stand-in for fuzzywuzzy's partial_ratio (contributions.py
-:434); `difflib_ratio_udf` is the Arrow tier for ratio-style scoring.
 """
 
 from __future__ import annotations
@@ -24,8 +21,6 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.functions import pandas_udf
 
-from psyndex2linkeddata_spark.operators.dedup import lsh_bands, minhash_signatures
-
 
 def norm_key(col: Column) -> Column:
     """Join key normalization: casefold, collapse whitespace, strip
@@ -33,35 +28,6 @@ def norm_key(col: Column) -> Column:
     s = F.lower(F.trim(col))
     s = F.regexp_replace(s, r"[.,;:()]+", " ")
     return F.trim(F.regexp_replace(s, r"\s+", " "))
-
-
-def token_set_similarity(a: Column, b: Column) -> Column:
-    """Jaccard over whitespace token sets of the normalized strings —
-    the native verification score (0..1)."""
-    ta = F.array_distinct(F.split(norm_key(a), " "))
-    tb = F.array_distinct(F.split(norm_key(b), " "))
-    inter = F.size(F.array_intersect(ta, tb))
-    union = F.size(F.array_union(ta, tb))
-    return inter / F.greatest(union, F.lit(1))
-
-
-def _ratio_fn(s: pd.DataFrame) -> pd.Series:
-    import difflib
-
-    def one(row):
-        a, b = row["a"], row["b"]
-        if a is None or b is None:
-            return 0.0
-        return difflib.SequenceMatcher(None, a.casefold(), b.casefold()).ratio()
-
-    return s.apply(one, axis=1)
-
-
-def difflib_ratio_udf(a: Column, b: Column) -> Column:
-    """Arrow-batched ratio scorer (fuzzywuzzy-ratio stand-in) for the few
-    candidates that survive blocking — never applied to full tables."""
-    fn = pandas_udf(_ratio_fn, "double")
-    return fn(F.struct(a.alias("a"), b.alias("b")))
 
 
 def _token_sort_ratio_py(a: str | None, b: str | None) -> float:
@@ -110,61 +76,6 @@ def link_exact(
     return mentions.withColumn("_mkey", norm_key(F.col(mention_key))).join(
         auth, F.col("_mkey") == F.col("_akey"), "left"
     ).drop("_akey", "_mkey")
-
-
-def link_fuzzy(
-    mentions: DataFrame,
-    authority: DataFrame,
-    mention_key: str,
-    auth_key: str,
-    auth_cols: list[str],
-    threshold: float = 0.5,
-    num_hashes: int = 8,
-    bands: int = 4,
-    shingle_n: int = 1,
-) -> DataFrame:
-    """Tier 3: MinHash-LSH blocking over name tokens + token-set verify.
-
-    Memoized: distinct mention keys → block → verify → top-1 per key →
-    re-join to mention rows. Returns mentions + auth_cols + `_score`."""
-    keys = mentions.select(norm_key(F.col(mention_key)).alias("_mkey")).distinct()
-    rows_per_band = num_hashes // bands
-    # narrow Arrow signature pass (see dedup.minhash_signatures)
-    m_sig = minhash_signatures(keys, "_mkey", "_mkey", num_hashes, shingle_n).select(
-        "_mkey",
-        F.explode(lsh_bands(F.col("_sig"), bands, rows_per_band)).alias("b"),
-    ).select("_mkey", F.col("b.band"), F.col("b.key"))
-    auth = authority.select(
-        norm_key(F.col(auth_key)).alias("_akey"), *[F.col(c) for c in auth_cols]
-    ).dropDuplicates(["_akey"])
-    a_sig = minhash_signatures(
-        auth.select("_akey"), "_akey", "_akey", num_hashes, shingle_n
-    ).select(
-        "_akey",
-        F.explode(lsh_bands(F.col("_sig"), bands, rows_per_band)).alias("b"),
-    ).select("_akey", F.col("b.band"), F.col("b.key"))
-    cands = (
-        m_sig.join(F.broadcast(a_sig), ["band", "key"])
-        .select("_mkey", "_akey")
-        .distinct()
-    )
-    scored = cands.withColumn(
-        "_score", token_set_similarity(F.col("_mkey"), F.col("_akey"))
-    ).where(F.col("_score") >= threshold)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("_mkey").orderBy(F.col("_score").desc(), F.col("_akey"))
-    best = (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-        .join(F.broadcast(auth), "_akey")
-    )
-    return (
-        mentions.withColumn("_mkey", norm_key(F.col(mention_key)))
-        .join(F.broadcast(best), "_mkey", "left")
-        .drop("_mkey", "_akey")
-    )
 
 
 def link_affiliation(

@@ -1,26 +1,22 @@
-"""Offline Crossref tiers for citation-bearing relation fields (J13/J14).
+"""Offline Crossref and test-database tiers (J13/J14/J15).
 
-The reference validates every extracted DOI against the live Crossref API
-(research_info.py:911-976 validate_doi_against_crossref) and, for
-citations with neither DOI nor URL, searches Crossref for the citation
-and accepts the top hit when fuzz.token_sort_ratio ≥ threshold
-(research_info.py:981-1042 check_crossref_for_citation_doi; thresholds
-:1054 → 30 for RPLIC). Here the API becomes an offline authority table
-`auth_crossref(doi, title, authors)` — a Crossref works dump slice:
+The reference validates extracted DOIs against the live Crossref API
+(research_info.py:911-976), searches Crossref for citations with neither
+DOI nor URL and takes the top hit when fuzz.token_sort_ratio ≥ threshold
+(:981-1042; 30 for RPLIC :1054, 60 for REL :1268-1276), and looks test
+names up in its test database (:1355-1373, ≥ 70). Here the API becomes
+an offline table `auth_crossref(doi, title, authors)` — a Crossref works
+dump slice — and the database `auth_tests(test_id, long_name)`:
 
-  tier V (validate): candidate DOI joined on lower(doi); a DOI absent
-    from the table is INVALID (the API's 404 path), present → valid when
-    token_sort_ratio(lower(title+' '+authors), lower(citation)) ≥ thr.
-    A citation that is empty / a bare URL / a bare DOI can't be compared
-    — the DOI is assumed valid (reference :941-944).
-  tier S (search): entries with no valid DOI and no URL block against
-    the authority by word-MinHash LSH (rows_per_band=1 → a candidate
-    surfaces if ANY of the num_hashes minhashes agree; the offline
-    stand-in for Crossref's own search ranking), then score with
-    token_sort_ratio and keep the top hit ≥ thr (ties: doi order —
-    declared, Crossref's relevance rank is not reproducible offline).
+  tier V (validate, RPLIC only): candidate DOI joined on lower(doi); a
+    DOI absent from the table is INVALID (the API's 404 path), present →
+    valid when token_sort_ratio(lower(title+' '+authors),
+    lower(citation)) ≥ 30. A citation that is empty / a bare URL / a
+    bare DOI can't be compared — the DOI is assumed valid (:941-944).
+  tier S (search: RPLIC/REL citations, TESTG names): `_top_match`, the
+    offline stand-in for the API's own search ranking.
 
-Scale: the authority table is Crossref-sized (10^8 rows, NOT broadcast);
+Scale: the works table is Crossref-sized (10^8 rows, NOT broadcast);
 tier V is one shuffled equi-join on the doi key, tier S shuffles on the
 LSH band key. Both run on the mention rows (emit/arrow.mentions_arrow:
 one row per mention entry the maps read, ≪ pages), never on the page
@@ -32,7 +28,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from psyndex2linkeddata_spark.operators.dedup import lsh_bands, minhash_signatures
-from psyndex2linkeddata_spark.operators.linking import token_sort_ratio_udf
+from psyndex2linkeddata_spark.operators.linking import norm_key, token_sort_ratio_udf
+
+RPLIC_THRESHOLD = 30.0
+REL_THRESHOLD = 60.0
+TESTG_THRESHOLD = 70.0
+NUM_HASHES = 16
 
 
 def _assume_valid(citation):
@@ -41,74 +42,93 @@ def _assume_valid(citation):
     return (c == "") | c.startswith("http") | c.startswith("10.")
 
 
-def _citation_search(
-    keys: DataFrame, auth: DataFrame, threshold: float, num_hashes: int
-) -> DataFrame:
-    """Tier S kernel: distinct citation keys (_ckey, lowercased) → best
-    authority DOI (_ckey, _sdoi) with token_sort_ratio ≥ threshold.
+def _top_match(keys: DataFrame, auth: DataFrame, reject=None) -> DataFrame:
+    """Tier S kernel: distinct `_key` rows against an authority with one
+    row per entry (_aname, _out) → (_key, _out, _score), the top
+    candidate per key by token_sort_ratio, then `_out` (declared: the
+    API's relevance rank and the test file's order are not reproducible
+    offline). Candidates where `reject(_aname, _key)` holds drop out
+    before the ranking; callers threshold `_score` after it (the top
+    candidate clears a threshold exactly when some candidate does).
 
-    Blocking runs on punctuation-stripped keys (norm_key) — attached
-    punctuation ('rand,' vs 'rand') otherwise craters the word-set
-    jaccard and with it the minhash agreement probability; scoring stays
-    on the raw lowercased strings (reference semantics). rows_per_band=1:
-    any shared minhash surfaces the candidate pair."""
-    from psyndex2linkeddata_spark.operators.linking import norm_key
+    Blocking: word-MinHash LSH with rows_per_band=1 (any shared minhash
+    surfaces the pair) on punctuation-stripped strings (norm_key) —
+    attached punctuation ('rand,' vs 'rand') otherwise craters the
+    word-set jaccard; scoring stays on the strings as given. The
+    authority columns ride the signature kernel as its id, so no join
+    brings them back before the bands explode."""
 
-    keys_b = keys.withColumn("_ckey_b", norm_key(F.col("_ckey")))
-    m_sig = minhash_signatures(
-        keys_b, "_ckey", "_ckey_b", num_hashes, n=1
-    ).select(
-        "_ckey", F.explode(lsh_bands(F.col("_sig"), num_hashes, 1)).alias("b")
-    ).select("_ckey", "b.band", "b.key")
-    auth_b = auth.withColumn("_akey_b", norm_key(F.col("_akey")))
-    a_sig = minhash_signatures(
-        auth_b, "_adoi", "_akey_b", num_hashes, n=1
-    ).join(auth, "_adoi").select(
-        "_akey",
-        "_doi_out",
-        F.explode(lsh_bands(F.col("_sig"), num_hashes, 1)).alias("b"),
-    ).select("_akey", "_doi_out", "b.band", "b.key")
-    pairs = m_sig.join(a_sig, ["band", "key"]).select(
-        "_ckey", "_akey", "_doi_out"
-    ).distinct()
-    scored = pairs.withColumn(
-        "_score", token_sort_ratio_udf(F.col("_akey"), F.col("_ckey"))
-    ).where(F.col("_score") >= F.lit(threshold))
-    wq = Window.partitionBy("_ckey").orderBy(F.col("_score").desc(), F.col("_doi_out"))
+    def banded(df, id_col, text_col):
+        blk = df.withColumn("_blk", norm_key(F.col(text_col)))
+        sig = minhash_signatures(blk, id_col, "_blk", NUM_HASHES, n=1)
+        b = F.explode(lsh_bands(F.col("_sig"), NUM_HASHES, 1)).alias("b")
+        return sig.select(id_col, b).select(id_col, "b.band", "b.key")
+
+    m_sig = banded(keys, "_key", "_key")
+    a = auth.select(F.struct("_aname", "_out").alias("_a"), "_aname")
+    a_sig = banded(a, "_a", "_aname").select("_a.*", "band", "key")
+    pairs = m_sig.join(a_sig, ["band", "key"]).select("_key", "_aname", "_out")
+    pairs = pairs.distinct()
+    if reject is not None:
+        pairs = pairs.where(~reject(F.col("_aname"), F.col("_key")))
+    score = token_sort_ratio_udf(F.col("_aname"), F.col("_key"))
+    scored = pairs.withColumn("_score", score)
+    w = Window.partitionBy("_key").orderBy(F.col("_score").desc(), F.col("_out"))
     return (
-        scored.withColumn("_rn", F.row_number().over(wq))
+        scored.withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)
-        .select("_ckey", F.col("_doi_out").alias("_sdoi"))
+        .select("_key", "_out", "_score")
     )
 
 
-def rplic_resolution_map(
+def _searched(rows: DataFrame, auth: DataFrame, threshold: float, reject=None):
+    """`rows` (url, _idx, _key) → (url, _idx, _key, _out): `_out` is the
+    top match of `_key` when it scores ≥ threshold, else null."""
+    best = _top_match(rows.select("_key").distinct(), auth, reject).where(
+        F.col("_score") >= F.lit(threshold)
+    )
+    return rows.join(best.select("_key", "_out"), "_key", "left")
+
+
+def _per_page(rows: DataFrame, value, name: str) -> DataFrame:
+    """Fold (url, _idx, value) rows into one `name: map<_idx, value>`
+    column per page."""
+    return rows.groupBy("url").agg(
+        F.map_from_entries(F.collect_list(F.struct(F.col("_idx"), value))).alias(name)
+    )
+
+
+def crossref_resolution_maps(
     mentions: DataFrame,
     auth_crossref: DataFrame,
-    threshold: float = 30.0,
     search_threshold: float | None = None,
-    num_hashes: int = 16,
-) -> DataFrame:
-    """J13/J14 kernel: `rplic` mention rows -> (url, _rplic_res:
-    map<idx, array<doi>>).
+) -> tuple[DataFrame, DataFrame]:
+    """J13/J14: `rplic` and `rel` mention rows -> (url, _rplic_res:
+    map<idx, array<doi>>) and (url, _rel_res: map<idx, doi>), over one
+    projection of the works table.
 
-    The map's value REPLACES the RPLIC entry's candidate DOIs (empty
-    array = all candidate DOIs invalid); build_triples joins it onto the
-    pages for the emitter (emit/arrow.py record_triples `_rplic_res`).
+    `_rplic_res` REPLACES an RPLIC entry's candidate DOIs (empty array =
+    all candidate DOIs invalid): the first valid candidate (tier V), else
+    for an entry with no URL the searched DOI of its citation (tier S).
+    `_rel_res` holds the searched DOI of the composed |a/|t/|j/|q
+    citation; only REL entries whose whole string classified as
+    'unknown' (no inline DOI/URL) and that don't lead with a DFK have a
+    row (emit/arrow.page_mentions), and REL has no validation tier
+    (inline DOIs are trusted). build_triples joins both onto the pages
+    for the emitter (emit/arrow.py record_triples).
 
-    `threshold` is the reference's fuzz threshold (30 for RPLIC).
-    `search_threshold` (default = threshold) applies to tier S only: the
+    `search_threshold` (default 30) applies to the RPLIC search only: the
     live API ranks by its own relevance engine and the 30-bar merely
     sanity-checks its top hit; a pure similarity ranking has no such
     prior, so a higher acceptance bar stands in for it."""
     if search_threshold is None:
-        search_threshold = threshold
+        search_threshold = RPLIC_THRESHOLD
     auth = auth_crossref.select(
         F.lower(F.trim(F.col("doi"))).alias("_adoi"),
         F.lower(
             F.concat_ws(" ", F.col("title"), F.coalesce(F.col("authors"), F.lit("")))
-        ).alias("_akey"),
-        F.col("doi").alias("_doi_out"),
+        ).alias("_aname"),
+        F.col("doi").alias("_out"),
     ).dropDuplicates(["_adoi"])
 
     ex = mentions.where(F.col("kind") == "rplic").select(
@@ -126,11 +146,11 @@ def rplic_resolution_map(
         "url", "_idx", "_main", F.posexplode("_dois").alias("_pos", "_cand")
     )
     v = cands.join(auth, F.lower(cands["_cand"]) == auth["_adoi"], "left")
-    score = token_sort_ratio_udf(F.col("_akey"), F.lower(F.col("_main")))
+    score = token_sort_ratio_udf(F.col("_aname"), F.lower(F.col("_main")))
     v = v.withColumn(
         "_valid",
         _assume_valid(F.col("_main"))
-        | (F.col("_adoi").isNotNull() & (score >= F.lit(threshold))),
+        | (F.col("_adoi").isNotNull() & (score >= F.lit(RPLIC_THRESHOLD))),
     )
     w = Window.partitionBy("url", "_idx").orderBy("_pos")
     first_valid = (
@@ -147,74 +167,28 @@ def rplic_resolution_map(
         F.col("_vdoi").isNull()
         & (F.col("_n_urls") == 0)
         & F.col("_unk").isNotNull()
-    ).select("url", "_idx", F.lower(F.col("_unk")).alias("_ckey"))
-    best = _citation_search(
-        need.select("_ckey").distinct(), auth, search_threshold, num_hashes
-    )
-    searched = need.join(best, "_ckey", "left").select("url", "_idx", "_sdoi")
+    ).select("url", "_idx", F.lower(F.col("_unk")).alias("_key"))
+    searched = _searched(need, auth, search_threshold).select("url", "_idx", "_out")
 
-    # ---- resolution map per record ------------------------------------
-    return (
-        base.join(searched, ["url", "_idx"], "left")
-        .select(
-            "url",
-            "_idx",
-            F.coalesce(
-                F.when(F.col("_vdoi").isNotNull(), F.array(F.col("_vdoi"))),
-                F.when(F.col("_sdoi").isNotNull(), F.array(F.col("_sdoi"))),
-                F.array().cast("array<string>"),
-            ).alias("_new_dois"),
-        )
-        .groupBy("url")
-        .agg(
-            F.map_from_entries(
-                F.collect_list(F.struct(F.col("_idx"), F.col("_new_dois")))
-            ).alias("_rplic_res")
-        )
+    rplic = _per_page(
+        base.join(searched, ["url", "_idx"], "left"),
+        F.coalesce(
+            F.when(F.col("_vdoi").isNotNull(), F.array(F.col("_vdoi"))),
+            F.when(F.col("_out").isNotNull(), F.array(F.col("_out"))),
+            F.array().cast("array<string>"),
+        ),
+        "_rplic_res",
     )
 
-
-def rel_resolution_map(
-    mentions: DataFrame,
-    auth_crossref: DataFrame,
-    threshold: float = 60.0,
-    search_threshold: float | None = None,
-    num_hashes: int = 16,
-) -> DataFrame:
-    """J14 for REL fields: `rel` mention rows -> (url, _rel_res:
-    map<idx, doi>): searched DOI for the composed |a/|t/|j/|q citation
-    (research_info.py:1268-1276; similarity_threshold=60 — 'low … to get
-    most of the RELs'). Only entries whose whole string classified as
-    'unknown' (no inline DOI/URL) and that don't lead with a DFK have a
-    row (emit/arrow.page_mentions); REL has no validation tier (inline
-    DOIs are trusted)."""
-    if search_threshold is None:
-        search_threshold = threshold
-    auth = auth_crossref.select(
-        F.lower(F.trim(F.col("doi"))).alias("_adoi"),
-        F.lower(
-            F.concat_ws(" ", F.col("title"), F.coalesce(F.col("authors"), F.lit("")))
-        ).alias("_akey"),
-        F.col("doi").alias("_doi_out"),
-    ).dropDuplicates(["_adoi"])
-
-    ex = mentions.where(F.col("kind") == "rel").select(
-        "url", F.col("idx").alias("_idx"), F.lower(F.col("key")).alias("_ckey")
+    rel = mentions.where(F.col("kind") == "rel").select(
+        "url", F.col("idx").alias("_idx"), F.lower(F.col("key")).alias("_key")
     )
-
-    best = _citation_search(
-        ex.select("_ckey").distinct(), auth, search_threshold, num_hashes
+    rel_res = _per_page(
+        _searched(rel, auth, REL_THRESHOLD).where(F.col("_out").isNotNull()),
+        F.col("_out"),
+        "_rel_res",
     )
-    return (
-        ex.join(best, "_ckey", "left")
-        .where(F.col("_sdoi").isNotNull())
-        .groupBy("url")
-        .agg(
-            F.map_from_entries(
-                F.collect_list(F.struct(F.col("_idx"), F.col("_sdoi")))
-            ).alias("_rel_res")
-        )
-    )
+    return rplic, rel_res
 
 
 def _dsm_icd_mismatch(a, b):
@@ -232,12 +206,7 @@ def _dsm_icd_mismatch(a, b):
     )
 
 
-def testg_resolution_map(
-    mentions: DataFrame,
-    auth_tests: DataFrame,
-    threshold: float = 70.0,
-    num_hashes: int = 16,
-) -> DataFrame:
+def testg_resolution_map(mentions: DataFrame, auth_tests: DataFrame) -> DataFrame:
     """J15: `testg` mention rows -> (url, _testg_res: map<idx, test_id>):
     fill the test id of uncontrolled entries (no |c; emit/arrow.py
     testg_parsed_of reads the map) by fuzzy longName lookup against the
@@ -245,54 +214,22 @@ def testg_resolution_map(
     all_tests.json dump the reference loads in
     research_info.py:1355-1373).
 
-    Blocking: word-MinHash LSH on punctuation-normalized lowercased names
-    (rows_per_band=1); scoring: token_sort_ratio on the RAW names (the
-    reference passes unprocessed strings — case matters); acceptance:
-    score ≥ 70 and no DSM/ICD version mismatch; tie-break: best score,
-    then test_id (the reference takes the first file-order hit — file
-    order is not meaningful offline, declared deviation)."""
-    from psyndex2linkeddata_spark.operators.linking import norm_key
-
+    The authority holds one row per long name; scoring is
+    token_sort_ratio on the RAW names (the reference passes unprocessed
+    strings — case matters); a candidate with a DSM/ICD version mismatch
+    never ranks; acceptance: score ≥ 70; tie-break: best score, then
+    test_id (the reference takes the first file-order hit — file order
+    is not meaningful offline, declared deviation)."""
     auth = auth_tests.select(
-        F.col("test_id").alias("_tid"), F.col("long_name").alias("_aname")
+        F.col("long_name").alias("_aname"), F.col("test_id").alias("_out")
     ).dropDuplicates(["_aname"])
-
     ex = mentions.where(F.col("kind") == "testg").select(
-        "url", F.col("idx").alias("_idx"), F.col("key").alias("_lname")
+        "url", F.col("idx").alias("_idx"), F.col("key").alias("_key")
     )
-
-    keys = ex.select("_lname").distinct().withColumn(
-        "_lname_b", norm_key(F.col("_lname"))
-    )
-    m_sig = minhash_signatures(keys, "_lname", "_lname_b", num_hashes, n=1).select(
-        "_lname", F.explode(lsh_bands(F.col("_sig"), num_hashes, 1)).alias("b")
-    ).select("_lname", "b.band", "b.key")
-    auth_b = auth.withColumn("_aname_b", norm_key(F.col("_aname")))
-    a_sig = minhash_signatures(
-        auth_b, "_tid", "_aname_b", num_hashes, n=1
-    ).join(auth, "_tid").select(
-        "_tid", "_aname", F.explode(lsh_bands(F.col("_sig"), num_hashes, 1)).alias("b")
-    ).select("_tid", "_aname", "b.band", "b.key")
-    pairs = m_sig.join(a_sig, ["band", "key"]).select("_lname", "_tid", "_aname").distinct()
-    scored = pairs.withColumn(
-        "_score", token_sort_ratio_udf(F.col("_aname"), F.col("_lname"))
-    ).where(
-        (F.col("_score") >= F.lit(threshold))
-        & ~_dsm_icd_mismatch(F.col("_aname"), F.col("_lname"))
-    )
-    w = Window.partitionBy("_lname").orderBy(F.col("_score").desc(), F.col("_tid"))
-    best = (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .select("_lname", F.col("_tid").alias("_found"))
-    )
-    return (
-        ex.join(best, "_lname", "left")
-        .where(F.col("_found").isNotNull())
-        .groupBy("url")
-        .agg(
-            F.map_from_entries(
-                F.collect_list(F.struct(F.col("_idx"), F.col("_found")))
-            ).alias("_testg_res")
-        )
+    return _per_page(
+        _searched(ex, auth, TESTG_THRESHOLD, reject=_dsm_icd_mismatch).where(
+            F.col("_out").isNotNull()
+        ),
+        F.col("_out"),
+        "_testg_res",
     )

@@ -20,12 +20,15 @@ Scale notes:
   (operators/upsert.dedup_clean_genres), with no cache and no second
   exchange; hot subjects (genre and vocabulary nodes) land in one
   partition each.
-- the maps route (a kerndaten, crossref or tests authority): one more
-  narrow mapInArrow pass over the pages (emit/arrow.mentions_arrow, the
-  emit's own parser) emits the mention rows the resolution maps join
-  on; the maps are joined onto the pages on url, and the emit stage
-  reads those pages as on the other routes. No route plans the Column
-  parser (extract/parser.py).
+- the maps route (a kerndaten, crossref or tests authority): a narrow
+  mapInArrow pass over the pages (emit/arrow.mentions_arrow, the emit's
+  own parser) emits the mention rows the resolution maps join on; the
+  maps are joined onto the pages on url, and the emit stage reads those
+  pages as on the other routes. The mention rows are not persisted, so
+  each consumer re-runs the pass: the Crossref maps three times (the
+  RPLIC rows once, through their local checkpoint; the REL search and
+  its join-back once each), the tests map twice and the kerndaten map
+  once. No route plans the Column parser (extract/parser.py).
 - the semantics are held by independent gates rather than a second
   emitter: the pure-Python golden oracle (tests/test_golden.py, exact
   set equality) and the pinned scenario triple sets
@@ -123,6 +126,10 @@ def kerndaten_resolution_map(mentions: DataFrame, kern: DataFrame) -> DataFrame:
 # (and, for the genres vocab, into the A2 ancestor map)
 _ORG_COLS = ("name", "aliases", "org_id", "fundref_doi", "country_name")
 _CONCEPT_COLS = ("vocab", "uri", "label_en", "label_de", "ancestors")
+# every key build_triples reads from `authorities`: the six tables and
+# the RPLIC search threshold (plans/crossref.crossref_resolution_maps)
+_AUTHORITY_KEYS = frozenset(("bad_ids", "auth_orgs", "auth_concepts", "kerndaten",
+                             "crossref", "tests", "crossref_search_threshold"))
 
 
 def build_triples(
@@ -183,7 +190,9 @@ def triples_builder(
     pages → triples function collects the kill-list and the authority
     tables on its first call and reuses them on every later one, so a
     job that builds once per batch (jobs/convert.py) collects them once
-    per run. The maps route's joins are planned per call."""
+    per run. The maps route's joins are planned per call. An
+    `authorities` key that build_triples does not read raises
+    ValueError."""
     from psyndex2linkeddata_spark.emit.arrow import (
         authority_links,
         emit_triples_arrow,
@@ -195,6 +204,9 @@ def triples_builder(
     )
 
     auth = authorities or {}
+    unknown = sorted(set(auth) - _AUTHORITY_KEYS)
+    if unknown:
+        raise ValueError(f"unknown authorities key(s): {', '.join(unknown)}")
 
     @functools.cache
     def collect():
@@ -240,15 +252,10 @@ def triples_builder(
             if "kerndaten" in auth:
                 maps.append(kerndaten_resolution_map(mentions, auth["kerndaten"]))
             if "crossref" in auth:
-                maps.append(cr.rplic_resolution_map(
+                maps.extend(cr.crossref_resolution_maps(
                     mentions,
                     auth["crossref"],
                     search_threshold=auth.get("crossref_search_threshold"),
-                ))
-                maps.append(cr.rel_resolution_map(
-                    mentions,
-                    auth["crossref"],
-                    search_threshold=auth.get("crossref_rel_search_threshold"),
                 ))
             if "tests" in auth:
                 maps.append(cr.testg_resolution_map(mentions, auth["tests"]))

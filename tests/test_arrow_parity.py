@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from psyndex2linkeddata_spark.plans.pipeline import build_triples
 from tests import triple_snapshots as ts
+from tests.conftest import spark_jobs
 
 
 @pytest.fixture(scope="module")
@@ -88,17 +89,37 @@ def test_arrow_linking_parses_pages_once(
     monkeypatch.setattr(parser, "filter_bad_ids", forbidden)
     monkeypatch.setattr(parser, "extract_records", forbidden)
     monkeypatch.setattr(pipeline, "extract_records", forbidden)
-    job = ts.job_authorities(authorities)
-    assert build_triples(pages_subset, job).count() > 0
+    assert build_triples(pages_subset, ts.job_authorities(authorities)).count() > 0
+    assert build_triples(
+        pages_subset, _maps_authorities(spark, authorities, fixture_dir)
+    ).count() > 0
 
+
+def _maps_authorities(spark, authorities, fixture_dir):
+    """The kill-list plus every resolution map's authority."""
     kern = spark.read.parquet(os.path.join(fixture_dir, "auth_kerndaten.parquet"))
-    maps = {
-        "bad_ids": job["bad_ids"],
+    return {
+        "bad_ids": authorities["bad_ids"],
         "crossref": authorities["crossref"],
         "tests": authorities["tests"],
         "kerndaten": kern,
     }
-    assert build_triples(pages_subset, maps).count() > 0
+
+
+def test_maps_build_runs_at_most_50_jobs(spark, pages_subset, authorities, fixture_dir):
+    """Job budget of the maps route: the kerndaten, Crossref and tests
+    maps plus the emit, into a noop sink. AQE runs each query stage as a
+    job of its own, so the count varies by a few jobs between identical
+    runs (46-50 measured at local[3] and local[4])."""
+    maps = _maps_authorities(spark, authorities, fixture_dir)
+    jobs = spark_jobs(
+        spark,
+        "maps_build_triples",
+        lambda: build_triples(pages_subset, maps).write.format("noop").mode(
+            "overwrite"
+        ).save(),
+    )
+    assert 0 < jobs <= 50
 
 
 def test_arrow_linking_runs_no_enrich_joins(

@@ -13,12 +13,7 @@ from psyndex2linkeddata_spark.operators.components import (
     canonicalize_uris,
     connected_components,
 )
-from psyndex2linkeddata_spark.operators.linking import (
-    link_exact,
-    link_fuzzy,
-    norm_key,
-    token_set_similarity,
-)
+from psyndex2linkeddata_spark.operators.linking import link_exact, norm_key
 from psyndex2linkeddata_spark.operators.multimodal import (
     extract_features,
     sample_frames,
@@ -201,32 +196,6 @@ def test_link_exact_and_norm_key(spark):
     assert got == {1: 10, 2: 20, 3: None}
 
 
-def test_link_fuzzy_blocks_and_verifies(spark):
-    mentions = spark.createDataFrame(
-        [(1, "Max Planck Institute Berlin"), (2, "zzz qqq vvv")],
-        ["mid", "mention"],
-    )
-    auth = spark.createDataFrame(
-        [("Max Planck Institute for Human Development Berlin", "ror1"),
-         ("University of Vienna", "ror2")],
-        ["name", "org_id"],
-    )
-    got = {
-        r.mid: (r.org_id, r["_tier"] if "_tier" in r.__fields__ else None)
-        for r in link_fuzzy(mentions, auth, "mention", "name", ["org_id"], threshold=0.3).collect()
-    }
-    assert got[1][0] == "ror1"
-    assert got[2][0] is None
-
-
-def test_token_set_similarity_values(spark):
-    df = spark.createDataFrame([("a b c", "a b c"), ("a b c", "a b d"), ("a", "b")], ["x", "y"])
-    vals = [r.s for r in df.select(token_set_similarity(F.col("x"), F.col("y")).alias("s")).collect()]
-    assert vals[0] == 1.0
-    assert abs(vals[1] - 0.5) < 1e-9
-    assert vals[2] == 0.0
-
-
 def test_last_wins(spark):
     df = spark.createDataFrame(
         [("s", "p", "old", 1), ("s", "p", "new", 2), ("s", "q", "x", 1)],
@@ -299,9 +268,11 @@ def test_sample_frames_grid(spark):
 
 
 def test_rel_crossref_doi_search(spark):
-    """J14 for REL: a citation-only REL resolves to the authority DOI at
-    threshold 60 (research_info.py:1268-1276); without an authority the
-    composed citation is kept as preferredCitation."""
+    """J14: a citation-only REL resolves to the authority DOI at
+    threshold 60 (research_info.py:1268-1276), a citation-only RPLIC at
+    the search threshold (30 unless `crossref_search_threshold` raises
+    it, which leaves REL alone); an unresolved entry keeps its citation
+    as preferredCitation."""
     from psyndex2linkeddata_spark.plans.pipeline import build_triples
     from psyndex2linkeddata_spark.schema import pages_schema
 
@@ -309,29 +280,51 @@ def test_rel_crossref_doi_search(spark):
         "starxml://6000000", None, None,
         "DFK 6000000\nREL |a Smith, J. |t A wonderful study of things |j 2020 |b Comment",
         None,
+    ), (
+        "starxml://6000002", None, None,
+        "DFK 6000002\nRPLIC Jones, K. (2019). Replicating the marshmallow test in adults.",
+        None,
     )]
     pages = spark.createDataFrame(rows, schema=pages_schema())
     auth = spark.createDataFrame(
-        [("10.1000/xyz123", "A wonderful study of things", "Smith")],
+        [("10.1000/xyz123", "A wonderful study of things", "Smith"),
+         ("10.1000/rpl456", "Replicating the marshmallow test in adults", "Jones")],
         "doi string, title string, authors string",
     )
-    with_auth = {
-        (r.pred, r.obj)
-        for r in build_triples(pages, authorities={"crossref": auth}).collect()
-    }
-    assert (
-        "http://id.loc.gov/ontologies/bibframe/identifiedBy",
-        "https://doi.org/10.1000/xyz123",
-    ) in with_auth
-    assert not any(p.endswith("preferredCitation") for p, _ in with_auth)
 
-    without = {
-        (r.pred, r.obj) for r in build_triples(pages).collect()
-    }
+    def pred_objs(authorities=None):
+        return {
+            (r.pred.rsplit("/", 1)[-1], r.obj)
+            for r in build_triples(pages, authorities=authorities).collect()
+        }
+
+    rel_doi = ("identifiedBy", "https://doi.org/10.1000/xyz123")
+    rplic_doi = ("identifiedBy", "https://doi.org/10.1000/rpl456")
+    with_auth = pred_objs({"crossref": auth})
+    assert rel_doi in with_auth and rplic_doi in with_auth
+    assert not any(p == "preferredCitation" for p, _ in with_auth)
+
+    strict = pred_objs({"crossref": auth, "crossref_search_threshold": 99.0})
+    assert rel_doi in strict and rplic_doi not in strict
     assert (
-        "http://id.loc.gov/ontologies/bibframe/preferredCitation",
-        "Smith, J.: A wonderful study of things; 2020",
-    ) in without
+        "preferredCitation",
+        "Jones, K. (2019). Replicating the marshmallow test in adults.",
+    ) in strict
+
+    assert (
+        "preferredCitation", "Smith, J.: A wonderful study of things; 2020"
+    ) in pred_objs()
+
+
+def test_unknown_authorities_key_raises(spark, pages):
+    """A misspelt or unsupported `authorities` key fails loudly instead of
+    being ignored."""
+    from psyndex2linkeddata_spark.plans.pipeline import build_triples
+
+    with pytest.raises(ValueError, match="crossref_rel_search_threshold"):
+        build_triples(pages, {"crossref_rel_search_threshold": 60.0})
+    with pytest.raises(ValueError, match="bad_id"):
+        build_triples(pages, {"bad_id": pages})
 
 
 def test_testg_dsm_guard(spark):
@@ -370,6 +363,19 @@ def test_testg_dsm_guard(spark):
         for r in build_triples(pages, authorities={"tests": ok_auth}).collect()
     }
     assert ("http://www.w3.org/1999/02/22-rdf-syntax-ns#value", "4242") in got2
+    # the guard runs before the ranking: the decoy outscores a valid
+    # candidate (96.8 against 92.0) and still cannot hide it
+    both = spark.createDataFrame(
+        [("9999", "Strukturiertes Klinisches Interview für DSM-III"),
+         ("4243", "Strukturiertes Klinisches Interview für DSM-IV Achse I")],
+        "test_id string, long_name string",
+    )
+    got3 = {
+        (r.pred, r.obj)
+        for r in build_triples(pages, authorities={"tests": both}).collect()
+    }
+    assert ("http://www.w3.org/1999/02/22-rdf-syntax-ns#value", "4243") in got3
+    assert not any(o == "9999" for _, o in got3)
 
 
 def test_scrub_pii(spark):
