@@ -15,9 +15,9 @@ shuffle (plans/pipeline.build_triples):
       → emit      : emit/arrow.py, one mapInArrow kernel per batch: parse,
                     S3 kill-list, BIBFRAME triples (N1-N20) and J1-J6
                     linking against driver-built authority dicts
-      → finalize  : set-dedup (A10), one exchange; with authorities it
-                    also runs the A2 genre cleanup on that exchange
-                    (operators/upsert.dedup_clean_genres)
+      → dedup     : set-dedup (A10) and the A2 genre cleanup after one
+                    exchange on subj (operators/upsert.dedup_clean_genres),
+                    the one stage on every route
       → canonical : connected-components URI canonicalization (opt-in)
       → sink      : partitioned (subj, pred, obj) triples table
 

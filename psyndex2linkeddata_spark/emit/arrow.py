@@ -1329,7 +1329,9 @@ def emit_genres(g, rec, W, B, annif=True):
     :634-671, add_work_studytypes :111-342 with the J17 recode table of
     modules/mappings.py:715-1215 and the A6 counter, add_work_genres
     :331-478; the F23 license, convert_starxml_to_bf.py:155-301). CM-less
-    records get one J8 Annif stand-in code unless `annif=False`."""
+    records get one J8 Annif stand-in code unless `annif=False`. Every
+    genreForm edge is emitted: the A2 cleanup runs per subject in the
+    dedup stage (operators/upsert.dedup_clean_genres)."""
     # issuance
     if rec.get("BE") is not None:
         label = _ISSUANCE.get(trim(rec["BE"])) or "Other"
@@ -1393,31 +1395,14 @@ def emit_genres(g, rec, W, B, annif=True):
     for _new_cm, _label, genre2 in mapped:
         if genre2 is not None:
             genres.append(genre2)
-    # A2 rule 1 applied IN-RECORD (operators/upsert.clean_genres drop1):
-    # a work with a thesis genre loses its ScholarlyPaper/ScholarlyWork
-    # genreForm EDGES (the `a bf:GenreForm` node triples stay, exactly
-    # like the post-emit anti-join). Valid because a work's genre edges
-    # all come from its own record; cross-record same-DFK merging (not a
-    # shape the reference produces) needs the per-subject rule of
-    # operators/upsert.dedup_clean_genres, which build_triples runs
-    # whenever authorities are given — pass authorities={} for it.
-    thesis_present = any(x in _THESIS_GENRE_NAMES for x in genres)
     for name in genres:
         node = NS.GENRES + name
         g.add(node, NS.RDF_TYPE, NS.BF + "GenreForm", iri=True)
-        if thesis_present and name in ("ScholarlyPaper", "ScholarlyWork"):
-            continue
         g.add(W, NS.BF + "genreForm", node, iri=True)
 
 
 _RELATORS = "http://id.loc.gov/vocabulary/relators/"
 _HTTPS_RELATORS = "https://id.loc.gov/vocabulary/relators/"
-_THESIS_GENRE_NAMES = (
-    "ThesisDoctoral",
-    "CompilationThesisDoctoral",
-    "ThesisHabilitation",
-    "CompilationThesisHabilitation",
-)
 
 
 def emit_funding(g, rec, W):

@@ -8,7 +8,8 @@
   genre SET, so it runs post-emit.
 - dedup_clean_genres: the set-semantics dedup and both A2 rules in one
   subject-partitioned stage (one exchange, a window over subj) — the
-  linked pipeline's form of dropDuplicates + clean_genres.
+  pipeline's form of dropDuplicates + clean_genres, on every
+  build_triples route.
 """
 
 from __future__ import annotations
@@ -92,13 +93,18 @@ def dedup_clean_genres(
 ) -> DataFrame:
     """Set-semantics dedup plus A2 in one stage — the same set as
     clean_genres(clean_genres(triples.dropDuplicates()), closure), with
-    closure = genre_ancestor_closure of the same vocab rows.
+    closure = genre_ancestor_closure of the same vocab rows. Every
+    plans/pipeline.build_triples route ends in it, with or without
+    authorities; the emit kernel applies no A2 rule of its own.
 
     Both A2 rules read one subject's genre set only, so the stage
-    exchanges once on subj: dropDuplicates(TRIPLE_COLS) runs inside that
+    exchanges once on subj: a window over subj collects each work's
+    genreForm objects (a duplicate row adds nothing to the set), and
+    dropDuplicates(TRIPLE_COLS) runs after the drop inside that
     partitioning (hash(subj) clusters every superset of subj, so no
-    second exchange is planned), and a window over subj collects each
-    work's genreForm objects. A genreForm edge (s, o) is dropped when
+    second exchange is planned). The exchange is the window's own, so an
+    input already clustered on subj (a single partition, say) is not
+    shuffled at all. A genreForm edge (s, o) is dropped when
     - rule 1: the set holds a thesis genre and o is ScholarlyPaper/
       ScholarlyWork;
     - rule 2 (only with `genre_ancestors`): another genre g of the set
@@ -107,8 +113,8 @@ def dedup_clean_genres(
     As with clean_genres' anti-join, the drop is keyed on (subj, pred,
     obj).
 
-    Trade-off: after an explicit repartition no map-side partial dedup
-    runs, so every raw row crosses the exchange. At 2,000 generated
+    Trade-off: the exchange runs ahead of any aggregate, so no map-side
+    partial dedup runs and every raw row crosses it. At 2,000 generated
     pages distinct/raw is 0.945, and the hottest subject
     (genres/ResearchPaper) holds 1.3% of the raw rows."""
     is_genre = F.col("pred") == GENRE_PRED
@@ -133,9 +139,7 @@ def dedup_clean_genres(
             ),
         )
     return (
-        triples.repartition("subj")
-        .dropDuplicates(list(TRIPLE_COLS))
-        .withColumn(
+        triples.withColumn(
             "_genres",
             F.collect_set(F.when(is_genre, F.col("obj"))).over(
                 Window.partitionBy("subj")
@@ -143,4 +147,5 @@ def dedup_clean_genres(
         )
         .where(~(is_genre & drop))
         .drop("_genres")
+        .dropDuplicates(list(TRIPLE_COLS))
     )

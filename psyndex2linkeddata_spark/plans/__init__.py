@@ -1,1 +1,1 @@
-"""Staged logical plans: extract → normalize → link → emit → finalize."""
+"""Staged logical plans: extract → normalize → link → emit → dedup."""

@@ -2,10 +2,10 @@
 
 Stage model (SURVEY §7): extract (pages→records, stage 1), normalize
 (records→mentions, stage 2), emit (mentions→triples, stage 5) and
-finalize (set-semantics dedup, stage 6). The first three run in one
-Arrow stage (emit/arrow.py), as does entity linking against the
-authority dictionaries (stage 3); URI canonicalization (stage 4) is a
-composable add-on from operators/.
+dedup + A2 genre cleanup (stage 6, operators/upsert.dedup_clean_genres).
+The first three run in one Arrow stage (emit/arrow.py), as does entity
+linking against the authority dictionaries (stage 3); URI
+canonicalization (stage 4) is a composable add-on from operators/.
 
 Scale notes:
 - the emit stage (emit/arrow.py) runs parse + S3 kill-list + emit +
@@ -14,11 +14,11 @@ Scale notes:
   triples are linked against driver-built authority dicts before the one
   dedup. No shuffle until the final dedup: at 10^12 pages the only
   shuffle in the core path is the dedup exchange; AQE coalesces.
-  Without authorities it is partitioned by all triple columns. With
-  authorities it is partitioned by subj, and the A2 genre cleanup runs
-  as a window over that same partitioning
-  (operators/upsert.dedup_clean_genres), with no cache and no second
-  exchange; hot subjects (genre and vocabulary nodes) land in one
+- one dedup stage serves every route, with or without authorities:
+  operators/upsert.dedup_clean_genres partitions on subj, dedups inside
+  that partitioning and runs the A2 genre cleanup as a window over it,
+  with no cache and no second exchange, so pages that share a DFK are
+  cleaned too; hot subjects (genre and vocabulary nodes) land in one
   partition each.
 - the maps route (a kerndaten, crossref or tests authority): a narrow
   mapInArrow pass over the pages (emit/arrow.mentions_arrow, the emit's
@@ -55,18 +55,13 @@ def finalize(
     exact-duplicate triples collapse, plus the authority-free part of
     the A2 genre cleanup (thesis beats ScholarlyPaper/ScholarlyWork —
     clean_up_genres runs unconditionally in the reference,
-    convert_starxml_to_bf.py:1455-1458). The one global shuffle of the
-    pipeline; AQE-coalesced.
+    convert_starxml_to_bf.py:1455-1458).
 
-    build_triples calls it only without authorities, with
-    `genre_cleanup=False` and `barrier=False`: emit/arrow.py applies the
-    A2 rule in-record, and nothing downstream references the triple set
-    more than once, so the pipeline is a single narrow stage + one dedup
-    exchange, no cache. With authorities (even `{}`) build_triples uses
-    operators/upsert.dedup_clean_genres instead, which dedups and applies
-    both A2 rules after one exchange on subj, so the rules also cover
-    pages that share a DFK. The barrier and the DataFrame-level rule here
-    serve only the benchmark's staged probe and the tests.
+    No route of the package calls it: build_triples ends every route
+    with operators/upsert.dedup_clean_genres, which dedups and applies
+    both A2 rules after one exchange on subj. It is kept, with its
+    barrier and DataFrame-level rule, only for the benchmark's staged
+    probe.
     """
     deduped = triples.dropDuplicates(
         ["subj", "pred", "obj", "obj_is_iri", "lang", "dtype"]
@@ -136,7 +131,6 @@ def build_triples(
     pages: DataFrame,
     authorities: dict[str, DataFrame] | None = None,
     annif: bool = True,
-    repair_text: bool = False,
 ) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) → deduplicated triples DF.
 
@@ -162,9 +156,10 @@ def build_triples(
       them to each record's triples (link_record) — the per-record
       lookups of the reference, with no post-emit join, union or second
       dedup: the one dedup covers the link triples with the rest.
-    - A2 genre cleanup: dedup_clean_genres dedups and applies the thesis
-      rule and, with auth_concepts, the ancestor rule per subject after
-      one exchange on subj, so the cross-record case stays covered. The
+    - A2 genre cleanup, on every route (authorities None, {} or any
+      set): dedup_clean_genres dedups and applies the thesis rule and,
+      with auth_concepts, the ancestor rule per subject after one
+      exchange on subj, so pages that share a DFK are cleaned too. The
       ancestor map comes from the same auth_concepts collect as the
       linking dicts.
 
@@ -178,19 +173,19 @@ def build_triples(
     higher-order-function Column tree of the same spec, with a KB-scale
     plan instead of MB-scale (see the emit/arrow.py docstring).
     """
-    return triples_builder(authorities, annif=annif, repair_text=repair_text)(pages)
+    return triples_builder(authorities, annif=annif)(pages)
 
 
 def triples_builder(
     authorities: dict[str, DataFrame] | None = None,
     annif: bool = True,
-    repair_text: bool = False,
 ):
     """build_triples with everything but the pages bound: the returned
     pages → triples function collects the kill-list and the authority
     tables on its first call and reuses them on every later one, so a
     job that builds once per batch (jobs/convert.py) collects them once
-    per run. The maps route's joins are planned per call. An
+    per run. The maps route's joins are planned per call. Every route
+    ends in the one dedup + A2 stage (dedup_clean_genres). An
     `authorities` key that build_triples does not read raises
     ValueError."""
     from psyndex2linkeddata_spark.emit.arrow import (
@@ -228,21 +223,6 @@ def triples_builder(
         return bad, links, ancestors
 
     def build(pages: DataFrame) -> DataFrame:
-        # Fetch-layer repair (opt-in): captures that arrive without
-        # extracted text (text NULL) recover it from the raw html column —
-        # a narrow projection that fuses into the scan
-        # (operators/extraction.py, byte-stable mode). Opt-in because it
-        # forces the scan to READ the html column; when the upstream table
-        # already guarantees text, column pruning should keep html out of
-        # the scan entirely.
-        if repair_text and "html" in pages.columns:
-            from psyndex2linkeddata_spark.operators.extraction import html_to_text
-
-            pages = pages.withColumn(
-                "text",
-                F.coalesce(F.col("text"), html_to_text(F.col("html"))),
-            )
-
         src = pages
         if "crossref" in auth or "tests" in auth or "kerndaten" in auth:
             from psyndex2linkeddata_spark.plans import crossref as cr
@@ -261,18 +241,8 @@ def triples_builder(
                 maps.append(cr.testg_resolution_map(mentions, auth["tests"]))
             for res in maps:
                 src = src.join(res, "url", "left")
-        # Without authorities: one narrow stage + the dedup exchange, no
-        # cache; the in-record A2 rule 1 in the kernel covers the genre
-        # cleanup as long as the input holds one page per DFK, which is the
-        # pages-table contract (url-keyed records export). With authorities
-        # (even {}): dedup_clean_genres, which applies A2 per subject after
-        # one exchange on subj, so two pages sharing a DFK (one thesis + one
-        # Scholarly*) are cleaned too; callers with weaker provenance pass
-        # authorities={} for that.
         bad, links, ancestors = collect()
         raw = emit_triples_arrow(src, bad_dfks=bad, annif=annif, links=links)
-        if authorities is None:
-            return finalize(raw, barrier=False, genre_cleanup=False)
         return dedup_clean_genres(raw, ancestors)
 
     return build

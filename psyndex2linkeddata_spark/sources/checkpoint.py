@@ -25,6 +25,13 @@ The persisted triples are a MULTISET: each batch's rows are distinct
 batches is stored once per batch. Readers deduplicate, as
 `jobs/convert.py` does; lineage `n_triples` counts persisted rows.
 
+The A2 genre rules run in each batch's dedup stage
+(operators/upsert.dedup_clean_genres), so they see one commit batch:
+two pages that share a DFK but fall in different batches keep both
+genres (say ThesisDoctoral and ScholarlyWork) in the persisted set,
+where the one-shot build_triples over the same pages cleans them. This
+holds with and without authorities.
+
 S9/S10 (log sink, run manifest) map to the same table: `run_manifest`
 rows carry generationProcess/generationDate like the reference's
 AdminMetadata bnode (convert_starxml_to_bf.py:1518-1549).

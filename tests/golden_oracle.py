@@ -1354,9 +1354,10 @@ def canonicalize_funder(name):
 
 
 def apply_cleanup_and_enrich(t: set, authorities: dict | None = None) -> set:
-    """Post-emit set transformations mirroring plans/pipeline.finalize +
-    plans/enrich (thesis genre rule always; ancestor cleanup, topic sameAs,
-    genre labels, ROR ids, FundRef DOIs with authorities)."""
+    """Post-emit set transformations mirroring
+    operators/upsert.dedup_clean_genres + plans/enrich (thesis genre rule
+    always; ancestor cleanup, topic sameAs, genre labels, ROR ids,
+    FundRef DOIs with authorities)."""
     from collections import defaultdict
 
     genre_pred = NS.BF + "genreForm"

@@ -49,11 +49,12 @@ def test_plain_matches_snapshot(spark, pages, pinned):
 
 def test_records_input_matches_snapshot(spark, pages, pinned):
     """records-shaped input (post-extract) through the same Arrow stage
-    gives the pages route's set."""
+    and the same dedup stage gives the pages route's set."""
     from psyndex2linkeddata_spark.emit.arrow import emit_triples_arrow
     from psyndex2linkeddata_spark.extract.parser import extract_records
+    from psyndex2linkeddata_spark.operators.upsert import dedup_clean_genres
 
-    _check("plain", emit_triples_arrow(extract_records(pages)).dropDuplicates(), pinned)
+    _check("plain", dedup_clean_genres(emit_triples_arrow(extract_records(pages))), pinned)
 
 
 @pytest.mark.parametrize("scenario", ["maps", "job"])
@@ -159,6 +160,7 @@ def test_crlf_pages_match_snapshots(spark, pages_subset, pinned, route):
     route covers extract_records, the emit's records-mode input."""
     from psyndex2linkeddata_spark.emit.arrow import emit_triples_arrow
     from psyndex2linkeddata_spark.extract.parser import extract_records
+    from psyndex2linkeddata_spark.operators.upsert import dedup_clean_genres
 
     for ending in ("\r\n", "\r"):
         alt = pages_subset.withColumn(
@@ -167,7 +169,7 @@ def test_crlf_pages_match_snapshots(spark, pages_subset, pinned, route):
         if route == "pages":
             df = build_triples(alt)
         else:
-            df = emit_triples_arrow(extract_records(alt)).dropDuplicates()
+            df = dedup_clean_genres(emit_triples_arrow(extract_records(alt)))
         got = ts.digest(ts.tset(df))
         assert got == pinned["subset"], repr(ending) + " " + ts.mismatch(
             "subset", got, pinned["subset"]

@@ -1,12 +1,13 @@
-"""The linked pipeline's dedup + A2 genre stage
+"""The pipeline's dedup + A2 genre stage
 (operators/upsert.dedup_clean_genres).
 
-With authorities, build_triples dedups and applies both A2 rules in one
-subject-partitioned stage. This file pins that stage exactly against
-the two clean_genres passes it replaces (thesis rule, then thesis +
-ancestor rule over genre_ancestor_closure) on hand-built triples, checks
-the cross-record case end to end, and guards the plan: no clean_genres
-call, no persist, and a bounded number of Spark jobs.
+On every route, with or without authorities, build_triples dedups and
+applies both A2 rules in one subject-partitioned stage. This file pins
+that stage exactly against the two clean_genres passes it replaces
+(thesis rule, then thesis + ancestor rule over genre_ancestor_closure)
+on hand-built triples, checks the cross-record case end to end, and
+guards the plan: no clean_genres call, no persist, and a bounded number
+of Spark jobs.
 """
 
 from __future__ import annotations
@@ -120,9 +121,10 @@ def _same_dfk_pages(spark):
 
 
 def test_cross_record_thesis_rule(spark):
-    """authorities={} applies A2 rule 1 across records: the thesis page's
+    """A2 rule 1 runs across records on every route: the thesis page's
     genre removes the other page's ScholarlyWork edge from the shared
-    work. The in-record rule alone (no authorities) cannot see it."""
+    work, with no authorities as with authorities={}, and both builds
+    give one set."""
     pages = _same_dfk_pages(spark)
 
     def work_genres(df):
@@ -132,11 +134,11 @@ def test_cross_record_thesis_rule(spark):
             .collect()
         }
 
-    plain = work_genres(build_triples(pages))
-    assert {"ThesisDoctoral", "ScholarlyWork"} <= plain
-    linked = work_genres(build_triples(pages, {}))
-    assert "ThesisDoctoral" in linked and "ScholarlyWork" not in linked
-    assert linked == plain - {"ScholarlyWork"}
+    plain, linked = build_triples(pages), build_triples(pages, {})
+    assert set(plain.collect()) == set(linked.collect())
+    genres = work_genres(plain)
+    assert "ThesisDoctoral" in genres and "ScholarlyWork" not in genres
+    assert genres == work_genres(linked)
 
 
 @pytest.fixture(scope="module")
@@ -147,24 +149,25 @@ def pages_subset(spark, pages, fixture_dir):
 def test_linked_build_runs_few_jobs_and_no_barrier(
     spark, pages_subset, fixture_dir, monkeypatch
 ):
-    """The convert job's authority set: the build runs without
-    clean_genres and without persisting anything, in at most 8 Spark
-    jobs — the authority collects, the exchange on subj and the write.
-    Behind the persist barrier with two clean_genres passes, the same
-    build on the 300 fixture pages took 28-43 jobs."""
+    """The convert job's authority set, and no authorities: each build
+    runs without clean_genres and without persisting anything, in at
+    most 8 Spark jobs — the authority collects, the exchange on subj and
+    the write. Behind the persist barrier with two clean_genres passes,
+    the linked build on the 300 fixture pages took 28-43 jobs."""
 
     def forbidden(*args, **kwargs):
-        raise AssertionError("clean_genres or persist on the linked path")
+        raise AssertionError("clean_genres or persist in build_triples")
 
     monkeypatch.setattr(upsert, "clean_genres", forbidden)
     monkeypatch.setattr(type(pages_subset), "persist", forbidden)
     monkeypatch.setattr(type(pages_subset), "cache", forbidden)
     job = ts.job_authorities(ts.load_authorities(spark, fixture_dir))
-    jobs = spark_jobs(
-        spark,
-        "linked_build_triples",
-        lambda: build_triples(pages_subset, job).write.format("noop").mode(
-            "overwrite"
-        ).save(),
-    )
-    assert 0 < jobs <= 8
+    for route, authorities in (("linked", job), ("plain", None)):
+        jobs = spark_jobs(
+            spark,
+            f"{route}_build_triples",
+            lambda: build_triples(pages_subset, authorities).write.format(
+                "noop"
+            ).mode("overwrite").save(),
+        )
+        assert 0 < jobs <= 8, (route, jobs)

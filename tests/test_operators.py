@@ -993,18 +993,19 @@ def test_latest_snapshot(spark):
 
 
 def test_build_triples_repair_text(spark, pages):
-    """repair_text=True recovers NULLed text from html byte-identically:
-    triples from a corpus whose text column was nulled out equal the
-    triples from the intact corpus."""
+    """coalesce(text, html_to_text(html)) recovers NULLed text from html
+    byte-identically: triples from a corpus whose text column was nulled
+    out and repaired equal the triples from the intact corpus."""
+    from psyndex2linkeddata_spark.operators.extraction import html_to_text
     from psyndex2linkeddata_spark.plans.pipeline import build_triples
 
     subset = pages.orderBy("url").limit(20).cache()
     want = {tuple(r) for r in build_triples(subset, annif=False).collect()}
     nulled = subset.withColumn("text", F.lit(None).cast("string"))
-    got = {
-        tuple(r)
-        for r in build_triples(nulled, annif=False, repair_text=True).collect()
-    }
+    repaired = nulled.withColumn(
+        "text", F.coalesce(F.col("text"), html_to_text(F.col("html")))
+    )
+    got = {tuple(r) for r in build_triples(repaired, annif=False).collect()}
     assert got == want
     subset.unpersist()
 

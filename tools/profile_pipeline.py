@@ -2,7 +2,8 @@
 
 Usage: python tools/profile_pipeline.py [n_pages] [cpus]
 Prints wall seconds per incremental stage (the Arrow emit stage, then
-emit + finalize) so regressions can be located.
+the whole build_triples: emit + the dedup and A2 genre stage) so
+regressions can be located.
 """
 from __future__ import annotations
 
@@ -24,7 +25,7 @@ def noop(df):
 def main():
     from psyndex2linkeddata_spark.datagen.pages import write_pages_parquet
     from psyndex2linkeddata_spark.emit.arrow import emit_triples_arrow
-    from psyndex2linkeddata_spark.plans.pipeline import build_triples, finalize
+    from psyndex2linkeddata_spark.plans.pipeline import build_triples
     from psyndex2linkeddata_spark.session import get_spark
 
     spark = get_spark(
@@ -51,16 +52,9 @@ def main():
     noop(emit_triples_arrow(pages))
     print(f"emit: {time.time()-t0:.1f}s", flush=True)
 
-    t0 = time.time()
-    tr = finalize(emit_triples_arrow(pages), barrier=False, genre_cleanup=False)
-    noop(tr)
-    n = tr.count()
-    print(f"emit+finalize: {time.time()-t0:.1f}s  ({n} triples)", flush=True)
-
     # the whole pipeline, warm
     t0 = time.time()
-    tr = build_triples(pages)
-    noop(tr)
+    noop(build_triples(pages))
     print(f"build_triples: {time.time()-t0:.1f}s", flush=True)
     spark.catalog.clearCache()
 
