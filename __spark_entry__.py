@@ -723,8 +723,7 @@ def q_embedding_neardup(spark, sf):
     """Near-dup pairs via hyperplane-LSH buckets (2 tables × 4 planes) —
     the scale path: no cross join in the plan; candidates share an LSH
     bucket in ≥1 table. The oracle inlines the identical deterministic
-    plane weights. (cosine_pairs, the brute-force all-pairs variant,
-    remains available as the small-scale/recall-1 baseline.)"""
+    plane weights."""
     from psyndex2linkeddata_spark.operators.similarity import lsh_cosine_pairs
 
     e = _t(spark, sf, "embeddings").withColumn(

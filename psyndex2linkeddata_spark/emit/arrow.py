@@ -40,7 +40,6 @@ from __future__ import annotations
 
 import re
 import zlib
-from collections.abc import Iterator
 
 import pandas as pd
 
@@ -919,26 +918,6 @@ class Sink:
 
     def __len__(self):
         return len(self.subj)
-
-    def extend(self, other: "Sink"):
-        self.subj.extend(other.subj)
-        self.pred.extend(other.pred)
-        self.obj.extend(other.obj)
-        self.iri.extend(other.iri)
-        self.lang.extend(other.lang)
-        self.dtype.extend(other.dtype)
-
-    def frame(self) -> pd.DataFrame:
-        return pd.DataFrame(
-            {
-                "subj": self.subj,
-                "pred": self.pred,
-                "obj": self.obj,
-                "obj_is_iri": self.iri,
-                "lang": self.lang,
-                "dtype": self.dtype,
-            }
-        )
 
     def record_batch(self):
         """Direct pyarrow construction — measured ~16× cheaper than

@@ -5,20 +5,11 @@ The reference parses an XML tree per file and walks it per record
 extracted `text` carries the record as `TAG value` lines; extraction is pure
 row-local array expressions (split → per-field filter/transform): no shuffle,
 no Python, whole-stage-codegen friendly — exactly what survives at 10^12 rows.
-
-Also provides `text_from_html` (Arrow UDF) to re-derive `text` from the raw
-`html` bytes, enforcing the BASELINE.json per-row invariant "byte-identical
-extracted text per url" (tested in tests/test_extract.py).
 """
 
 from __future__ import annotations
 
-import html as htmllib
-import re
-
-import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
-from pyspark.sql.functions import pandas_udf
 
 from psyndex2linkeddata_spark.schema import REPEATED_FIELDS, SCALAR_FIELDS
 
@@ -86,27 +77,6 @@ def extract_records(pages: DataFrame, keep_page_cols: bool = False) -> DataFrame
             ).alias(f)
         )
     return df.select(*cols)
-
-
-def _text_from_html_fn(html: pd.Series) -> pd.Series:
-    def _one(b):
-        if b is None:
-            return None
-        s = bytes(b).decode("utf-8")
-        m = re.search(r"<pre>(.*)</pre>", s, flags=re.DOTALL)
-        return htmllib.unescape(m.group(1)) if m else None
-
-    return html.map(_one)
-
-
-def text_from_html(col: Column) -> Column:
-    """Re-extract text from raw html bytes (Arrow-vectorized pandas UDF).
-
-    Inverse of the page renderer: body <pre> content, entity-unescaped.
-    Used only by the byte-identity invariant check, not the hot path.
-    (UDF built lazily — pandas_udf needs an active SparkSession.)
-    """
-    return pandas_udf(_text_from_html_fn, "string")(col)
 
 
 def filter_bad_ids(records: DataFrame, bad_ids: DataFrame) -> DataFrame:

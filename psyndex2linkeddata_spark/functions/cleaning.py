@@ -5,9 +5,9 @@ Reference semantics (reimplemented, not copied):
   table (/root/reference/modules/mappings.py:1-6); here a chain of native
   `F.replace` calls in table order → stays in the JVM / codegen.
 - F2 html.unescape applied after F1 everywhere
-  (/root/reference/modules/helpers.py:35,91). Native expression covers the
-  HTML entities that occur in practice; `unescape_udf` is the full-fidelity
-  Arrow fallback.
+  (/root/reference/modules/helpers.py:35,91). The native expression covers
+  the HTML entities that occur in practice; the emit kernel's
+  clean_text (emit/arrow.py) applies the same table in Python.
 - P3 get_mainfield / P4 get_subfield (/root/reference/modules/helpers.py:17-93):
   collapse multi-spaces, strip, split on `|x`, cut at next `|`, clean, NULL if
   empty — all as column expressions.
@@ -15,17 +15,14 @@ Reference semantics (reimplemented, not copied):
 
 from __future__ import annotations
 
-import html as htmllib
 import re
 
-import pandas as pd
 from pyspark.sql import Column, functions as F
-from pyspark.sql.functions import pandas_udf
 
 from psyndex2linkeddata_spark.data.tables import dd_codes
 
-# Named/numeric HTML entities covered natively. Anything beyond this set is
-# handled by unescape_udf (used in the full-fidelity path + equivalence test).
+# Named/numeric HTML entities covered natively. Anything beyond this set
+# stays escaped in a Column-expression caller.
 _BASIC_ENTITIES = [
     ("&amp;", "&"), ("&lt;", "<"), ("&gt;", ">"), ("&quot;", '"'),
     ("&#39;", "'"), ("&#x27;", "'"), ("&apos;", "'"), ("&#34;", '"'),
@@ -56,16 +53,6 @@ def unescape_basic(col: Column) -> Column:
         out = F.replace(out, F.lit(raw), F.lit(repl))
     out = F.replace(out, F.lit("&amp;"), F.lit("&"))
     return out
-
-
-def _unescape_fn(s: pd.Series) -> pd.Series:
-    return s.map(lambda v: htmllib.unescape(v) if v is not None else None)
-
-
-def unescape_udf(col: Column) -> Column:
-    """F2 (full-fidelity Arrow tier): python html.unescape.
-    (UDF built lazily — pandas_udf needs an active SparkSession.)"""
-    return pandas_udf(_unescape_fn, "string")(col)
 
 
 def clean_text(col: Column) -> Column:

@@ -11,10 +11,12 @@ ACCUMULATE rdf:value triples on the one `{agent}_orcid` /
 `{agent}_psychauthorsid` node, so the matcher returns a LIST of ids per
 position, in field order.
 
-`partial_ratio` reimplements fuzzywuzzy's algorithm on difflib (the
-pure-python backend fuzzywuzzy itself uses): best SequenceMatcher ratio
-of the shorter string against same-length substrings of the longer,
-aligned at each matching block.
+`_partial_ratio_blocks` reimplements fuzzywuzzy's partial_ratio on
+difflib (the pure-python backend fuzzywuzzy itself uses): best
+SequenceMatcher ratio of the shorter string against same-length
+substrings of the longer, aligned at each matching block.
+`partial_ratio_gt` decides `partial_ratio > threshold` with two exact
+fast paths in front of it.
 
 normalize_person_name is F9 (contributions.py:764-784): umlauts/ß →
 ascii on the family name, given name abbreviated to an initial.
@@ -80,25 +82,15 @@ def _partial_ratio_blocks(shorter: str, longer: str) -> int:
     return int(round(best))
 
 
-def partial_ratio(s1: str, s2: str) -> int:
-    """fuzzywuzzy-compatible partial_ratio (0..100, difflib backend).
-
-    Fast path: when the shorter string occurs verbatim in the longer,
-    the block walk is guaranteed to find that alignment (the occurrence
-    IS the longest matching block, so (0, j, len(shorter)) is emitted and
-    its window ratio is 1.0 → the early 100 return) — returning 100
-    directly is exact, and covers the most common case in the J9/J10
-    matcher (identical normalized names)."""
-    if s1 is None or s2 is None:
-        return 0
-    shorter, longer = (s1, s2) if len(s1) <= len(s2) else (s2, s1)
-    if shorter in longer:
-        return 100
-    return _partial_ratio_blocks(shorter, longer)
-
-
 def partial_ratio_gt(s1: str, s2: str, threshold: int) -> bool:
     """Exact `partial_ratio(s1, s2) > threshold`, cheaply.
+
+    Substring fast path: when the shorter string occurs verbatim in the
+    longer, the block walk is guaranteed to find that alignment (the
+    occurrence IS the longest matching block, so (0, j, len(shorter)) is
+    emitted and its window ratio is 1.0 → the early 100 return) — the
+    score is 100 exactly. It covers the most common case in the J9/J10
+    matcher (identical normalized names).
 
     Upper-bound certificate: SequenceMatcher.ratio() = 2M/(len(a)+len(b))
     with M the total matched-block size. M is a common subsequence of the

@@ -34,8 +34,6 @@ ISSUANCES = "https://w3id.org/zpid/vocabs/issuances/"
 PMT = "https://w3id.org/zpid/vocabs/mediacarriers/"
 LICENSES = "https://w3id.org/zpid/vocabs/licenses/"
 METHODS = "https://w3id.org/zpid/vocabs/methods/"
-TERMS = "https://w3id.org/zpid/vocabs/terms/"
-ADDTERMS = "https://w3id.org/zpid/vocabs/addterms/"
 CLASS = "https://w3id.org/zpid/vocabs/class/"
 AGE = "https://w3id.org/zpid/vocabs/age/"
 TRIALREGS = "https://w3id.org/zpid/vocabs/trialregs/"
@@ -47,5 +45,4 @@ XSD_DATE = XSD + "date"
 XSD_GYEAR = XSD + "gYear"
 XSD_ANYURI = XSD + "anyURI"
 XSD_BOOLEAN = XSD + "boolean"
-XSD_STRING = XSD + "string"
 XSD_INTEGER = XSD + "integer"

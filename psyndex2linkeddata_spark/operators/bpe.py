@@ -46,8 +46,6 @@ __all__ = [
     "train_bpe",
     "bpe_encode",
     "bpe_token_counts",
-    "save_merges",
-    "load_merges",
 ]
 
 _EOW = "</w>"
@@ -179,23 +177,6 @@ def train_bpe(
                 pair_counts[p] = pair_counts.get(p, 0) + cnt
                 pair_words.setdefault(p, set()).add(wid)
     return merges
-
-
-def save_merges(spark, merges: list[tuple[str, str]], path: str) -> None:
-    """Persist the learned merge list as a (rank, left, right) parquet
-    table — train once on the full corpus, load + broadcast in every
-    downstream encode job (the tokenizer artifact of a training-data
-    pipeline)."""
-    rows = [(i, a, b) for i, (a, b) in enumerate(merges)]
-    spark.createDataFrame(rows, ["rank", "left", "right"]).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(path)
-
-
-def load_merges(spark, path: str) -> list[tuple[str, str]]:
-    """Inverse of save_merges; rank order restored."""
-    rows = spark.read.parquet(path).orderBy("rank").collect()
-    return [(r["left"], r["right"]) for r in rows]
 
 
 def _encode_word(word: str, ranks: dict[tuple[str, str], int]) -> list[str]:

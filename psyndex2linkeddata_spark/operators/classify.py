@@ -332,18 +332,3 @@ def nb_classify(
         .drop("_rn")
     )
 
-
-def classifier_filter(
-    docs: DataFrame,
-    model: DataFrame,
-    priors: DataFrame,
-    keep_labels: list[str],
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    broadcast_model: bool = True,
-) -> DataFrame:
-    """Keep only documents whose predicted class is in `keep_labels` —
-    the quality-gate shape (train on wiki-vs-crawl, keep 'wiki')."""
-    pred = nb_classify(docs, model, priors, id_col, text_col, broadcast_model)
-    keep = pred.where(F.col("label").isin(keep_labels)).select(id_col)
-    return docs.join(keep, id_col, "left_semi")

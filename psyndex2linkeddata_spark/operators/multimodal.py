@@ -26,18 +26,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("kind", T.StringType(), False),  # image | audio | video
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField("mime", T.StringType(), True),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("duration_ms", T.LongType(), True),
-    ]
-)
-
 FEATURE_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),
@@ -88,44 +76,3 @@ def extract_features(
 
     return media.mapInPandas(run, FEATURE_SCHEMA)
 
-
-def sample_frames(
-    media: DataFrame, every_ms: int = 1000, decode_stub: bool = True
-) -> DataFrame:
-    """video rows → one row per sampled frame timestamp (frame decode
-    stubbed; the fan-out shape — posexplode of the timestamp grid — is
-    the real operator)."""
-    grid = F.when(
-        (F.col("kind") == "video") & F.col("duration_ms").isNotNull(),
-        F.sequence(F.lit(0), F.col("duration_ms"), F.lit(every_ms)),
-    ).otherwise(F.array(F.lit(0)))
-    frames = media.select(
-        "media_id", "kind", F.posexplode(grid).alias("frame_idx", "ts_ms")
-    )
-    if not decode_stub:
-        raise NotImplementedError("real frame decode requires ffmpeg")
-    return frames.withColumn(
-        "frame_key", F.md5(F.concat_ws(":", "media_id", "ts_ms"))
-    )
-
-
-def synthetic_media(spark, n: int = 64, seed: int = 42) -> DataFrame:
-    """Deterministic fake media table for tests/bench (binary payloads
-    derived from md5 streams; kinds cycle image/audio/video)."""
-    rows = []
-    kinds = ["image", "audio", "video"]
-    for i in range(n):
-        kind = kinds[i % 3]
-        payload = hashlib.md5(f"{seed}:{i}".encode()).digest() * (4 + i % 7)
-        rows.append(
-            {
-                "media_id": i,
-                "kind": kind,
-                "payload": payload,
-                "mime": {"image": "image/png", "audio": "audio/wav", "video": "video/mp4"}[kind],
-                "width": 64 + (i % 8) * 16 if kind == "image" else None,
-                "height": 64 + (i % 5) * 16 if kind == "image" else None,
-                "duration_ms": (1000 + i * 137) if kind in ("audio", "video") else None,
-            }
-        )
-    return spark.createDataFrame(rows, schema=MEDIA_SCHEMA)

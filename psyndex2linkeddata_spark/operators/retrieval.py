@@ -42,7 +42,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 import pyspark.sql.functions as F
 
-__all__ = ["tokenize_terms", "bm25_scores", "bm25_topk", "rrf_fuse"]
+__all__ = ["tokenize_terms", "bm25_topk", "rrf_fuse"]
 
 
 def tokenize_terms(col: Column) -> Column:
@@ -60,76 +60,6 @@ def _unscaled_to_decimal(col: Column) -> Column:
 
     return (col.cast("decimal(24,0)") * F.lit(Decimal("0.0000000001"))).cast(
         "decimal(20,10)"
-    )
-
-
-def bm25_scores(
-    docs: DataFrame,
-    queries: DataFrame,
-    k1: float = 1.2,
-    b: float = 0.75,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    query_id_col: str = "query_id",
-    query_text_col: str = "query_text",
-    barrier: bool = True,
-    max_df_frac: float | None = None,
-) -> DataFrame:
-    """(query_id, doc_id, score DECIMAL(20,10)) for every document that
-    shares at least one term with the query. Thin wrapper over
-    `_bm25_scores_unscaled` (the decimal is reconstructed exactly from
-    the bigint unscaled sum — see there for the plan shape)."""
-    scored = _bm25_scores_unscaled(
-        docs,
-        queries,
-        k1,
-        b,
-        id_col,
-        text_col,
-        query_id_col,
-        query_text_col,
-        barrier,
-        max_df_frac,
-    )
-    return scored.select(
-        query_id_col,
-        id_col,
-        _unscaled_to_decimal(F.col("score_unscaled")).alias("score"),
-    )
-
-
-def _bm25_scores_unscaled(
-    docs: DataFrame,
-    queries: DataFrame,
-    k1: float = 1.2,
-    b: float = 0.75,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    query_id_col: str = "query_id",
-    query_text_col: str = "query_text",
-    barrier: bool = True,
-    max_df_frac: float | None = None,
-) -> DataFrame:
-    """(query_id, doc_id, score_unscaled BIGINT = score × 10^10) for
-    every document sharing ≥1 term with the query — the general
-    (arbitrary-size output) scoring path: per-query fan-out join over
-    the per-posting score table + one doc-clustered bigint sum."""
-    per_posting, qterms = _bm25_per_posting(
-        docs,
-        queries,
-        k1,
-        b,
-        id_col,
-        text_col,
-        query_id_col,
-        query_text_col,
-        barrier,
-        max_df_frac,
-    )
-    return (
-        per_posting.join(F.broadcast(qterms), "term")
-        .groupBy(query_id_col, id_col)
-        .agg(F.sum("_sl").alias("score_unscaled"))
     )
 
 
@@ -171,8 +101,8 @@ def _bm25_per_posting(
     0.1 cut, self-retrieval precision unchanged at 200/200 — the cut
     removes the entire hot-term scoring-join component; the remaining
     wall is the one-pass postings build itself, which a multi-batch
-    deployment amortizes by persisting `bm25_scores`'s checkpointed
-    postings across query batches. None (default) scores every term —
+    deployment amortizes by persisting the checkpointed postings across
+    query batches. None (default) scores every term —
     the oracle-gated exact mode."""
     # the Arrow postings kernel below replaces the tokenize→explode
     # subtree entirely; the corpus scalars (n_docs over dl>0 docs,
@@ -346,7 +276,7 @@ def bm25_topk(
     fully deterministic, so the two-phase salted ranking (see module
     docstring) returns exactly the single-window result the oracle
     computes. `max_df_frac` prunes stop-word-grade query terms (see
-    bm25_scores)."""
+    _bm25_per_posting)."""
     if k <= 0 or n_salts <= 0:
         raise ValueError("require k > 0 and n_salts > 0")
     per_posting, qterms = _bm25_per_posting(
@@ -361,9 +291,10 @@ def bm25_topk(
         max_df_frac=max_df_frac,
     )
     # Dense batch scorer (r06): the query side is broadcast-sized by
-    # this operator's contract (qterms is broadcast in the general
-    # scoring path), so its (query, term) pairs collect to a Q×V 0/1
-    # mask. Each task turns its docs' posting lists into a B×V matrix of
+    # this operator's contract (the fan-out join path,
+    # tests/native_twins.bm25_scores, broadcasts qterms too), so its
+    # (query, term) pairs collect to a Q×V 0/1 mask. Each task turns its
+    # docs' posting lists into a B×V matrix of
     # unscaled-bigint scores and computes ALL (doc, query) sums as ONE
     # float64 gemm — exact, because every value and every partial sum is
     # an integer < 2^53 (score_unscaled ≤ ~3.4e13) and float64 adds of

@@ -35,19 +35,6 @@ def _key_hash32(key: Column, salt: str) -> Column:
     ).cast("bigint")
 
 
-def hash_sample(
-    df: DataFrame,
-    fraction: float,
-    key_col: str = "doc_id",
-    salt: str = "sample",
-) -> DataFrame:
-    """Keep a deterministic `fraction` of rows, keyed by content id."""
-    if not 0.0 <= fraction <= 1.0:
-        raise ValueError("fraction must be in [0, 1]")
-    thr = int(round(fraction * _HASH_SPACE))
-    return df.where(_key_hash32(F.col(key_col), salt) < F.lit(thr))
-
-
 def stratified_hash_sample(
     df: DataFrame,
     rates: dict[str, float],

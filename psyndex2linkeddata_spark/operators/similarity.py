@@ -9,7 +9,8 @@
   10^12 vectors the bucket join replaces the full cross product; recall
   is tuned by n_planes/n_tables.
 
-embedding near-dup (dedup §) reuses cosine_pairs with a threshold.
+embedding near-dup pairs (dedup §) come from lsh_cosine_pairs: the
+hyperplane buckets with a cosine threshold, no all-pairs cross join.
 """
 
 from __future__ import annotations
@@ -178,40 +179,6 @@ def lsh_cosine_topk(
     )
 
 
-def cosine_pairs(
-    df: DataFrame,
-    threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Embedding near-duplicate pairs (id_a < id_b, cos ≥ threshold).
-
-    Brute force (small scale); at 10^12 rows use hyperplane buckets first
-    (join on `sig` like lsh_cosine_topk) — O(n²/2^planes). Norms are
-    staged once per row, not refolded per pair (same double ops)."""
-    a = df.select(
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("_va"),
-        norm(F.col(vec_col)).alias("_na"),
-    )
-    b = df.select(
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("_vb"),
-        norm(F.col(vec_col)).alias("_nb"),
-    )
-    return (
-        a.join(b, F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            (
-                dot(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb"))
-            ).alias("cos"),
-        )
-        .where(F.col("cos") >= threshold)
-    )
-
-
 def lsh_cosine_pairs(
     df: DataFrame,
     dims: int,
@@ -221,8 +188,8 @@ def lsh_cosine_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Near-duplicate pairs via hyperplane-LSH bucketing — the scale path
-    for `cosine_pairs` (which is an all-pairs cross join).
+    """Near-duplicate pairs (id_a < id_b, cos ≥ threshold) via
+    hyperplane-LSH bucketing, in place of an all-pairs cross join.
 
     Each table t signs every vector with planes [t*n_planes, (t+1)*n_planes)
     (deterministic md5-derived weights — reproducible across runs and

@@ -1,25 +1,19 @@
-"""Skew handling for hot keys (north_star: "skew from hot entities —
-common publishers/authors — is handled by salted aggregation and AQE
-skew-join hints").
+"""Exchange widths for fan-out operators.
 
-AQE covers skewed sort-merge JOINS automatically
-(spark.sql.adaptive.skewJoin.enabled, on in session.get_spark). What AQE
-does NOT fix is a skewed AGGREGATION whose per-key state is large
-(collect_list/collect_set on a hot author): one reducer receives the hot
-key's entire partition. `salted_agg` runs those in two phases —
-partial aggregation on (key, salt), then final merge per key — bounding
-any single task at 1/salt of the hot key's data.
-
-`salted_count` / `salted_collect_set` are the common instantiations used
-by entity-resolution rollups (mention counts per canonical entity,
-alias sets per entity).
+AQE handles skew from hot entities (common publishers/authors) in
+sort-merge joins (spark.sql.adaptive.skewJoin.enabled, on in
+session.get_spark), and it sizes post-shuffle partitions from
+map-output bytes. What it cannot see is a blow-up AFTER the exchange (a
+bucket self-join, per-query scoring, a feature explode):
+`fanout_partitions` gives those operators the width to pin their
+exchange at.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 
 def fanout_partitions(df: DataFrame, override: int | None = None) -> int:
@@ -43,50 +37,3 @@ def fanout_partitions(df: DataFrame, override: int | None = None) -> int:
         return int(env)
     return df.sparkSession.sparkContext.defaultParallelism
 
-
-def with_salt(df: DataFrame, n_salts: int = 16, col: str = "_salt") -> DataFrame:
-    """Deterministic salt from a stable row hash (never rand() — resume and
-    retry must reproduce partitions)."""
-    return df.withColumn(
-        col, F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(n_salts))
-    )
-
-
-def salted_agg(
-    df: DataFrame,
-    key_cols: list[str],
-    partial_aggs: list[Column],
-    merge_aggs: list[Column],
-    n_salts: int = 16,
-) -> DataFrame:
-    """Two-phase aggregation: groupBy(key, salt) with `partial_aggs`, then
-    groupBy(key) with `merge_aggs` over the partial columns."""
-    salted = with_salt(df, n_salts)
-    partial = salted.groupBy(*key_cols, "_salt").agg(*partial_aggs)
-    return partial.groupBy(*key_cols).agg(*merge_aggs)
-
-
-def salted_count(df: DataFrame, key_cols: list[str], n_salts: int = 16) -> DataFrame:
-    return salted_agg(
-        df,
-        key_cols,
-        [F.count("*").alias("_c")],
-        [F.sum("_c").alias("count")],
-        n_salts,
-    )
-
-
-def salted_collect_set(
-    df: DataFrame, key_cols: list[str], value_col: str, n_salts: int = 16
-) -> DataFrame:
-    return salted_agg(
-        df,
-        key_cols,
-        [F.collect_set(value_col).alias("_s")],
-        [
-            F.array_distinct(F.flatten(F.collect_list("_s"))).alias(
-                f"{value_col}_set"
-            )
-        ],
-        n_salts,
-    )

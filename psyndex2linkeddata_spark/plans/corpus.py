@@ -125,8 +125,7 @@ def prepare_training_corpus(
         # the composed corpus_prep went 101s → 19s at sf0.1/local[32]. On
         # a real cluster this is where the prepped corpus would be written
         # to the warehouse table anyway (sources/warehouse.py) — a
-        # reusable barrier either way. Streaming micro-batches run
-        # dedup=False and never hit it.
+        # reusable barrier either way.
         d = d.localCheckpoint(eager=False)
         keep = neardup_clusters(d, id_col, text_col).where("is_canonical")
         d = d.join(keep.select(id_col), id_col, "left_semi")
@@ -138,63 +137,3 @@ def prepare_training_corpus(
         return cdc_chunks(d, id_col, text_col, divisor=cdc_divisor)
     raise ValueError(f"unknown chunking mode {chunking!r}")
 
-
-def prepare_web_corpus(
-    pages: DataFrame,
-    host_blocklist: DataFrame | None = None,
-    max_per_host: int | None = None,
-    extract_when_null: bool = True,
-    **prep_kwargs,
-) -> DataFrame:
-    """Captures → training chunks: the full web path in one plan.
-
-    pages(url, warc_ts, html, text, lang) →
-      1. snapshot dedup: newest capture per canonical url
-         (operators/extraction.latest_snapshot — the one exchange this
-         wrapper adds; keyed on canonical_url, partial max_by map-side)
-      2. text repair: NULL text recovered from html (byte-stable
-         html_to_text; narrow, fuses into the scan)
-      3. host hygiene: suffix-blocklist anti-join + per-domain cap
-         (both broadcast/salted — no skew funnel)
-      4. prepare_training_corpus (scrub → gates → decontaminate → mix →
-         near-dup dedup → chunking) keyed on the canonical url.
-
-    Stage order mirrors production crawl pipelines: snapshot dedup FIRST
-    (recrawls are the cheapest duplicates to kill — one max_by vs LSH),
-    hygiene before the expensive content passes, content dedup last.
-    `prep_kwargs` pass through to prepare_training_corpus (benchmark=,
-    mix_rates=, chunking=, ...).
-
-    Web corpora are template-heavy: shared boilerplate makes GIANT,
-    long-diameter near-dup components. The near-dup closure
-    (operators/components.connected_components) closes them on the
-    driver (over its row budget, after a per-partition contraction), so
-    its cost does not grow with component diameter.
-    """
-    from psyndex2linkeddata_spark.operators.extraction import (
-        html_to_text,
-        latest_snapshot,
-    )
-    from psyndex2linkeddata_spark.operators.hosts import (
-        cap_per_host,
-        filter_blocked_hosts,
-    )
-
-    d = latest_snapshot(pages)
-    if extract_when_null and "html" in d.columns:
-        d = d.withColumn(
-            "text", F.coalesce(F.col("text"), html_to_text(F.col("html")))
-        )
-    d = d.drop("html")
-    if host_blocklist is not None:
-        d = filter_blocked_hosts(d, host_blocklist, url_col="canonical_url")
-    if max_per_host is not None:
-        d = cap_per_host(
-            d, url_col="canonical_url", id_col="canonical_url", k=max_per_host
-        )
-    return prepare_training_corpus(
-        d,
-        id_col="canonical_url",
-        text_col="text",
-        **prep_kwargs,
-    )

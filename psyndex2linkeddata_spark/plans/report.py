@@ -30,7 +30,7 @@ from psyndex2linkeddata_spark.functions.textstats import quality_score
 from psyndex2linkeddata_spark.operators.hosts import host_of
 from psyndex2linkeddata_spark.operators.stats import corpus_stats
 
-__all__ = ["build_run_report", "write_run_report", "read_run_report"]
+__all__ = ["build_run_report", "write_run_report"]
 
 
 def build_run_report(pages: DataFrame) -> dict[str, DataFrame]:
@@ -101,10 +101,3 @@ def write_run_report(
         summary["triples_per_s"] = summary["n_triples"] / summary["wall_s"]
     return summary
 
-
-def read_run_report(spark: SparkSession, ckpt_dir: str, run_id: str) -> dict:
-    base = os.path.join(ckpt_dir, "report", f"run_id={run_id}")
-    return {
-        name: spark.read.parquet(os.path.join(base, name))
-        for name in ("corpus", "quality", "throughput")
-    }

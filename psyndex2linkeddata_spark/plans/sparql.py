@@ -62,7 +62,6 @@ from psyndex2linkeddata_spark.schema import triples_schema
 
 __all__ = [
     "parse_sparql",
-    "sparql",
     "sparql_select",
     "sparql_construct",
     "solutions_tsv",
@@ -83,13 +82,6 @@ _TOK = re.compile(
     """,
     re.X,
 )
-
-_KEYWORDS = {
-    "SELECT", "CONSTRUCT", "WHERE", "OPTIONAL", "FILTER", "VALUES",
-    "DISTINCT", "PREFIX", "BASE", "AS", "NOT", "EXISTS", "GROUP",
-    "ORDER", "BY", "ASC", "DESC", "LIMIT", "OFFSET", "UNION", "A",
-}
-
 
 def _lex(q: str) -> list[tuple[str, str]]:
     """SPARQL text → [(kind, value)]; comments stripped (a ``#`` inside
@@ -775,19 +767,6 @@ def sparql_construct(
     for o in outs[1:]:
         out = out.unionByName(o)
     return out.distinct()
-
-
-def sparql(
-    triples: DataFrame,
-    query: str,
-    prefixes: dict[str, str] | None = None,
-) -> DataFrame:
-    """Dispatch on query form: SELECT → binding table, CONSTRUCT →
-    triples DataFrame."""
-    head = parse_sparql(query, prefixes=prefixes).form
-    return (sparql_select if head == "SELECT" else sparql_construct)(
-        triples, query, prefixes=prefixes
-    )
 
 
 # ---------------------------------------------------------------------------

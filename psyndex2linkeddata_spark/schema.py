@@ -89,9 +89,6 @@ REPEATED_FIELDS: tuple[str, ...] = (
     "KRF",      # thesis reviewers
 )
 
-ALL_FIELDS: tuple[str, ...] = SCALAR_FIELDS + REPEATED_FIELDS
-
-
 def pages_schema() -> T.StructType:
     """Primary input table shape, per BASELINE.json input_hint."""
     return T.StructType(

@@ -1,10 +1,11 @@
-"""S7/S8 — text serialization sinks.
+"""S7 — text serialization sinks.
 
 The reference serializes one rdflib Graph to Turtle + JSON-LD
 (/root/reference/convert_starxml_to_bf.py:1555-1562). Distributed
 equivalent: N-Triples lines built with pure column expressions
 (`concat_ws`) written as text — NT is line-oriented, so any partitioning
-is valid; a JSON-LD-ish grouped export aggregates per subject.
+is valid — and a per-subject Turtle sink. No entry point exports JSON-LD
+(S8), so there is no JSON-LD sink.
 
 Escaping follows the N-Triples grammar for the characters our corpus can
 produce (backslash, quote, newline, tab, CR)."""
@@ -178,159 +179,6 @@ def write_turtle(triples: DataFrame, path: str, single_file: bool = False) -> No
             yield pdf
 
     blocks.mapInPandas(add_header, "value string").write.mode("overwrite").text(path)
-
-
-def jsonld_ish(triples: DataFrame) -> DataFrame:
-    """S8 (legacy grouped-JSON shape kept for compatibility): per-subject
-    JSON objects (sorted keys like the reference's sort_keys=True
-    export): (subj, json string). The real JSON-LD sink is
-    jsonld_nodes/write_jsonld below."""
-    po = triples.groupBy("subj", "pred").agg(
-        F.sort_array(F.collect_list("obj")).alias("objs")
-    )
-    grouped = po.groupBy("subj").agg(
-        F.map_from_entries(
-            F.sort_array(
-                F.collect_list(F.struct(F.col("pred"), F.col("objs")))
-            )
-        ).alias("props")
-    )
-    return grouped.select(
-        "subj", F.to_json(F.struct(F.col("subj").alias("@id"), F.col("props"))).alias("json")
-    )
-
-
-# C0 controls without a short JSON escape (everything < 0x20 except the
-# \n \r \t already handled by _escape) → \u00XX
-_JSON_C0 = [c for c in range(0x20) if chr(c) not in "\n\r\t"]
-
-
-def _jescape(col: Column) -> Column:
-    """JSON string escaping: backslash, quote, \\n/\\r/\\t (shared with
-    the NT serializer), plus every other C0 control as \\u00XX — this is
-    a public sink callable on arbitrary triples, so a stray \\x0b in a
-    literal must not produce an invalid JSON part file."""
-    out = _escape(col)
-    for c in _JSON_C0:
-        out = F.replace(out, F.lit(chr(c)), F.lit("\\u%04x" % c))
-    return out
-
-
-def jsonld_nodes(triples: DataFrame) -> DataFrame:
-    """S8: expanded-form JSON-LD node objects, one per subject
-    (the reference serializes the graph to JSON-LD,
-    convert_starxml_to_bf.py:1555-1562; distributed form = one node
-    object per subject, deterministic sorted keys/values).
-
-    Expanded form needs no @context: rdf:type → "@type": ["<iri>", …];
-    IRI objects → {"@id": …}; literals → {"@value": …[, "@language" |
-    "@type"]}. Two uniform-key groupBy shuffles, all native."""
-    is_type = F.col("pred") == _RDF_TYPE
-    obj_json = (
-        F.when(is_type, F.concat(F.lit('"'), _jescape(F.col("obj")), F.lit('"')))
-        .when(
-            F.col("obj_is_iri"),
-            F.concat(F.lit('{"@id":"'), _jescape(F.col("obj")), F.lit('"}')),
-        )
-        .when(
-            F.col("lang").isNotNull(),
-            F.concat(
-                F.lit('{"@value":"'), _jescape(F.col("obj")),
-                F.lit('","@language":"'), F.col("lang"), F.lit('"}'),
-            ),
-        )
-        .when(
-            F.col("dtype").isNotNull(),
-            F.concat(
-                F.lit('{"@value":"'), _jescape(F.col("obj")),
-                F.lit('","@type":"'), _jescape(F.col("dtype")), F.lit('"}'),
-            ),
-        )
-        .otherwise(
-            F.concat(F.lit('{"@value":"'), _jescape(F.col("obj")), F.lit('"}'))
-        )
-    )
-    key = F.when(is_type, F.lit("@type")).otherwise(F.col("pred"))
-    po = triples.select(F.col("subj"), key.alias("k"), obj_json.alias("oj")).groupBy(
-        "subj", "k"
-    ).agg(F.array_join(F.sort_array(F.collect_list("oj")), ",").alias("objs"))
-    nodes = po.groupBy("subj").agg(
-        F.array_join(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("k", "objs"))),
-                lambda s: F.concat(
-                    F.lit('"'), _jescape(s["k"]), F.lit('":['), s["objs"], F.lit("]")
-                ),
-            ),
-            ",",
-        ).alias("body")
-    )
-    return nodes.select(
-        F.concat(
-            F.lit('{"@id":"'), _jescape(F.col("subj")), F.lit('",'),
-            F.col("body"), F.lit("}"),
-        ).alias("value")
-    )
-
-
-def write_jsonld(triples: DataFrame, path: str, single_file: bool = False) -> None:
-    """S8 sink: every part file is one self-contained JSON-LD document
-    `{"@graph":[ node, node, … ]}` (header/footer + comma separators
-    added per partition via mapInPandas, like the Turtle sink)."""
-    nodes = jsonld_nodes(triples)
-    if single_file:
-        nodes = nodes.coalesce(1)
-
-    import pandas as pd
-
-    def wrap(batches):
-        first = True
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out = []
-            for v in pdf["value"].tolist():
-                out.append(('{"@graph":[' + v) if first else ("," + v))
-                first = False
-            yield pd.DataFrame({"value": out})
-        yield pd.DataFrame({"value": ["]}" if not first else '{"@graph":[]}']})
-
-    nodes.mapInPandas(wrap, "value string").write.mode("overwrite").text(path)
-
-
-def parse_jsonld(text: str) -> list[tuple]:
-    """Inverse of write_jsonld for one document (round-trip tests; the
-    rdflib expanded-form parser would accept the same input, it just
-    isn't installed in this sandbox): JSON-LD expanded `{"@graph": [...]}`
-    → [(subj, pred, obj, obj_is_iri, lang, dtype), …]."""
-    import json
-
-    doc = json.loads(text)
-    out = []
-    for node in doc.get("@graph", []):
-        subj = node["@id"]
-        for k, vals in node.items():
-            if k == "@id":
-                continue
-            if k == "@type":
-                for v in vals:
-                    out.append((subj, _RDF_TYPE, v, True, None, None))
-                continue
-            for v in vals:
-                if "@id" in v:
-                    out.append((subj, k, v["@id"], True, None, None))
-                else:
-                    out.append(
-                        (
-                            subj,
-                            k,
-                            v["@value"],
-                            False,
-                            v.get("@language"),
-                            v.get("@type"),
-                        )
-                    )
-    return out
 
 
 def move_single_part(staged_dir: str, dest: str, pattern: str = "part-*") -> None:

@@ -25,11 +25,8 @@ are rejected — the fallback is sandbox-only and keeps the same layout.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.utils import AnalysisException
-
-TRIPLE_COLS = ("subj", "pred", "obj")
-
 
 def with_subj_bucket(df: DataFrame, buckets: int = 64) -> DataFrame:
     return df.withColumn(
@@ -78,12 +75,3 @@ def write_triples_table(
     else:
         raise ValueError(f"unknown mode {mode!r}")
 
-
-def read_triples_table(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)
-
-
-def read_subj_bucket(spark: SparkSession, table: str, bucket: int) -> DataFrame:
-    """One subject bucket — a partition-pruned scan (the unit the
-    checkpointed runner resumes by)."""
-    return spark.table(table).where(F.col("subj_bucket") == bucket)

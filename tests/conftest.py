@@ -59,7 +59,7 @@ N_JOURNALS = 40
 def journal_corpus(tmp_path_factory):
     """One synthetic STAR journal corpus (XML + CSV lookups + records),
     shared by the refexec exact-match gate and the SPARQL gate."""
-    from psyndex2linkeddata_spark.datagen.journals import (
+    from tests.fixture_journals import (
         journal_records,
         write_journal_lookups,
         write_journals_xml,

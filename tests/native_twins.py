@@ -21,7 +21,11 @@ from pyspark.sql import Column, DataFrame, functions as F
 from psyndex2linkeddata_spark.operators import similarity
 from psyndex2linkeddata_spark.operators.dedup import norm_text, shingle_array, tokens
 from psyndex2linkeddata_spark.operators.lm import UNK, _bigrams
-from psyndex2linkeddata_spark.operators.retrieval import tokenize_terms
+from psyndex2linkeddata_spark.operators.retrieval import (
+    _bm25_per_posting,
+    _unscaled_to_decimal,
+    tokenize_terms,
+)
 from psyndex2linkeddata_spark.operators.similarity import dot, norm
 
 # ---------------------------------------------------------------------------
@@ -630,3 +634,32 @@ def with_top_bigram_frac_native(
     # that. (A dummy non-deterministic projection column does NOT protect
     # this: fixed-point column pruning deletes it before pushdown runs.)
     return sb.select(*keep, frac.alias(out_col))
+
+
+# ---------------------------------------------------------------------------
+# operators/retrieval.py
+# ---------------------------------------------------------------------------
+
+
+def bm25_scores(
+    docs: DataFrame,
+    queries: DataFrame,
+    max_df_frac: float | None = None,
+) -> DataFrame:
+    """(query_id, doc_id, score DECIMAL(20,10)) for every document that
+    shares at least one term with the query: the general fan-out-join
+    scoring path that bm25_topk's dense per-batch kernel replaced. One
+    join of the per-posting score table with the query terms and one
+    bigint sum per (query, doc); the decimal is rebuilt exactly from
+    that sum."""
+    per_posting, qterms = _bm25_per_posting(docs, queries, max_df_frac=max_df_frac)
+    return (
+        per_posting.join(F.broadcast(qterms), "term")
+        .groupBy("query_id", "doc_id")
+        .agg(F.sum("_sl").alias("score_unscaled"))
+        .select(
+            "query_id",
+            "doc_id",
+            _unscaled_to_decimal(F.col("score_unscaled")).alias("score"),
+        )
+    )

@@ -2,15 +2,35 @@
 
 from __future__ import annotations
 
+import html as htmllib
+import re
+
+import pandas as pd
 from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
 
 from psyndex2linkeddata_spark.datagen.pages import make_records
-from psyndex2linkeddata_spark.extract.parser import (
-    extract_records,
-    filter_bad_ids,
-    text_from_html,
-)
+from psyndex2linkeddata_spark.extract.parser import filter_bad_ids
 from tests.conftest import N_FIXTURE_PAGES
+
+
+def text_from_html(col):
+    """Re-extract text from raw html bytes (Arrow-vectorized pandas UDF):
+    the inverse of the page renderer, body <pre> content,
+    entity-unescaped. The UDF body is a closure so that it ships to the
+    Python workers by value (a test module is not importable there)."""
+
+    def one(b):
+        if b is None:
+            return None
+        s = bytes(b).decode("utf-8")
+        m = re.search(r"<pre>(.*)</pre>", s, flags=re.DOTALL)
+        return htmllib.unescape(m.group(1)) if m else None
+
+    def run(html: pd.Series) -> pd.Series:
+        return html.map(one)
+
+    return pandas_udf(run, "string")(col)
 
 
 def test_every_page_yields_one_record(records):

@@ -138,18 +138,6 @@ def test_nt_export_roundtrip(spark, tri, tmp_path):
     assert spark.read.text(out).count() == 100
 
 
-def test_jsonld_grouping(spark, tri):
-    from psyndex2linkeddata_spark.sources.export import jsonld_ish
-
-    rows = jsonld_ish(tri.limit(2000)).limit(5).collect()
-    import json
-
-    for r in rows:
-        obj = json.loads(r.json)
-        assert obj["@id"] == r.subj
-        assert isinstance(obj["props"], dict) and obj["props"]
-
-
 def test_turtle_roundtrip(spark, tri, tmp_path):
     """S7: parse(serialize(triples)) == triple set — every part file is a
     self-contained prefix-compressed Turtle document readable by
@@ -171,36 +159,6 @@ def test_turtle_roundtrip(spark, tri, tmp_path):
         if fn.startswith("part-"):
             with open(os.path.join(out, fn), encoding="utf-8") as f:
                 got.update(tuple(t) for t in parse_turtle(f.read()))
-    assert got == want, (
-        f"missing={len(want - got)} extra={len(got - want)}; "
-        f"examples missing={sorted(want - got)[:3]} extra={sorted(got - want)[:3]}"
-    )
-
-
-def test_jsonld_roundtrip(spark, tri, tmp_path):
-    """S8: parse(serialize(triples)) == triple set — every part file is a
-    self-contained expanded-form JSON-LD document {"@graph": [...]}
-    (absolute IRIs, no @context needed; the shape rdflib's json-ld
-    parser accepts)."""
-    import json
-    import os
-
-    from psyndex2linkeddata_spark.sources.export import parse_jsonld, write_jsonld
-
-    subset = tri.limit(800).repartition(3)
-    want = {
-        (r.subj, r.pred, r.obj, r.obj_is_iri, r.lang, r.dtype)
-        for r in subset.collect()
-    }
-    out = str(tmp_path / "jsonld")
-    write_jsonld(subset, out)
-    got = set()
-    for fn in os.listdir(out):
-        if fn.startswith("part-"):
-            with open(os.path.join(out, fn), encoding="utf-8") as f:
-                text = f.read()
-            json.loads(text)  # valid JSON document per part file
-            got.update(tuple(t) for t in parse_jsonld(text))
     assert got == want, (
         f"missing={len(want - got)} extra={len(got - want)}; "
         f"examples missing={sorted(want - got)[:3]} extra={sorted(got - want)[:3]}"

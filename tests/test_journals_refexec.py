@@ -94,7 +94,7 @@ def test_journals_carryover_quirks(spark, corpus, ref_triples):
     record (i.e. the record's own JTAT is not X), and a review note
     inherited with no JTRV of its own — checked against the reference's
     own output."""
-    from psyndex2linkeddata_spark.datagen.journals import journal_uuid
+    from tests.fixture_journals import journal_uuid
 
     d, recs = corpus
     notes = {

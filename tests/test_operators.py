@@ -3,10 +3,11 @@ multimodal plumbing."""
 
 from __future__ import annotations
 
+import hashlib
 import math
 
 import pytest
-from pyspark.sql import functions as F
+from pyspark.sql import functions as F, types as T
 
 from psyndex2linkeddata_spark.operators import dedup, similarity
 from psyndex2linkeddata_spark.operators.components import (
@@ -14,11 +15,7 @@ from psyndex2linkeddata_spark.operators.components import (
     connected_components,
 )
 from psyndex2linkeddata_spark.operators.linking import link_exact, norm_key
-from psyndex2linkeddata_spark.operators.multimodal import (
-    extract_features,
-    sample_frames,
-    synthetic_media,
-)
+from psyndex2linkeddata_spark.operators.multimodal import extract_features
 from psyndex2linkeddata_spark.operators.upsert import clean_genres, last_wins
 
 
@@ -241,6 +238,41 @@ def test_clean_genres_ancestor_rule(spark):
     assert got == {NS.GENRES + "ResearchPaper"}
 
 
+MEDIA_SCHEMA = T.StructType(
+    [
+        T.StructField("media_id", T.LongType(), False),
+        T.StructField("kind", T.StringType(), False),  # image | audio | video
+        T.StructField("payload", T.BinaryType(), True),
+        T.StructField("mime", T.StringType(), True),
+        T.StructField("width", T.IntegerType(), True),
+        T.StructField("height", T.IntegerType(), True),
+        T.StructField("duration_ms", T.LongType(), True),
+    ]
+)
+
+
+def synthetic_media(spark, n: int = 64, seed: int = 42):
+    """Deterministic fake media table (binary payloads derived from md5
+    streams; kinds cycle image/audio/video)."""
+    rows = []
+    kinds = ["image", "audio", "video"]
+    for i in range(n):
+        kind = kinds[i % 3]
+        payload = hashlib.md5(f"{seed}:{i}".encode()).digest() * (4 + i % 7)
+        rows.append(
+            {
+                "media_id": i,
+                "kind": kind,
+                "payload": payload,
+                "mime": {"image": "image/png", "audio": "audio/wav", "video": "video/mp4"}[kind],
+                "width": 64 + (i % 8) * 16 if kind == "image" else None,
+                "height": 64 + (i % 5) * 16 if kind == "image" else None,
+                "duration_ms": (1000 + i * 137) if kind in ("audio", "video") else None,
+            }
+        )
+    return spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
+
+
 def test_multimodal_features_shape(spark):
     media = synthetic_media(spark, n=12)
     feats = extract_features(media, dim=8).collect()
@@ -253,18 +285,6 @@ def test_multimodal_features_shape(spark):
     assert {(r.media_id, tuple(r.feature)) for r in feats} == {
         (r.media_id, tuple(r.feature)) for r in again
     }
-
-
-def test_sample_frames_grid(spark):
-    media = synthetic_media(spark, n=9)
-    frames = sample_frames(media, every_ms=500).collect()
-    videos = [r for r in frames if r.kind == "video"]
-    assert len(videos) > 0
-    by_media = {}
-    for r in frames:
-        by_media.setdefault(r.media_id, []).append(r.frame_idx)
-    for mid, idxs in by_media.items():
-        assert sorted(idxs) == list(range(len(idxs)))
 
 
 def test_rel_crossref_doi_search(spark):
@@ -658,22 +678,28 @@ def test_cdc_chunks_stability(spark):
 
 
 def test_hash_sample_determinism(spark):
-    from psyndex2linkeddata_spark.operators.sampling import (
-        hash_sample,
-        stratified_hash_sample,
-    )
+    from psyndex2linkeddata_spark.operators.sampling import stratified_hash_sample
 
     df = spark.range(2000).select(
         F.col("id").alias("doc_id"),
         F.when(F.col("id") % 2 == 0, "web").otherwise("wiki").alias("source"),
     )
-    a = {r.doc_id for r in hash_sample(df, 0.3, salt="s1").collect()}
-    b = {r.doc_id for r in hash_sample(df.repartition(13), 0.3, salt="s1").collect()}
+
+    def sample(d, rate):
+        return {
+            r.doc_id
+            for r in stratified_hash_sample(
+                d, {"web": rate, "wiki": rate}, salt="s1"
+            ).collect()
+        }
+
+    a = sample(df, 0.3)
+    b = sample(df.repartition(13), 0.3)
     assert a == b  # layout-independent, unlike df.sample
     assert 0.2 < len(a) / 2000 < 0.4
     # a smaller fraction with the same salt is a strict subset (nested
     # samples: growing the budget only ADDS docs, never reshuffles)
-    c = {r.doc_id for r in hash_sample(df, 0.1, salt="s1").collect()}
+    c = sample(df, 0.1)
     assert c <= a
     mixed = stratified_hash_sample(
         df, {"wiki": 1.0}, strata_col="source", default_rate=0.0
@@ -1010,62 +1036,6 @@ def test_build_triples_repair_text(spark, pages):
     subset.unpersist()
 
 
-def test_prepare_web_corpus(spark, pages):
-    """Captures → chunks composition: snapshot dedup, NULL-text repair,
-    host blocklist, per-host cap, then the doc-level prep — all in one
-    plan keyed on the canonical url."""
-    from psyndex2linkeddata_spark.plans.corpus import prepare_web_corpus
-
-    base = pages.limit(40).cache()
-    n_base = base.count()
-    # duplicate captures: same page re-crawled later under a utm variant,
-    # with NULL text (must be repaired from html, then LOSE to nothing —
-    # it's the newer capture, so it WINS and its text must come from html)
-    recrawl = base.select(
-        F.concat(F.col("url"), F.lit("?utm_source=recrawl")).alias("url"),
-        (F.col("warc_ts") + F.expr("interval 30 days")).alias("warc_ts"),
-        "html",
-        F.lit(None).cast("string").alias("text"),
-        "lang",
-    )
-    # junk rows on a blocked host
-    blocked = base.select(
-        F.concat(
-            F.lit("https://spam.blocked.test/x/"), F.md5("url")
-        ).alias("url"),
-        "warc_ts", "html", "text", "lang",
-    )
-    caps = base.unionByName(recrawl).unionByName(blocked)
-    bl = spark.createDataFrame([("blocked.test",)], "host string")
-
-    out = prepare_web_corpus(
-        caps,
-        host_blocklist=bl,
-        max_per_host=1000,
-        chunking="none",
-        dedup=False,
-        min_tokens=1,
-    )
-    rows = out.collect()
-    # one row per original page (recrawl merged into the same canonical
-    # url, blocked host gone), text present everywhere (repair path)
-    assert len(rows) == n_base
-    assert all(r.text is not None and r.text != "" for r in rows)
-    # every winner is the recrawl (newer): its raw url carries the utm tag
-    assert all(r.url.endswith("?utm_source=recrawl") for r in rows)
-    # and the repaired text matches the original page text (modulo the
-    # prep plan's PII scrub, applied to both sides here)
-    from psyndex2linkeddata_spark.operators.pii import scrub_pii
-
-    orig = {
-        r.url: r.text
-        for r in base.select("url", scrub_pii(F.col("text")).alias("text")).collect()
-    }
-    for r in rows:
-        assert r.text == orig[r.url.removesuffix("?utm_source=recrawl")]
-    base.unpersist()
-
-
 def test_ivf_topk_exact_cos_and_recall(spark):
     """IVF scores are exact cosines; with n_probes = n_cells it degrades
     to brute force (recall 1); assignment is repartition-invariant."""
@@ -1216,7 +1186,8 @@ def test_bm25_max_df_frac_stop_term_cut(spark):
     pass: 'the' appears in 4/5 docs (df 0.8) so a 0.5 cut removes its
     postings from scoring while the rare terms still rank; the default
     (None) keeps every term and still scores the stopword."""
-    from psyndex2linkeddata_spark.operators.retrieval import bm25_scores, bm25_topk
+    from psyndex2linkeddata_spark.operators.retrieval import bm25_topk
+    from tests.native_twins import bm25_scores
 
     rows = [
         (1, "the quick brown fox"),
@@ -1362,7 +1333,7 @@ def test_nb_classifier_vs_pure_python(spark):
     """nb_train/nb_scores/nb_classify vs an independent row-at-a-time
     multinomial NB (add-alpha, dense vocab x labels, OOV dropped):
     exact score parity, argmax + lexicographic tie-break, all-OOV doc
-    falls back to priors, classifier_filter keeps the right docs."""
+    falls back to priors."""
     import math
     import re
     from collections import Counter
@@ -1384,7 +1355,6 @@ def test_nb_classifier_vs_pure_python(spark):
     d = spark.createDataFrame(score_rows, ["doc_id", "text"])
 
     from psyndex2linkeddata_spark.operators.classify import (
-        classifier_filter,
         nb_classify,
         nb_scores,
         nb_train,
@@ -1424,12 +1394,6 @@ def test_nb_classifier_vs_pure_python(spark):
     assert pred[10] == "good" and pred[11] == "spam" and pred[13] == "spam"
     # all-OOV doc 12: argmax of priors alone -> 'good' (3/5 > 2/5)
     assert pred[12] == "good"
-
-    kept = {
-        r.doc_id
-        for r in classifier_filter(d, model, priors, ["good"]).collect()
-    }
-    assert kept == {10, 12}
 
 
 def test_nb_train_min_df_prunes_vocab(spark):
@@ -1843,17 +1807,6 @@ def test_bgp_optional(spark):
         bgp_match(
             t, [("?w", "type", "Work")], optional=[[("?a", "doi", "?d")]]
         )
-
-
-def test_bpe_merge_roundtrip(spark, tmp_path):
-    """save_merges/load_merges: the tokenizer artifact survives parquet
-    roundtrip with rank order intact."""
-    from psyndex2linkeddata_spark.operators.bpe import load_merges, save_merges
-
-    merges = [("l", "o"), ("lo", "w"), ("e", "r</w>"), ("n", "e")]
-    p = str(tmp_path / "merges.parquet")
-    save_merges(spark, merges, p)
-    assert load_merges(spark, p) == merges
 
 
 def test_bgp_values_and_filter(spark):

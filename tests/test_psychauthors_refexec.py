@@ -36,7 +36,7 @@ N_PERSONS = 36
 
 @pytest.fixture(scope="module")
 def corpus(tmp_path_factory):
-    from psyndex2linkeddata_spark.datagen.psychauthors import (
+    from tests.fixture_psychauthors import (
         psychauthor_records,
         write_kerndaten_csv,
     )

@@ -21,10 +21,8 @@ def test_bm25_dense_topk_equals_general_scoring_path(spark):
     pairs never appear."""
     from pyspark.sql import Window
 
-    from psyndex2linkeddata_spark.operators.retrieval import (
-        bm25_scores,
-        bm25_topk,
-    )
+    from psyndex2linkeddata_spark.operators.retrieval import bm25_topk
+    from tests.native_twins import bm25_scores
 
     docs = _docs(
         spark,

@@ -58,7 +58,7 @@ def test_base58_public_vectors():
 
 @pytest.fixture(scope="module")
 def corpus(tmp_path_factory):
-    from psyndex2linkeddata_spark.datagen.reduced_persons import (
+    from tests.fixture_reduced_persons import (
         reduced_person_records,
         write_personen_csv,
     )

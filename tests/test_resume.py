@@ -1,4 +1,4 @@
-"""Checkpoint/lineage resumability + streaming incremental tests."""
+"""Checkpoint/lineage resumability tests."""
 
 from __future__ import annotations
 
@@ -346,272 +346,6 @@ def test_mixed_run_manifest_table(spark, tmp_path):
     assert got["new"].generation_date >= got["old"].generation_date
 
 
-def test_streaming_incremental(spark, tmp_path_factory):
-    from psyndex2linkeddata_spark.datagen.pages import (
-        make_records,
-        pages_rows_from_records,
-    )
-    from psyndex2linkeddata_spark.schema import pages_schema
-    from psyndex2linkeddata_spark.streaming.incremental import stream_triples
-
-    base = str(tmp_path_factory.mktemp("stream"))
-    pages_dir = os.path.join(base, "pages")
-    out_dir = os.path.join(base, "out")
-    ckpt_dir = os.path.join(base, "ckpt")
-    os.makedirs(pages_dir)
-
-    recs = make_records(60)
-    rows = pages_rows_from_records(recs)
-
-    def write_chunk(chunk, name):
-        spark.createDataFrame(chunk, schema=pages_schema()).coalesce(1).write.mode(
-            "append"
-        ).parquet(pages_dir)
-
-    write_chunk(rows[:40], "a")
-    stream_triples(spark, pages_dir, out_dir, ckpt_dir)
-    t1 = spark.read.parquet(os.path.join(out_dir, "triples"))
-    works1 = t1.where(F.col("subj").endswith("_work")).select("subj").distinct().count()
-    assert works1 >= 40  # 40 main works (+ related-work nodes)
-
-    write_chunk(rows[40:], "b")
-    stream_triples(spark, pages_dir, out_dir, ckpt_dir)
-    t2 = spark.read.parquet(os.path.join(out_dir, "triples"))
-    # the second run processed ONLY the new file: metrics show 2 batches
-    metrics = spark.read.parquet(os.path.join(ckpt_dir, "batch_metrics"))
-    per_batch = sorted(r.n_pages for r in metrics.collect())
-    assert per_batch == [20, 40]
-    subj_main = {
-        r.subj
-        for r in t2.where(
-            F.col("subj").rlike("works/[0-9]{7}_work$")
-        ).select("subj").distinct().collect()
-    }
-    assert len(subj_main) == 60
-
-
-def test_sessionize_stream_plan(spark):
-    """Streaming sessionization analyzes as a valid streaming plan."""
-    from psyndex2linkeddata_spark.streaming.incremental import (
-        sessionize_events_stream,
-    )
-
-    events = (
-        spark.readStream.format("rate").option("rowsPerSecond", 1).load()
-        .select(
-            F.col("timestamp").alias("ts"),
-            (F.col("value") % 3).alias("user_id"),
-            F.col("value").cast("double").alias("value"),
-        )
-    )
-    out = sessionize_events_stream(events)
-    assert out.isStreaming
-    assert set(out.columns) == {"user_id", "session_window", "n_events", "total_value"}
-
-
-def test_streaming_corpus_chunks(spark, tmp_path_factory):
-    """Two arrival waves → two AvailableNow runs: each doc chunked exactly
-    once, final table equals the batch plan over the union."""
-    import os
-
-    from psyndex2linkeddata_spark.plans.corpus import prepare_training_corpus
-    from psyndex2linkeddata_spark.streaming.incremental import stream_corpus_chunks
-
-    base = str(tmp_path_factory.mktemp("stream_corpus"))
-    docs_dir, out_dir, ckpt = (os.path.join(base, d) for d in ("docs", "out", "ckpt"))
-    os.makedirs(docs_dir)
-
-    def make(lo, hi):
-        return spark.range(lo, hi).select(
-            F.col("id").alias("doc_id"),
-            F.concat_ws(
-                " ",
-                *[
-                    F.concat(F.lit(f"tok{j}_"), (F.col("id") * (j + 3) % 101).cast("string"))
-                    for j in range(30)
-                ],
-            ).alias("text"),
-            F.lit("de").alias("lang"),
-            F.lit("src0").alias("source"),
-            F.lit(0).cast("long").alias("n_chars"),
-        )
-
-    make(0, 40).coalesce(1).write.mode("append").parquet(docs_dir)
-    stream_corpus_chunks(spark, docs_dir, out_dir, ckpt, cdc_divisor=16)
-    first = spark.read.parquet(os.path.join(out_dir, "chunks")).count()
-    assert first > 0
-
-    make(40, 60).coalesce(1).write.mode("append").parquet(docs_dir)
-    stream_corpus_chunks(spark, docs_dir, out_dir, ckpt, cdc_divisor=16)
-    got = spark.read.parquet(os.path.join(out_dir, "chunks"))
-    want = prepare_training_corpus(
-        make(0, 60), benchmark=None, dedup=False,
-        max_top_bigram_frac=None, chunking="cdc", cdc_divisor=16,
-    )
-    assert got.count() == want.count() > first
-    g = {(r.doc_id, r.chunk_id, r.chunk_text) for r in got.collect()}
-    w = {(r.doc_id, r.chunk_id, r.chunk_text) for r in want.collect()}
-    assert g == w
-
-
-def test_stream_latest_snapshot_stateful(spark, tmp_path_factory):
-    """applyInPandasWithState snapshot dedup: winners carry ACROSS
-    micro-batches (keyed state), older late captures are absorbed with
-    no output, and keys finalize (final=true + state eviction) once the
-    watermark passes their event time. Each AvailableNow run produces
-    its data batch plus a trailing no-data batch that fires timeouts."""
-    import datetime as dt
-    import glob
-
-    from psyndex2linkeddata_spark.operators.extraction import latest_snapshot
-    from psyndex2linkeddata_spark.schema import pages_schema
-    from psyndex2linkeddata_spark.streaming.incremental import (
-        stream_latest_snapshot,
-    )
-
-    base = str(tmp_path_factory.mktemp("snapshot_stream"))
-    pages_dir = os.path.join(base, "pages")
-    out_dir = os.path.join(base, "out")
-    ckpt_dir = os.path.join(base, "ckpt")
-    os.makedirs(pages_dir)
-
-    t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
-
-    def page(url, minutes, text):
-        return {
-            "url": url,
-            "warc_ts": t0 + dt.timedelta(minutes=minutes),
-            "html": b"",
-            "text": text,
-            "lang": "en",
-        }
-
-    def write_chunk(rows):
-        spark.createDataFrame(rows, schema=pages_schema()).coalesce(
-            1
-        ).write.mode("append").parquet(pages_dir)
-
-    def run():
-        stream_latest_snapshot(
-            spark, pages_dir, out_dir, ckpt_dir, watermark_delay="10 minutes"
-        )
-
-    def outputs():
-        rows = []
-        for d in sorted(glob.glob(os.path.join(out_dir, "batch_id=*"))):
-            bid = int(d.rsplit("=", 1)[1])
-            rows += [(bid, r) for r in spark.read.parquet(d).collect()]
-        return rows
-
-    # run 1: two captures of A (utm variant older), one of B
-    write_chunk(
-        [
-            page("https://a.example.org/p?utm_source=x", 0, "a-old"),
-            page("https://a.example.org/p", 5, "a-new"),
-            page("https://b.example.org/q", 3, "b-only"),
-        ]
-    )
-    run()
-    out1 = outputs()
-    got1 = {r.canonical_url: (r.text, bool(r.final)) for _, r in out1}
-    assert got1 == {
-        "https://a.example.org/p": ("a-new", False),
-        "https://b.example.org/q": ("b-only", False),
-    }
-    n1 = len(out1)
-
-    # run 2: late OLDER capture of A (absorbed silently), newer B, and a
-    # far-future C that pushes the watermark past A/B event times — the
-    # run's trailing timeout batch then emits their final rows
-    write_chunk(
-        [
-            page("https://a.example.org/p#frag", 2, "a-older-late"),
-            page("https://b.example.org/q?utm_c=1", 8, "b-newer"),
-            page("https://c.example.org/r", 600, "c-future"),
-        ]
-    )
-    run()
-    new_rows = outputs()[n1:]
-    updates = {
-        r.canonical_url: r.text for _, r in new_rows if not bool(r.final)
-    }
-    finals = {r.canonical_url: r.text for _, r in new_rows if bool(r.final)}
-    assert updates == {
-        "https://b.example.org/q": "b-newer",
-        "https://c.example.org/r": "c-future",
-    }  # A's older late capture absorbed with no output
-    assert finals == {
-        "https://a.example.org/p": "a-new",
-        "https://b.example.org/q": "b-newer",
-    }
-
-    # closure: last_wins over every update row == batch latest_snapshot
-    # over every capture
-    all_rows = outputs()
-    stream_final = {}
-    for _, r in sorted(all_rows, key=lambda t: (t[1].warc_ts, t[1].url)):
-        stream_final[r.canonical_url] = r.text
-    batch = latest_snapshot(spark.read.parquet(pages_dir))
-    batch_final = {r.canonical_url: r.text for r in batch.collect()}
-    assert stream_final == batch_final
-
-
-def test_stream_neardup_filter(spark, tmp_path_factory):
-    """Streaming near-dup admission against the persisted MinHash index:
-    wave-2 docs duplicating wave-1 texts are rejected via the INDEX (the
-    historical docs are never re-read); within-batch dups keep the min id;
-    fresh texts pass. Two AvailableNow invocations = index grown across
-    runs through the checkpoint."""
-    import os
-
-    from psyndex2linkeddata_spark.streaming.incremental import (
-        stream_neardup_filter,
-    )
-
-    base = str(tmp_path_factory.mktemp("stream_neardup"))
-    docs_dir, out_dir, ckpt = (os.path.join(base, d) for d in ("docs", "out", "ckpt"))
-    os.makedirs(docs_dir)
-
-    t_fox = "the quick brown fox jumps over the lazy dog near the river"
-    t_ship = "ancient ships carried copper ingots across the wine dark sea"
-    t_comet = "a bright comet crossed the northern sky before dawn yesterday"
-
-    def write(rows):
-        spark.createDataFrame(rows, "doc_id long, text string").coalesce(
-            1
-        ).write.mode("append").parquet(docs_dir)
-
-    write([(1, t_fox), (2, t_ship)])
-    stream_neardup_filter(spark, docs_dir, out_dir, ckpt, num_hashes=8, bands=4)
-    acc1 = spark.read.parquet(os.path.join(out_dir, "accepted"))
-    assert {r.doc_id for r in acc1.collect()} == {1, 2}
-
-    # doc 3 duplicates wave-1 doc 1 (index hit); 4 is fresh; 5 duplicates
-    # 4 within the batch (cluster min 4 wins)
-    write([(3, t_fox), (4, t_comet), (5, t_comet)])
-    stream_neardup_filter(spark, docs_dir, out_dir, ckpt, num_hashes=8, bands=4)
-    acc = spark.read.parquet(os.path.join(out_dir, "accepted"))
-    assert {r.doc_id for r in acc.collect()} == {1, 2, 4}
-
-    # the index holds band keys for exactly the accepted docs
-    idx = spark.read.parquet(os.path.join(out_dir, "index"))
-    assert {r.doc_id for r in idx.select("doc_id").distinct().collect()} == {1, 2, 4}
-
-    # compact the two batch partitions into one; a third wave must still
-    # see wave-1 history through the compacted index
-    from psyndex2linkeddata_spark.streaming.incremental import (
-        compact_neardup_index,
-    )
-
-    n = compact_neardup_index(spark, out_dir)
-    assert n > 0
-    assert os.listdir(os.path.join(out_dir, "index")) == ["batch_id=1"]
-    write([(6, t_ship), (7, "fresh snow fell quietly on the old stone bridge")])
-    stream_neardup_filter(spark, docs_dir, out_dir, ckpt, num_hashes=8, bands=4)
-    acc = spark.read.parquet(os.path.join(out_dir, "accepted"))
-    assert {r.doc_id for r in acc.collect()} == {1, 2, 4, 7}
-
-
 def test_run_report_data_card(spark, small_pages, tmp_path_factory):
     """--report artifact: corpus_stats rollup + quality deciles + lineage
     throughput land under <ckpt>/report/run_id=<id>/ and reconcile with
@@ -619,10 +353,7 @@ def test_run_report_data_card(spark, small_pages, tmp_path_factory):
     from psyndex2linkeddata_spark.operators.stats import corpus_stats
     from psyndex2linkeddata_spark.operators.hosts import host_of
     from psyndex2linkeddata_spark.functions.lang import guess_language
-    from psyndex2linkeddata_spark.plans.report import (
-        read_run_report,
-        write_run_report,
-    )
+    from psyndex2linkeddata_spark.plans.report import write_run_report
 
     base = str(tmp_path_factory.mktemp("ckpt_report"))
     out, ckpt = os.path.join(base, "out"), os.path.join(base, "ckpt")
@@ -636,7 +367,11 @@ def test_run_report_data_card(spark, small_pages, tmp_path_factory):
     assert summary["n_pages"] == N_PAGES
     assert summary["n_triples"] > 0 and summary["triples_per_s"] > 0
 
-    rep = read_run_report(spark, ckpt, res["run_id"])
+    report_dir = os.path.join(ckpt, "report", f"run_id={res['run_id']}")
+    rep = {
+        name: spark.read.parquet(os.path.join(report_dir, name))
+        for name in ("corpus", "quality", "throughput")
+    }
 
     # corpus table == corpus_stats run directly on the same derivation
     docs = small_pages.select(

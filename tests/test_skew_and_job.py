@@ -1,4 +1,4 @@
-"""Salted-aggregation equivalence + the spark-submit conversion job CLI."""
+"""The spark-submit conversion job CLI and the warehouse sink."""
 
 from __future__ import annotations
 
@@ -7,35 +7,12 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from psyndex2linkeddata_spark.operators.skew import salted_collect_set, salted_count
 from tests.conftest import spark_jobs
 
 # Spark jobs of `jobs/convert.py --canonicalize` after its last lineage
 # commit, on 40 pages: the run-manifest write, the sameAs edge collect
 # and the four jobs of the deduplicating canonical write under AQE
 TAIL_JOBS = 6
-
-
-def test_salted_count_equals_plain(spark):
-    # hot key: 'a' carries 90% of rows
-    rows = [("a", i) for i in range(900)] + [(f"k{i}", i) for i in range(100)]
-    df = spark.createDataFrame(rows, ["k", "v"])
-    plain = {r.k: r["count"] for r in df.groupBy("k").count().collect()}
-    salted = {r.k: r["count"] for r in salted_count(df, ["k"]).collect()}
-    assert plain == salted
-
-
-def test_salted_collect_set_equals_plain(spark):
-    rows = [("a", i % 7) for i in range(500)] + [("b", i) for i in range(5)]
-    df = spark.createDataFrame(rows, ["k", "v"])
-    plain = {
-        r.k: sorted(r.vs)
-        for r in df.groupBy("k").agg(F.collect_set("v").alias("vs")).collect()
-    }
-    salted = {
-        r.k: sorted(r.v_set) for r in salted_collect_set(df, ["k"], "v").collect()
-    }
-    assert plain == salted
 
 
 def test_convert_job_cli(spark, tmp_path_factory):
@@ -223,11 +200,7 @@ def test_load_authorities_uri_and_empty_dir(spark, tmp_path):
 def test_warehouse_triple_table(spark, tmp_path):
     """V2 writeTo create → partitioned table; replace + append take the
     documented vanilla-catalog fallbacks; bucket scan prunes partitions."""
-    from psyndex2linkeddata_spark.sources.warehouse import (
-        read_subj_bucket,
-        read_triples_table,
-        write_triples_table,
-    )
+    from psyndex2linkeddata_spark.sources.warehouse import write_triples_table
 
     spark.sql(f"create database if not exists wh_test location '{tmp_path}'")
     try:
@@ -237,11 +210,11 @@ def test_warehouse_triple_table(spark, tmp_path):
             F.col("id").cast("string").alias("obj"),
         )
         write_triples_table(df, "wh_test.triples", buckets=8, mode="create")
-        back = read_triples_table(spark, "wh_test.triples")
+        back = spark.table("wh_test.triples")
         assert back.count() == 60
         assert set(back.columns) == {"subj", "pred", "obj", "subj_bucket"}
         # partition pruning: the FileScan carries a subj_bucket filter
-        pruned = read_subj_bucket(spark, "wh_test.triples", 1)
+        pruned = spark.table("wh_test.triples").where(F.col("subj_bucket") == 1)
         plan = pruned._jdf.queryExecution().executedPlan().toString()
         assert "PartitionFilters: [" in plan and "subj_bucket" in plan.split(
             "PartitionFilters"
@@ -251,10 +224,10 @@ def test_warehouse_triple_table(spark, tmp_path):
         assert n_buckets.groupBy("subj").count().where(F.col("count") > 1).count() == 0
         # append (V1 positional-insert fallback on this catalog)
         write_triples_table(df, "wh_test.triples", buckets=8, mode="append")
-        assert read_triples_table(spark, "wh_test.triples").count() == 120
+        assert spark.table("wh_test.triples").count() == 120
         # replace (drop+create fallback on this catalog)
         write_triples_table(df.limit(10), "wh_test.triples", buckets=8, mode="replace")
-        assert read_triples_table(spark, "wh_test.triples").count() == 10
+        assert spark.table("wh_test.triples").count() == 10
     finally:
         spark.sql("drop database if exists wh_test cascade")
 

@@ -9,7 +9,7 @@ forcing the deterministic no-API degrade path through the OpenAlex
 ISSN-L fallback and the DOAJ access/review enrichment; the langid
 stand-in is the declared stopword classifier both sides share), over an
 XML file + jtc_uuid_lookup.csv + review_lookup.csv the caller provides
-(psyndex2linkeddata_spark.datagen.journals generates all three).
+(tests/fixture_journals.py generates all three).
 
 Usage:
     python tools/refexec/run_journals.py OUT.tsv JOURNALS.xml LOOKUP_DIR
